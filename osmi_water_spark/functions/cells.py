@@ -15,8 +15,9 @@ with a 2^res x 2^res grid over lon [-180,180] x lat [-90,90].
 Resolution <= 20 (cell ~34 m at the equator), ix/iy < 2^29.
 
 Raster tiles use the standard web-mercator z/x/y scheme; ids share the same
-packing. ``cell_to_tile`` / ``tile_to_cells`` give the raster<->vector
-assignment demanded by the graft (BASELINE.json:6).
+packing. ``tile_id`` assigns points to tiles; features reach their tiles
+through their cell cover (``operators.tiling.feature_tile_assignment``), the
+raster<->vector assignment demanded by the graft (BASELINE.json:6).
 """
 
 from __future__ import annotations
@@ -56,30 +57,27 @@ def cell_iy(cell: Column) -> Column:
     return (F.shiftright(cell, IY_SHIFT) % (1 << IY_SHIFT)).cast("long")
 
 
-# ---- SQL-text twins ----
+# ---- SQL text: the one definition of each cell formula ----
 #
-# Each deeply nested Column builder below costs dozens-to-hundreds of py4j
-# round-trips PER CALL at DAG-construction time (~0.3 ms each; profiling
-# showed ~2.7 s of the pipeline's per-run wall was pure driver-side py4j
-# chatter while 32 cores idle — guide §7.3's "planning time is real time").
-# When the caller can name its inputs (plain column references), we build
-# the IDENTICAL expression as one SQL string and parse it with a single
-# F.expr round-trip. Literal forms are chosen so the parsed tree matches
-# the Column tree exactly: `180.0D` (double, NOT the default decimal),
-# `0L` for long literals, same operator order. Parity is pinned by
-# tests/test_wkb_cells.py::test_sql_text_twins_match_column_builders.
+# Every builder below takes SQL text (column names or any numeric SQL
+# expressions) and returns ``F.expr`` of one SQL string: a single parse per
+# call instead of dozens of py4j round-trips per nested Column tree while
+# the DAG is built. Literal forms are chosen for exact types and IEEE op
+# order: `180.0D` (double, NOT the default decimal), `0L` for long
+# literals. ``np_cell_of``/``np_cover`` are the numpy twins the Arrow PIP
+# probe needs; tests/test_wkb_cells.py pins them to this text row for row.
 
 
 def _ix_sql(lon: str, res: int) -> str:
     n = repr(float(1 << res))
     return (f"greatest(0L, least({(1 << res) - 1}L, "
-            f"floor(({lon} + 180.0D) / 360.0D * {n}D)))")
+            f"floor((({lon}) + 180.0D) / 360.0D * {n}D)))")
 
 
 def _iy_sql(lat: str, res: int) -> str:
     n = repr(float(1 << res))
     return (f"greatest(0L, least({(1 << res) - 1}L, "
-            f"floor(({lat} + 90.0D) / 180.0D * {n}D)))")
+            f"floor((({lat}) + 90.0D) / 180.0D * {n}D)))")
 
 
 def _encode_sql(res: str, ix: str, iy: str) -> str:
@@ -104,56 +102,37 @@ def _iy_of(lat: Column, res: int) -> Column:
 
 
 def cell_of(lon: Column | str, lat: Column | str, res: int = DEFAULT_RES) -> Column:
-    """Point -> grid cell id at a fixed resolution. String args take the
-    one-round-trip SQL-text path (see the SQL-text twins note)."""
+    """Point -> grid cell id at a fixed resolution."""
     if isinstance(lon, str) and isinstance(lat, str):
         return F.expr(_cell_of_sql(lon, lat, res))
+    # Column arm kept only because __spark_entry__.py (frozen) passes F.col
     return _encode(F.lit(res), _ix_of(lon, res), _iy_of(lat, res))
 
 
-def cell_of_multi(lon: Column | str, lat: Column | str, resolutions: list[int]) -> Column:
+def cell_of_multi(lon: str, lat: str, resolutions: list[int]) -> Column:
     """Point -> array of cell ids, one per resolution (for joining against a
     multi-resolution polygon cover — bounded fan-out: len(resolutions) rows)."""
-    if isinstance(lon, str) and isinstance(lat, str):
-        return F.expr(
-            "array(" + ", ".join(_cell_of_sql(lon, lat, r) for r in resolutions) + ")"
-        )
-    return F.array(*[cell_of(lon, lat, r) for r in resolutions])
-
-
-def _bbox_cover_cells_sql(minx: str, miny: str, maxx: str, maxy: str, res: int) -> str:
-    ix0, ix1 = _ix_sql(minx, res), _ix_sql(maxx, res)
-    iy0, iy1 = _iy_sql(miny, res), _iy_sql(maxy, res)
-    enc = _encode_sql(str(res), "ix", "iy")
-    return (f"flatten(transform(sequence({iy0}, {iy1}), "
-            f"iy -> transform(sequence({ix0}, {ix1}), ix -> {enc})))")
-
-
-def bbox_cover_cells(
-    minx: Column | str, miny: Column | str, maxx: Column | str, maxy: Column | str, res: int
-) -> Column:
-    """All cells at ``res`` intersecting the bbox (envelope cover).
-
-    Built from sequence+transform+flatten so it stays inside codegen.
-    String args take the one-round-trip SQL-text path.
-    """
-    if all(isinstance(c, str) for c in (minx, miny, maxx, maxy)):
-        return F.expr(_bbox_cover_cells_sql(minx, miny, maxx, maxy, res))
-    ix0, ix1 = _ix_of(minx, res), _ix_of(maxx, res)
-    iy0, iy1 = _iy_of(miny, res), _iy_of(maxy, res)
-    res_l = F.lit(res)
-    return F.flatten(
-        F.transform(
-            F.sequence(iy0, iy1),
-            lambda iy: F.transform(F.sequence(ix0, ix1), lambda ix: _encode(res_l, ix, iy)),
-        )
+    return F.expr(
+        "array(" + ", ".join(_cell_of_sql(lon, lat, r) for r in resolutions) + ")"
     )
 
 
-def bbox_cover_count(minx: Column, miny: Column, maxx: Column, maxy: Column, res: int) -> Column:
-    ix0, ix1 = _ix_of(minx, res), _ix_of(maxx, res)
-    iy0, iy1 = _iy_of(miny, res), _iy_of(maxy, res)
-    return (ix1 - ix0 + 1) * (iy1 - iy0 + 1)
+def _bbox_cover_cells_sql(minx: str, miny: str, maxx: str, maxy: str, res: int) -> str:
+    # the lambda variables are named so that no caller column can shadow
+    # them inside the bbox expressions
+    ix0, ix1 = _ix_sql(minx, res), _ix_sql(maxx, res)
+    iy0, iy1 = _iy_sql(miny, res), _iy_sql(maxy, res)
+    enc = _encode_sql(str(res), "__cov_ix", "__cov_iy")
+    return (f"flatten(transform(sequence({iy0}, {iy1}), "
+            f"__cov_iy -> transform(sequence({ix0}, {ix1}), __cov_ix -> {enc})))")
+
+
+def bbox_cover_cells(minx: str, miny: str, maxx: str, maxy: str, res: int) -> Column:
+    """All cells at ``res`` intersecting the bbox (envelope cover).
+
+    Built from sequence+transform+flatten so it stays inside codegen.
+    """
+    return F.expr(_bbox_cover_cells_sql(minx, miny, maxx, maxy, res))
 
 
 def _bbox_cover_count_sql(minx: str, miny: str, maxx: str, maxy: str, res: int) -> str:
@@ -163,8 +142,8 @@ def _bbox_cover_count_sql(minx: str, miny: str, maxx: str, maxy: str, res: int) 
 
 def _adaptive_cover_res_sql(minx: str, miny: str, maxx: str, maxy: str,
                             res_min: int, res_max: int, max_cells: int) -> str:
-    # mirror of adaptive_cover_res: CASE chain finest-first would invert
-    # the when-nesting; replicate the exact otherwise-nesting instead
+    # finest qualifying resolution wins: each coarser choice nests inside
+    # the ELSE of the next finer one
     expr = str(res_min)
     for r in range(res_min + 1, res_max + 1):
         expr = (f"(CASE WHEN {_bbox_cover_count_sql(minx, miny, maxx, maxy, r)}"
@@ -172,61 +151,39 @@ def _adaptive_cover_res_sql(minx: str, miny: str, maxx: str, maxy: str,
     return expr
 
 
-def _adaptive_cover_cells_sql(minx: str, miny: str, maxx: str, maxy: str,
-                              res_min: int, res_max: int, max_cells: int) -> str:
-    res = _adaptive_cover_res_sql(minx, miny, maxx, maxy, res_min, res_max, max_cells)
-    out = _bbox_cover_cells_sql(minx, miny, maxx, maxy, res_min)
-    for r in range(res_min + 1, res_max + 1):
-        out = (f"(CASE WHEN {res} = {r} THEN "
-               f"{_bbox_cover_cells_sql(minx, miny, maxx, maxy, r)} ELSE {out} END)")
-    return out
-
-
 def adaptive_cover_res(
-    minx: Column,
-    miny: Column,
-    maxx: Column,
-    maxy: Column,
+    minx: str,
+    miny: str,
+    maxx: str,
+    maxy: str,
     res_min: int = 3,
     res_max: int = DEFAULT_RES,
     max_cells: int = MAX_COVER_CELLS,
 ) -> Column:
     """Finest resolution in [res_min, res_max] whose bbox cover stays within
     ``max_cells`` — bounds the explode fan-out per polygon regardless of
-    polygon size (big lakes coarsen instead of exploding). String args take
-    the one-round-trip SQL-text path."""
-    if all(isinstance(c, str) for c in (minx, miny, maxx, maxy)):
-        return F.expr(
-            _adaptive_cover_res_sql(minx, miny, maxx, maxy, res_min, res_max, max_cells)
-        )
-    expr = F.lit(res_min)
-    for r in range(res_min + 1, res_max + 1):
-        expr = F.when(bbox_cover_count(minx, miny, maxx, maxy, r) <= max_cells, F.lit(r)).otherwise(
-            expr
-        )
-    return expr
+    polygon size (big lakes coarsen instead of exploding)."""
+    return F.expr(
+        _adaptive_cover_res_sql(minx, miny, maxx, maxy, res_min, res_max, max_cells)
+    )
 
 
 def adaptive_cover_cells(
-    minx: Column,
-    miny: Column,
-    maxx: Column,
-    maxy: Column,
+    minx: str,
+    miny: str,
+    maxx: str,
+    maxy: str,
     res_min: int = 3,
     res_max: int = DEFAULT_RES,
     max_cells: int = MAX_COVER_CELLS,
 ) -> Column:
-    """Bbox cover at the adaptive resolution (array<long>). String args take
-    the one-round-trip SQL-text path."""
-    if all(isinstance(c, str) for c in (minx, miny, maxx, maxy)):
-        return F.expr(
-            _adaptive_cover_cells_sql(minx, miny, maxx, maxy, res_min, res_max, max_cells)
-        )
-    res = adaptive_cover_res(minx, miny, maxx, maxy, res_min, res_max, max_cells)
-    out = bbox_cover_cells(minx, miny, maxx, maxy, res_min)
+    """Bbox cover at the adaptive resolution (array<long>)."""
+    res = _adaptive_cover_res_sql(minx, miny, maxx, maxy, res_min, res_max, max_cells)
+    out = _bbox_cover_cells_sql(minx, miny, maxx, maxy, res_min)
     for r in range(res_min + 1, res_max + 1):
-        out = F.when(res == r, bbox_cover_cells(minx, miny, maxx, maxy, r)).otherwise(out)
-    return out
+        out = (f"(CASE WHEN {res} = {r} THEN "
+               f"{_bbox_cover_cells_sql(minx, miny, maxx, maxy, r)} ELSE {out} END)")
+    return F.expr(out)
 
 
 def np_cell_of(lon, lat, res: int):
@@ -335,8 +292,8 @@ def _tile_xy_sql(lon: str, lat: str, z: int) -> tuple[str, str]:
     n = repr(float(1 << z))
     pi = repr(math.pi)
     lim = (1 << z) - 1
-    tx = f"floor(({lon} + 180.0D) / 360.0D * {n}D)"
-    lat_rad = f"({lat} * {pi}D / 180.0D)"
+    tx = f"floor((({lon}) + 180.0D) / 360.0D * {n}D)"
+    lat_rad = f"(({lat}) * {pi}D / 180.0D)"
     ty = (f"floor((1.0D - ln(tan({lat_rad}) + 1.0D / cos({lat_rad})) / {pi}D)"
           f" / 2.0D * {n}D)")
     return (f"greatest(0L, least({lim}L, {tx}))",
@@ -351,36 +308,6 @@ def _tile_id_sql(lon: str, lat: str, z: int) -> str:
 def tile_id(lon: Column | str, lat: Column | str, z: int) -> Column:
     if isinstance(lon, str) and isinstance(lat, str):
         return F.expr(_tile_id_sql(lon, lat, z))
+    # Column arm kept only because __spark_entry__.py (frozen) passes F.col
     tx, ty = tile_xy(lon, lat, z)
     return _encode(F.lit(z), tx, ty.cast("long"))
-
-
-def tile_bounds(z: int, tx: Column, ty: Column) -> tuple[Column, Column, Column, Column]:
-    """Tile -> lon/lat bbox (inverse mercator), for raster->vector assignment."""
-    n = F.lit(float(1 << z))
-    minx = tx / n * F.lit(360.0) - F.lit(180.0)
-    maxx = (tx + 1) / n * F.lit(360.0) - F.lit(180.0)
-
-    def lat_of(yy: Column) -> Column:
-        t = F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * yy / n)
-        return F.degrees(F.atan(F.sinh(t)))
-
-    maxy = lat_of(ty.cast("double"))
-    miny = lat_of((ty + 1).cast("double"))
-    return minx, miny, maxx, maxy
-
-
-def tile_to_cells(z: int, tx: Column, ty: Column, res: int) -> Column:
-    """Raster->vector: grid cells covering a z/x/y raster tile's bbox."""
-    minx, miny, maxx, maxy = tile_bounds(z, tx, ty)
-    # shrink by epsilon so a tile edge exactly on a cell boundary doesn't
-    # pull in the neighbouring cell row/column
-    eps = F.lit(1e-9)
-    return bbox_cover_cells(minx + eps, miny + eps, maxx - eps, maxy - eps, res)
-
-
-def tile_quadkey(tile: Column) -> Column:
-    """Human-readable z/x/y string for a packed tile id."""
-    return F.concat_ws(
-        "/", cell_res(tile).cast("string"), cell_ix(tile).cast("string"), cell_iy(tile).cast("string")
-    )

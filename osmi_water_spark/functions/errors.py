@@ -1,5 +1,8 @@
 """E1-E3 — the ErrorSum bitmask algebra as integer-column expressions.
 
+Every builder takes SQL text (a column name or any integer SQL expression)
+and returns ``F.expr`` of one SQL string, which is its single definition.
+
 Mirrors /root/reference/src/errorsum.hpp exactly: 12 flag bits; the
 ``set_rivermouth``/``set_outflow``/``set_poss_*`` setters *overwrite* the
 whole mask (``=`` not ``+=``, errorsum.hpp:45-59); ``switch_poss`` only
@@ -27,95 +30,48 @@ RIVER = 1024
 WAY = 2048
 
 
-def has(mask: Column | str, bit: int) -> Column:
-    if isinstance(mask, str):
-        return F.expr(_has_sql(mask, bit))
-    return (mask.bitwiseAND(F.lit(bit))) != 0
-
-
 def _has_sql(mask: str, bit: int) -> str:
-    return f"(({mask} & {bit}) != 0)"
+    return f"((({mask}) & {bit}) != 0)"
 
 
-def switch_poss(mask: Column | str) -> Column:
+def has(mask: str, bit: int) -> Column:
+    return F.expr(_has_sql(mask, bit))
+
+
+def switch_poss(mask: str) -> Column:
     """E2 — errorsum.hpp:129-142, applied at finalize
     (datastorage.hpp:408-417): river & poss_rivermouth -> end_error;
     river & poss_outflow -> spring_error; everything else unchanged.
     ``set_end_error``/``set_spring_error`` are idempotent (errorsum.hpp:37-43
     adds the bit only when not already set), so a mask already carrying the
     target bit only loses the poss bit."""
-    if isinstance(mask, str):
-        h = lambda b: _has_sql(mask, b)  # noqa: E731
-        return F.expr(
-            f"CASE WHEN {h(RIVER)} AND {h(POSS_RIVERMOUTH)} THEN "
-            f"(CASE WHEN {h(END)} THEN {mask} - {POSS_RIVERMOUTH} "
-            f"ELSE {mask} - {POSS_RIVERMOUTH} + {END} END) "
-            f"WHEN {h(RIVER)} AND {h(POSS_OUTFLOW)} THEN "
-            f"(CASE WHEN {h(SPRING)} THEN {mask} - {POSS_OUTFLOW} "
-            f"ELSE {mask} - {POSS_OUTFLOW} + {SPRING} END) "
-            f"ELSE {mask} END"
-        )
-    return (
-        F.when(
-            has(mask, RIVER) & has(mask, POSS_RIVERMOUTH),
-            F.when(has(mask, END), mask - POSS_RIVERMOUTH).otherwise(
-                mask - POSS_RIVERMOUTH + END
-            ),
-        )
-        .when(
-            has(mask, RIVER) & has(mask, POSS_OUTFLOW),
-            F.when(has(mask, SPRING), mask - POSS_OUTFLOW).otherwise(
-                mask - POSS_OUTFLOW + SPRING
-            ),
-        )
-        .otherwise(mask)
+    m = f"({mask})"
+    h = lambda b: _has_sql(mask, b)  # noqa: E731
+    return F.expr(
+        f"CASE WHEN {h(RIVER)} AND {h(POSS_RIVERMOUTH)} THEN "
+        f"(CASE WHEN {h(END)} THEN {m} - {POSS_RIVERMOUTH} "
+        f"ELSE {m} - {POSS_RIVERMOUTH} + {END} END) "
+        f"WHEN {h(RIVER)} AND {h(POSS_OUTFLOW)} THEN "
+        f"(CASE WHEN {h(SPRING)} THEN {m} - {POSS_OUTFLOW} "
+        f"ELSE {m} - {POSS_OUTFLOW} + {SPRING} END) "
+        f"ELSE {m} END"
     )
 
 
-def resolve_false_positive(mask: Column | str) -> Column:
-    """E3 — falsepositives.hpp:64-77 (delete_error_node): a traced node
-    becomes rivermouth / outflow (overwriting the mask) or resets to normal."""
-    if isinstance(mask, str):
-        return F.expr(
-            f"CASE WHEN {_has_sql(mask, POSS_RIVERMOUTH)} THEN {RIVERMOUTH} "
-            f"WHEN {_has_sql(mask, POSS_OUTFLOW)} THEN {OUTFLOW} ELSE 0 END"
-        )
-    return (
-        F.when(has(mask, POSS_RIVERMOUTH), F.lit(RIVERMOUTH))
-        .when(has(mask, POSS_OUTFLOW), F.lit(OUTFLOW))
-        .otherwise(F.lit(0))
-    )
-
-
-def _b(c: Column) -> Column:
-    return F.when(c, F.lit("true")).otherwise(F.lit("false"))
-
-
-def node_output_columns(mask: Column | str) -> dict[str, Column]:
+def node_output_columns(mask: str) -> dict[str, Column]:
     """O4 — datastorage.hpp:340-377: mask -> the nodes-table string columns."""
-    if isinstance(mask, str):
-        bs = lambda b: (f"(CASE WHEN {_has_sql(mask, b)} "  # noqa: E731
-                        f"THEN 'true' ELSE 'false' END)")
-        return {
-            "specific": F.expr(
-                f"CASE WHEN {_has_sql(mask, RIVERMOUTH)} THEN 'rivermouth' "
-                f"WHEN {_has_sql(mask, OUTFLOW)} THEN 'outflow' ELSE '' END"
-            ),
-            "direction_error": F.expr(bs(DIRECTION)),
-            "name_error": F.expr(bs(NAME)),
-            "type_error": F.expr(bs(TYPE)),
-            "spring_error": F.expr(bs(SPRING)),
-            "end_error": F.expr(bs(END)),
-            "way_error": F.expr(bs(WAY)),
-        }
+    def bs(b: int) -> Column:
+        return F.expr(f"(CASE WHEN {_has_sql(mask, b)} THEN 'true' ELSE 'false' END)")
+
     return {
-        "specific": F.when(has(mask, RIVERMOUTH), F.lit("rivermouth"))
-        .when(has(mask, OUTFLOW), F.lit("outflow"))
-        .otherwise(F.lit("")),
-        "direction_error": _b(has(mask, DIRECTION)),
-        "name_error": _b(has(mask, NAME)),
-        "type_error": _b(has(mask, TYPE)),
-        "spring_error": _b(has(mask, SPRING)),
-        "end_error": _b(has(mask, END)),
-        "way_error": _b(has(mask, WAY)),
+        "specific": F.expr(
+            f"CASE WHEN {_has_sql(mask, RIVERMOUTH)} THEN 'rivermouth' "
+            f"WHEN {_has_sql(mask, OUTFLOW)} THEN 'outflow' ELSE '' END"
+        ),
+        "direction_error": bs(DIRECTION),
+        "name_error": bs(NAME),
+        "type_error": bs(TYPE),
+        "spring_error": bs(SPRING),
+        "end_error": bs(END),
+        "way_error": bs(WAY),
     }

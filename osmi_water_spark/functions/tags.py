@@ -1,10 +1,10 @@
 """Tag predicates (F1-F8) and scalar projections (P1-P5, P7-P11) as native
-Spark column expressions over a ``tags: map<string,string>`` column.
+Spark SQL expressions over a ``tags: map<string,string>`` column.
 
 Everything here is deliberately expression-only (no UDFs) so Catalyst can
 push filters into the scan and whole-stage codegen covers the hot path.
 Each function cites the reference implementation it matches
-(/root/reference/src/tagcheck.hpp unless noted); the ``F.when`` chains
+(the reference's src/tagcheck.hpp unless noted); the ``CASE WHEN`` chains
 preserve the reference's exact predicate precedence, including its quirks.
 """
 
@@ -18,132 +18,81 @@ WATERWAY_TYPES = ["river", "stream", "drain", "brook", "canal", "ditch", "riverb
 # (tagcheck.hpp:101-123)
 AREA_EXCLUDE_VALUES = ["river", "drain", "stream", "canal", "ditch", "riverbank"]
 
-# Every function below is polymorphic in its column argument: a Column
-# builds the expression tree through the Python Column API (dozens of py4j
-# round-trips per call — measured ~3.5 s of pure driver-side chatter per
-# pipeline DAG construction, guide §7.3), a STRING column name builds the
-# IDENTICAL tree as one SQL string parsed by a single F.expr round-trip.
-# CASE/boolean null semantics match the Column chains exactly; parity is
-# pinned by tests/test_tags.py::test_sql_text_twins_match_column_builders.
-
-
-def _v(tags: Column, key: str) -> Column:
-    return tags.getItem(key)
+# Every function takes SQL text (a column name or any SQL expression) and
+# returns ``F.expr`` of one SQL string, which is the single definition of
+# its semantic: one parse per call instead of a py4j round-trip per Column
+# operator while the DAG is built. Arguments are parenthesized where they
+# are spliced in, so operator precedence inside them cannot leak.
 
 
 def _vs(tags: str, key: str) -> str:
-    return f"{tags}['{key}']"
+    return f"({tags})['{key}']"
 
 
 def _in(expr: str, values: list[str]) -> str:
     return f"{expr} IN ({', '.join(repr(v) for v in values)})"
 
 
-def is_waterway(tags: Column | str, is_relation: bool) -> Column:
+def is_waterway(tags: str, is_relation: bool) -> Column:
     """F1 — tagcheck.hpp:35-60. Precedence: multipolygon reject, riverbank
     reject, relation type=waterway accept, any waterway accept, way
     natural=coastline accept."""
-    if isinstance(tags, str):
-        typ, ww, nat = _vs(tags, "type"), _vs(tags, "waterway"), _vs(tags, "natural")
-        rel = f"WHEN {typ} = 'waterway' THEN true " if is_relation else ""
-        way = f"WHEN {nat} = 'coastline' THEN true " if not is_relation else ""
-        return F.expr(
-            f"CASE WHEN {typ} = 'multipolygon' THEN false "
-            f"WHEN {ww} = 'riverbank' THEN false "
-            f"{rel}WHEN {ww} IS NOT NULL THEN true {way}ELSE false END"
-        )
-    typ, ww, nat = _v(tags, "type"), _v(tags, "waterway"), _v(tags, "natural")
-    expr = (
-        F.when(typ == "multipolygon", F.lit(False))
-        .when(ww == "riverbank", F.lit(False))
+    typ, ww, nat = _vs(tags, "type"), _vs(tags, "waterway"), _vs(tags, "natural")
+    rel = f"WHEN {typ} = 'waterway' THEN true " if is_relation else ""
+    way = f"WHEN {nat} = 'coastline' THEN true " if not is_relation else ""
+    return F.expr(
+        f"CASE WHEN {typ} = 'multipolygon' THEN false "
+        f"WHEN {ww} = 'riverbank' THEN false "
+        f"{rel}WHEN {ww} IS NOT NULL THEN true {way}ELSE false END"
     )
-    if is_relation:
-        expr = expr.when(typ == "waterway", F.lit(True))
-    expr = expr.when(ww.isNotNull(), F.lit(True))
-    if not is_relation:
-        expr = expr.when(nat == "coastline", F.lit(True))
-    return expr.otherwise(F.lit(False))
 
 
-def waterpolygon_filter(tags: Column | str) -> Column:
+def waterpolygon_filter(tags: str) -> Column:
     """F2 — tagcheck.hpp:62-69 (MultipolygonManager's TagsFilter)."""
-    if isinstance(tags, str):
-        return F.expr(
-            f"coalesce(({_vs(tags, 'natural')} = 'water') OR "
-            f"({_vs(tags, 'waterway')} IS NOT NULL) OR "
-            f"({_in(_vs(tags, 'landuse'), ['reservoir', 'basin'])}), false)"
-        )
-    return F.coalesce(
-        (_v(tags, "natural") == "water")
-        | _v(tags, "waterway").isNotNull()
-        | _v(tags, "landuse").isin("reservoir", "basin"),
-        F.lit(False),
+    return F.expr(
+        f"coalesce(({_vs(tags, 'natural')} = 'water') OR "
+        f"({_vs(tags, 'waterway')} IS NOT NULL) OR "
+        f"({_in(_vs(tags, 'landuse'), ['reservoir', 'basin'])}), false)"
     )
 
 
-def has_waterway_tag(tags: Column | str) -> Column:
+def has_waterway_tag(tags: str) -> Column:
     """F3 — tagcheck.hpp:71-74. Key existence only."""
-    if isinstance(tags, str):
-        return F.expr(f"({_vs(tags, 'waterway')} IS NOT NULL)")
-    return _v(tags, "waterway").isNotNull()
+    return F.expr(f"({_vs(tags, 'waterway')} IS NOT NULL)")
 
 
-def is_way_to_analyse(tags: Column | str) -> Column:
+def is_way_to_analyse(tags: str) -> Column:
     """F4 — tagcheck.hpp:76-99."""
-    if isinstance(tags, str):
-        return F.expr(
-            f"coalesce(({_vs(tags, 'waterway')} IS NOT NULL) OR "
-            f"({_in(_vs(tags, 'natural'), ['coastline', 'water'])}) OR "
-            f"({_in(_vs(tags, 'landuse'), ['reservoir', 'basin'])}), false)"
-        )
-    return F.coalesce(
-        _v(tags, "waterway").isNotNull()
-        | _v(tags, "natural").isin("coastline", "water")
-        | _v(tags, "landuse").isin("reservoir", "basin"),
-        F.lit(False),
+    return F.expr(
+        f"coalesce(({_vs(tags, 'waterway')} IS NOT NULL) OR "
+        f"({_in(_vs(tags, 'natural'), ['coastline', 'water'])}) OR "
+        f"({_in(_vs(tags, 'landuse'), ['reservoir', 'basin'])}), false)"
     )
 
 
-def is_area_to_analyse(tags: Column | str) -> Column:
+def is_area_to_analyse(tags: str) -> Column:
     """F5 — tagcheck.hpp:101-123. Riverbank-ish areas excluded from the PIP
     index. Null tag values pass (get_value_by_key null -> condition false)."""
-    if isinstance(tags, str):
-        return F.expr(
-            f"(coalesce(NOT ({_in(_vs(tags, 'waterway'), AREA_EXCLUDE_VALUES)}), true)"
-            f" AND coalesce(NOT ({_in(_vs(tags, 'water'), AREA_EXCLUDE_VALUES)}), true))"
-        )
-    ww, water = _v(tags, "waterway"), _v(tags, "water")
-    return F.coalesce(~ww.isin(AREA_EXCLUDE_VALUES), F.lit(True)) & F.coalesce(
-        ~water.isin(AREA_EXCLUDE_VALUES), F.lit(True)
+    return F.expr(
+        f"(coalesce(NOT ({_in(_vs(tags, 'waterway'), AREA_EXCLUDE_VALUES)}), true)"
+        f" AND coalesce(NOT ({_in(_vs(tags, 'water'), AREA_EXCLUDE_VALUES)}), true))"
     )
 
 
-def is_riverbank_or_coastline(tags: Column | str) -> Column:
+def is_riverbank_or_coastline(tags: str) -> Column:
     """F6 — tagcheck.hpp:125-135. Selects check-all-nodes mode in pass 3."""
-    if isinstance(tags, str):
-        return F.expr(
-            f"coalesce(({_vs(tags, 'waterway')} = 'riverbank') OR "
-            f"({_vs(tags, 'natural')} = 'coastline'), false)"
-        )
-    return F.coalesce(
-        (_v(tags, "waterway") == "riverbank") | (_v(tags, "natural") == "coastline"),
-        F.lit(False),
+    return F.expr(
+        f"coalesce(({_vs(tags, 'waterway')} = 'riverbank') OR "
+        f"({_vs(tags, 'natural')} = 'coastline'), false)"
     )
 
 
-def is_water_area(tags: Column | str) -> Column:
+def is_water_area(tags: str) -> Column:
     """F7 — tagcheck.hpp:137-151."""
-    if isinstance(tags, str):
-        return F.expr(
-            f"coalesce(({_vs(tags, 'natural')} = 'water') OR "
-            f"({_in(_vs(tags, 'landuse'), ['reservoir', 'basin'])}) OR "
-            f"({_vs(tags, 'waterway')} IS NOT NULL), false)"
-        )
-    return F.coalesce(
-        (_v(tags, "natural") == "water")
-        | _v(tags, "landuse").isin("reservoir", "basin")
-        | _v(tags, "waterway").isNotNull(),
-        F.lit(False),
+    return F.expr(
+        f"coalesce(({_vs(tags, 'natural')} = 'water') OR "
+        f"({_in(_vs(tags, 'landuse'), ['reservoir', 'basin'])}) OR "
+        f"({_vs(tags, 'waterway')} IS NOT NULL), false)"
     )
 
 
@@ -152,102 +101,63 @@ def _waterway_type_sql(raw: str) -> str:
             f"WHEN {_in(raw, WATERWAY_TYPES)} THEN {raw} ELSE 'other' END")
 
 
-def get_waterway_type(raw: Column | str) -> Column:
+def get_waterway_type(raw: str) -> Column:
     """P1 — tagcheck.hpp:19-31. null -> '', known value -> value, else 'other'."""
-    if isinstance(raw, str):
-        return F.expr(_waterway_type_sql(raw))
-    return (
-        F.when(raw.isNull(), F.lit(""))
-        .when(raw.isin(WATERWAY_TYPES), raw)
-        .otherwise(F.lit("other"))
+    return F.expr(_waterway_type_sql(f"({raw})"))
+
+
+def get_way_type(tags: str) -> Column:
+    """P2 — tagcheck.hpp:177-189."""
+    t = f"({_waterway_type_sql(_vs(tags, 'waterway'))})"
+    return F.expr(
+        f"CASE WHEN {t} = '' THEN (CASE WHEN {_vs(tags, 'natural')} = 'coastline'"
+        f" THEN 'coastline' ELSE '' END) ELSE {t} END"
     )
 
 
-def get_way_type(tags: Column | str) -> Column:
-    """P2 — tagcheck.hpp:177-189."""
-    if isinstance(tags, str):
-        t = f"({_waterway_type_sql(_vs(tags, 'waterway'))})"
-        return F.expr(
-            f"CASE WHEN {t} = '' THEN (CASE WHEN {_vs(tags, 'natural')} = 'coastline'"
-            f" THEN 'coastline' ELSE '' END) ELSE {t} END"
-        )
-    t = get_waterway_type(_v(tags, "waterway"))
-    return F.when(
-        t == "",
-        F.when(_v(tags, "natural") == "coastline", F.lit("coastline")).otherwise(F.lit("")),
-    ).otherwise(t)
-
-
-def get_polygon_type(tags: Column | str) -> Column:
+def get_polygon_type(tags: str) -> Column:
     """P3 — tagcheck.hpp:166-175. Note the reference quirk: any
     waterway-tagged area gets type '' (the non-empty waterway type is
     discarded), and non-coastline areas fall back to the landuse value."""
-    if isinstance(tags, str):
-        t = f"({_waterway_type_sql(_vs(tags, 'waterway'))})"
-        return F.expr(
-            f"CASE WHEN {_vs(tags, 'natural')} = 'coastline' THEN 'coastline' "
-            f"WHEN {t} = '' THEN coalesce({_vs(tags, 'landuse')}, '') ELSE '' END"
-        )
-    return (
-        F.when(_v(tags, "natural") == "coastline", F.lit("coastline"))
-        .when(
-            get_waterway_type(_v(tags, "waterway")) == "",
-            F.coalesce(_v(tags, "landuse"), F.lit("")),
-        )
-        .otherwise(F.lit(""))
+    t = f"({_waterway_type_sql(_vs(tags, 'waterway'))})"
+    return F.expr(
+        f"CASE WHEN {_vs(tags, 'natural')} = 'coastline' THEN 'coastline' "
+        f"WHEN {t} = '' THEN coalesce({_vs(tags, 'landuse')}, '') ELSE '' END"
     )
 
 
-def get_waterway_category(way_type: Column | str) -> Column:
+def get_waterway_category(way_type: str) -> Column:
     """P4 — tagcheck.hpp:153-164 / datastorage.hpp:57-65. ASCII ordering
     '?'<'A'<'B'<'C' is load-bearing for A2's max()."""
-    if isinstance(way_type, str):
-        return F.expr(
-            f"CASE WHEN {_in(way_type, ['drain', 'brook', 'ditch'])} THEN 'A' "
-            f"WHEN {way_type} = 'stream' THEN 'B' "
-            f"WHEN {way_type} = 'river' THEN 'C' ELSE '?' END"
-        )
-    return (
-        F.when(way_type.isin("drain", "brook", "ditch"), F.lit("A"))
-        .when(way_type == "stream", F.lit("B"))
-        .when(way_type == "river", F.lit("C"))
-        .otherwise(F.lit("?"))
+    w = f"({way_type})"
+    return F.expr(
+        f"CASE WHEN {_in(w, ['drain', 'brook', 'ditch'])} THEN 'A' "
+        f"WHEN {w} = 'stream' THEN 'B' "
+        f"WHEN {w} = 'river' THEN 'C' ELSE '?' END"
     )
 
 
-def get_width_tag(tags: Column | str) -> Column:
+def get_width_tag(tags: str) -> Column:
     """P5 — tagcheck.hpp:191-201. width, else est_width, else null."""
-    if isinstance(tags, str):
-        return F.expr(
-            f"coalesce({_vs(tags, 'width')}, {_vs(tags, 'est_width')})"
-        )
-    return F.coalesce(_v(tags, "width"), _v(tags, "est_width"))
+    return F.expr(f"coalesce({_vs(tags, 'width')}, {_vs(tags, 'est_width')})")
 
 
-def get_construction(tags: Column | str) -> Column:
+def get_construction(tags: str) -> Column:
     """P9 — tagcheck.hpp:203-211. Key existence, bridge wins."""
-    if isinstance(tags, str):
-        return F.expr(
-            f"CASE WHEN {_vs(tags, 'bridge')} IS NOT NULL THEN 'bridge' "
-            f"WHEN {_vs(tags, 'tunnel')} IS NOT NULL THEN 'tunnel' ELSE '' END"
-        )
-    return (
-        F.when(_v(tags, "bridge").isNotNull(), F.lit("bridge"))
-        .when(_v(tags, "tunnel").isNotNull(), F.lit("tunnel"))
-        .otherwise(F.lit(""))
+    return F.expr(
+        f"CASE WHEN {_vs(tags, 'bridge')} IS NOT NULL THEN 'bridge' "
+        f"WHEN {_vs(tags, 'tunnel')} IS NOT NULL THEN 'tunnel' ELSE '' END"
     )
 
 
-def format_lastchange(ts: Column | str) -> Column:
+def format_lastchange(ts: str) -> Column:
     """P8 — datastorage.hpp:131-136. ISO -> 'YYYY-MM-DD HH:MM:SS'."""
-    if isinstance(ts, str):
-        return F.expr(f"date_format({ts}, 'yyyy-MM-dd HH:mm:ss')")
-    return F.date_format(ts, "yyyy-MM-dd HH:mm:ss")
+    return F.expr(f"date_format({ts}, 'yyyy-MM-dd HH:mm:ss')")
 
 
-def name_or_empty(tags: Column | str) -> Column:
+def name_or_empty(tags: str) -> Column:
     """Reference stores '' for missing names in the connectivity map
-    (datastorage.hpp:306) and leaves the DB field NULL; we normalize to ''."""
-    if isinstance(tags, str):
-        return F.expr(f"coalesce({_vs(tags, 'name')}, '')")
-    return F.coalesce(_v(tags, "name"), F.lit(""))
+    (datastorage.hpp:306) and leaves the DB field NULL; we normalize to ''.
+    Connectivity's multi_names (min(name) != max(name)) relies on this:
+    a null would be skipped by min/max and hide a name change."""
+    return F.expr(f"coalesce({_vs(tags, 'name')}, '')")

@@ -71,7 +71,14 @@ def _u32_scatter(data, pos, vals):
 
 
 def _binary_array(n, ok, out_off, data):
-    """(validity, offsets, flat data) -> Arrow binary array (null where ~ok)."""
+    """(validity, offsets, flat data) -> Arrow binary array (null where ~ok).
+    ``pa.binary()`` offsets are int32: a batch past 2 GiB of WKB would wrap
+    them silently, so it fails loudly instead."""
+    if out_off[-1] > np.iinfo(np.int32).max:
+        raise OverflowError(
+            f"{int(out_off[-1])} WKB bytes in one Arrow batch exceed the int32 "
+            "offsets of pa.binary(); lower spark.sql.execution.arrow.maxRecordsPerBatch"
+        )
     validity = pa.py_buffer(np.packbits(ok, bitorder="little").tobytes())
     offsets = pa.py_buffer(out_off.astype(np.int32).tobytes())
     return pa.Array.from_buffers(

@@ -56,7 +56,7 @@ def apply_pass3(candidates: DataFrame, ways: DataFrame) -> DataFrame:
     c = candidates.join(hits, "node_id", "left").withColumn(
         "hits", F.expr("coalesce(hits, 0)")
     )
-    # SQL-text twins (one parse each; identical trees — see errors.py)
+    # SQL text built from errors.py's bit test (one parse per expression)
     pr, po = E._has_sql("mask", E.POSS_RIVERMOUTH), E._has_sql("mask", E.POSS_OUTFLOW)
     is_poss = f"({pr} OR {po})"
     emitted3 = f"((hits >= 1 AND NOT {is_poss}) OR (hits >= 2 AND {is_poss}))"
@@ -86,8 +86,8 @@ def apply_pass4(
     r = remaining.join(contained, "node_id", "left").withColumn(
         "contained", F.coalesce(F.col("contained"), F.lit(False))
     )
-    pr = E.has(F.col("mask3"), E.POSS_RIVERMOUTH)
-    po = E.has(F.col("mask3"), E.POSS_OUTFLOW)
+    pr = E.has("mask3", E.POSS_RIVERMOUTH)
+    po = E.has("mask3", E.POSS_OUTFLOW)
     mask4 = (
         F.when(F.col("contained") & pr, F.lit(E.RIVERMOUTH))
         .when(F.col("contained") & po, F.lit(E.OUTFLOW))

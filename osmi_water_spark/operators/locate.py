@@ -22,8 +22,7 @@ from pyspark.sql import functions as F
 def locate_ways(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     """ways(id, node_ids, ...) x nodes(id, lon, lat) -> ways + ``coords``
     array<struct<lon,lat>> (order-preserving, unlocated refs dropped).
-    Expression bodies are SQL text (single-parse, identical trees — see
-    cells.py "SQL-text twins")."""
+    Expression bodies are SQL text, one parse each."""
     exploded = ways.select(F.col("id").alias("way_id"), F.posexplode("node_ids").alias("pos", "nid"))
     located = exploded.join(
         nodes.selectExpr("id AS nid", "lon", "lat"), "nid", "left"

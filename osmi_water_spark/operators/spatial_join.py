@@ -241,8 +241,7 @@ def pip_join(
         # actually present with one tiny aggregate
         res_rows = polygon_parts.select(
             C.adaptive_cover_res(
-                F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-                res_min, res_max, max_cells,
+                "minx", "miny", "maxx", "maxy", res_min, res_max, max_cells
             ).alias("res")
         ).distinct().collect()
         res_list = sorted({r.res for r in res_rows})

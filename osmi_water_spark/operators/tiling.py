@@ -6,7 +6,7 @@ validation dimensions, SURVEY.md §2.9/§7.1).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osmi_water_spark.functions import cells as C
@@ -14,27 +14,6 @@ from osmi_water_spark.functions import cells as C
 NODE_ERROR_CLASSES = [
     "direction_error", "name_error", "type_error", "spring_error", "end_error", "way_error",
 ]
-
-
-def tile_cover(minx: Column, miny: Column, maxx: Column, maxy: Column, z: int) -> Column:
-    """All z/x/y tiles intersecting a lon/lat bbox (array of packed ids).
-    Mercator y grows downward: maxy -> ty0, miny -> ty1."""
-    tx0, ty0 = C.tile_xy(minx, maxy, z)
-    tx1, ty1 = C.tile_xy(maxx, miny, z)
-    zl = F.lit(z)
-    return F.flatten(
-        F.transform(
-            F.sequence(ty0.cast("long"), ty1.cast("long")),
-            lambda ty: F.transform(
-                F.sequence(tx0.cast("long"), tx1.cast("long")),
-                lambda tx: (
-                    F.shiftleft(zl.cast("long"), C.RES_BITS_SHIFT)
-                    + F.shiftleft(ty, C.IY_SHIFT)
-                    + tx
-                ),
-            ),
-        )
-    )
 
 
 def assign_node_tiles(nodes_out: DataFrame, z: int) -> DataFrame:
@@ -47,8 +26,7 @@ def tile_validation(nodes_out: DataFrame, z: int) -> DataFrame:
     sqlite sink, BASELINE.json:6). Classes: the six error flags, the two
     specifics, and 'normal'."""
     n = assign_node_tiles(nodes_out, z)
-    # one SQL-text expression (identical tree to the previous nested
-    # Column build — see cells.py "SQL-text twins")
+    # one SQL-text expression, parsed once
     whens = ", ".join(
         f"CASE WHEN {c} = 'true' THEN '{c.removesuffix('_error')}' END"
         for c in NODE_ERROR_CLASSES
@@ -73,9 +51,8 @@ def feature_tile_assignment(df: DataFrame, kind: str, id_col: str, z: int, cell_
     """Geometry tables -> (kind, feature_id, tile_id) via the h3_cells
     decoration: raster<->vector mapping is cell-bbox -> tile cover.
 
-    The cell-centre -> tile chain is one SQL-text expression (single
-    F.expr parse) instead of ~200 py4j round-trips of nested Column
-    building — identical tree, see cells.py "SQL-text twins"."""
+    The cell-centre -> tile chain is SQL text handed to ``C.tile_id`` (one
+    parse for the whole chain)."""
     cell = F.explode("h3_cells").alias("cell")
     c = df.select(F.col(id_col).alias("feature_id"), cell)
     # cell centre -> tile (cells are finer than or comparable to tiles here)

@@ -206,7 +206,7 @@ def q_f1_is_waterway_way(spark, sf_dir):
     df = _ways_geo(spark, sf_dir, _ncust(spark, sf_dir))
     return df.select(
         F.col("id").alias("way_id"),
-        TG.is_waterway(F.col("tags"), False).alias("is_ww"),
+        TG.is_waterway("tags", False).alias("is_ww"),
     )
 
 
@@ -223,7 +223,8 @@ def q_f1_is_waterway_relation(spark, sf_dir):
     ww = F.when(k % 6 == 0, F.lit("river")).when(k % 6 == 1, F.lit("riverbank"))
     # no map_filter: getItem-only consumers, see _tags_from_key
     m = F.create_map(F.lit("type"), typ, F.lit("waterway"), ww)
-    return sup.select(k.alias("relation_id"), TG.is_waterway(m, True).alias("is_ww"))
+    rels = sup.select(k.alias("relation_id"), m.alias("tags"))
+    return rels.select("relation_id", TG.is_waterway("tags", True).alias("is_ww"))
 
 
 SQL_F1_REL = """
@@ -239,7 +240,7 @@ FROM supplier
 
 def q_f_flags(spark, sf_dir):
     df = _ways_geo(spark, sf_dir, _ncust(spark, sf_dir))
-    t = F.col("tags")
+    t = "tags"
     return df.select(
         F.col("id").alias("way_id"),
         TG.is_way_to_analyse(t).alias("to_analyse"),
@@ -268,13 +269,13 @@ FROM tags
 
 def q_p_projections(spark, sf_dir):
     df = _ways_geo(spark, sf_dir, _ncust(spark, sf_dir))
-    t = F.col("tags")
-    wt = TG.get_way_type(t)
-    return df.select(
-        F.col("id").alias("way_id"),
-        wt.alias("way_type"),
+    t = "tags"
+    typed = df.select(F.col("id").alias("way_id"), TG.get_way_type(t).alias("way_type"), t)
+    return typed.select(
+        "way_id",
+        "way_type",
         TG.get_polygon_type(t).alias("polygon_type"),
-        TG.get_waterway_category(wt).alias("category"),
+        TG.get_waterway_category("way_type").alias("category"),
         TG.get_construction(t).alias("construction"),
         TG.name_or_empty(t).alias("name"),
         TG.get_width_tag(t).alias("width_tag"),
@@ -337,7 +338,7 @@ def q_p8_lastchange(spark, sf_dir):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return ev.select(
-        F.col("event_id"), TG.format_lastchange(F.col("ts")).alias("lastchange")
+        F.col("event_id"), TG.format_lastchange("ts").alias("lastchange")
     )
 
 
@@ -457,9 +458,9 @@ def q_e2_finalize(spark, sf_dir):
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
     mask = (F.col("p_partkey") % 4096).alias("mask")
     df = part.select(F.col("p_partkey").alias("id"), mask)
-    final = E.switch_poss(F.col("mask")).alias("final_mask")
+    final = E.switch_poss("mask").alias("final_mask")
     out = df.select("id", "mask", final)
-    cols = E.node_output_columns(F.col("final_mask"))
+    cols = E.node_output_columns("final_mask")
     return out.select("id", "mask", "final_mask", *[v.alias(k) for k, v in cols.items()])
 
 
@@ -722,7 +723,7 @@ def q_map_layers(spark, sf_dir):
     """§2.9 — the 26 mapserver layer filters as per-layer counts over the
     derived ways table (the de-facto downstream query workload)."""
     df = _ways_geo(spark, sf_dir, _ncust(spark, sf_dir))
-    t = F.col("tags")
+    t = "tags"
     wd = width_struct(TG.get_width_tag(t)).alias("wd")
     base = df.select(
         TG.get_way_type(t).alias("way_type"),
@@ -1194,7 +1195,7 @@ def q_j2_members(spark, sf_dir):
         ),
     )
     rels = sup.select(s.alias("id"), members.alias("members"), tags.alias("tags"))
-    rels = rels.filter(TG.is_waterway(F.col("tags"), True))
+    rels = rels.filter(TG.is_waterway("tags", True))
     ex = rels.select(F.col("id").alias("relation_id"), F.posexplode("members").alias("member_pos", "m"))
     ex = ex.filter(F.col("m.type") == "way")
     ways = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
@@ -1297,7 +1298,7 @@ def q_map_layers_polygons(spark, sf_dir):
     """§2.9 polygon layers (map/water.map:66, :112) over P3-typed areas
     gated by F7 (is_water_area), as AreaHandler does."""
     df = _ways_geo(spark, sf_dir, _ncust(spark, sf_dir))
-    t = F.col("tags")
+    t = "tags"
     base = df.filter(TG.is_water_area(t)).select(
         TG.get_polygon_type(t).alias("polygon_type")
     )
@@ -1355,8 +1356,8 @@ def q_map_layers_relations(spark, sf_dir):
     tags = F.create_map(F.lit("type"), typ, F.lit("waterway"), ww)
     rels = sup.select(k.alias("id"), tags.alias("tags"))
     base = (
-        rels.filter(TG.is_waterway(F.col("tags"), True))
-        .select(TG.get_way_type(F.col("tags")).alias("type"))
+        rels.filter(TG.is_waterway("tags", True))
+        .select(TG.get_way_type("tags").alias("type"))
     )
     return _layer_counts(base, RELATION_LAYERS)
 

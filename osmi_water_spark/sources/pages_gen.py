@@ -313,6 +313,15 @@ def world_entities(w: int, name: str) -> list[dict]:  # noqa: C901
                 {"type": "multipolygon", "natural": "water", "name": "Closed"},
             )
         )
+    elif name == "w20_unnamed_tributary":
+        # a named river ends where an unnamed one starts: name_error only
+        # because the missing name becomes '' (name_or_empty); a null would
+        # drop out of connectivity's min(name) != max(name)
+        n, wy, rl = _ids(20)  # like w19_open_ring: ids/slot follow the name
+        for i in range(1, 4):
+            E.append(node(n(i), *_grid(20, i)))
+        river(wy(1), [n(1), n(2)], "Named")
+        E.append(way(wy(2), [n(2), n(3)], {"waterway": "river"}))
     else:
         raise ValueError(f"unknown world {name}")
     return E
@@ -323,7 +332,7 @@ WORLD_NAMES = [
     "w05_type_error", "w06_rivermouth_pip", "w07_spring_end", "w08_fp_interior",
     "w09_degenerate_way", "w10_relation", "w11_incomplete_rel", "w12_multipolygon",
     "w13_widths", "w14_constructions", "w15_coastline", "w16_unnamed", "w17_skew",
-    "w19_open_ring",
+    "w19_open_ring", "w20_unnamed_tributary",
 ]
 
 

@@ -49,10 +49,7 @@ def main() -> None:
         parts.withColumn(
             "cell",
             F.explode(
-                C.adaptive_cover_cells(
-                    F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-                    3, res_max, max_cells,
-                )
+                C.adaptive_cover_cells("minx", "miny", "maxx", "maxy", 3, res_max, max_cells)
             ),
         ).select("cell", "area_key").distinct().count()
     )

@@ -84,7 +84,7 @@ WORLD_GROUPS = [
     ["w05_type_error"], ["w06_rivermouth_pip"], ["w07_spring_end"], ["w08_fp_interior"],
     ["w09_degenerate_way"], ["w10_relation"], ["w11_incomplete_rel"], ["w12_multipolygon"],
     ["w13_widths"], ["w14_constructions"], ["w15_coastline"], ["w16_unnamed"], ["w17_skew"],
-    ["w19_open_ring"],
+    ["w19_open_ring"], ["w20_unnamed_tributary"],
 ]
 
 
@@ -108,7 +108,9 @@ def test_all_worlds_combined(spark):
 
 def test_semantic_spotchecks(spark):
     """Hand-computed expectations independent of the oracle."""
-    got = spark_tables(spark, ["w02_name_change", "w06_rivermouth_pip", "w09_degenerate_way"])
+    got = spark_tables(spark, [
+        "w02_name_change", "w06_rivermouth_pip", "w09_degenerate_way", "w20_unnamed_tributary",
+    ])
     nodes = {n[0]: n for n in got["nodes"]}
     # w02: n(3) of world 2 -> name_error
     n3 = str(2 * 100_000 + 3)
@@ -120,6 +122,9 @@ def test_semantic_spotchecks(spark):
     # w09: both degenerate ways -> way_error rows
     for k in (9 * 100_000 + 1, 9 * 100_000 + 2):
         assert nodes[str(k)][7] == "true"
+    # w20: named river ends where an unnamed one starts -> name_error
+    # (the missing name counts as '', not as a null that min/max skip)
+    assert nodes[str(20 * 100_000 + 2)][3] == "true"
 
 
 def test_open_ring_fails_whole_area(spark):

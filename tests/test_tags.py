@@ -5,17 +5,21 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from osmi_water_spark.functions import tags as TG
 
 
-def _run(spark, rows, colfn):
-    df = spark.createDataFrame(
+def _tags_df(spark, rows):
+    return spark.createDataFrame(
         [(i, t) for i, t in enumerate(rows)], "i int, tags map<string,string>"
     )
-    out = df.select("i", colfn(F.col("tags")).alias("v")).orderBy("i").collect()
-    return [r.v for r in out]
+
+
+def _values(df, col):
+    return [r.v for r in df.select("i", col.alias("v")).orderBy("i").collect()]
+
+
+def _run(spark, rows, colfn):
+    return _values(_tags_df(spark, rows), colfn("tags"))
 
 
 def test_is_waterway_way(spark):
@@ -112,10 +116,12 @@ def test_get_way_type_and_category(spark):
         {"waterway": "brook"},
     ]
     assert _run(spark, rows, TG.get_way_type) == ["river", "other", "coastline", "", "brook"]
-    cats = _run(
-        spark, rows, lambda t: TG.get_waterway_category(TG.get_way_type(t))
-    )
-    assert cats == ["C", "?", "?", "?", "A"]
+    # P1 on an SQL expression argument, not just a column name
+    assert _run(spark, rows, lambda t: TG.get_waterway_type(f"{t}['waterway']")) == [
+        "river", "other", "", "", "brook",
+    ]
+    typed = _tags_df(spark, rows).select("i", TG.get_way_type("tags").alias("way_type"))
+    assert _values(typed, TG.get_waterway_category("way_type")) == ["C", "?", "?", "?", "A"]
 
 
 def test_get_polygon_type_quirk(spark):
@@ -152,64 +158,6 @@ def test_format_lastchange(spark):
         [(dt.datetime(2015, 7, 6, 12, 34, 56),)], "ts timestamp"
     )
     assert (
-        df.select(TG.format_lastchange(F.col("ts")).alias("v")).first().v
+        df.select(TG.format_lastchange("ts").alias("v")).first().v
         == "2015-07-06 12:34:56"
     )
-
-
-def test_sql_text_twins_match_column_builders(spark):
-    """r6: every tags.py / errors.py function's SQL-text path (string
-    column-name arg) must produce identical values and types to its
-    Column path, across all predicate branches."""
-    from pyspark.sql import functions as F
-
-    from osmi_water_spark.functions import errors as E
-    from osmi_water_spark.functions import tags as TG
-    from osmi_water_spark.plans.testdata_queries import _tags_from_key
-
-    df = spark.range(0, 3000).select(
-        _tags_from_key(F.col("id")).alias("tags"),
-        F.timestamp_seconds(F.col("id") * 977 % 2_000_000_000).alias("ts"),
-        (F.col("id") % 4096).cast("int").alias("mask"),
-        F.element_at(
-            F.array(*[F.lit(v) for v in
-                      ["river", "stream", "drain", "weir", "", "coastline", None]]),
-            (F.col("id") % 7 + 1).cast("int"),
-        ).alias("wt"),
-    )
-    pairs = [
-        (TG.is_waterway(F.col("tags"), False), TG.is_waterway("tags", False)),
-        (TG.is_waterway(F.col("tags"), True), TG.is_waterway("tags", True)),
-        (TG.waterpolygon_filter(F.col("tags")), TG.waterpolygon_filter("tags")),
-        (TG.has_waterway_tag(F.col("tags")), TG.has_waterway_tag("tags")),
-        (TG.is_way_to_analyse(F.col("tags")), TG.is_way_to_analyse("tags")),
-        (TG.is_area_to_analyse(F.col("tags")), TG.is_area_to_analyse("tags")),
-        (TG.is_riverbank_or_coastline(F.col("tags")), TG.is_riverbank_or_coastline("tags")),
-        (TG.is_water_area(F.col("tags")), TG.is_water_area("tags")),
-        (TG.get_waterway_type(F.col("wt")), TG.get_waterway_type("wt")),
-        (TG.get_way_type(F.col("tags")), TG.get_way_type("tags")),
-        (TG.get_polygon_type(F.col("tags")), TG.get_polygon_type("tags")),
-        (TG.get_waterway_category(F.col("wt")), TG.get_waterway_category("wt")),
-        (TG.get_width_tag(F.col("tags")), TG.get_width_tag("tags")),
-        (TG.get_construction(F.col("tags")), TG.get_construction("tags")),
-        (TG.format_lastchange(F.col("ts")), TG.format_lastchange("ts")),
-        (TG.name_or_empty(F.col("tags")), TG.name_or_empty("tags")),
-        (E.has(F.col("mask"), E.RIVER), E.has("mask", E.RIVER)),
-        (E.switch_poss(F.col("mask")), E.switch_poss("mask")),
-        (E.resolve_false_positive(F.col("mask")), E.resolve_false_positive("mask")),
-    ]
-    col_out = E.node_output_columns(F.col("mask"))
-    sql_out = E.node_output_columns("mask")
-    for k in col_out:
-        pairs.append((col_out[k], sql_out[k]))
-    sel = df.select(
-        *[c.alias(f"col_{i}") for i, (c, _) in enumerate(pairs)],
-        *[s.alias(f"sql_{i}") for i, (_, s) in enumerate(pairs)],
-    )
-    sch = {f.name: f.dataType for f in sel.schema.fields}
-    for i in range(len(pairs)):
-        assert sch[f"col_{i}"] == sch[f"sql_{i}"], f"type mismatch at pair {i}"
-    bad = sel.filter(
-        " OR ".join(f"(NOT (col_{i} <=> sql_{i}))" for i in range(len(pairs)))
-    ).count()
-    assert bad == 0

@@ -94,7 +94,6 @@ def test_switch_poss_idempotent(spark):
     when it isn't already set; a mask carrying END (or SPRING) plus the poss
     bit only loses the poss bit."""
     from osmi_water_spark.functions import errors as E
-    from pyspark.sql import functions as F
 
     cases = [
         (E.RIVER + E.POSS_RIVERMOUTH + E.END, E.RIVER + E.END),
@@ -103,7 +102,7 @@ def test_switch_poss_idempotent(spark):
         (E.RIVER + E.POSS_OUTFLOW, E.RIVER + E.SPRING),
     ]
     df = spark.createDataFrame([(m,) for m, _ in cases], "m int")
-    got = [r.v for r in df.select(E.switch_poss(F.col("m")).alias("v")).collect()]
+    got = [r.v for r in df.select(E.switch_poss("m").alias("v")).collect()]
     assert got == [e for _, e in cases]
 
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from osmi_water_spark.functions import cells as C
@@ -69,7 +70,7 @@ def test_pip_multipolygon_wkb():
 def test_cell_encode_decode(spark):
     df = spark.createDataFrame([(8.54, 47.37), (-179.99, -89.99), (179.99, 89.99)], "lon double, lat double")
     out = df.select(
-        C.cell_of(F.col("lon"), F.col("lat"), 7).alias("c")
+        C.cell_of("lon", "lat", 7).alias("c")
     ).select(
         C.cell_res(F.col("c")).alias("r"),
         C.cell_ix(F.col("c")).alias("ix"),
@@ -84,7 +85,7 @@ def test_cell_encode_decode(spark):
 
 def test_bbox_cover_and_adaptive(spark):
     df = spark.createDataFrame([(0.0, 0.0, 10.0, 5.0)], "minx double, miny double, maxx double, maxy double")
-    cols = [F.col(c) for c in ["minx", "miny", "maxx", "maxy"]]
+    cols = ["minx", "miny", "maxx", "maxy"]
     row = df.select(
         F.size(C.bbox_cover_cells(*cols, 7)).alias("n7"),
         C.adaptive_cover_res(*cols, 3, 7, 8).alias("ar"),
@@ -96,12 +97,25 @@ def test_bbox_cover_and_adaptive(spark):
     assert 3 <= row.ar < 7
 
 
+def test_bbox_cover_lambda_vars_ignore_caller_columns(spark):
+    """The cover's lambda variables must not capture a caller column of the
+    same name: a min-x column named ``iy`` gives the same 4 cells as SQL
+    literals do."""
+    df = spark.createDataFrame([(0.0, 0.0, 10.0, 5.0)], "iy double, miny double, maxx double, maxy double")
+    row = df.select(
+        C.bbox_cover_cells("iy", "miny", "maxx", "maxy", 6).alias("cov"),
+        C.bbox_cover_cells("0.0D", "0.0D", "10.0D", "5.0D", 6).alias("want"),
+    ).first()
+    assert len(row.want) == 4
+    assert row.cov == row.want
+
+
 def test_point_cell_matches_cover(spark):
     # a point inside a bbox must land in one of the cover cells (same res)
     df = spark.createDataFrame([(3.3, 2.2)], "lon double, lat double")
     row = df.select(
-        C.cell_of(F.col("lon"), F.col("lat"), 6).alias("pc"),
-        C.bbox_cover_cells(F.lit(0.0), F.lit(0.0), F.lit(10.0), F.lit(5.0), 6).alias("cov"),
+        C.cell_of("lon", "lat", 6).alias("pc"),
+        C.bbox_cover_cells("0.0D", "0.0D", "10.0D", "5.0D", 6).alias("cov"),
     ).first()
     assert row.pc in row.cov
 
@@ -109,7 +123,7 @@ def test_point_cell_matches_cover(spark):
 def test_k_ring(spark):
     df = spark.createDataFrame([(10.0, 10.0)], "lon double, lat double")
     row = df.select(
-        C.k_ring(C.cell_of(F.col("lon"), F.col("lat"), 7), 1).alias("ring")
+        C.k_ring(C.cell_of("lon", "lat", 7), 1).alias("ring")
     ).first()
     assert len(row.ring) == 9 and len(set(row.ring)) == 9
 
@@ -120,19 +134,11 @@ def test_tile_xy_reference_values(spark):
     tx, ty = C.tile_xy(F.col("lon"), F.col("lat"), 10)
     row = df.select(tx.alias("x"), ty.alias("y")).first()
     assert (row.x, row.y) == (536, 358)
-
-
-def test_tile_bounds_roundtrip(spark):
-    df = spark.createDataFrame([(536, 358)], "tx long, ty long")
-    minx, miny, maxx, maxy = C.tile_bounds(10, F.col("tx"), F.col("ty"))
-    row = df.select(minx.alias("a"), miny.alias("b"), maxx.alias("c"), maxy.alias("d")).first()
-    assert row.a <= 8.54 <= row.c and row.b <= 47.37 <= row.d
-
-
-def test_tile_to_cells(spark):
-    df = spark.createDataFrame([(536, 358)], "tx long, ty long")
-    row = df.select(C.tile_to_cells(10, F.col("tx"), F.col("ty"), 7).alias("cells")).first()
-    assert len(row.cells) >= 1
+    t = df.select(C.tile_id("lon", "lat", 10).alias("t")).select(
+        C.cell_res(F.col("t")).alias("z"), C.cell_ix(F.col("t")).alias("x"),
+        C.cell_iy(F.col("t")).alias("y"),
+    ).first()
+    assert (t.z, t.x, t.y) == (10, 536, 358)
 
 
 def test_errors_switch_poss(spark):
@@ -143,42 +149,31 @@ def test_errors_switch_poss(spark):
          (E.POSS_RIVERMOUTH + E.STREAM,), (E.DIRECTION,)],
         "m int",
     )
-    got = [r.v for r in df.select(E.switch_poss(F.col("m")).alias("v")).collect()]
-    assert got == [
+    want = [
         E.RIVER + E.END,
         E.RIVER + E.SPRING,
         E.POSS_RIVERMOUTH + E.STREAM,  # stream possibles never resolve (quirk)
         E.DIRECTION,
     ]
+    got = [r.v for r in df.select(E.switch_poss("m").alias("v")).collect()]
+    assert got == want
+    # an SQL expression argument keeps its own precedence: `m | 0` is m
+    got = [r.v for r in df.select(E.switch_poss("m | 0").alias("v")).collect()]
+    assert got == want
 
 
 def test_sql_text_twins_match_column_builders(spark):
-    """r6: the one-round-trip SQL-text paths (string column args) must
-    produce IDENTICAL values AND types to the Column-builder paths for
-    every cell/tile helper that has one."""
+    """cell_of and tile_id keep a Column arm because __spark_entry__.py
+    calls them with F.col; it must produce identical values and types to
+    the SQL text for the same points."""
     import random
 
     rng = random.Random(11)
-    rows = [
-        (rng.uniform(-185, 175), rng.uniform(-95, 85), rng.uniform(0, 40), rng.uniform(0, 20))
-        for _ in range(300)
-    ]
-    df = spark.createDataFrame(rows, "minx double, miny double, w double, h double").select(
-        "minx", "miny",
-        (F.col("minx") + F.col("w")).alias("maxx"),
-        (F.col("miny") + F.col("h")).alias("maxy"),
-        F.col("minx").alias("lon"), F.col("miny").alias("lat"),
-    )
+    rows = [(rng.uniform(-185, 185), rng.uniform(-95, 95)) for _ in range(300)]
+    rows += [(-180.0, -90.0), (180.0, 90.0), (0.0, 0.0), (-180.0, 85.0511287798)]
+    df = spark.createDataFrame(rows, "lon double, lat double")
     pairs = [
         (C.cell_of(F.col("lon"), F.col("lat"), 7), C.cell_of("lon", "lat", 7)),
-        (C.cell_of_multi(F.col("lon"), F.col("lat"), [3, 5, 7]),
-         C.cell_of_multi("lon", "lat", [3, 5, 7])),
-        (C.bbox_cover_cells(F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), 6),
-         C.bbox_cover_cells("minx", "miny", "maxx", "maxy", 6)),
-        (C.adaptive_cover_res(F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), 3, 7, 64),
-         C.adaptive_cover_res("minx", "miny", "maxx", "maxy", 3, 7, 64)),
-        (C.adaptive_cover_cells(F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), 3, 7, 64),
-         C.adaptive_cover_cells("minx", "miny", "maxx", "maxy", 3, 7, 64)),
         (C.tile_id(F.col("lon"), F.col("lat"), 8), C.tile_id("lon", "lat", 8)),
     ]
     sel = df.select(
@@ -194,6 +189,75 @@ def test_sql_text_twins_match_column_builders(spark):
         )
     ).count()
     assert bad == 0
+
+
+def _cover_edge_bboxes(res_max: int, max_cells: int) -> list[tuple]:
+    """Bboxes on the edges of the cover math: the lon/lat limits, exact
+    cell edges, zero width, and covers of exactly ``max_cells`` cells and
+    one more at ``res_max``."""
+    cw, ch = 360.0 / (1 << res_max), 180.0 / (1 << res_max)
+    out = [
+        (-180.0, -90.0, 180.0, 90.0), (180.0, 90.0, 180.0, 90.0),
+        (-180.0, -90.0, -180.0, -90.0), (-185.0, -95.0, -170.0, -80.0),
+        (170.0, 80.0, 185.0, 95.0), (0.0, 0.0, cw, ch), (cw, ch, 2 * cw, 2 * ch),
+        (-cw, -ch, 0.0, 0.0), (12.3, 45.6, 12.3, 45.6), (0.0, 0.0, 0.0, 0.0),
+        (12.3, 45.6, 12.3, 50.0), (12.3, 45.6, 20.0, 45.6),
+    ]
+    for n in (max_cells, max_cells + 1):  # every cols x rows == n, both sides of 0
+        for cols in (c for c in range(1, n + 1) if n % c == 0):
+            rows = n // cols
+            out.append((0.5 * cw, 0.5 * ch, (cols - 0.5) * cw, (rows - 0.5) * ch))
+            out.append((-(cols - 0.5) * cw, -(rows - 0.5) * ch, -0.5 * cw, -0.5 * ch))
+    return out
+
+
+def test_np_kernels_match_sql_cover(spark):
+    """The map-side PIP probe computes cells in numpy (np_cell_of, np_cover)
+    and joins them against covers the SQL text defines, so the numpy
+    kernels must match the SQL row for row: resolution per bbox, cell ids
+    in order, owner index, and point cells at every resolution."""
+    import random
+
+    rng = random.Random(11)
+    res_min, res_max = 3, 7
+    for max_cells in (8, 64):
+        boxes = [
+            (x, y, x + rng.uniform(0, 40), y + rng.uniform(0, 20))
+            for x, y in ((rng.uniform(-185, 175), rng.uniform(-95, 85)) for _ in range(300))
+        ] + _cover_edge_bboxes(res_max, max_cells)
+        df = spark.createDataFrame(
+            [(i, *b) for i, b in enumerate(boxes)],
+            "i int, minx double, miny double, maxx double, maxy double",
+        )
+        cols = ["minx", "miny", "maxx", "maxy"]
+        got = df.select(
+            "i", *cols,
+            C.adaptive_cover_res(*cols, res_min, res_max, max_cells).alias("res"),
+            C.adaptive_cover_cells(*cols, res_min, res_max, max_cells).alias("cells"),
+        ).orderBy("i").collect()
+        res, cells, owner = C.np_cover(
+            [r.minx for r in got], [r.miny for r in got],
+            [r.maxx for r in got], [r.maxy for r in got],
+            res_min, res_max, max_cells,
+        )
+        assert res.tolist() == [r.res for r in got]
+        assert cells.tolist() == [c for r in got for c in r.cells]
+        assert owner.tolist() == [i for i, r in enumerate(got) for _ in r.cells]
+        counts = {len(r.cells) for r in got}
+        assert max_cells in counts  # the boundary cases really hit the cap
+
+    pts = [(b[0], b[1]) for b in boxes] + [(b[2], b[3]) for b in boxes]
+    resolutions = [3, 5, 7, 20]
+    pdf = spark.createDataFrame(
+        [(i, *p) for i, p in enumerate(pts)], "i int, lon double, lat double"
+    )
+    got = pdf.select(
+        "i", "lon", "lat", C.cell_of_multi("lon", "lat", resolutions).alias("c")
+    ).orderBy("i").collect()
+    lon = np.array([r.lon for r in got])
+    lat = np.array([r.lat for r in got])
+    for k, res in enumerate(resolutions):
+        assert C.np_cell_of(lon, lat, res).tolist() == [r.c[k] for r in got]
 
 
 def _scalar_linestring(pts):
@@ -297,3 +361,17 @@ def test_arrow_point_wkb_matches_scalar_spec(spark):
     want = [None if x is None or (isinstance(x, float) and math.isnan(x))
             else hdr + struct.pack("<dd", x, y) for x, y in rows]
     assert [bytes(g) if g is not None else None for g in got] == want
+
+
+def test_binary_array_rejects_int32_offset_overflow():
+    """Offsets past 2^31 cannot be stored in pa.binary()'s int32 offsets;
+    the builder must raise instead of wrapping them."""
+    from osmi_water_spark.functions.wkb_vec import _binary_array
+
+    ok = np.array([True, True])
+    data = np.zeros(4, dtype=np.uint8)
+    assert _binary_array(2, ok, np.array([0, 2, 4], dtype=np.int64), data).to_pylist() == [
+        b"\0\0", b"\0\0",
+    ]
+    with pytest.raises(OverflowError):
+        _binary_array(2, ok, np.array([0, 2, 2**31], dtype=np.int64), data)
