@@ -200,18 +200,12 @@ def np_cell_of(lon, lat, res: int):
     return (np.int64(res) << RES_BITS_SHIFT) + (iy << IY_SHIFT) + ix
 
 
-def np_cover(minx, miny, maxx, maxy, res_min: int = 3, res_max: int = DEFAULT_RES,
-             max_cells: int = MAX_COVER_CELLS):
-    """Numpy twin of adaptive_cover_res + adaptive_cover_cells over ARRAYS
-    of bboxes: returns (res_per_box int64, flat cell ids int64, owner box
-    index int64). Identical IEEE op order to the JVM expressions
-    ((x+180.0)/360.0*n, floor, clamp; finest res in [res_min, res_max]
-    whose cover count stays <= max_cells, else res_min) and identical cell
-    order (iy outer, ix inner) so a driver-side cover is byte-equal to the
-    Spark-computed one. Used by the probe-mode PIP join to derive the
-    whole cover from the ALREADY-COLLECTED parts instead of running a
-    second Spark job over the polygon side (guide §8: decide with small
-    rows)."""
+def np_cover_boxes(minx, miny, maxx, maxy, res_min: int = 3, res_max: int = DEFAULT_RES,
+                   max_cells: int = MAX_COVER_CELLS):
+    """The per-box half of ``np_cover``: each box's cover resolution and
+    cell range as (res, ix0, iy0, width, height) int64 arrays. The cover
+    has ``(width * height).sum()`` cells, so a caller can bound it before
+    ``np_cover`` allocates it."""
     import numpy as np
 
     minx = np.asarray(minx, dtype=np.float64)
@@ -240,8 +234,25 @@ def np_cover(minx, miny, maxx, maxy, res_min: int = 3, res_max: int = DEFAULT_RE
         m = res == r
         ix0[m], ix1[m] = _ix(minx[m], int(r)), _ix(maxx[m], int(r))
         iy0[m], iy1[m] = _iy(miny[m], int(r)), _iy(maxy[m], int(r))
-    w = ix1 - ix0 + 1
-    counts = w * (iy1 - iy0 + 1)
+    return res, ix0, iy0, ix1 - ix0 + 1, iy1 - iy0 + 1
+
+
+def np_cover(minx, miny, maxx, maxy, res_min: int = 3, res_max: int = DEFAULT_RES,
+             max_cells: int = MAX_COVER_CELLS):
+    """Numpy twin of adaptive_cover_res + adaptive_cover_cells over ARRAYS
+    of bboxes: returns (res_per_box int64, flat cell ids int64, owner box
+    index int64). Identical IEEE op order to the JVM expressions
+    ((x+180.0)/360.0*n, floor, clamp; finest res in [res_min, res_max]
+    whose cover count stays <= max_cells, else res_min) and identical cell
+    order (iy outer, ix inner) so a driver-side cover is byte-equal to the
+    Spark-computed one. Used by the probe-mode PIP join to derive the
+    whole cover from the ALREADY-COLLECTED parts instead of running a
+    second Spark job over the polygon side (guide §8: decide with small
+    rows)."""
+    import numpy as np
+
+    res, ix0, iy0, w, h = np_cover_boxes(minx, miny, maxx, maxy, res_min, res_max, max_cells)
+    counts = w * h
     offs = np.zeros(len(counts) + 1, dtype=np.int64)
     np.cumsum(counts, out=offs[1:])
     total = int(offs[-1])

@@ -118,8 +118,9 @@ def standalone_ways(relations: DataFrame, ways_located: DataFrame) -> DataFrame:
 
 
 def build_way_rows(relations: DataFrame, ways_located: DataFrame) -> DataFrame:
-    """All candidate way-feature rows (pre-geometry): member rows once per
-    membership + standalone rows with relation_id=0."""
+    """All candidate way-feature rows: member rows once per membership +
+    standalone rows with relation_id=0, each with its linestring (``ls``)
+    and way type."""
     members = member_way_pairs(relations, ways_located).selectExpr(
         "member_way_id AS id",
         "node_ids",
@@ -134,16 +135,19 @@ def build_way_rows(relations: DataFrame, ways_located: DataFrame) -> DataFrame:
         "CAST(0 AS BIGINT) AS relation_id",
         "0 AS member_pos",
     )
-    return members.unionByName(singles)
+    return (
+        members.unionByName(singles)
+        .withColumn("ls", make_linestring("coords"))
+        .withColumn("way_type", TG.get_way_type("tags"))
+    )
 
 
 def assemble_ways(way_rows: DataFrame, cell_res: int = C.DEFAULT_RES) -> dict[str, DataFrame]:
-    """way rows -> {'ways': O3 table rows, 'remembered': connectivity input,
-    'way_errors': E5 node-candidate rows, 'geoms': per-membership geometry}."""
-    g = way_rows.withColumn("ls", make_linestring("coords"))
-    g = g.withColumn("way_type", TG.get_way_type("tags")).cache()
-
-    ok = g.filter(F.col("ls.ok"))
+    """way rows (``build_way_rows``) -> {'ways': O3 table rows,
+    'remembered': connectivity input, 'way_errors': E5 node-candidate rows,
+    'geoms': per-membership geometry}. ``way_rows`` feeds all four, so the
+    pipeline materializes it first."""
+    ok = way_rows.filter(F.col("ls.ok"))
     wd = ok.withColumn("wd", width_struct(TG.get_width_tag("tags")))
     ways_out = wd.select(
         F.expr("id AS way_id"),
@@ -172,12 +176,12 @@ def assemble_ways(way_rows: DataFrame, cell_res: int = C.DEFAULT_RES) -> dict[st
 
     # E5: degenerate geometry -> way_error at the raw first node
     way_errors = (
-        g.filter(~F.col("ls.ok"))
+        way_rows.filter(~F.col("ls.ok"))
         .select(F.expr("element_at(node_ids, 1) AS node_id"))
         .filter(F.expr("node_id IS NOT NULL"))
     )
 
-    geoms = g.filter(F.col("ls.ok")).selectExpr(
+    geoms = ok.selectExpr(
         "relation_id", "id AS way_id", "member_pos",
         "ls.wkb AS wkb",
         "ls.minx AS minx", "ls.miny AS miny", "ls.maxx AS maxx", "ls.maxy AS maxy",

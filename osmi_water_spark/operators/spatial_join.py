@@ -229,11 +229,13 @@ def pip_join(
         part_rows = polygon_parts.select(
             "area_key", "part_wkb", "minx", "miny", "maxx", "maxy"
         ).collect()
-        res_np, cover_cells, cover_owner = C.np_cover(
+        cover_args = (
             [r["minx"] for r in part_rows], [r["miny"] for r in part_rows],
             [r["maxx"] for r in part_rows], [r["maxy"] for r in part_rows],
             res_min, res_max, max_cells,
-        ) if part_rows else (np.empty(0, np.int64),) * 3
+        )
+        res_np, _, _, cover_w, cover_h = C.np_cover_boxes(*cover_args)
+        cover_pairs = int((cover_w * cover_h).sum())
         if res_list is None:
             res_list = sorted({int(r) for r in res_np})
     elif res_list is None:
@@ -261,23 +263,27 @@ def pip_join(
         # Preferred physical strategy: map-side probe. If the (cell, area)
         # cover table also fits the broadcast, ship it with the index and
         # run the whole join as one narrow mapInArrow over the raw points —
-        # no explode, no join, no candidate shuffle. Falls back to the
-        # broadcast-WKB equi-join when the cover is too wide.
-        key_of_part = np.fromiter(
-            (index.key_id[r["area_key"]] for r in part_rows),
-            dtype=np.int64, count=len(part_rows),
-        )
-        keys_by_id = [None] * len(index.key_id)
-        for k, i in index.key_id.items():
-            keys_by_id[i] = k
-        # CellProbeIndex dedups (cell, key) pairs at build time — same set
-        # as the old cover.distinct() job, computed from the driver arrays
-        probe = CellProbeIndex(
-            np.column_stack([cover_cells, key_of_part[cover_owner]])
-            if len(cover_cells) else np.empty((0, 2), np.int64),
-            index, res_list, keys_by_id,
-        )
-        if len(probe.cand_key) <= MAX_PROBE_CELLS:
+        # no explode, no join, no candidate shuffle. The cap is checked on
+        # the per-box counts BEFORE the cover exists, so an over-cap cover
+        # (up to MAX_BROADCAST_PARTS * MAX_COVER_CELLS pairs) is never
+        # built on the driver; it falls back to the broadcast-WKB
+        # equi-join. The count is of (cell, part) pairs, before
+        # CellProbeIndex's (cell, key) dedup.
+        if cover_pairs <= MAX_PROBE_CELLS:
+            _, cover_cells, cover_owner = C.np_cover(*cover_args)
+            key_of_part = np.fromiter(
+                (index.key_id[r["area_key"]] for r in part_rows),
+                dtype=np.int64, count=len(part_rows),
+            )
+            keys_by_id = [None] * len(index.key_id)
+            for k, i in index.key_id.items():
+                keys_by_id[i] = k
+            # CellProbeIndex dedups (cell, key) pairs at build time — same
+            # set as a cover.distinct() job, computed from the driver arrays
+            probe = CellProbeIndex(
+                np.column_stack([cover_cells, key_of_part[cover_owner]]),
+                index, res_list, keys_by_id,
+            )
             bcp = spark.sparkContext.broadcast(probe)
             # NOT spread_input-widened (r6 A/B, interleaved): the probe is
             # already cheap per point, so the extra exchange's stage

@@ -169,24 +169,51 @@ class Sink:
         return spark.read.table(self._table(name))
 
 
+def _checkpoint(df: DataFrame, held: list[DataFrame]) -> DataFrame:
+    """Materialize ``df`` now as an eager local checkpoint and add it to
+    ``held`` (the run's checkpoints, released by ``_release``).
+
+    Every intermediate with more than one consumer goes through here. A
+    downstream plan then reads a ``Scan ExistingRDD`` leaf instead of
+    re-embedding the upstream DAG: nested ``.cache()`` plans each carried
+    every upstream plan in full (one cold small run rendered ~40 MB of
+    plan text, re-rendered by AQE after every query stage), and that
+    rendering was the pipeline's fixed cost.
+
+    A local checkpoint lives in executor storage WITHOUT lineage: losing
+    an executor that holds a block fails the run instead of recomputing
+    it. Checkpointed mode with ``resume=True`` is the durable path."""
+    df = df.localCheckpoint(eager=True)
+    held.append(df)
+    return df
+
+
+def _release(dfs) -> None:
+    """Unpersist local checkpoints made by ``_checkpoint``. They are RDDs
+    behind a ``LogicalRDD`` leaf, not CacheManager entries, so
+    ``spark.catalog.clearCache()`` does not reach them."""
+    for df in dfs:
+        df._jdf.logicalPlan().rdd().unpersist(False)
+
+
 def _stage(sink: Sink | None, name: str, compute, spark: SparkSession,
-           lineage: Lineage | None, resume: bool):
-    """Checkpoint-or-resume wrapper: one sink table/dir per stage."""
-    if sink:
-        if resume and sink.exists(spark, name):
-            return sink.read(spark, name), True
-        t0 = time.time()
-        df = compute()
-        if lineage is not None:
-            df, obs = lineage.attach(name, df)
-        sink.write(df, name)
-        if lineage is not None:
-            lineage.record(name, obs, t0)
-        return sink.read(spark, name), False
-    # no checkpoint dir: cache stage outputs so the DAG is evaluated once
-    # even when several downstream consumers (or separate count() actions)
-    # pull on it — the in-memory analogue of the parquet checkpoint
-    return compute().cache(), False
+           lineage: Lineage | None, resume: bool, held: list[DataFrame]) -> DataFrame:
+    """One pipeline stage output. With a sink: checkpoint-or-resume, one
+    sink table/dir per stage, returned as a read of that table. Without
+    one: materialized by ``_checkpoint``, so every consumer reads the
+    stored rows."""
+    if not sink:
+        return _checkpoint(compute(), held)
+    if resume and sink.exists(spark, name):
+        return sink.read(spark, name)
+    t0 = time.time()
+    df = compute()
+    if lineage is not None:
+        df, obs = lineage.attach(name, df)
+    sink.write(df, name)
+    if lineage is not None:
+        lineage.record(name, obs, t0)
+    return sink.read(spark, name)
 
 
 def run_pipeline(
@@ -205,6 +232,16 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """pages -> the four output tables + tile tables (+ checkpoints).
 
+    Every intermediate that several consumers read (entities, located
+    ways, way geometries, areas, PIP parts, error masks, pass-3/4 results)
+    is materialized once by ``_checkpoint`` as a local checkpoint, in both
+    modes; the run releases all of them before it returns. Without
+    ``out_dir`` (cached mode) the returned tables are materialized local
+    checkpoints too, which the caller owns; with ``out_dir`` they are reads
+    of the sink tables. Local checkpoints have no lineage, so losing an
+    executor mid-run fails the run: checkpointed mode with ``resume=True``
+    is the durable path.
+
     ``bucket_entities``: write the entities checkpoint as a table bucketed
     by id (N buckets) — the J1 locate join then reads its nodes side
     pre-partitioned on the join key (one Exchange instead of two). On a
@@ -222,6 +259,7 @@ def run_pipeline(
         if out_dir else None
     )
     lineage = Lineage() if (with_lineage and sink) else None
+    held: list[DataFrame] = []  # every local checkpoint this run makes
 
     # ---- Stage A: extraction (skipped when entities are handed over) ----
     if entities is None:
@@ -232,19 +270,19 @@ def run_pipeline(
             from osmi_water_spark.operators.extract import validate_entities_schema
 
             validate_entities_schema(spark, sink.path("entities"))
-        entities, _ = _stage(
-            sink, "entities", lambda: extract_entities(pages), spark, lineage, resume
+        entities = _stage(
+            sink, "entities", lambda: extract_entities(pages), spark, lineage, resume, held
         )
     nodes, ways, relations = split_entities(entities)
 
     # ---- Stage B: locate (J1) ----
-    ways_located, _ = _stage(
-        sink, "ways_located", lambda: locate_ways(ways, nodes), spark, lineage, resume
+    ways_located = _stage(
+        sink, "ways_located", lambda: locate_ways(ways, nodes), spark, lineage, resume, held
     )
     locations = node_locations(nodes)
 
     # ---- Stage C: assembly ----
-    way_rows = AS.build_way_rows(relations, ways_located)
+    way_rows = _checkpoint(AS.build_way_rows(relations, ways_located), held)
     parts = AS.assemble_ways(way_rows, cell_res)
     ways_out = parts["ways"]
     remembered = parts["remembered"]
@@ -252,21 +290,21 @@ def run_pipeline(
     relations_out = AS.assemble_relations(relations, parts["geoms"], cell_res)
 
     # areas / masks / pass outputs fan out to several consumers below —
-    # cache them so each is evaluated once per run
-    areas = AR.build_areas(ways_located, relations).cache()
+    # each is materialized here, so its consumers' plans start at a scan
+    areas = _checkpoint(AR.build_areas(ways_located, relations), held)
     polygons_out = AR.polygon_table(areas, cell_res)
-    pip_parts = AR.pip_index(areas).cache()
+    pip_parts = _checkpoint(AR.pip_index(areas), held)
 
     # ---- Stage D: connectivity ----
-    masks = CN.error_mask(CN.node_stats(remembered)).cache()
+    masks = _checkpoint(CN.error_mask(CN.node_stats(remembered)), held)
     normal, candidates = CN.split_candidates(masks)
 
     # ---- Stage E: passes 3 + 4 ----
-    after3 = FP.apply_pass3(candidates, ways).cache()
-    # res_list auto-discovered (one tiny collect over the cached parts):
+    after3 = _checkpoint(FP.apply_pass3(candidates, ways), held)
+    # res_list auto-discovered (one collect over the materialized parts):
     # the point-side explode fan-out equals the number of resolutions
     # actually present, which beats a fixed range by ~5x shuffle volume
-    after4 = FP.apply_pass4(after3, locations, pip_parts, salt=salt).cache()
+    after4 = _checkpoint(FP.apply_pass4(after3, locations, pip_parts, salt=salt), held)
 
     # ---- Stage F: finalize nodes table (O4) ----
     emitted3 = after3.filter(F.col("emitted3")).select("node_id", F.lit(0).alias("final_mask"))
@@ -297,9 +335,9 @@ def run_pipeline(
     )
 
     # the four output tables are independent leaves of the DAG: submit
-    # their stage jobs CONCURRENTLY (SparkSession is thread-safe; shared
-    # cached upstreams are computed once under BlockManager's per-block
-    # locks). In checkpointed mode this overlaps four write barriers that
+    # their stage jobs CONCURRENTLY (SparkSession is thread-safe; their
+    # shared upstreams are already materialized, so the leaves only read
+    # them). In checkpointed mode this overlaps four write barriers that
     # were serial — per-stage fixed cost (job launch, output commit) was
     # the measured non-scaling share of the pipeline wall (BENCH.md round
     # 3 stage profile), and it shrinks by the overlap factor. On a real
@@ -315,11 +353,11 @@ def run_pipeline(
     }
     with ThreadPoolExecutor(max_workers=len(leaves)) as ex:
         futs = {
-            name: ex.submit(_stage, sink, name, compute, spark, lineage, resume)
+            name: ex.submit(_stage, sink, name, compute, spark, lineage, resume, held)
             for name, compute in leaves.items()
         }
         for name, fut in futs.items():
-            out[name], _ = fut.result()
+            out[name] = fut.result()
 
     tv = TI.tile_validation(out["nodes"], tile_z)
     polys_fid = out["polygons"].withColumn(
@@ -340,7 +378,11 @@ def run_pipeline(
     tiles_union = tv.withColumn("_t", F.lit("v")).unionByName(
         ta.withColumn("_t", F.lit("a")), allowMissingColumns=True
     )
-    tiles, _ = _stage(sink, "tiles", lambda: tiles_union, spark, lineage, resume)
+    tiles = _stage(sink, "tiles", lambda: tiles_union, spark, lineage, resume, held)
+    # every output is now materialized or written: release the checkpoints
+    # this run does not return (incremental_pipeline calls it repeatedly)
+    returned = {id(tiles), *(id(out[name]) for name in leaves)}
+    _release(df for df in held if id(df) not in returned)
     out["tile_validation"] = tiles.filter(F.col("_t") == "v").select(
         "tile_id", "table", "error_class", "n"
     )

@@ -1,0 +1,74 @@
+"""The pipeline's shared intermediates are local checkpoints: plans stay
+flat (each downstream plan starts at a ``Scan ExistingRDD`` leaf instead of
+embedding every upstream plan), and a run releases every checkpoint it does
+not return."""
+
+from __future__ import annotations
+
+from osmi_water_spark.plans.pipeline import run_pipeline
+from osmi_water_spark.sources import pages_gen as PG
+
+PLAN_BYTES_MAX = 64 << 10
+TABLES = ("ways", "relations", "polygons", "nodes", "tile_validation", "tile_assignment")
+
+
+def _last_execution_id(store) -> int:
+    execs = store.executionsList()
+    return int(execs.last().executionId()) if execs.nonEmpty() else -1
+
+
+def _persisted_rdd_ids(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def test_pipeline_plans_stay_flat(spark):
+    """Every SQL execution of a cached-mode run (construction plus the
+    output counts) and every output table's formatted plan stays under
+    64 KB. A nested ``.cache()`` on the pipeline path embeds its whole
+    upstream plan in every consumer's plan, which takes these to MBs."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    first = _last_execution_id(store) + 1
+    pages = PG.pages_dataframe(spark, PG.pages_rows())
+    out = run_pipeline(spark, pages, out_dir=None, with_lineage=False)
+    for t in TABLES:
+        assert out[t].count() > 0, t
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    last = _last_execution_id(store)
+    assert last >= first
+    sizes = {}
+    for eid in range(first, last + 1):
+        ui = store.execution(eid)
+        if ui.isDefined():
+            sizes[eid] = len(ui.get().physicalPlanDescription().encode())
+    assert sizes and max(sizes.values()) <= PLAN_BYTES_MAX, sizes
+    for t in TABLES:
+        plan = sc._jvm.PythonSQLUtils.explainString(out[t]._jdf.queryExecution(), "formatted")
+        assert len(plan.encode()) <= PLAN_BYTES_MAX, (t, len(plan))
+
+
+def test_cached_run_keeps_only_its_outputs(spark):
+    """Cached mode: the only RDDs a run leaves persisted are its five
+    materialized outputs (ways, relations, polygons, nodes, and the fused
+    tiles table behind tile_validation/tile_assignment), and every output
+    still reads after the intermediates are released."""
+    before = _persisted_rdd_ids(spark)
+    pages = PG.pages_dataframe(spark, PG.pages_rows(["w06_rivermouth_pip", "w10_relation"]))
+    out = run_pipeline(spark, pages, out_dir=None, with_lineage=False)
+    assert len(_persisted_rdd_ids(spark) - before) == 5
+    for t in TABLES:
+        rows = out[t].collect()
+        assert out[t].count() == len(rows) > 0, t
+    # reading the outputs persists nothing new (no lazy cache behind them)
+    assert len(_persisted_rdd_ids(spark) - before) == 5
+
+
+def test_checkpointed_run_releases_everything(spark, tmp_path):
+    """Checkpointed mode: the outputs are sink reads, so a run leaves no
+    persisted RDD behind."""
+    before = _persisted_rdd_ids(spark)
+    pages = PG.pages_dataframe(spark, PG.pages_rows(["w06_rivermouth_pip", "w10_relation"]))
+    out = run_pipeline(spark, pages, out_dir=str(tmp_path / "ck"), with_lineage=False)
+    assert _persisted_rdd_ids(spark) - before == set()
+    for t in TABLES:
+        assert out[t].count() > 0, t

@@ -174,11 +174,13 @@ def test_np_cell_of_matches_formula():
     assert (C.np_cell_of(lon, lat, res) == want).all()
 
 
-def test_probe_cover_arrow_collect_fallback(spark, monkeypatch):
-    """The probe-cover collect is a single bounded Arrow pull (no Python
-    Rows): with the cap forced below the cover size the join must fall
-    back to the broadcast equi-join and produce identical pairs."""
+def test_probe_cap_checked_before_cover_is_built(spark, monkeypatch):
+    """The probe cap is checked on the per-box cover counts: a cover of
+    exactly MAX_PROBE_CELLS pairs stays in probe mode; one of cap+1 falls
+    back to the broadcast equi-join WITHOUT building the cover. Both give
+    the same pairs."""
     import osmi_water_spark.operators.spatial_join as SJ
+    from osmi_water_spark.functions import cells as C
 
     rows = [
         (float(i % 10), float(i // 10), float(i % 10) + 1.5, float(i // 10) + 1.5)
@@ -186,9 +188,7 @@ def test_probe_cover_arrow_collect_fallback(spark, monkeypatch):
     ]
     parts = spark.createDataFrame(
         [
-            (str(i), bytes(W.wkb_polygon([np.array(
-                [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
-            )])), x0, y0, x1, y1)
+            (str(i), bytes(_rect_wkb(x0, y0, x1, y1)), x0, y0, x1, y1)
             for i, (x0, y0, x1, y1) in enumerate(rows)
         ],
         "area_key string, part_wkb binary, minx double, miny double, "
@@ -198,10 +198,32 @@ def test_probe_cover_arrow_collect_fallback(spark, monkeypatch):
         [(i, float(i % 12) + 0.7, float(i % 7) + 0.7) for i in range(300)],
         "point_id long, lon double, lat double",
     )
-    probe = {(r.point_id, r.area_key) for r in pip_join(pts, parts, broadcast_parts=True).collect()}
-    monkeypatch.setattr(SJ, "MAX_PROBE_CELLS", 1)
-    fallback = {(r.point_id, r.area_key) for r in pip_join(pts, parts, broadcast_parts=True).collect()}
-    assert probe == fallback and len(probe) > 0
+    _, _, _, w, h = C.np_cover_boxes(*zip(*rows))  # pip_join's default res/max_cells
+    n_pairs = int((w * h).sum())
+    assert n_pairs > len(rows)  # several cells per part
+
+    covers = []
+
+    def np_cover_spy(*a, **k):
+        covers.append(1)
+        return np_cover(*a, **k)
+
+    np_cover = C.np_cover
+    monkeypatch.setattr(C, "np_cover", np_cover_spy)
+
+    def run():
+        df = pip_join(pts, parts, broadcast_parts=True)
+        pairs = {(r.point_id, r.area_key) for r in df.collect()}
+        return pairs, "Join" in df._jdf.queryExecution().optimizedPlan().toString()
+
+    monkeypatch.setattr(SJ, "MAX_PROBE_CELLS", n_pairs)
+    at_cap, joined = run()
+    assert len(covers) == 1 and not joined  # probe mode: one narrow mapInArrow
+
+    monkeypatch.setattr(SJ, "MAX_PROBE_CELLS", n_pairs - 1)
+    over_cap, joined = run()
+    assert len(covers) == 1 and joined  # equi-join arm, no cover built
+    assert at_cap == over_cap and len(at_cap) > 0
 
 
 def test_cell_probe_index_at_cap_scale():
