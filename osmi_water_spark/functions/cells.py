@@ -45,18 +45,6 @@ def _encode(res: Column, ix: Column, iy: Column) -> Column:
     )
 
 
-def cell_res(cell: Column) -> Column:
-    return F.shiftright(cell, RES_BITS_SHIFT).cast("int")
-
-
-def cell_ix(cell: Column) -> Column:
-    return (cell % (1 << IY_SHIFT)).cast("long")
-
-
-def cell_iy(cell: Column) -> Column:
-    return (F.shiftright(cell, IY_SHIFT) % (1 << IY_SHIFT)).cast("long")
-
-
 # ---- SQL text: the one definition of each cell formula ----
 #
 # Every builder below takes SQL text (column names or any numeric SQL
@@ -87,6 +75,30 @@ def _encode_sql(res: str, ix: str, iy: str) -> str:
 
 def _cell_of_sql(lon: str, lat: str, res: int) -> str:
     return _encode_sql(str(res), _ix_sql(lon, res), _iy_sql(lat, res))
+
+
+def _cell_res_sql(cell: str) -> str:
+    return f"cast(shiftright({cell}, {RES_BITS_SHIFT}) as int)"
+
+
+def _cell_ix_sql(cell: str) -> str:
+    return f"cast(({cell}) % {1 << IY_SHIFT} as long)"
+
+
+def _cell_iy_sql(cell: str) -> str:
+    return f"cast(shiftright({cell}, {IY_SHIFT}) % {1 << IY_SHIFT} as long)"
+
+
+def cell_res(cell: str) -> Column:
+    return F.expr(_cell_res_sql(cell))
+
+
+def cell_ix(cell: str) -> Column:
+    return F.expr(_cell_ix_sql(cell))
+
+
+def cell_iy(cell: str) -> Column:
+    return F.expr(_cell_iy_sql(cell))
 
 
 def _ix_of(lon: Column, res: int) -> Column:
@@ -264,21 +276,21 @@ def np_cover(minx, miny, maxx, maxy, res_min: int = 3, res_max: int = DEFAULT_RE
     return res, cells, owner
 
 
-def k_ring(cell: Column, k: int = 1) -> Column:
-    """Cells within Chebyshev distance k of ``cell`` at the same resolution
-    (the kNN candidate ring, J6). No antimeridian wrap (documented limit)."""
-    res, ix, iy = cell_res(cell), cell_ix(cell), cell_iy(cell)
+def k_ring(cell: str, k: int = 1) -> Column:
+    """Cells within Chebyshev distance k of ``cell`` (SQL text) at the same
+    resolution, clamped to the grid (the kNN candidate ring, J6). No
+    antimeridian wrap (documented limit)."""
+    res, ix, iy = _cell_res_sql(cell), _cell_ix_sql(cell), _cell_iy_sql(cell)
     # shiftleft needs a literal bit count; 2^res via pow (exact for res<=20)
-    hi = F.pow(F.lit(2.0), res.cast("double")).cast("long") - 1
-    return F.flatten(
-        F.transform(
-            F.sequence(_clamp(iy - k, F.lit(0), hi), _clamp(iy + k, F.lit(0), hi)),
-            lambda y: F.transform(
-                F.sequence(_clamp(ix - k, F.lit(0), hi), _clamp(ix + k, F.lit(0), hi)),
-                lambda x: _encode(res, x, y),
-            ),
-        )
-    )
+    hi = f"(cast(pow(2.0D, cast({res} as double)) as long) - 1L)"
+
+    def span(i: str) -> str:
+        return (f"sequence(greatest(0L, least({hi}, {i} - {k})), "
+                f"greatest(0L, least({hi}, {i} + {k})))")
+
+    enc = _encode_sql(res, "__ring_ix", "__ring_iy")
+    return F.expr(f"flatten(transform({span(iy)}, "
+                  f"__ring_iy -> transform({span(ix)}, __ring_ix -> {enc})))")
 
 
 # ---------------- raster (slippy z/x/y) tiles ----------------

@@ -34,10 +34,6 @@ def _has_sql(mask: str, bit: int) -> str:
     return f"((({mask}) & {bit}) != 0)"
 
 
-def has(mask: str, bit: int) -> Column:
-    return F.expr(_has_sql(mask, bit))
-
-
 def switch_poss(mask: str) -> Column:
     """E2 — errorsum.hpp:129-142, applied at finalize
     (datastorage.hpp:408-417): river & poss_rivermouth -> end_error;

@@ -1,16 +1,25 @@
-"""WKB geometry encoders/decoders + vectorized point-in-polygon, pure numpy.
+"""WKB geometry: scalar encoders (the spec that tests pin the Arrow and
+SQL builders to), the SQL multi-geometry builder, the decoder the ray
+cast needs, and vectorized point-in-polygon, pure numpy.
 
 The reference round-trips GEOS -> WKB -> OGR (/root/reference/src/
 waterway.hpp:50-66); we store WKB ``binary`` directly (little-endian ISO
-WKB, EPSG:4326 lon/lat). No GEOS/shapely dependency exists in this
-environment, so containment is an even-odd ray cast vectorized over numpy
-point batches — semantics match GEOS ``PreparedPolygon::contains``
-(/root/reference/src/falsepositives.hpp:133-135) for non-boundary points;
-boundary points are explicitly excluded (GEOS contains is interior-only).
+WKB, EPSG:4326 lon/lat). Geometry is built once as bytes and never
+re-parsed on its way to the ray cast:
 
-These run inside Arrow-batched pandas UDFs: per *feature* Python, per
-*coordinate* numpy — the contract's "no per-row Python" applies to the hot
-per-point path, which is fully vectorized.
+* LineStrings, closed-way Polygons and points come from the Arrow scatter
+  builders in ``wkb_vec``; relation polygons from ``wkb_polygon`` at ring
+  assembly.
+* MultiLineStrings and MultiPolygons are their members' bytes behind a
+  9-byte header, so ``multi_wkb_sql`` builds them in SQL without decoding.
+* ``parse_wkb`` runs only where edges are needed: ``FlatPolygonIndex.build``
+  (the PIP refine) and tests.
+
+No GEOS/shapely dependency exists in this environment, so containment is
+an even-odd ray cast vectorized over numpy point batches — semantics match
+GEOS ``PreparedPolygon::contains`` (/root/reference/src/
+falsepositives.hpp:133-135) for non-boundary points; boundary points are
+explicitly excluded (GEOS contains is interior-only).
 """
 
 from __future__ import annotations
@@ -54,6 +63,19 @@ def wkb_multipolygon(polys: list[list[np.ndarray]]) -> bytes:
     out = [_HDR.pack(1, MULTIPOLYGON), _U32.pack(len(polys))]
     out += [wkb_polygon(rings) for rings in polys]
     return b"".join(out)
+
+
+def multi_wkb_sql(gtype: int, parts: str) -> str:
+    """SQL text of the Multi* WKB (``gtype``) whose members are ``parts``, SQL
+    text of an ``array<binary>`` of member WKBs. A multi-geometry is byte
+    order ``01``, the type as u32 LE and the member count as u32 LE,
+    followed by the members verbatim, so nothing is decoded. One hex
+    round-trip keeps it linear in bytes (a binary ``concat`` fold over the
+    members would be quadratic in their count)."""
+    count = (f"regexp_replace(lpad(hex(size({parts})), 8, '0'), "
+             "'(..)(..)(..)(..)', '$4$3$2$1')")
+    return (f"unhex(concat('01{gtype:02X}000000', {count}, "
+            f"array_join(transform({parts}, __wkb_part -> hex(__wkb_part)), '')))")
 
 
 # ---------------- decoding (tests / refine stage) ----------------
@@ -142,46 +164,6 @@ def points_in_rings(px: np.ndarray, py: np.ndarray, rings: list[np.ndarray]) -> 
     return inside & ~boundary
 
 
-def points_in_wkb_polygon(px: np.ndarray, py: np.ndarray, wkb: bytes) -> np.ndarray:
-    """PIP against a WKB polygon or multipolygon (the reference queries each
-    polygon of a multipolygon separately, areahandler.hpp:48-62; OR-ing over
-    parts reproduces its first-containing-polygon break)."""
-    gtype, payload = parse_wkb(wkb)
-    if gtype == POLYGON:
-        return points_in_rings(px, py, payload)
-    if gtype == MULTIPOLYGON:
-        out = np.zeros(len(px), dtype=bool)
-        for rings in payload:
-            out |= points_in_rings(px, py, rings)
-        return out
-    raise ValueError(f"not a polygon WKB: type={gtype}")
-
-
-def wkb_bbox(buf: bytes) -> tuple[float, float, float, float]:
-    """Envelope of any supported WKB geometry."""
-    gtype, payload = parse_wkb(buf)
-    if gtype == POINT:
-        x, y = payload
-        return x, y, x, y
-    arrs: list[np.ndarray] = []
-
-    def collect(p):
-        if isinstance(p, np.ndarray):
-            arrs.append(p)
-        else:
-            for q in p:
-                collect(q)
-
-    collect(payload)
-    allc = np.vstack(arrs)
-    return (
-        float(allc[:, 0].min()),
-        float(allc[:, 1].min()),
-        float(allc[:, 0].max()),
-        float(allc[:, 1].max()),
-    )
-
-
 # ---------------- flat polygon index (batch PIP without per-part calls) ----------------
 
 
@@ -197,7 +179,7 @@ class FlatPolygonIndex:
     the batch expands to (point, part, edge) instances with integer index
     arithmetic and runs ONE vectorized ray cast per batch (chunked to bound
     peak memory), identical even-odd/boundary-exclusive semantics to
-    points_in_rings / points_in_wkb_polygon (OR over a key's parts).
+    points_in_rings (OR over a key's parts).
     """
 
     def __init__(self, keys: list):
@@ -213,10 +195,9 @@ class FlatPolygonIndex:
 
     @staticmethod
     def build(items) -> "FlatPolygonIndex":
-        """items: iterable of (key, wkb). A key may repeat (one row per
-        part) and each wkb may be a POLYGON or a MULTIPOLYGON (each
-        sub-polygon becomes its own part, matching the reference's
-        per-polygon STRtree entries, areahandler.hpp:48-62)."""
+        """items: iterable of (key, polygon wkb), one per polygon part. A
+        key may repeat: its parts are OR-ed, matching the reference's
+        per-polygon STRtree entries (areahandler.hpp:48-62)."""
         items = list(items)
         keys: list = []
         seen = set()
@@ -226,10 +207,10 @@ class FlatPolygonIndex:
                 keys.append(k)
         idx = FlatPolygonIndex(keys)
         for k, buf in items:
-            gtype, payload = parse_wkb(bytes(buf))
-            parts = payload if gtype == MULTIPOLYGON else [payload]
-            for rings in parts:
-                idx._add_part(idx.key_id[k], rings)
+            gtype, rings = parse_wkb(bytes(buf))
+            if gtype != POLYGON:
+                raise ValueError(f"not a polygon WKB: type={gtype}")
+            idx._add_part(idx.key_id[k], rings)
         idx._freeze()
         return idx
 

@@ -151,8 +151,8 @@ def linestring_struct(arr: "pa.Array") -> "pa.StructArray":
 
 def closed_way_polygon_struct(arr: "pa.Array") -> "pa.StructArray":
     """G4 closed-way areas (_closed_way_polygon): coords -> struct(wkb,
-    minx..maxy); null where the ring is degenerate. WKB layout per ok row:
-    01 | u32(6) | u32(1) | 01 | u32(3) | u32(1) | u32(m) | coords."""
+    minx..maxy); null where the ring is degenerate. Polygon WKB layout per
+    ok row: 01 | u32(3) | u32(1) | u32(m) | coords."""
     n, valid, lens, lon, lat = _list_flat(arr)
     valid = valid & (lens >= 4)  # raw-length gate BEFORE dedup (scalar spec)
     row_of, keep = _consecutive_dedup(n, valid, lens, lon, lat)
@@ -171,7 +171,7 @@ def closed_way_polygon_struct(arr: "pa.Array") -> "pa.StructArray":
     kcum_ok = np.zeros(n, dtype=np.int64)
     if n > 1:
         np.cumsum(m_ok[:-1], out=kcum_ok[1:])
-    sizes = np.where(ok, 22 + 16 * m_ok, 0)
+    sizes = np.where(ok, 13 + 16 * m_ok, 0)
     out_off = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(sizes, out=out_off[1:])
     data = np.zeros(int(out_off[-1]), dtype=np.uint8)
@@ -179,14 +179,11 @@ def closed_way_polygon_struct(arr: "pa.Array") -> "pa.StructArray":
     if ok_idx.size:
         ho = out_off[ok_idx]
         data[ho] = 1
-        data[ho + 1] = 6  # MULTIPOLYGON
-        data[ho + 5] = 1  # n_polys = 1
-        data[ho + 9] = 1
-        data[ho + 10] = 3  # POLYGON
-        data[ho + 14] = 1  # n_rings = 1
-        _u32_scatter(data, ho + 18, m_ok[ok_idx])
+        data[ho + 1] = 3  # POLYGON
+        data[ho + 5] = 1  # n_rings = 1
+        _u32_scatter(data, ho + 9, m_ok[ok_idx])
         rank = np.arange(klon.size, dtype=np.int64) - kcum_ok[krow]
-        _scatter_coords(data, out_off[krow] + 22 + 16 * rank, klon, klat)
+        _scatter_coords(data, out_off[krow] + 13 + 16 * rank, klon, klat)
     wkb = _binary_array(n, ok, out_off, data)
     bbox = _bbox_arrays(n, ok, krow, klon, klat, kcum_ok)
     return pa.StructArray.from_arrays(

@@ -9,10 +9,12 @@ F7 gate (polygon row) and the F5 gate (PIP index entry per polygon part).
 Spark shape: closed tagged ways pass through directly; multipolygon
 relations group their member way segments and an ``applyInPandas`` stage
 assembles rings (greedy endpoint chaining), classifies outer/inner by
-member role, and nests holes into their containing outer. Output geometry
-is MultiPolygon WKB; each polygon *part* also becomes one index row with
-its own bbox (matching the reference's envelope-per-polygon STRtree
-inserts, areahandler.hpp:48-62).
+member role, and nests holes into their containing outer. Each area
+carries its polygon *parts* (Polygon WKB + bbox) out of assembly: the
+polygons table joins them into a MultiPolygon in SQL, and the PIP index
+takes one row per part with its own bbox (matching the reference's
+envelope-per-polygon STRtree inserts, areahandler.hpp:48-62). No stage
+re-parses an area's WKB.
 """
 
 from __future__ import annotations
@@ -27,15 +29,10 @@ from pyspark.sql import types as T
 from osmi_water_spark.functions import tags as TG
 from osmi_water_spark.functions import wkb as W
 
-_AREA_SCHEMA = T.StructType(
-    [
-        T.StructField("area_key", T.StringType(), False),
-        T.StructField("geom_wkb", T.BinaryType(), True),
-        T.StructField("minx", T.DoubleType(), True),
-        T.StructField("miny", T.DoubleType(), True),
-        T.StructField("maxx", T.DoubleType(), True),
-        T.StructField("maxy", T.DoubleType(), True),
-    ]
+_AREA_SCHEMA = (
+    "area_key string, "
+    "parts array<struct<part_wkb binary, minx double, miny double, maxx double, maxy double>>, "
+    "minx double, miny double, maxx double, maxy double"
 )
 
 
@@ -92,13 +89,13 @@ def _ring_contains_point(ring: np.ndarray, x: float, y: float) -> bool:
     return bool(W.points_in_rings(np.array([x]), np.array([y]), [ring])[0])
 
 
-def assemble_multipolygon(
+def assemble_polygons(
     outer_segs: list[np.ndarray], inner_segs: list[np.ndarray]
-) -> bytes | None:
-    """Rings -> MultiPolygon WKB; each inner nested into the outer that
-    contains its first vertex. Any unclosable chain fails the WHOLE area
-    (libosmium Assembler semantics: the area is errored, no partial
-    geometry is emitted)."""
+) -> list[list[np.ndarray]] | None:
+    """Rings -> polygons (outer ring first, then its holes); each inner
+    nested into the outer that contains its first vertex. Any unclosable
+    chain fails the WHOLE area (libosmium Assembler semantics: the area is
+    errored, no partial geometry is emitted)."""
     outers, ok_outer = _chain_rings(outer_segs)
     inners, ok_inner = _chain_rings(inner_segs)
     if not (ok_outer and ok_inner):
@@ -112,7 +109,7 @@ def assemble_multipolygon(
             if _ring_contains_point(poly[0], hx, hy):
                 poly.append(hole)
                 break
-    return W.wkb_multipolygon(polys)
+    return polys
 
 
 def _assemble_group(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -124,12 +121,21 @@ def _assemble_group(pdf: pd.DataFrame) -> pd.DataFrame:
             continue
         # osmium treats empty role as outer
         (inner if role == "inner" else outer).append(seg)
-    wkb = assemble_multipolygon(outer, inner)
-    # bbox computed here, once at assembly, so downstream cell covers are
-    # plain JVM expressions instead of a per-row WKB re-parse in Python
-    bbox = W.wkb_bbox(wkb) if wkb is not None else (None, None, None, None)
+    polys = assemble_polygons(outer, inner)
+    # parts and bboxes computed here, once at assembly, so the polygons
+    # table, the PIP index and the cell covers never re-parse the WKB
+    parts, bbox = None, [None] * 4
+    if polys is not None:
+        lo = [np.vstack(rings).min(axis=0) for rings in polys]
+        hi = [np.vstack(rings).max(axis=0) for rings in polys]
+        parts = [
+            {"part_wkb": W.wkb_polygon(rings), "minx": float(mn[0]), "miny": float(mn[1]),
+             "maxx": float(mx[0]), "maxy": float(mx[1])}
+            for rings, mn, mx in zip(polys, lo, hi)
+        ]
+        bbox = [float(v) for v in (*np.min(lo, axis=0), *np.max(hi, axis=0))]
     return pd.DataFrame(
-        {"area_key": [key], "geom_wkb": [wkb], "minx": [bbox[0]],
+        {"area_key": [key], "parts": [parts], "minx": [bbox[0]],
          "miny": [bbox[1]], "maxx": [bbox[2]], "maxy": [bbox[3]]}
     )
 
@@ -137,8 +143,10 @@ def _assemble_group(pdf: pd.DataFrame) -> pd.DataFrame:
 def build_areas(
     ways_located: DataFrame, relations: DataFrame
 ) -> DataFrame:
-    """All assembled water areas:
-    (area_key, way_id, relation_id, tags, ts, geom_wkb[MultiPolygon]).
+    """All assembled water areas: (area_key, way_id, relation_id, tags, ts,
+    parts, minx, miny, maxx, maxy). ``parts`` holds one
+    struct(part_wkb[Polygon], minx, miny, maxx, maxy) per polygon, in
+    MultiPolygon member order; the area bbox is the min/max over its parts.
 
     Closed F2-tagged ways become single-ring areas directly (no shuffle);
     multipolygon relations shuffle once on relation id for ring assembly.
@@ -160,9 +168,11 @@ def build_areas(
     way_areas_g = (
         way_areas.withColumn("g", _closed_way_polygon("coords"))
         .drop("coords")
+        .filter("g.wkb IS NOT NULL")
         .selectExpr(
             "area_key", "way_id", "relation_id", "tags", "ts",
-            "g.wkb AS geom_wkb",
+            "array(named_struct('part_wkb', g.wkb, 'minx', g.minx, 'miny', g.miny, "
+            "'maxx', g.maxx, 'maxy', g.maxy)) AS parts",
             "g.minx AS minx", "g.miny AS miny", "g.maxx AS maxx", "g.maxy AS maxy",
         )
     )
@@ -184,7 +194,10 @@ def build_areas(
         "m.role AS role",
         "coords",
     )
-    rel_geoms = segs.groupBy("area_key").applyInPandas(_assemble_group, _AREA_SCHEMA)
+    rel_geoms = (
+        segs.groupBy("area_key").applyInPandas(_assemble_group, _AREA_SCHEMA)
+        .filter(F.col("parts").isNotNull())
+    )
     rel_areas = mp_rels.selectExpr(
         "concat('r', id) AS area_key",
         "CAST(0 AS BIGINT) AS way_id",
@@ -193,12 +206,9 @@ def build_areas(
         "ts",
     ).join(rel_geoms, "area_key", "inner")
 
-    cols = ["area_key", "way_id", "relation_id", "tags", "ts", "geom_wkb",
+    cols = ["area_key", "way_id", "relation_id", "tags", "ts", "parts",
             "minx", "miny", "maxx", "maxy"]
-    both = way_areas_g.select(*cols).unionByName(rel_areas.select(*cols))
-    return both.filter(F.col("geom_wkb").isNotNull())
-
-
+    return way_areas_g.select(*cols).unionByName(rel_areas.select(*cols))
 
 
 _CW_SCHEMA = T.StructType(
@@ -214,7 +224,7 @@ _CW_SCHEMA = T.StructType(
 
 @F.arrow_udf(_CW_SCHEMA)
 def _closed_way_polygon(coords: pa.Array) -> pa.Array:
-    """Closed way -> single-ring MultiPolygon WKB + bbox. The bbox rides
+    """Closed way -> single-ring Polygon WKB + bbox. The bbox rides
     along so downstream cell covers (polygon_table) run as JVM expressions
     instead of re-parsing the WKB per row in Python; min/max over the
     deduped ring equals min/max over the raw coords. Arrow-native flat
@@ -228,9 +238,10 @@ def _closed_way_polygon(coords: pa.Array) -> pa.Array:
 def polygon_table(areas: DataFrame, cell_res: int) -> DataFrame:
     """O1 — datastorage.hpp:242-273: the polygons output table (F7 gate).
 
-    h3_cells from the bbox columns carried out of geometry assembly — a
-    whole-stage-codegen expression (functions/cells.bbox_cover_cells),
-    replacing the previous per-row Python WKB re-parse. The int() vs
+    geom_wkb is the MultiPolygon of the area's parts, joined in SQL
+    (wkb.multi_wkb_sql). h3_cells from the bbox columns carried out of
+    geometry assembly — a whole-stage-codegen expression
+    (functions/cells.bbox_cover_cells). The int() vs
     floor() clamp difference is vacuous for coordinates >= -180/-90 and
     the cell iteration order (iy outer, ix inner) is identical."""
     from osmi_water_spark.functions import cells as C
@@ -243,42 +254,13 @@ def polygon_table(areas: DataFrame, cell_res: int) -> DataFrame:
         TG.name_or_empty("tags").alias("name"),
         TG.format_lastchange("ts").alias("lastchange"),
         F.lit(None).cast("string").alias("error"),  # declared, never set
-        "geom_wkb",
+        F.expr(W.multi_wkb_sql(W.MULTIPOLYGON, "parts.part_wkb")).alias("geom_wkb"),
         C.bbox_cover_cells("minx", "miny", "maxx", "maxy", cell_res).alias("h3_cells"),
     )
-
-
-_PARTS_SCHEMA = (
-    "area_key string, part_wkb binary, minx double, miny double, maxx double, maxy double"
-)
 
 
 def pip_index(areas: DataFrame) -> DataFrame:
     """The PIP index side (F5+F7 gate, areahandler.hpp:89-90): one row per
     polygon *part* with its own envelope."""
-    import pandas as _pd
-
-    gated = areas.filter(
-        TG.is_water_area("tags") & TG.is_area_to_analyse("tags")
-    ).select("area_key", "geom_wkb")
-
-    def explode_parts(batches):
-        for pdf in batches:
-            rows = {"area_key": [], "part_wkb": [], "minx": [], "miny": [], "maxx": [], "maxy": []}
-            for key, buf in zip(pdf["area_key"], pdf["geom_wkb"]):
-                if buf is None:
-                    continue
-                gtype, payload = W.parse_wkb(bytes(buf))
-                parts = payload if gtype == W.MULTIPOLYGON else [payload]
-                for rings in parts:
-                    pw = W.wkb_polygon(rings)
-                    allc = np.vstack(rings)
-                    rows["area_key"].append(key)
-                    rows["part_wkb"].append(pw)
-                    rows["minx"].append(float(allc[:, 0].min()))
-                    rows["miny"].append(float(allc[:, 1].min()))
-                    rows["maxx"].append(float(allc[:, 0].max()))
-                    rows["maxy"].append(float(allc[:, 1].max()))
-            yield _pd.DataFrame(rows)
-
-    return gated.mapInPandas(explode_parts, _PARTS_SCHEMA)
+    gated = areas.filter(TG.is_water_area("tags") & TG.is_area_to_analyse("tags"))
+    return gated.select("area_key", F.inline("parts"))

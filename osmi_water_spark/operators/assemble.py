@@ -25,12 +25,10 @@ Reference quirks replicated exactly:
 
 from __future__ import annotations
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from osmi_water_spark.functions import cells as C
 from osmi_water_spark.functions import tags as TG
@@ -64,18 +62,6 @@ def make_linestring(coords: pa.Array) -> pa.Array:
     from osmi_water_spark.functions import wkb_vec
 
     return wkb_vec.linestring_struct(coords)
-
-
-@pandas_udf(T.BinaryType())
-def merge_multilinestring(wkbs: pd.Series) -> pd.Series:
-    """G3 — member linestrings -> MultiLineString (a geometry *collection*,
-    not a noded union — waterway.hpp:236-237)."""
-
-    def merge(lst):
-        parts = [W.parse_wkb(b)[1] for b in lst if b is not None]
-        return W.wkb_multilinestring(parts) if parts else None
-
-    return wkbs.map(merge)
 
 
 def accepted_relations(relations: DataFrame) -> DataFrame:
@@ -194,7 +180,10 @@ def assemble_relations(
     relations: DataFrame, geoms: DataFrame, cell_res: int = C.DEFAULT_RES
 ) -> DataFrame:
     """O2 — one MultiLineString row per relation with >=1 successful member
-    geometry; nowaterway_error quirk as in waterway.hpp:203-205."""
+    geometry; nowaterway_error quirk as in waterway.hpp:203-205. G3: the
+    geometry is a *collection* of the member linestrings, not a noded union
+    (waterway.hpp:236-237), so it is their WKB bytes behind a
+    MultiLineString header, joined in SQL (wkb.multi_wkb_sql)."""
     # member order made explicit (collect_list alone is nondeterministic
     # under parallelism — SURVEY.md §7.4 determinism note)
     per_rel = (
@@ -224,7 +213,7 @@ def assemble_relations(
         TG.format_lastchange("ts").alias("lastchange"),
         F.when(F.col("any_ww") == 1, "true").otherwise("false").alias("nowaterway_error"),
         F.lit(None).cast("string").alias("tagging_error"),
-        merge_multilinestring("wkbs").alias("geom_wkb"),
+        F.expr(W.multi_wkb_sql(W.MULTILINESTRING, "wkbs")).alias("geom_wkb"),
         C.bbox_cover_cells("minx", "miny", "maxx", "maxy", cell_res).alias("h3_cells"),
     )
     return out

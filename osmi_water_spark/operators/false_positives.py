@@ -73,26 +73,27 @@ def apply_pass3(candidates: DataFrame, ways: DataFrame) -> DataFrame:
 
 def apply_pass4(
     after3: DataFrame, locations: DataFrame, polygon_parts: DataFrame, salt: int = 1,
-    res_list: list[int] | None = None,
 ) -> DataFrame:
     """Remaining candidates x polygon index -> + mask4, emitted4."""
     remaining = after3.filter(~F.col("emitted3"))
     pts = remaining.join(locations, "node_id", "inner").select(
         F.col("node_id").alias("point_id"), "lon", "lat"
     )
-    contained = pip_exists(pts, polygon_parts, salt=salt, res_list=res_list).withColumnRenamed(
+    contained = pip_exists(pts, polygon_parts, salt=salt).withColumnRenamed(
         "point_id", "node_id"
     ).withColumn("contained", F.lit(True))
     r = remaining.join(contained, "node_id", "left").withColumn(
-        "contained", F.coalesce(F.col("contained"), F.lit(False))
+        "contained", F.expr("coalesce(contained, false)")
     )
-    pr = E.has("mask3", E.POSS_RIVERMOUTH)
-    po = E.has("mask3", E.POSS_OUTFLOW)
+    # SQL text built from errors.py's bit test (one parse per expression)
+    pr, po = E._has_sql("mask3", E.POSS_RIVERMOUTH), E._has_sql("mask3", E.POSS_OUTFLOW)
     mask4 = (
-        F.when(F.col("contained") & pr, F.lit(E.RIVERMOUTH))
-        .when(F.col("contained") & po, F.lit(E.OUTFLOW))
-        .when(F.col("contained"), F.lit(0))  # incl. pass-3 rivermouth/outflow (quirk)
-        .otherwise(F.col("mask3"))
+        f"CASE WHEN contained AND {pr} THEN {E.RIVERMOUTH} "
+        f"WHEN contained AND {po} THEN {E.OUTFLOW} "
+        "WHEN contained THEN 0 "  # incl. pass-3 rivermouth/outflow (quirk)
+        "ELSE mask3 END"
     )
-    emitted4 = F.col("contained") & ~pr & ~po
-    return r.select("node_id", "mask3", mask4.alias("mask4"), emitted4.alias("emitted4"))
+    emitted4 = f"(contained AND NOT {pr} AND NOT {po})"
+    return r.select(
+        "node_id", "mask3", F.expr(mask4).alias("mask4"), F.expr(emitted4).alias("emitted4"),
+    )

@@ -56,7 +56,7 @@ def knn_join_exact(points: DataFrame, neighbors: DataFrame, k: int = 3) -> DataF
 def _cells_pass(points: DataFrame, neighbors: DataFrame, k: int, res: int, ring: int) -> DataFrame:
     pts = points.select(
         "point_id", "lon", "lat",
-        F.explode(C.k_ring(C.cell_of("lon", "lat", res), ring)).alias("cell"),
+        F.explode(C.k_ring(C._cell_of_sql("lon", "lat", res), ring)).alias("cell"),
     )
     nbr = neighbors.select(
         "neighbor_id",

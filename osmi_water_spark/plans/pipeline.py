@@ -235,7 +235,7 @@ def run_pipeline(
     Every intermediate that several consumers read (entities, located
     ways, way geometries, areas, PIP parts, error masks, pass-3/4 results)
     is materialized once by ``_checkpoint`` as a local checkpoint, in both
-    modes; the run releases all of them before it returns. Without
+    modes; the run releases all of them before it returns or raises. Without
     ``out_dir`` (cached mode) the returned tables are materialized local
     checkpoints too, which the caller owns; with ``out_dir`` they are reads
     of the sink tables. Local checkpoints have no lineage, so losing an
@@ -252,145 +252,152 @@ def run_pipeline(
     already-extracted entities table (the streaming/incremental
     orchestration hands over the stream-accumulated table here —
     streaming/incremental.py:incremental_pipeline)."""
-    bucket_spec = {"entities": (bucket_entities, "id")} if bucket_entities else None
-    sink = (
-        Sink(out_dir, sink_format, sink_catalog, bucket_spec,
-             partition_spec={"tiles": "_t"})
-        if out_dir else None
-    )
-    lineage = Lineage() if (with_lineage and sink) else None
     held: list[DataFrame] = []  # every local checkpoint this run makes
-
-    # ---- Stage A: extraction (skipped when entities are handed over) ----
-    if entities is None:
-        if sink and resume and sink.exists(spark, "entities"):
-            # contract guard BEFORE the resume-read: a checkpoint written
-            # under an older extraction schema must fail loudly here, not
-            # null-fill or blow up mid-DAG (ADVICE.md r3)
-            from osmi_water_spark.operators.extract import validate_entities_schema
-
-            validate_entities_schema(spark, sink.path("entities"))
-        entities = _stage(
-            sink, "entities", lambda: extract_entities(pages), spark, lineage, resume, held
+    try:
+        bucket_spec = {"entities": (bucket_entities, "id")} if bucket_entities else None
+        sink = (
+            Sink(out_dir, sink_format, sink_catalog, bucket_spec,
+                 partition_spec={"tiles": "_t"})
+            if out_dir else None
         )
-    nodes, ways, relations = split_entities(entities)
+        lineage = Lineage() if (with_lineage and sink) else None
 
-    # ---- Stage B: locate (J1) ----
-    ways_located = _stage(
-        sink, "ways_located", lambda: locate_ways(ways, nodes), spark, lineage, resume, held
-    )
-    locations = node_locations(nodes)
+        # ---- Stage A: extraction (skipped when entities are handed over) ----
+        if entities is None:
+            if sink and resume and sink.exists(spark, "entities"):
+                # contract guard BEFORE the resume-read: a checkpoint written
+                # under an older extraction schema must fail loudly here, not
+                # null-fill or blow up mid-DAG (ADVICE.md r3)
+                from osmi_water_spark.operators.extract import validate_entities_schema
 
-    # ---- Stage C: assembly ----
-    way_rows = _checkpoint(AS.build_way_rows(relations, ways_located), held)
-    parts = AS.assemble_ways(way_rows, cell_res)
-    ways_out = parts["ways"]
-    remembered = parts["remembered"]
-    way_errors = parts["way_errors"]
-    relations_out = AS.assemble_relations(relations, parts["geoms"], cell_res)
+                validate_entities_schema(spark, sink.path("entities"))
+            entities = _stage(
+                sink, "entities", lambda: extract_entities(pages), spark, lineage, resume, held
+            )
+        nodes, ways, relations = split_entities(entities)
 
-    # areas / masks / pass outputs fan out to several consumers below —
-    # each is materialized here, so its consumers' plans start at a scan
-    areas = _checkpoint(AR.build_areas(ways_located, relations), held)
-    polygons_out = AR.polygon_table(areas, cell_res)
-    pip_parts = _checkpoint(AR.pip_index(areas), held)
+        # ---- Stage B: locate (J1) ----
+        ways_located = _stage(
+            sink, "ways_located", lambda: locate_ways(ways, nodes), spark, lineage, resume, held
+        )
+        locations = node_locations(nodes)
 
-    # ---- Stage D: connectivity ----
-    masks = _checkpoint(CN.error_mask(CN.node_stats(remembered)), held)
-    normal, candidates = CN.split_candidates(masks)
+        # ---- Stage C: assembly ----
+        way_rows = _checkpoint(AS.build_way_rows(relations, ways_located), held)
+        parts = AS.assemble_ways(way_rows, cell_res)
+        ways_out = parts["ways"]
+        remembered = parts["remembered"]
+        way_errors = parts["way_errors"]
+        relations_out = AS.assemble_relations(relations, parts["geoms"], cell_res)
 
-    # ---- Stage E: passes 3 + 4 ----
-    after3 = _checkpoint(FP.apply_pass3(candidates, ways), held)
-    # res_list auto-discovered (one collect over the materialized parts):
-    # the point-side explode fan-out equals the number of resolutions
-    # actually present, which beats a fixed range by ~5x shuffle volume
-    after4 = _checkpoint(FP.apply_pass4(after3, locations, pip_parts, salt=salt), held)
+        # areas / masks / pass outputs fan out to several consumers below —
+        # each is materialized here, so its consumers' plans start at a scan
+        areas = _checkpoint(AR.build_areas(ways_located, relations), held)
+        polygons_out = AR.polygon_table(areas, cell_res)
+        pip_parts = _checkpoint(AR.pip_index(areas), held)
 
-    # ---- Stage F: finalize nodes table (O4) ----
-    emitted3 = after3.filter(F.col("emitted3")).select("node_id", F.lit(0).alias("final_mask"))
-    emitted4 = after4.filter(F.col("emitted4")).select("node_id", F.lit(0).alias("final_mask"))
-    survivors = after4.filter(~F.col("emitted4")).select(
-        "node_id", E.switch_poss("mask4").alias("final_mask")
-    )
-    normal_rows = normal.select("node_id", F.col("mask").alias("final_mask"))
-    way_error_rows = way_errors.select("node_id", F.lit(E.WAY).alias("final_mask"))
+        # ---- Stage D: connectivity ----
+        masks = _checkpoint(CN.error_mask(CN.node_stats(remembered)), held)
+        normal, candidates = CN.split_candidates(masks)
 
-    all_nodes = (
-        normal_rows.unionByName(way_error_rows)
-        .unionByName(emitted3)
-        .unionByName(emitted4)
-        .unionByName(survivors)
-    )
-    # location join: normal emission requires a location (handle_node skips
-    # unlocated nodes, waterway.hpp:142-147); fixtures locate everything.
-    located = all_nodes.join(locations, "node_id", "inner")
-    ecols = E.node_output_columns("final_mask")
-    nodes_out = located.select(
-        F.col("node_id").cast("string").alias("node_id"),
-        *[v.alias(k) for k, v in ecols.items()],
-        _point_wkb("lon", "lat").alias("geom_wkb"),
-        C.cell_of("lon", "lat", cell_res).alias("h3_cell"),
-        "lon",
-        "lat",
-    )
+        # ---- Stage E: passes 3 + 4 ----
+        after3 = _checkpoint(FP.apply_pass3(candidates, ways), held)
+        # pip_join picks its strategy from the materialized parts: when they
+        # fit the broadcast bound, one collect builds a cell index and the
+        # points stream through a single mapInArrow probe (no explode, no join)
+        after4 = _checkpoint(FP.apply_pass4(after3, locations, pip_parts, salt=salt), held)
 
-    # the four output tables are independent leaves of the DAG: submit
-    # their stage jobs CONCURRENTLY (SparkSession is thread-safe; their
-    # shared upstreams are already materialized, so the leaves only read
-    # them). In checkpointed mode this overlaps four write barriers that
-    # were serial — per-stage fixed cost (job launch, output commit) was
-    # the measured non-scaling share of the pipeline wall (BENCH.md round
-    # 3 stage profile), and it shrinks by the overlap factor. On a real
-    # cluster this is the standard multi-job scheduler pattern.
-    from concurrent.futures import ThreadPoolExecutor
+        # ---- Stage F: finalize nodes table (O4) ----
+        emitted3 = after3.filter(F.col("emitted3")).select("node_id", F.lit(0).alias("final_mask"))
+        emitted4 = after4.filter(F.col("emitted4")).select("node_id", F.lit(0).alias("final_mask"))
+        survivors = after4.filter(~F.col("emitted4")).select(
+            "node_id", E.switch_poss("mask4").alias("final_mask")
+        )
+        normal_rows = normal.select("node_id", F.col("mask").alias("final_mask"))
+        way_error_rows = way_errors.select("node_id", F.lit(E.WAY).alias("final_mask"))
 
-    out: dict[str, DataFrame] = {}
-    leaves = {
-        "ways": lambda: ways_out,
-        "relations": lambda: relations_out,
-        "polygons": lambda: polygons_out,
-        "nodes": lambda: nodes_out,
-    }
-    with ThreadPoolExecutor(max_workers=len(leaves)) as ex:
-        futs = {
-            name: ex.submit(_stage, sink, name, compute, spark, lineage, resume, held)
-            for name, compute in leaves.items()
+        all_nodes = (
+            normal_rows.unionByName(way_error_rows)
+            .unionByName(emitted3)
+            .unionByName(emitted4)
+            .unionByName(survivors)
+        )
+        # location join: normal emission requires a location (handle_node skips
+        # unlocated nodes, waterway.hpp:142-147); fixtures locate everything.
+        located = all_nodes.join(locations, "node_id", "inner")
+        ecols = E.node_output_columns("final_mask")
+        nodes_out = located.select(
+            F.col("node_id").cast("string").alias("node_id"),
+            *[v.alias(k) for k, v in ecols.items()],
+            _point_wkb("lon", "lat").alias("geom_wkb"),
+            C.cell_of("lon", "lat", cell_res).alias("h3_cell"),
+            "lon",
+            "lat",
+        )
+
+        # the four output tables are independent leaves of the DAG: submit
+        # their stage jobs CONCURRENTLY (SparkSession is thread-safe; their
+        # shared upstreams are already materialized, so the leaves only read
+        # them). In checkpointed mode this overlaps four write barriers that
+        # were serial — per-stage fixed cost (job launch, output commit) was
+        # the measured non-scaling share of the pipeline wall (BENCH.md round
+        # 3 stage profile), and it shrinks by the overlap factor. On a real
+        # cluster this is the standard multi-job scheduler pattern.
+        from concurrent.futures import ThreadPoolExecutor
+
+        out: dict[str, DataFrame] = {}
+        leaves = {
+            "ways": lambda: ways_out,
+            "relations": lambda: relations_out,
+            "polygons": lambda: polygons_out,
+            "nodes": lambda: nodes_out,
         }
-        for name, fut in futs.items():
-            out[name] = fut.result()
+        with ThreadPoolExecutor(max_workers=len(leaves)) as ex:
+            futs = {
+                name: ex.submit(_stage, sink, name, compute, spark, lineage, resume, held)
+                for name, compute in leaves.items()
+            }
+            for name, fut in futs.items():
+                out[name] = fut.result()
 
-    tv = TI.tile_validation(out["nodes"], tile_z)
-    polys_fid = out["polygons"].withColumn(
-        "fid", F.when(F.col("way_id") != 0, F.col("way_id")).otherwise(F.col("relation_id"))
-    )
-    ta = (
-        TI.feature_tile_assignment(out["ways"], "ways", "way_id", tile_z, cell_res)
-        .unionByName(TI.feature_tile_assignment(polys_fid, "polygons", "fid", tile_z, cell_res))
-        .unionByName(
-            TI.feature_tile_assignment(out["relations"], "relations", "relation_id", tile_z, cell_res)
+        tv = TI.tile_validation(out["nodes"], tile_z)
+        polys_fid = out["polygons"].withColumn(
+            "fid", F.when(F.col("way_id") != 0, F.col("way_id")).otherwise(F.col("relation_id"))
         )
-    )
-    # the two tile tables are FUSED into one stage: a union-with-kind
-    # written once (hive-partitioned by the discriminator, so each logical
-    # output reads back with partition pruning). Round 3 ran them as two
-    # jobs with two commits; the per-stage profile showed the small stages
-    # at eff 0.4-0.55 — pure fixed cost, halved by the fusion.
-    tiles_union = tv.withColumn("_t", F.lit("v")).unionByName(
-        ta.withColumn("_t", F.lit("a")), allowMissingColumns=True
-    )
-    tiles = _stage(sink, "tiles", lambda: tiles_union, spark, lineage, resume, held)
-    # every output is now materialized or written: release the checkpoints
-    # this run does not return (incremental_pipeline calls it repeatedly)
-    returned = {id(tiles), *(id(out[name]) for name in leaves)}
-    _release(df for df in held if id(df) not in returned)
-    out["tile_validation"] = tiles.filter(F.col("_t") == "v").select(
-        "tile_id", "table", "error_class", "n"
-    )
-    out["tile_assignment"] = tiles.filter(F.col("_t") == "a").select(
-        "table", "feature_id", "tile_id"
-    )
+        ta = (
+            TI.feature_tile_assignment(out["ways"], "ways", "way_id", tile_z, cell_res)
+            .unionByName(TI.feature_tile_assignment(polys_fid, "polygons", "fid", tile_z, cell_res))
+            .unionByName(
+                TI.feature_tile_assignment(
+                    out["relations"], "relations", "relation_id", tile_z, cell_res
+                )
+            )
+        )
+        # the two tile tables are FUSED into one stage: a union-with-kind
+        # written once (hive-partitioned by the discriminator, so each logical
+        # output reads back with partition pruning). Round 3 ran them as two
+        # jobs with two commits; the per-stage profile showed the small stages
+        # at eff 0.4-0.55 — pure fixed cost, halved by the fusion.
+        tiles_union = tv.withColumn("_t", F.lit("v")).unionByName(
+            ta.withColumn("_t", F.lit("a")), allowMissingColumns=True
+        )
+        tiles = _stage(sink, "tiles", lambda: tiles_union, spark, lineage, resume, held)
+        # every output is now materialized or written: release the checkpoints
+        # this run does not return (incremental_pipeline calls it repeatedly)
+        returned = {id(tiles), *(id(out[name]) for name in leaves)}
+        _release(df for df in held if id(df) not in returned)
+        out["tile_validation"] = tiles.filter(F.col("_t") == "v").select(
+            "tile_id", "table", "error_class", "n"
+        )
+        out["tile_assignment"] = tiles.filter(F.col("_t") == "a").select(
+            "table", "feature_id", "tile_id"
+        )
 
-    if lineage is not None:
-        sink.write(lineage.dataframe(spark), "_lineage")
-        out["_lineage"] = sink.read(spark, "_lineage")
-    return out
+        if lineage is not None:
+            sink.write(lineage.dataframe(spark), "_lineage")
+            out["_lineage"] = sink.read(spark, "_lineage")
+        return out
+    except BaseException:
+        # a failed run must not leave its checkpoints behind either
+        _release(held)
+        raise

@@ -5,6 +5,9 @@ not return."""
 
 from __future__ import annotations
 
+import pytest
+
+from osmi_water_spark.plans import pipeline
 from osmi_water_spark.plans.pipeline import run_pipeline
 from osmi_water_spark.sources import pages_gen as PG
 
@@ -72,3 +75,18 @@ def test_checkpointed_run_releases_everything(spark, tmp_path):
     assert _persisted_rdd_ids(spark) - before == set()
     for t in TABLES:
         assert out[t].count() > 0, t
+
+
+def test_failed_run_releases_its_checkpoints(spark, monkeypatch):
+    """A run that raises after its leaves are materialized releases every
+    checkpoint it made before the exception propagates."""
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("tile stage failed")
+
+    monkeypatch.setattr(pipeline.TI, "tile_validation", fail)
+    before = _persisted_rdd_ids(spark)
+    pages = PG.pages_dataframe(spark, PG.pages_rows(["w06_rivermouth_pip", "w10_relation"]))
+    with pytest.raises(RuntimeError, match="tile stage failed"):
+        run_pipeline(spark, pages, out_dir=None, with_lineage=False)
+    assert _persisted_rdd_ids(spark) == before

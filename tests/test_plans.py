@@ -127,3 +127,33 @@ def test_extraction_decode_is_jvm_side(spark):
         assert "ArrowEvalPython" not in q and "BatchEvalPython" not in q, (
             "entity consumers must not pay the text UDF (pruning broken)"
         )
+
+
+PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow",
+                "FlatMapGroupsInPandas")
+
+
+def test_geometry_bytes_plans_run_no_python(spark):
+    """Relation MultiLineStrings and the PIP index parts are built from
+    member WKB bytes in SQL: with their inputs materialized, neither plan
+    holds a Python evaluation node."""
+    from osmi_water_spark.operators import areas as AR
+    from osmi_water_spark.operators import assemble as AS
+    from osmi_water_spark.operators.extract import extract_entities, split_entities
+    from osmi_water_spark.operators.locate import locate_ways
+    from osmi_water_spark.sources import pages_gen as PG
+
+    pages = PG.pages_dataframe(spark, PG.pages_rows(["w10_relation", "w12_multipolygon"]))
+    nodes, ways, relations = split_entities(extract_entities(pages))
+    relations = relations.localCheckpoint()
+    ways_located = locate_ways(ways, nodes).localCheckpoint()
+    way_rows = AS.build_way_rows(relations, ways_located).localCheckpoint()
+    areas = AR.build_areas(ways_located, relations).localCheckpoint()
+    outputs = {
+        "assemble_relations": AS.assemble_relations(relations, AS.assemble_ways(way_rows)["geoms"]),
+        "pip_index": AR.pip_index(areas),
+    }
+    for name, df in outputs.items():
+        p = plan_of(df)
+        assert [n for n in PYTHON_NODES if n in p] == [], name
+        assert df.count() > 0, name

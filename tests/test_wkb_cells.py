@@ -33,8 +33,6 @@ def test_wkb_roundtrip():
     g, polys = W.parse_wkb(W.wkb_multipolygon([[ring, hole], [ring + 10]]))
     assert g == W.MULTIPOLYGON and len(polys) == 2 and len(polys[0]) == 2
 
-    assert W.wkb_bbox(W.wkb_polygon([ring])) == (0.0, 0.0, 4.0, 4.0)
-
 
 def test_pip_square_and_hole():
     ring = np.array([[0, 0], [4, 0], [4, 4], [0, 4], [0, 0]], dtype=float)
@@ -58,13 +56,17 @@ def test_pip_concave():
 
 
 def test_pip_multipolygon_wkb():
+    """A multipolygon enters the flat index as one polygon row per part
+    under the same key; a point inside any part is inside the key."""
     r1 = np.array([[0, 0], [2, 0], [2, 2], [0, 2], [0, 0]], dtype=float)
     r2 = np.array([[10, 10], [12, 10], [12, 12], [10, 12], [10, 10]], dtype=float)
-    mp = W.wkb_multipolygon([[r1], [r2]])
-    got = W.points_in_wkb_polygon(
-        np.array([1.0, 11.0, 5.0]), np.array([1.0, 11.0, 5.0]), mp
-    )
+    _, polys = W.parse_wkb(W.wkb_multipolygon([[r1], [r2]]))
+    idx = W.FlatPolygonIndex.build(("mp", W.wkb_polygon(rings)) for rings in polys)
+    got = idx.eval(np.array([1.0, 11.0, 5.0]), np.array([1.0, 11.0, 5.0]),
+                   np.zeros(3, dtype=np.int64))
     assert list(got) == [True, True, False]
+    with pytest.raises(ValueError):
+        W.FlatPolygonIndex.build([("mp", W.wkb_multipolygon([[r1], [r2]]))])
 
 
 def test_cell_encode_decode(spark):
@@ -72,15 +74,20 @@ def test_cell_encode_decode(spark):
     out = df.select(
         C.cell_of("lon", "lat", 7).alias("c")
     ).select(
-        C.cell_res(F.col("c")).alias("r"),
-        C.cell_ix(F.col("c")).alias("ix"),
-        C.cell_iy(F.col("c")).alias("iy"),
+        C.cell_res("c").alias("r"),
+        C.cell_ix("c").alias("ix"),
+        C.cell_iy("c").alias("iy"),
+        C.k_ring("c", 1).alias("ring"),
     ).collect()
     for row in out:
         assert row.r == 7 and 0 <= row.ix < 128 and 0 <= row.iy < 128
     # manual check for first point
     assert out[0].ix == math.floor((8.54 + 180) / 360 * 128)
     assert out[0].iy == math.floor((47.37 + 90) / 180 * 128)
+    # grid corner: the ring is clamped to the 2 x 2 cells inside the grid
+    assert (out[1].ix, out[1].iy) == (0, 0)
+    corner = {(7 << C.RES_BITS_SHIFT) + (iy << C.IY_SHIFT) + ix for iy in (0, 1) for ix in (0, 1)}
+    assert len(out[1].ring) == 4 and set(out[1].ring) == corner
 
 
 def test_bbox_cover_and_adaptive(spark):
@@ -123,7 +130,7 @@ def test_point_cell_matches_cover(spark):
 def test_k_ring(spark):
     df = spark.createDataFrame([(10.0, 10.0)], "lon double, lat double")
     row = df.select(
-        C.k_ring(C.cell_of("lon", "lat", 7), 1).alias("ring")
+        C.k_ring(C._cell_of_sql("lon", "lat", 7), 1).alias("ring")
     ).first()
     assert len(row.ring) == 9 and len(set(row.ring)) == 9
 
@@ -135,8 +142,7 @@ def test_tile_xy_reference_values(spark):
     row = df.select(tx.alias("x"), ty.alias("y")).first()
     assert (row.x, row.y) == (536, 358)
     t = df.select(C.tile_id("lon", "lat", 10).alias("t")).select(
-        C.cell_res(F.col("t")).alias("z"), C.cell_ix(F.col("t")).alias("x"),
-        C.cell_iy(F.col("t")).alias("y"),
+        C.cell_res("t").alias("z"), C.cell_ix("t").alias("x"), C.cell_iy("t").alias("y"),
     ).first()
     assert (t.z, t.x, t.y) == (10, 536, 358)
 
@@ -292,7 +298,7 @@ def _scalar_closed_way(pts):
     a = a[keep]
     if len(a) < 4 or not (a[0] == a[-1]).all():
         return (None, None, None, None, None)
-    return (W.wkb_multipolygon([[a]]), float(a[:, 0].min()), float(a[:, 1].min()),
+    return (W.wkb_polygon([a]), float(a[:, 0].min()), float(a[:, 1].min()),
             float(a[:, 0].max()), float(a[:, 1].max()))
 
 
@@ -375,3 +381,54 @@ def test_binary_array_rejects_int32_offset_overflow():
     ]
     with pytest.raises(OverflowError):
         _binary_array(2, ok, np.array([0, 2, 2**31], dtype=np.int64), data)
+
+
+@pytest.mark.parametrize("n", [1, 2, 255, 256, 65_537])
+def test_multi_wkb_sql_matches_scalar_builders(spark, n):
+    """The SQL multi-geometry builder equals the scalar builders byte for
+    byte; the member counts cross each byte of the u32 LE count."""
+    rng = np.random.RandomState(n)
+    lines = [np.round(rng.uniform(-90, 90, (2 + i % 3, 2)), 6) for i in range(n)]
+    polys = [[np.vstack([a, a[:1]])] for a in lines]
+    df = spark.createDataFrame(
+        [([bytearray(W.wkb_linestring(a)) for a in lines],
+          [bytearray(W.wkb_polygon(rings)) for rings in polys])],
+        "ls array<binary>, pg array<binary>",
+    )
+    row = df.select(
+        F.expr(W.multi_wkb_sql(W.MULTILINESTRING, "ls")).alias("mls"),
+        F.expr(W.multi_wkb_sql(W.MULTIPOLYGON, "pg")).alias("mpg"),
+    ).first()
+    assert bytes(row.mls) == W.wkb_multilinestring(lines)
+    assert bytes(row.mpg) == W.wkb_multipolygon(polys)
+
+
+def test_pip_index_matches_scalar_parts(spark):
+    """On all fixture worlds, the PIP index rows (one per polygon part of
+    each analysable area) equal a scalar reference: each area's polygons
+    geom_wkb parsed, then ``wkb_polygon`` plus the ring min/max per part."""
+    from osmi_water_spark.functions import tags as TG
+    from osmi_water_spark.operators.areas import build_areas, pip_index, polygon_table
+    from osmi_water_spark.operators.extract import extract_entities, split_entities
+    from osmi_water_spark.operators.locate import locate_ways
+    from osmi_water_spark.sources import pages_gen as PG
+
+    nodes, ways, relations = split_entities(
+        extract_entities(PG.pages_dataframe(spark, PG.pages_rows()))
+    )
+    areas = build_areas(locate_ways(ways, nodes), relations).localCheckpoint()
+    analysed = polygon_table(areas.filter(TG.is_area_to_analyse("tags")), C.DEFAULT_RES)
+    want = []
+    for r in analysed.collect():
+        key = f"w{r.way_id}" if r.way_id else f"r{r.relation_id}"
+        gtype, polys = W.parse_wkb(bytes(r.geom_wkb))
+        assert gtype == W.MULTIPOLYGON
+        for rings in polys:
+            allc = np.vstack(rings)
+            want.append((key, W.wkb_polygon(rings), float(allc[:, 0].min()),
+                         float(allc[:, 1].min()), float(allc[:, 0].max()),
+                         float(allc[:, 1].max())))
+    got = [(r.area_key, bytes(r.part_wkb), r.minx, r.miny, r.maxx, r.maxy)
+           for r in pip_index(areas).collect()]
+    assert len(want) > 3 and any(key.startswith("r") for key, *_ in want)
+    assert sorted(got) == sorted(want)
