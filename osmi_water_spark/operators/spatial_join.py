@@ -7,18 +7,28 @@ Reference: STRtree envelope query + PreparedPolygon::contains
 
   polygons --adaptive bbox cover--> (cell, part)      [bounded fan-out]
   points   --cell per resolution--> (cell, point)     [<= #resolutions rows]
-  equi-join on cell            == envelope pre-filter
+  cell match                   == envelope pre-filter
   vectorized ray-cast refine   == prepared contains
   distinct(point, area)        == first-containing-polygon break
 
-Scale properties: the only shuffle is the cell equi-join; polygon fan-out
-is bounded by ``max_cells`` per part (big polygons coarsen resolution
-instead of exploding); point fan-out is bounded by the number of distinct
-cover resolutions actually present (collected, tiny). Dense cells are
-optionally *salted*: the polygon side replicates cell rows k ways and
-points pick a deterministic salt from their id hash, spreading one hot
-cell across k shuffle partitions (BASELINE.json:6 skew mitigation). AQE
-skew-join splitting stays on underneath.
+Two physical arms, one question: does the polygon side fit the broadcast
+bound (``should_broadcast_parts``)?
+
+- Yes: the map-side probe. The driver builds the cover and the flat
+  ray-cast index from one collect and broadcasts them as a
+  ``CellProbeIndex``; the points stream through one narrow mapInArrow with
+  no shuffle. A cover over ``MAX_PROBE_CELLS`` is coarsened (the per-part
+  cell budget halves) until it fits.
+- No: the partitioned cell join. The cover is exploded in SQL and
+  equi-joined to the points' cells; that join is the only shuffle. Dense
+  cells are optionally *salted*: the polygon side replicates cell rows k
+  ways and points pick a deterministic salt from their id hash, spreading
+  one hot cell across k shuffle partitions (BASELINE.json:6 skew
+  mitigation). AQE skew-join splitting stays on underneath.
+
+Polygon fan-out is bounded by ``max_cells`` per part (big polygons coarsen
+resolution instead of exploding); point fan-out is bounded by the number of
+distinct cover resolutions actually present.
 """
 
 from __future__ import annotations
@@ -40,8 +50,8 @@ REFINE_SCHEMA_LONLAT = "point_id long, area_key string, lon double, lat double"
 # WKB, which would OOM the driver long before the row count trips.
 MAX_BROADCAST_PARTS = 200_000
 MAX_BROADCAST_BYTES = 128 << 20
-# map-side probe eligibility: the (cell, area) cover table must itself fit
-# in the broadcast (16 bytes/row -> ~64 MB at the cap)
+# map-side probe cover bound: the (cell, area) cover table ships in the
+# broadcast (16 bytes/row -> ~64 MB at the cap); a larger cover is coarsened
 MAX_PROBE_CELLS = 4_000_000
 
 
@@ -56,7 +66,8 @@ class CellProbeIndex:
     executor; the 100-TB point side streams through untouched. Cell lookup
     is a vectorized ``searchsorted`` per batch; containment is the flat
     ray cast. Replaces the sort-merge join that dominated PIP wall time
-    once the cover outgrew Spark's broadcast-join threshold."""
+    once the cover outgrew Spark's broadcast-join threshold; a cover over
+    ``MAX_PROBE_CELLS`` is built coarser rather than joined."""
 
     def __init__(self, cover_pairs: np.ndarray, index: "W.FlatPolygonIndex",
                  res_list: list[int], keys: list):
@@ -170,6 +181,45 @@ def _refine_arrow_parts(
         yield rb.select(cols).filter(pa.array(keep))
 
 
+def _fit_probe(part_rows: list, boxes: list, res_min: int, res_max: int,
+               max_cells: int) -> CellProbeIndex | None:
+    """The probe over the collected parts, its cover built at the largest
+    per-part budget (``max_cells``, halved while over the cap) whose cover
+    fits ``MAX_PROBE_CELLS``; None if even one cell per part does not fit.
+    A coarser cover yields more candidates but the same pairs: the cover
+    only prefilters, the ray cast decides containment. The cap is checked on the per-box counts BEFORE the cover exists, so an
+    over-cap cover is never built on the driver. The count is of (cell,
+    part) pairs, before CellProbeIndex's (cell, key) dedup."""
+    budget = max_cells
+    res, _, _, w, h = C.np_cover_boxes(*boxes, res_min, res_max, budget)
+    while int((w * h).sum()) > MAX_PROBE_CELLS and budget > 1:
+        budget //= 2
+        res, _, _, w, h = C.np_cover_boxes(*boxes, res_min, res_max, budget)
+    if int((w * h).sum()) > MAX_PROBE_CELLS:
+        return None
+    # The flat index is built ONCE on the driver over every (area_key,
+    # part) row — multi-part areas (a multipolygon with several outer
+    # rings, areahandler.hpp:48-62) keep each part; eval ORs over a key's
+    # parts — then shipped per executor.
+    index = W.FlatPolygonIndex.build(
+        (r["area_key"], bytes(r["part_wkb"])) for r in part_rows
+    )
+    _, cover_cells, cover_owner = C.np_cover(*boxes, res_min, res_max, budget)
+    key_of_part = np.fromiter(
+        (index.key_id[r["area_key"]] for r in part_rows),
+        dtype=np.int64, count=len(part_rows),
+    )
+    keys_by_id = [None] * len(index.key_id)
+    for k, i in index.key_id.items():
+        keys_by_id[i] = k
+    # CellProbeIndex dedups (cell, key) pairs at build time — same set as a
+    # cover.distinct() job, computed from the driver arrays
+    return CellProbeIndex(
+        np.column_stack([cover_cells, key_of_part[cover_owner]]),
+        index, np.unique(res).tolist(), keys_by_id,
+    )
+
+
 def pip_join(
     points: DataFrame,
     polygon_parts: DataFrame,
@@ -177,7 +227,6 @@ def pip_join(
     res_max: int = C.DEFAULT_RES,
     max_cells: int = C.MAX_COVER_CELLS,
     salt: int = 1,
-    res_list: list[int] | None = None,
     broadcast_parts: bool | None = None,
     dedup_pairs: bool = True,
     carry_lonlat: bool = False,
@@ -186,14 +235,27 @@ def pip_join(
     """points(point_id, lon, lat) x parts(area_key, part_wkb, minx..maxy)
     -> contained pairs (point_id, area_key), deduplicated.
 
-    ``salt`` > 1 replicates the polygon side k ways and routes each point to
-    one deterministic replica — use when single cells are hot.
+    Two physical arms, chosen by ``broadcast_parts``:
 
-    ``broadcast_parts``: when the polygon set is small (the common case —
-    polygons << points), the WKB geometries are shipped once per executor
-    as a broadcast dict and the join/shuffle carries only (cell, area_key,
-    bbox) — at wide-polygon scale the per-candidate WKB payload is the
-    shuffle bottleneck. None = auto (broadcast when <= 200k parts).
+    - True: the map-side probe. One collect brings the polygon side to the
+      driver, which builds a ``CellProbeIndex`` (cell cover + flat ray-cast
+      index) and broadcasts it; the points stream through one narrow
+      ``mapInArrow``. If the cover at ``max_cells`` per part exceeds
+      ``MAX_PROBE_CELLS``, the per-part budget is halved until it fits:
+      the cover only prefilters, so a coarser one gives the same pairs.
+      Only when even one cell per part is over the cap does the join run
+      partitioned.
+    - False: the partitioned cell join. The cover is exploded in SQL,
+      equi-joined to the points' cells (shuffle), and each candidate's
+      ``part_wkb`` is refined by the Arrow ray cast.
+
+    None = auto: one aggregate over the polygon side counts parts and WKB
+    bytes (the probe needs both within the broadcast bounds) and collects
+    the cover resolutions the partitioned arm joins on.
+
+    ``salt`` > 1 replicates the partitioned arm's polygon side k ways and
+    routes each point to one deterministic replica — use when single cells
+    are hot. The probe has no shuffle to salt.
 
     ``unique_points``: caller-declared contract that ``point_id`` values are
     unique. In probe mode this makes the join fully shuffle-free (the
@@ -206,84 +268,35 @@ def pip_join(
     """
     spark = points.sparkSession
     schema = REFINE_SCHEMA_LONLAT if carry_lonlat else REFINE_SCHEMA
+    box = ("minx", "miny", "maxx", "maxy")
 
-    if broadcast_parts is None:
+    res_list = []
+    if broadcast_parts is not True:
         stats = polygon_parts.agg(
             F.count("*").alias("n"),
             F.coalesce(F.sum(F.length("part_wkb")), F.lit(0)).alias("nbytes"),
+            F.array_sort(F.collect_set(
+                C.adaptive_cover_res(*box, res_min, res_max, max_cells)
+            )).alias("res"),
         ).collect()[0]
-        broadcast_parts = should_broadcast_parts(
-            int(stats["n"]), int(stats["nbytes"]),
-            MAX_BROADCAST_PARTS, MAX_BROADCAST_BYTES,
-        )
+        res_list = list(stats["res"])
+        if broadcast_parts is None:
+            broadcast_parts = should_broadcast_parts(
+                int(stats["n"]), int(stats["nbytes"]),
+                MAX_BROADCAST_PARTS, MAX_BROADCAST_BYTES,
+            )
 
-    part_rows = None
     if broadcast_parts:
         # ONE collect brings the whole polygon side (bounded by the
         # broadcast decision) to the driver: WKB for the flat index AND the
-        # bboxes, from which the adaptive cover is derived in numpy
-        # (C.np_cover — exact twin of the JVM expressions). Previously the
-        # cover and the resolution discovery were 1-2 MORE Spark jobs over
-        # the same polygon side (guide §8: decide with small rows; the
-        # polygon side is small by construction here).
-        part_rows = polygon_parts.select(
-            "area_key", "part_wkb", "minx", "miny", "maxx", "maxy"
-        ).collect()
-        cover_args = (
-            [r["minx"] for r in part_rows], [r["miny"] for r in part_rows],
-            [r["maxx"] for r in part_rows], [r["maxy"] for r in part_rows],
-            res_min, res_max, max_cells,
-        )
-        res_np, _, _, cover_w, cover_h = C.np_cover_boxes(*cover_args)
-        cover_pairs = int((cover_w * cover_h).sum())
-        if res_list is None:
-            res_list = sorted({int(r) for r in res_np})
-    elif res_list is None:
-        # polygon side too big to collect: discover the resolutions
-        # actually present with one tiny aggregate
-        res_rows = polygon_parts.select(
-            C.adaptive_cover_res(
-                "minx", "miny", "maxx", "maxy", res_min, res_max, max_cells
-            ).alias("res")
-        ).distinct().collect()
-        res_list = sorted({r.res for r in res_rows})
-    if not res_list:
-        return spark.createDataFrame(
-            [], REFINE_SCHEMA_LONLAT if carry_lonlat else REFINE_SCHEMA
-        )
-
-    if broadcast_parts:
-        # The flat index is built ONCE on the driver over every (area_key,
-        # part) row — multi-part areas (a multipolygon with several outer
-        # rings, areahandler.hpp:48-62) keep each part; eval ORs over a
-        # key's parts — then shipped per executor.
-        index = W.FlatPolygonIndex.build(
-            (r["area_key"], bytes(r["part_wkb"])) for r in part_rows
-        )
-        # Preferred physical strategy: map-side probe. If the (cell, area)
-        # cover table also fits the broadcast, ship it with the index and
-        # run the whole join as one narrow mapInArrow over the raw points —
-        # no explode, no join, no candidate shuffle. The cap is checked on
-        # the per-box counts BEFORE the cover exists, so an over-cap cover
-        # (up to MAX_BROADCAST_PARTS * MAX_COVER_CELLS pairs) is never
-        # built on the driver; it falls back to the broadcast-WKB
-        # equi-join. The count is of (cell, part) pairs, before
-        # CellProbeIndex's (cell, key) dedup.
-        if cover_pairs <= MAX_PROBE_CELLS:
-            _, cover_cells, cover_owner = C.np_cover(*cover_args)
-            key_of_part = np.fromiter(
-                (index.key_id[r["area_key"]] for r in part_rows),
-                dtype=np.int64, count=len(part_rows),
-            )
-            keys_by_id = [None] * len(index.key_id)
-            for k, i in index.key_id.items():
-                keys_by_id[i] = k
-            # CellProbeIndex dedups (cell, key) pairs at build time — same
-            # set as a cover.distinct() job, computed from the driver arrays
-            probe = CellProbeIndex(
-                np.column_stack([cover_cells, key_of_part[cover_owner]]),
-                index, res_list, keys_by_id,
-            )
+        # bboxes, from which the cover is derived in numpy (C.np_cover —
+        # exact twin of the JVM expressions).
+        part_rows = polygon_parts.select("area_key", "part_wkb", *box).collect()
+        if not part_rows:
+            return spark.createDataFrame([], schema)
+        boxes = [[r[c] for r in part_rows] for c in box]
+        probe = _fit_probe(part_rows, boxes, res_min, res_max, max_cells)
+        if probe is not None:
             bcp = spark.sparkContext.broadcast(probe)
             # NOT spread_input-widened (r6 A/B, interleaved): the probe is
             # already cheap per point, so the extra exchange's stage
@@ -302,17 +315,16 @@ def pip_join(
                 refined.dropDuplicates(["point_id", "area_key"])
                 if dedup_pairs and not unique_points else refined
             )
+        # even one cell per part is over the cap: join partitioned, at the
+        # requested budget
+        res_list = np.unique(C.np_cover_boxes(*boxes, res_min, res_max, max_cells)[0]).tolist()
+    if not res_list:
+        return spark.createDataFrame([], schema)
 
     cover = polygon_parts.withColumn(
-        "res",
-        C.adaptive_cover_res("minx", "miny", "maxx", "maxy", res_min, res_max, max_cells),
-    ).withColumn(
         "cell",
-        F.explode(
-            C.adaptive_cover_cells("minx", "miny", "maxx", "maxy", res_min, res_max, max_cells)
-        ),
+        F.explode(C.adaptive_cover_cells(*box, res_min, res_max, max_cells)),
     )
-
     pts = points.select(
         "point_id",
         "lon",
@@ -333,60 +345,12 @@ def pip_join(
         (F.col("lon") >= F.col("minx")) & (F.col("lon") <= F.col("maxx"))
         & (F.col("lat") >= F.col("miny")) & (F.col("lat") <= F.col("maxy"))
     )
-    if broadcast_parts:
-        bc = spark.sparkContext.broadcast(index)
-        cand = pts.join(
-            cover.select(*keys, "area_key", "minx", "miny", "maxx", "maxy"), keys, "inner"
-        ).filter(env)
-
-        def refine_bc(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            idx = bc.value
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                ids = rb.column("point_id").to_numpy(zero_copy_only=False)
-                lon = rb.column("lon").to_numpy(zero_copy_only=False)
-                lat = rb.column("lat").to_numpy(zero_copy_only=False)
-                d = pc.dictionary_encode(rb.column("area_key"))
-                codes = d.indices.to_numpy(zero_copy_only=False)
-                uniques = d.dictionary.to_pylist()
-                remap = np.array(
-                    [idx.key_id.get(k, -1) for k in uniques], dtype=np.int64
-                )
-                # lexsort gives grouping AND intra-batch (point, area) dedup
-                # in one pass (a key's parts can cover the same cell, so the
-                # same pair may arrive on several candidate rows)
-                order = np.lexsort((ids, codes))
-                sc, si = codes[order], ids[order]
-                uniq = np.ones(order.size, dtype=bool)
-                uniq[1:] = (sc[1:] != sc[:-1]) | (si[1:] != si[:-1])
-                sel = order[uniq]
-                keep = idx.eval(lon[sel], lat[sel], remap[codes[sel]])
-                outsel = sel[keep]
-                arrays = [
-                    pa.array(ids[outsel], type=pa.int64()),
-                    pc.take(rb.column("area_key"), pa.array(outsel)),
-                ]
-                names = ["point_id", "area_key"]
-                if carry_lonlat:
-                    arrays += [pa.array(lon[outsel]), pa.array(lat[outsel])]
-                    names += ["lon", "lat"]
-                yield pa.RecordBatch.from_arrays(arrays, names)
-
-        refined = cand.select("point_id", "area_key", "lon", "lat").mapInArrow(
-            refine_bc, schema
-        )
-    else:
-        cand = pts.join(
-            cover.select(*keys, "area_key", "part_wkb", "minx", "miny", "maxx", "maxy"),
-            keys, "inner",
-        ).filter(env)
-        refined = cand.select("point_id", "area_key", "part_wkb", "lon", "lat").mapInArrow(
-            lambda it: _refine_arrow_parts(it, carry_lonlat), schema
-        )
+    cand = pts.join(
+        cover.select(*keys, "area_key", "part_wkb", *box), keys, "inner"
+    ).filter(env)
+    refined = cand.select("point_id", "area_key", "part_wkb", "lon", "lat").mapInArrow(
+        lambda it: _refine_arrow_parts(it, carry_lonlat), schema
+    )
     return refined.dropDuplicates(["point_id", "area_key"]) if dedup_pairs else refined
 
 

@@ -536,47 +536,44 @@ rects AS (
 """
 
 
-def _pip_query(spark, sf_dir, salt: int):
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import types as T
+def _pip_inputs(spark, sf_dir):
+    """J5 inputs: node points and one rectangle part per nation. The rect
+    WKB is the closed-way polygon builder over its closed 5-point ring."""
+    from osmi_water_spark.operators.areas import _closed_way_polygon
 
-    from osmi_water_spark.functions import wkb as W
-    from osmi_water_spark.operators.spatial_join import pip_join
-
-    def _rect_wkb(x0, y0, x1, y1):
-        return pd.Series(
-            [
-                W.wkb_polygon([np.array([[a, b], [c, b], [c, d], [a, d], [a, b]])])
-                for a, b, c, d in zip(x0, y0, x1, y1)
-            ]
-        )
-
-    rect_wkb = pandas_udf(_rect_wkb, T.BinaryType())
-
-    rects = _rects(spark, sf_dir)
-    parts = rects.select(
+    corners = [("x0", "y0"), ("x1", "y0"), ("x1", "y1"), ("x0", "y1"), ("x0", "y0")]
+    ring = "array(" + ", ".join(
+        f"named_struct('lon', {x}, 'lat', {y})" for x, y in corners
+    ) + ")"
+    parts = _rects(spark, sf_dir).select(
         F.col("poly_id").cast("string").alias("area_key"),
-        rect_wkb("x0", "y0", "x1", "y1").alias("part_wkb"),
+        _closed_way_polygon(F.expr(ring)).getField("wkb").alias("part_wkb"),
         F.col("x0").alias("minx"), F.col("y0").alias("miny"),
         F.col("x1").alias("maxx"), F.col("y1").alias("maxy"),
     )
     points = _nodes_geo(spark, sf_dir).select(
         F.col("node_id").alias("point_id"), "lon", "lat"
     )
-    # explicit knobs (as the pipeline passes them) so the standalone query
-    # measures the JOIN, not auto-mode's discovery jobs: broadcast decision
-    # pinned (tiny rect set), res_list = the full adaptive range (a superset
-    # is exact — absent resolutions match no cover cells), unique ids
-    # declared (node_id is a key) -> probe mode is shuffle-free end to end.
-    pairs = pip_join(
-        points, parts, salt=salt, broadcast_parts=True,
-        res_list=list(range(3, C.DEFAULT_RES + 1)), unique_points=True,
-    )
+    return points, parts
+
+
+def _pip_pairs(pairs):
     return pairs.select(
         "point_id", F.col("area_key").cast("long").alias("poly_id")
     )
+
+
+def _pip_query(spark, sf_dir, salt: int):
+    from osmi_water_spark.operators.spatial_join import pip_join
+
+    points, parts = _pip_inputs(spark, sf_dir)
+    # explicit knobs (as the pipeline passes them) so the standalone query
+    # measures the JOIN, not auto-mode's planning aggregate: broadcast
+    # decision pinned (tiny rect set), unique ids declared (node_id is a
+    # key) -> probe mode is shuffle-free end to end.
+    return _pip_pairs(pip_join(
+        points, parts, salt=salt, broadcast_parts=True, unique_points=True,
+    ))
 
 
 def q_j5_pip(spark, sf_dir):
@@ -590,41 +587,13 @@ def q_j5_pip_salted(spark, sf_dir):
 
 
 def q_j5_pip_auto(spark, sf_dir):
-    """J5 with every knob left to AUTO discovery (res-list collect, stats
-    agg, broadcast decision): same result as the pinned q_j5_pip — the
-    discovery jobs are ergonomics, not semantics. Benched alongside the
-    pinned row so their overhead is a recorded number (VERDICT.md r3 #7)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    from osmi_water_spark.functions import wkb as W
+    """J5 with every knob left to AUTO (the planning aggregate and the
+    broadcast decision): same result as the pinned q_j5_pip — the planning
+    job is ergonomics, not semantics. Benched alongside the pinned row so
+    its overhead is a recorded number (VERDICT.md r3 #7)."""
     from osmi_water_spark.operators.spatial_join import pip_join
 
-    def _rect_wkb(x0, y0, x1, y1):
-        return pd.Series(
-            [
-                W.wkb_polygon([np.array([[a, b], [c, b], [c, d], [a, d], [a, b]])])
-                for a, b, c, d in zip(x0, y0, x1, y1)
-            ]
-        )
-
-    rect_wkb = pandas_udf(_rect_wkb, T.BinaryType())
-    rects = _rects(spark, sf_dir)
-    parts = rects.select(
-        F.col("poly_id").cast("string").alias("area_key"),
-        rect_wkb("x0", "y0", "x1", "y1").alias("part_wkb"),
-        F.col("x0").alias("minx"), F.col("y0").alias("miny"),
-        F.col("x1").alias("maxx"), F.col("y1").alias("maxy"),
-    )
-    points = _nodes_geo(spark, sf_dir).select(
-        F.col("node_id").alias("point_id"), "lon", "lat"
-    )
-    pairs = pip_join(points, parts)
-    return pairs.select(
-        "point_id", F.col("area_key").cast("long").alias("poly_id")
-    )
+    return _pip_pairs(pip_join(*_pip_inputs(spark, sf_dir)))
 
 
 SQL_J5 = f"""

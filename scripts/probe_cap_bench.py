@@ -1,14 +1,18 @@
-"""J5 probe-mode stress near MAX_PROBE_CELLS (VERDICT.md r3 #6): the 4M
-(cell, area)-pair cover was unit-stress-tested but never BENCHED — this
-job builds a multi-million-cell probe (many polygons at a fine adaptive
-resolution) and reports the build wall (cover job + bounded Arrow pull +
-index assembly + broadcast) separately from the per-point lookup
-throughput of the shuffle-free mapInArrow probe path.
+"""J5 probe-mode stress near MAX_PROBE_CELLS (VERDICT.md r3 #6): builds a
+multi-million-cell cover (many polygons at a fine adaptive resolution) and
+reports the probe build wall (parts collect + cover count + cover and index
+assembly + broadcast) separately from the per-point lookup throughput of
+the shuffle-free mapInArrow probe.
+
+``cover_cells`` is the cover at the requested per-polygon budget. When it
+is over MAX_PROBE_CELLS, pip_join halves the budget until the cover fits
+and probes with that coarser cover (same pairs: the cover only
+prefilters), so the run also measures the coarsened probe.
 
 Usage: SPARK_GRAFT_CPUS=8 python scripts/probe_cap_bench.py \
            [n_points] [n_polys] [res_max] [max_cells_per_poly]
-Defaults 8M points x 50k polys at res<=10 (cap 256 cells/poly) -> a
-~3.5-4M-cell probe, just under the 4M cap. Prints one JSON line.
+Defaults 8M points x 50k polys at res<=10 (256 cells/poly requested).
+Prints one JSON line.
 """
 
 from __future__ import annotations
@@ -43,8 +47,8 @@ def main() -> None:
     parts = parts.cache()
     parts.count()
 
-    # the probe's exact cover size (one counting job, outside the timed
-    # windows): what the bounded limit(cap+1).toArrow() pull will carry
+    # the cover size at the requested budget (one counting job, outside
+    # the timed windows); over MAX_PROBE_CELLS, pip_join probes coarser
     cover_cells = (
         parts.withColumn(
             "cell",
@@ -58,8 +62,8 @@ def main() -> None:
     pip_join(pts.limit(10000), parts, res_max=res_max, max_cells=max_cells,
              broadcast_parts=True).count()
 
-    # build: everything up to the returned (lazy) DataFrame — cover job,
-    # bounded Arrow pull, numpy/index assembly, broadcast registration
+    # build: everything up to the returned (lazy) DataFrame — parts
+    # collect, cover count, numpy/index assembly, broadcast registration
     t0 = time.time()
     pairs = pip_join(
         pts, parts, res_max=res_max, max_cells=max_cells,

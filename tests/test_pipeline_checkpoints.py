@@ -5,6 +5,9 @@ not return."""
 
 from __future__ import annotations
 
+import gc
+import time
+
 import pytest
 
 from osmi_water_spark.plans import pipeline
@@ -22,6 +25,26 @@ def _last_execution_id(store) -> int:
 
 def _persisted_rdd_ids(spark) -> set[int]:
     return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _settled_persisted_rdd_ids(spark) -> set[int]:
+    """Persisted RDD ids once the outputs earlier tests dropped are gone.
+    Spark's ContextCleaner unpersists an RDD only after the JVM collects
+    it, so without this such an RDD can vanish at any later moment, e.g.
+    between the two reads of an equality check. py4j tells the JVM about
+    dropped Python references from a worker thread that polls every
+    second, so each round waits before it asks the JVM to collect; the
+    ids are settled when two rounds read the same set."""
+    gc.collect()
+    ids, deadline = None, time.monotonic() + 60.0
+    while time.monotonic() < deadline:
+        time.sleep(2.0)
+        spark.sparkContext._jvm.System.gc()
+        now = _persisted_rdd_ids(spark)
+        if now == ids:
+            break
+        ids = now
+    return ids
 
 
 def test_pipeline_plans_stay_flat(spark):
@@ -85,7 +108,7 @@ def test_failed_run_releases_its_checkpoints(spark, monkeypatch):
         raise RuntimeError("tile stage failed")
 
     monkeypatch.setattr(pipeline.TI, "tile_validation", fail)
-    before = _persisted_rdd_ids(spark)
+    before = _settled_persisted_rdd_ids(spark)
     pages = PG.pages_dataframe(spark, PG.pages_rows(["w06_rivermouth_pip", "w10_relation"]))
     with pytest.raises(RuntimeError, match="tile stage failed"):
         run_pipeline(spark, pages, out_dir=None, with_lineage=False)

@@ -1,10 +1,11 @@
-"""J5 pip_join edge cases: multi-part areas under the broadcast path, the
-byte-bounded broadcast decision, and the empty-polygon-side schema contract.
+"""J5 pip_join edge cases: multi-part areas under both arms, the
+byte-bounded broadcast decision, the probe's cover cap, salting of the
+partitioned arm, and the empty-polygon-side schema contract.
 
 The reference indexes each polygon part separately in its STRtree
 (/root/reference/src/areahandler.hpp:48-62), so an area whose MultiPolygon
 has several outer rings must match points inside ANY ring — in both the
-broadcast and the shuffled refine paths.
+probe and the partitioned arm.
 """
 
 from __future__ import annotations
@@ -96,6 +97,99 @@ def test_auto_decision_picks_nonbroadcast_for_fat_parts(spark, monkeypatch):
     assert got == {(1, "A"), (2, "A"), (3, "B")}
 
 
+def _salt_case(spark):
+    """Random rects whose keys repeat (multi-part areas, overlapping parts
+    of one key included) and points on cell edges at every cover
+    resolution, plus uniform ones. Returns (parts, points, expected pairs)
+    with the expectation from a numpy brute force over strict interiors;
+    the random rect edges never coincide with a dyadic cell edge."""
+    from osmi_water_spark.functions import cells as C
+
+    rng = np.random.RandomState(11)
+    x0 = rng.uniform(-30.0, 30.0, 30)
+    y0 = rng.uniform(-20.0, 20.0, 30)
+    x1 = x0 + rng.uniform(0.3, 12.0, 30)
+    y1 = y0 + rng.uniform(0.3, 12.0, 30)
+    keys = [f"k{i % 7}" for i in range(30)]
+    parts = spark.createDataFrame(
+        [
+            (keys[i], bytes(_rect_wkb(x0[i], y0[i], x1[i], y1[i])),
+             float(x0[i]), float(y0[i]), float(x1[i]), float(y1[i]))
+            for i in range(30)
+        ],
+        "area_key string, part_wkb binary, minx double, miny double, "
+        "maxx double, maxy double",
+    )
+    # cell edges at the finest cover resolution include every coarser one
+    n = 1 << C.DEFAULT_RES
+    ex = -180.0 + 360.0 / n * np.arange(n + 1)
+    ey = -90.0 + 180.0 / n * np.arange(n + 1)
+    ex, ey = ex[(ex > -35.0) & (ex < 45.0)], ey[(ey > -25.0) & (ey < 35.0)]
+    gx, gy = np.meshgrid(ex, ey)
+    lon = np.concatenate([gx.ravel(), ex, rng.uniform(-35.0, 45.0, ey.size),
+                          rng.uniform(-35.0, 45.0, 800)])
+    lat = np.concatenate([gy.ravel(), rng.uniform(-25.0, 35.0, ex.size), ey,
+                          rng.uniform(-25.0, 35.0, 800)])
+    pts = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lon, lat))],
+        "point_id long, lon double, lat double",
+    )
+    inside = (
+        (lon[:, None] > x0) & (lon[:, None] < x1)
+        & (lat[:, None] > y0) & (lat[:, None] < y1)
+    )
+    want = {(int(p), keys[r]) for p, r in zip(*np.nonzero(inside))}
+    return parts, pts, want
+
+
+@pytest.mark.parametrize("salt", [1, 3, 8])
+def test_salted_partitioned_arm_matches_brute_force(spark, salt):
+    """Salting the partitioned arm's cell join (polygon side replicated k
+    ways, each point routed to one replica) changes no pair, and the
+    result carries each (point, area) pair once."""
+    parts, pts, want = _salt_case(spark)
+    df = pip_join(pts, parts, broadcast_parts=False, salt=salt)
+    assert "Join" in df._jdf.queryExecution().optimizedPlan().toString()
+    rows = [(r.point_id, r.area_key) for r in df.collect()]
+    assert len(rows) == len(set(rows)) and set(rows) == want
+    exists = pip_exists(pts, parts, broadcast_parts=False, salt=salt)
+    assert {r.point_id for r in exists.collect()} == {p for p, _ in want}
+
+
+def test_auto_partitioned_plans_with_one_job(spark, monkeypatch):
+    """Auto mode settles the broadcast decision and the partitioned arm's
+    cover resolutions in one aggregate: building the join runs exactly
+    one query before any action on its result, and launches exactly the
+    jobs of one global aggregate (with AQE on, that is a shuffle-map job
+    plus a result job)."""
+    import osmi_water_spark.operators.spatial_join as SJ
+
+    parts = _two_part_area(spark)
+    pts = _points(spark)
+    monkeypatch.setattr(SJ, "MAX_BROADCAST_BYTES", 8)
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def run_in_group(group, build):
+        n_exec = store.executionsCount()
+        sc.setJobGroup(group, group)
+        try:
+            out = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return out, jobs, store.executionsCount() - n_exec
+
+    _, agg_jobs, _ = run_in_group("one-aggregate", lambda: parts.agg(F.count("*")).collect())
+    df, jobs, queries = run_in_group("pip-join-planning", lambda: SJ.pip_join(pts, parts))
+    assert agg_jobs >= 1 and jobs == agg_jobs and queries == 1
+    assert {(r.point_id, r.area_key) for r in df.collect()} == {
+        (1, "A"), (2, "A"), (3, "B")
+    }
+
+
 def test_empty_polygon_side_carries_lonlat_schema(spark):
     parts = _two_part_area(spark).limit(0)
     pts = _points(spark)
@@ -175,10 +269,12 @@ def test_np_cell_of_matches_formula():
 
 
 def test_probe_cap_checked_before_cover_is_built(spark, monkeypatch):
-    """The probe cap is checked on the per-box cover counts: a cover of
-    exactly MAX_PROBE_CELLS pairs stays in probe mode; one of cap+1 falls
-    back to the broadcast equi-join WITHOUT building the cover. Both give
-    the same pairs."""
+    """The probe cap is checked on the per-box cover counts. A cover of
+    exactly MAX_PROBE_CELLS pairs is probed as built. An over-cap cover is
+    coarsened: the per-part budget halves until the count fits, and only
+    that cover is built, still with no join. A cap below the one-cell
+    cover runs the partitioned join WITHOUT building any cover. All three
+    give the same pairs."""
     import osmi_water_spark.operators.spatial_join as SJ
     from osmi_water_spark.functions import cells as C
 
@@ -198,32 +294,44 @@ def test_probe_cap_checked_before_cover_is_built(spark, monkeypatch):
         [(i, float(i % 12) + 0.7, float(i % 7) + 0.7) for i in range(300)],
         "point_id long, lon double, lat double",
     )
-    _, _, _, w, h = C.np_cover_boxes(*zip(*rows))  # pip_join's default res/max_cells
-    n_pairs = int((w * h).sum())
-    assert n_pairs > len(rows)  # several cells per part
+
+    def n_cover(max_cells):
+        _, _, _, w, h = C.np_cover_boxes(*zip(*rows), 3, C.DEFAULT_RES, max_cells)
+        return int((w * h).sum())
+
+    n_pairs = n_cover(C.MAX_COVER_CELLS)  # pip_join's default budget
+    n_one = n_cover(1)
+    assert n_one < n_pairs - 1  # coarsening has room to fit
 
     covers = []
 
     def np_cover_spy(*a, **k):
-        covers.append(1)
-        return np_cover(*a, **k)
+        out = np_cover(*a, **k)
+        covers.append((a[6], len(out[1])))  # (max_cells, cover pairs)
+        return out
 
     np_cover = C.np_cover
     monkeypatch.setattr(C, "np_cover", np_cover_spy)
 
-    def run():
+    def run(cap):
+        monkeypatch.setattr(SJ, "MAX_PROBE_CELLS", cap)
+        covers.clear()
         df = pip_join(pts, parts, broadcast_parts=True)
         pairs = {(r.point_id, r.area_key) for r in df.collect()}
         return pairs, "Join" in df._jdf.queryExecution().optimizedPlan().toString()
 
-    monkeypatch.setattr(SJ, "MAX_PROBE_CELLS", n_pairs)
-    at_cap, joined = run()
-    assert len(covers) == 1 and not joined  # probe mode: one narrow mapInArrow
+    at_cap, joined = run(n_pairs)
+    assert covers == [(C.MAX_COVER_CELLS, n_pairs)] and not joined
 
-    monkeypatch.setattr(SJ, "MAX_PROBE_CELLS", n_pairs - 1)
-    over_cap, joined = run()
-    assert len(covers) == 1 and joined  # equi-join arm, no cover built
-    assert at_cap == over_cap and len(at_cap) > 0
+    over_cap, joined = run(n_pairs - 1)
+    assert not joined  # still one narrow mapInArrow
+    assert len(covers) == 1
+    budget, cells = covers[0]
+    assert budget < C.MAX_COVER_CELLS and cells <= n_pairs - 1
+
+    partitioned, joined = run(n_one - 1)
+    assert covers == [] and joined  # partitioned arm, no cover built
+    assert at_cap == over_cap == partitioned and len(at_cap) > 0
 
 
 def test_cell_probe_index_at_cap_scale():
