@@ -3,10 +3,13 @@ MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
 
 Plan shape (the part that matters at 100 TB): signatures are computed in
 one Arrow-batched pass (numpy per batch, no per-row Python); candidate
-generation is an equi-join on (band, band_hash) bucket keys — never an
-all-pairs comparison; verification touches only bucket-collision pairs.
-All hashing is explicitly seeded -> byte-stable across runs, partitions,
-and cluster sizes.
+generation is an equi-join on bucket keys — never an all-pairs
+comparison; verification touches only bucket-collision pairs. MinHash
+(band, band_hash), SimHash (chunk, val) and embedding (bucket) keys all
+go through ONE self-join, ``bucket_pairs``: one Exchange on the keys, the
+salt and the hot-bucket star cap written once, and the signature UDF run
+once per plan, capped or not. All hashing is explicitly seeded ->
+byte-stable across runs, partitions, and cluster sizes.
 
 Hash semantics (pinned by the DuckDB fixture oracle,
 scripts/make_dedup_fixtures.py — an independent plain-Python scalar
@@ -24,14 +27,14 @@ implementation over the deterministic sources/docs_gen corpus):
   digest was the last interpreted hash on the hot path; fixtures
   regenerated)
 
-The batch path hashes each DISTINCT token once per Arrow batch
-(pd.factorize), and the token hashes themselves are vectorized: the
-distinct tokens' utf-8 bytes are laid flat via pyarrow and crc32/FNV-1a
-run as numpy passes over byte POSITIONS (loop length = longest token, not
-token count). Every gram fold / permutation / sign-sum is flat vectorized
-numpy, and the Jaccard verify counts all pairs' intersections in one flat
-lexsort pass — there is no per-token, per-gram, or per-pair Python in the
-hot path.
+The batch path tokenizes once (``_batch_tokens``) and hashes each
+DISTINCT token once per Arrow batch (pd.factorize); the token hashes
+themselves are vectorized: the distinct tokens' utf-8 bytes are laid
+flat via pyarrow and crc32/FNV-1a run as numpy passes over byte
+POSITIONS (loop length = longest token, not token count). Every gram
+fold / permutation / sign-sum is flat vectorized numpy, and the Jaccard
+verify counts all pairs' intersections in one flat lexsort pass — there
+is no per-token, per-gram, or per-pair Python in the hot path.
 """
 
 from __future__ import annotations
@@ -41,10 +44,14 @@ import zlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+
+# signature-stage parallelism guard (measured 4.2 s -> 0.8 s for the sf1.0
+# signature pass on local[32]; no-op when the input is already wide)
+from osmi_water_spark.parallel import spread_input as _spread
 
 _MERSENNE = (1 << 61) - 1
 _NUM_PERM = 64
@@ -53,11 +60,6 @@ _rs = np.random.RandomState(_SEED)
 _A = _rs.randint(1, _MERSENNE, size=_NUM_PERM, dtype=np.int64)
 _B = _rs.randint(0, _MERSENNE, size=_NUM_PERM, dtype=np.int64)
 _TOKEN_RE = re.compile(r"\W+")
-
-
-# signature-stage parallelism guard (measured 4.2 s -> 0.8 s for the sf1.0
-# signature pass on local[32]; no-op when the input is already wide)
-from osmi_water_spark.parallel import spread_input as _spread  # noqa: E402
 
 
 # ---------------- exact ----------------
@@ -100,9 +102,6 @@ def _gram_hash_ints(text: str, n: int = 3) -> list[int]:
 def shingle_hashes(text: str, n: int = 3) -> np.ndarray:
     """Sorted DISTINCT gram hashes of one doc (the Jaccard set spec)."""
     return np.array(sorted(set(_gram_hash_ints(text, n))), dtype=np.int64)
-
-
-_shingle_hashes = shingle_hashes  # back-compat alias
 
 
 def minhash_signature(text: str, n: int = 3) -> np.ndarray:
@@ -219,21 +218,26 @@ def _fnv1a64_strs(strs) -> np.ndarray:
     )
 
 
-def _token_hashes_batch(texts) -> tuple[np.ndarray, np.ndarray]:
-    """All docs' tokens -> (flat crc32 hashes uint64, per-doc offsets).
-    Each DISTINCT token is hashed once per batch (pd.factorize), and the
-    distinct-token crc32s are themselves one vectorized byte-position pass
-    (_crc32_strs) — no per-token Python; the token->hash expansion is one
-    vectorized gather."""
+def _batch_tokens(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """All docs' tokens -> (codes, uniques, offsets): each token occurrence
+    as an index into the batch's DISTINCT tokens (pd.factorize), those
+    distinct tokens, and per-doc offsets into the flat occurrence array.
+    The one tokenizer of the batch path: a hash of the uniques expands to
+    every occurrence with one gather, ``hashes[codes]``."""
     flat_tokens: list[str] = []
     offsets = np.zeros(len(texts) + 1, dtype=np.int64)
     for i, t in enumerate(texts):
-        toks = [x for x in _TOKEN_RE.split((t or "").lower()) if x]
-        flat_tokens.extend(toks)
+        flat_tokens.extend(x for x in _TOKEN_RE.split((t or "").lower()) if x)
         offsets[i + 1] = len(flat_tokens)
-    if not flat_tokens:
-        return np.empty(0, dtype=np.uint64), offsets
     codes, uniques = pd.factorize(np.asarray(flat_tokens, dtype=object))
+    return codes, uniques, offsets
+
+
+def _token_hashes_batch(texts) -> tuple[np.ndarray, np.ndarray]:
+    """All docs' tokens -> (flat crc32 hashes uint64, per-doc offsets); the
+    distinct tokens' crc32s are one vectorized byte-position pass
+    (_crc32_strs) — no per-token Python."""
+    codes, uniques, offsets = _batch_tokens(texts)
     return _crc32_strs(uniques)[codes], offsets
 
 
@@ -277,6 +281,19 @@ def _gram_hashes(th: np.ndarray, offsets: np.ndarray, n: int = 3) -> tuple[np.nd
 _PERM_CHUNK = 16_384
 
 
+def _doc_chunks(starts: np.ndarray, total: int):
+    """Cut a batch's non-empty docs into runs of whole docs for the chunked
+    passes -> (doc_lo, doc_hi, lo, hi): docs ``doc_lo:doc_hi`` span flat
+    elements ``lo:hi``. ``starts`` are the docs' ascending flat offsets and
+    ``total`` the flat length; a run takes every doc that starts within
+    ``_PERM_CHUNK`` elements of its first doc (at least one doc)."""
+    doc_lo = 0
+    while doc_lo < starts.size:
+        doc_hi = max(doc_lo + 1, int(np.searchsorted(starts, starts[doc_lo] + _PERM_CHUNK)))
+        yield doc_lo, doc_hi, starts[doc_lo], starts[doc_hi] if doc_hi < starts.size else total
+        doc_lo = doc_hi
+
+
 def minhash_signatures_batch(texts, n: int = 3) -> np.ndarray:
     """Whole-batch minhash: one vectorized tokenize/gram-hash pass over the
     batch (_token_hashes_batch + _gram_hashes — per-distinct-token crc32 is
@@ -297,20 +314,9 @@ def minhash_signatures_batch(texts, n: int = 3) -> np.ndarray:
     starts = goff[nonempty]
     # chunk along the shingle axis on doc boundaries
     mins = np.empty((nonempty.size, _NUM_PERM), dtype=np.int64)
-    doc_lo = 0
-    while doc_lo < nonempty.size:
-        doc_hi = doc_lo + 1
-        while (
-            doc_hi < nonempty.size
-            and starts[doc_hi] - starts[doc_lo] < _PERM_CHUNK
-        ):
-            doc_hi += 1
-        lo = starts[doc_lo]
-        hi = starts[doc_hi] if doc_hi < nonempty.size else flat.size
+    for doc_lo, doc_hi, lo, hi in _doc_chunks(starts, flat.size):
         vals = (np.multiply.outer(_A, flat[lo:hi]) + _B[:, None]) % _MERSENNE
-        seg = starts[doc_lo:doc_hi] - lo
-        mins[doc_lo:doc_hi] = np.minimum.reduceat(vals, seg, axis=1).T
-        doc_lo = doc_hi
+        mins[doc_lo:doc_hi] = np.minimum.reduceat(vals, starts[doc_lo:doc_hi] - lo, axis=1).T
     out[nonempty] = mins
     return out
 
@@ -352,14 +358,17 @@ def minhash_bands(
     ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash"))
 
 
-def lsh_candidate_pairs(
-    bucketed: DataFrame, salt: int = 1, max_bucket: int | None = None
+def bucket_pairs(
+    rows: DataFrame, keys: list[str], payload: tuple[str, ...] = (),
+    salt: int = 1, max_bucket: int | None = None,
 ) -> DataFrame:
-    """Bucket self-join -> distinct candidate pairs (a < b). The join key is
-    (band, band_hash) so hot buckets are the only skew surface.
+    """The near-dup operators' one bucket self-join: ``rows(*keys, id,
+    *payload)`` -> ``(a, b, <p>_a…, <p>_b…)`` for every pair of ids
+    ``a < b`` that share a bucket, once per shared bucket (callers take the
+    distinct pairs). Hot buckets are the only skew surface.
 
     Skew controls for dup-heavy corpora (where one bucket can hold millions
-    of docs and the naive self-join is O(n^2) in ONE task):
+    of rows and the naive self-join is O(n^2) in ONE task):
 
     * ``salt`` > 1 spreads each bucket's pair work over ``salt`` shuffle
       partitions (left side keeps its hash-salt, right side replicates to
@@ -367,56 +376,66 @@ def lsh_candidate_pairs(
     * ``max_bucket`` caps the quadratic blow-up itself: buckets larger than
       the cap emit a STAR (min-id representative paired with every other
       member, n-1 pairs) instead of all n(n-1)/2 pairs. Star edges are
-      still threshold-gated downstream (verify_jaccard / cosine), so a
-      member whose similarity to the representative is below threshold
-      loses its edges even if it is a true near-dup of OTHER members —
-      chain-shaped clusters can be orphaned at the cap. Over-cap buckets
-      are all-same-signature groups (near-certain duplicate clusters), so
-      in practice the representative is near every member; pick the cap
-      with that trade-off in mind.
+      still threshold-gated downstream (verify_jaccard / hamming / cosine),
+      so a member whose similarity to the representative is below
+      threshold loses its edges even if it is a true near-dup of OTHER
+      members — chain-shaped clusters can be orphaned at the cap. Over-cap
+      buckets are all-same-signature groups (near-certain duplicate
+      clusters), so in practice the representative is near every member;
+      pick the cap with that trade-off in mind.
 
-    The bucket rows are repartitioned ONCE up front: every branch below
-    (sizes agg, small/big splits, both self-join sides) then reads the same
-    reused Exchange instead of re-running the signature UDF per reference —
-    and a single-partition input (one small parquet file) stops serializing
-    the whole signature pass onto one core.
+    The rows are repartitioned ONCE on ``keys``, and every branch (both
+    self-join sides, and the cap's bucket size, representative id and
+    representative payload, which are window columns over that same
+    partitioning) reads that one Exchange: the signature UDF upstream runs
+    once, and a single-partition input (one small parquet file) stops
+    serializing the whole signature pass onto one core. Null keys never
+    pair, so those rows are dropped before the Exchange; the filter Spark
+    would otherwise infer sits under the join sides only, and the cap
+    branch would stop sharing their Exchange.
     """
-    b = bucketed.repartition("band", "band_hash")
+    b = rows.filter(" AND ".join(f"{k} IS NOT NULL" for k in keys)).repartition(*keys)
+    star = None
     if max_bucket is not None:
-        sizes = b.groupBy("band", "band_hash").agg(F.count("*").alias("bsz"))
-        b = b.join(sizes, ["band", "band_hash"], "inner")
-        small = b.filter(F.col("bsz") <= max_bucket).drop("bsz")
-        big = b.filter(F.col("bsz") > max_bucket).drop("bsz")
-        reps = big.groupBy("band", "band_hash").agg(F.min("doc_id").alias("a"))
-        star = (
-            big.join(reps, ["band", "band_hash"], "inner")
-            .filter(F.col("doc_id") != F.col("a"))
-            .select("a", F.col("doc_id").alias("b"))
+        w = Window.partitionBy(*keys)
+        b = b.select(
+            "*", F.count(F.lit(1)).over(w).alias("_n"), F.min("id").over(w).alias("_rep"),
+            *[F.min_by(p, "id").over(w).alias(f"_{p}_rep") for p in payload],
         )
-    else:
-        small, star = b, None
+        star = b.filter((F.col("_n") > max_bucket) & (F.col("id") != F.col("_rep"))).select(
+            F.col("_rep").alias("a"), F.col("id").alias("b"),
+            *[F.col(f"_{p}_rep").alias(f"{p}_a") for p in payload],
+            *[F.col(p).alias(f"{p}_b") for p in payload],
+        )
+        b = b.filter(F.col("_n") <= max_bucket)
 
-    l = small.select("band", "band_hash", F.col("doc_id").alias("a"))
-    r = small.select("band", "band_hash", F.col("doc_id").alias("b"))
-    keys = ["band", "band_hash"]
+    def side(x: str) -> DataFrame:
+        return b.select(*keys, F.col("id").alias(x), *[F.col(p).alias(f"{p}_{x}") for p in payload])
+
+    l, r, on = side("a"), side("b"), list(keys)
     if salt > 1:
         l = l.withColumn("salt", F.pmod(F.hash("a"), F.lit(salt)))
         r = r.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-        keys = keys + ["salt"]
+        on.append("salt")
     # merge hint: without it the planner broadcasts one side of the
     # self-join, which abandons the shared up-front Exchange — the whole
     # bucket branch (signature UDF included) is then computed a second time
     # to build the broadcast relation. SMJ keeps both sides reading the ONE
     # ReusedExchange (guide §2.4/§3.1), and is the strategy that survives
     # at 100 TB anyway (spills gracefully; no 8 GB broadcast cap).
-    pairs = (
-        l.join(r.hint("merge"), keys, "inner")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
+    pairs = l.join(r.hint("merge"), on, "inner").filter(F.col("a") < F.col("b")).select(
+        "a", "b", *[f"{p}_{x}" for x in "ab" for p in payload]
     )
-    if star is not None:
-        pairs = pairs.unionByName(star)
-    return pairs.distinct()
+    return pairs if star is None else pairs.unionByName(star)
+
+
+def lsh_candidate_pairs(
+    bucketed: DataFrame, salt: int = 1, max_bucket: int | None = None
+) -> DataFrame:
+    """(doc_id, band, band_hash) bucket rows -> distinct candidate pairs
+    (a < b); ``salt``/``max_bucket`` as in bucket_pairs."""
+    rows = bucketed.withColumnRenamed("doc_id", "id")
+    return bucket_pairs(rows, ["band", "band_hash"], salt=salt, max_bucket=max_bucket).distinct()
 
 
 _VERIFY_SCHEMA = "a long, b long, jaccard double"
@@ -487,13 +506,16 @@ def verify_jaccard(pairs: DataFrame, docs: DataFrame, text_col="text", id_col="d
 
 def minhash_near_dups(
     docs: DataFrame, threshold: float = 0.7,
-    salt: int = 1, max_bucket: int | None = None, **kw,
+    salt: int = 1, max_bucket: int | None = None,
+    text_col: str = "text", id_col: str = "doc_id",
 ) -> DataFrame:
     """Full MinHash-LSH pipeline: shingle -> minhash -> band -> bucket-join
     -> exact-verify. ``salt``/``max_bucket`` are the hot-bucket controls
-    (see lsh_candidate_pairs)."""
-    pairs = lsh_candidate_pairs(minhash_bands(docs, **kw), salt=salt, max_bucket=max_bucket)
-    return verify_jaccard(pairs, docs, threshold=threshold, **{k: v for k, v in kw.items() if k in ("text_col", "id_col")})
+    (see bucket_pairs)."""
+    pairs = lsh_candidate_pairs(
+        minhash_bands(docs, text_col, id_col), salt=salt, max_bucket=max_bucket
+    )
+    return verify_jaccard(pairs, docs, text_col, id_col, threshold=threshold)
 
 
 # ---------------- simhash ----------------
@@ -532,37 +554,18 @@ def simhash_batch(texts) -> np.ndarray:
     batch into ONE (T, 64) sign matrix, and segment-sum per doc with
     np.add.reduceat. Bit-identical to simhash64 (the +-1 sums are exact
     integers, order-independent)."""
-    flat_tokens: list[str] = []
-    offsets = [0]
-    for s in texts:
-        toks = [t for t in _TOKEN_RE.split((s or "").lower()) if t]
-        flat_tokens.extend(toks)
-        offsets.append(len(flat_tokens))
+    codes, uniques, offsets = _batch_tokens(texts)
+    h = _fnv1a64_strs(uniques)[codes]
     out = np.zeros(len(texts), dtype=np.int64)
-    if not flat_tokens:
-        return out
-    codes, uniq = pd.factorize(np.asarray(flat_tokens, dtype=object))
-    h = _fnv1a64_strs(uniq)[codes]
-    lengths = np.diff(np.array(offsets, dtype=np.int64))
-    nonempty = np.flatnonzero(lengths > 0)
-    starts = np.array(offsets, dtype=np.int64)[nonempty]
-    ends = starts + lengths[nonempty]
+    nonempty = np.flatnonzero(np.diff(offsets) > 0)
+    starts = offsets[nonempty]
     shifts = np.arange(64, dtype=np.uint64)
-    # chunk the (T, 64) sign expansion on doc boundaries (~16k tokens ->
-    # ~8 MB intermediates): keeps the working set cache-resident and on
-    # reused heap pages (see _PERM_CHUNK note on first-touch fault cost)
+    # chunk the (T, 64) sign expansion on doc boundaries (~8 MB
+    # intermediates, like the minhash permutations; see _PERM_CHUNK)
     acc = np.empty((nonempty.size, 64), dtype=np.int64)
-    doc_lo = 0
-    while doc_lo < nonempty.size:
-        doc_hi = doc_lo + 1
-        while doc_hi < nonempty.size and ends[doc_hi - 1] - starts[doc_lo] < 16_384:
-            doc_hi += 1
-        lo, hi = starts[doc_lo], ends[doc_hi - 1]
-        contrib = (
-            2 * ((h[lo:hi, None] >> shifts) & np.uint64(1)).astype(np.int64) - 1
-        )
+    for doc_lo, doc_hi, lo, hi in _doc_chunks(starts, h.size):
+        contrib = 2 * ((h[lo:hi, None] >> shifts) & np.uint64(1)).astype(np.int64) - 1
         acc[doc_lo:doc_hi] = np.add.reduceat(contrib, starts[doc_lo:doc_hi] - lo, axis=0)
-        doc_lo = doc_hi
     packed = ((acc > 0).astype(np.uint64) << shifts).sum(axis=1)
     out[nonempty] = packed.view(np.int64)  # two's-complement reinterpret
     return out
@@ -578,52 +581,35 @@ def _simhash_udf(text: pd.Series) -> pd.Series:
 simhash_udf = _simhash_udf.asNondeterministic()
 
 
-def simhash_candidates(docs: DataFrame, text_col="text", id_col="doc_id",
-                       chunks: int = 4, max_hamming: int | None = None) -> DataFrame:
-    """Candidate pairs sharing any 16-bit simhash chunk (classic 64/4 split:
-    catches all pairs with hamming distance <= 3).
+def simhash_near_dups(docs: DataFrame, max_hamming: int = 3, text_col: str = "text",
+                      id_col: str = "doc_id", chunks: int = 4) -> DataFrame:
+    """Pairs sharing any (64/chunks)-bit simhash chunk whose hamming
+    distance is <= ``max_hamming`` -> (a, b, hamming). The classic 64/4
+    split catches all pairs with hamming distance <= 3.
 
-    ``max_hamming`` pushes the hamming threshold BELOW the dedup exchange:
-    a dup-heavy corpus collapses into hot chunk buckets whose self-join
-    emits O(n^2) candidate rows (measured 24.6M pairs from 50k sf1.0 docs,
-    hottest bucket 1890 docs), and the old shape shuffled every one of
-    them — four columns wide — through the distinct. hamming is a pure
-    function of (sha, shb), so filtering before the distinct and dropping
-    sha/shb from the exchange is row-identical (guide §2.3 "shuffle fewer
-    bytes": 24.6M x 32 B -> 3.6M x 24 B on the sf1.0 corpus). The filter
-    runs inside the join stage's codegen, before any shuffle write."""
+    The hamming filter runs BELOW the distinct's exchange: a dup-heavy
+    corpus collapses into hot chunk buckets whose self-join emits O(n^2)
+    candidate rows (measured 24.6M pairs from 50k sf1.0 docs, hottest
+    bucket 1890 docs). hamming is a pure function of the two simhashes, so
+    filtering first and shuffling only (a, b, hamming) is row-identical
+    (guide §2.3 "shuffle fewer bytes": 24.6M x 32 B -> 3.6M x 24 B on the
+    sf1.0 corpus). The filter runs inside the join stage's codegen, before
+    any shuffle write."""
     sh = _spread(docs).select(
-        F.col(id_col).alias("doc_id"), simhash_udf(F.col(text_col)).alias("sh")
+        F.col(id_col).alias("id"), simhash_udf(F.col(text_col)).alias("sh")
     )
     w = 64 // chunks
-    chunk_cols = [
-        F.struct(F.lit(c).alias("chunk"),
-                 F.shiftrightunsigned("sh", c * w).bitwiseAND(F.lit((1 << w) - 1)).alias("val"))
-        for c in range(chunks)
+    vals = [
+        F.shiftrightunsigned("sh", c * w).bitwiseAND(F.lit((1 << w) - 1)) for c in range(chunks)
     ]
-    b = sh.select("doc_id", "sh", F.explode(F.array(*chunk_cols)).alias("cc")).select(
-        "doc_id", "sh", F.col("cc.chunk").alias("chunk"), F.col("cc.val").alias("val")
-    )
-    # one shared Exchange: the simhash UDF runs once (in parallel even off a
-    # single-partition file); both self-join sides reuse it
-    b = b.repartition("chunk", "val")
-    l = b.select("chunk", "val", F.col("doc_id").alias("a"), F.col("sh").alias("sha"))
-    r = b.select("chunk", "val", F.col("doc_id").alias("b"), F.col("sh").alias("shb"))
-    hamming = F.bit_count(F.col("sha").bitwiseXOR(F.col("shb")))
-    # merge hint: keep the self-join on the ONE reused Exchange instead of
-    # a broadcast that would recompute the signature branch (see
-    # lsh_candidate_pairs)
-    pairs = (
-        l.join(r.hint("merge"), ["chunk", "val"], "inner").filter(F.col("a") < F.col("b"))
+    rows = sh.select("id", "sh", F.posexplode(F.array(*vals)).alias("chunk", "val"))
+    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    return (
+        bucket_pairs(rows, ["chunk", "val"], payload=("sh",))
         .select("a", "b", hamming.alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+        .distinct()
     )
-    if max_hamming is not None:
-        pairs = pairs.filter(F.col("hamming") <= max_hamming)
-    return pairs.distinct()
-
-
-def simhash_near_dups(docs: DataFrame, max_hamming: int = 3, **kw) -> DataFrame:
-    return simhash_candidates(docs, max_hamming=max_hamming, **kw)
 
 
 # ---------------- embedding cosine near-dup ----------------
@@ -654,60 +640,26 @@ def embedding_near_dups(
     switches over-cap buckets to a min-id star (connectivity-preserving cap
     on the quadratic pair count — a dup-heavy corpus collapses into few
     buckets, and emitting every intra-cluster edge is pointless)."""
+    from osmi_water_spark.operators.similarity import row_cosine
+
     # NOT _spread-widened (r6 interleaved A/B: 1.1-1.6 s spread vs
     # 0.8-1.1 s without at sf1.0): the hyperplane matmul is trivial per
     # vector, so the extra exchange's stage barrier costs more than the
     # 1-2-core bucket pass it parallelizes — unlike the token-hashing
     # minhash/simhash signature passes where _spread pays 4x.
-    b = emb.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("v"),
+    rows = emb.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
         hyperplane_bucket(F.col(vec_col)).alias("bucket"),
-    ).repartition("bucket")  # shared Exchange: bucket UDF once, all readers reuse
-    star = None
-    if max_bucket is not None:
-        sizes = b.groupBy("bucket").agg(F.count("*").alias("bsz"))
-        b = b.join(sizes, "bucket", "inner")
-        big = b.filter(F.col("bsz") > max_bucket).drop("bsz")
-        b = b.filter(F.col("bsz") <= max_bucket).drop("bsz")
-        reps = big.groupBy("bucket").agg(F.min("vid").alias("rep"))
-        star = (
-            big.join(reps, "bucket", "inner")
-            .filter(F.col("vid") != F.col("rep"))
-            .join(
-                big.select("bucket", F.col("vid").alias("rep"),
-                           F.col("v").alias("va")).dropDuplicates(["bucket", "rep"]),
-                ["bucket", "rep"], "inner",
-            )
-            .select(F.col("rep").alias("a"), F.col("vid").alias("b"),
-                    "va", F.col("v").alias("vb"))
-        )
-    l = b.select("bucket", F.col("vid").alias("a"), F.col("v").alias("va"))
-    r = b.select("bucket", F.col("vid").alias("b"), F.col("v").alias("vb"))
-    keys = ["bucket"]
-    if salt > 1:
-        l = l.withColumn("salt", F.pmod(F.hash("a"), F.lit(salt)))
-        r = r.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-        keys = ["bucket", "salt"]
-    # merge hint: see lsh_candidate_pairs — keeps the bucket self-join on
-    # the one reused Exchange instead of recomputing the branch to broadcast
-    pairs = l.join(r.hint("merge"), keys, "inner").filter(F.col("a") < F.col("b")).select(
-        "a", "b", "va", "vb"
     )
-    if star is not None:
-        pairs = pairs.unionByName(star)
+    pairs = bucket_pairs(rows, ["bucket"], payload=("v",), salt=salt, max_bucket=max_bucket)
 
     def batch(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            # float64: the threshold decision must not wobble at float32
-            # precision (and the DuckDB oracle computes in DOUBLE)
-            va = np.vstack(pdf["va"].to_numpy()).astype(np.float64)
-            vb = np.vstack(pdf["vb"].to_numpy()).astype(np.float64)
-            cos = (va * vb).sum(1) / (
-                np.linalg.norm(va, axis=1) * np.linalg.norm(vb, axis=1) + 1e-12
+            yield pd.DataFrame(
+                {"a": pdf["a"], "b": pdf["b"], "cosine": row_cosine(pdf["v_a"], pdf["v_b"])}
             )
-            yield pd.DataFrame({"a": pdf["a"], "b": pdf["b"], "cosine": cos})
 
-    out = pairs.select("a", "b", "va", "vb").mapInPandas(batch, "a long, b long, cosine double")
+    out = pairs.mapInPandas(batch, "a long, b long, cosine double")
     return out.filter(F.col("cosine") >= threshold).dropDuplicates(["a", "b"])

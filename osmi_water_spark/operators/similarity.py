@@ -18,6 +18,15 @@ from pyspark.sql import functions as F
 from osmi_water_spark.operators.dedup import _HYPER
 
 
+def row_cosine(a: pd.Series, b: pd.Series) -> np.ndarray:
+    """Row-wise cosine of two equal-length vector columns, in float64: a
+    threshold decision must not wobble at float32 precision, and the DuckDB
+    oracles compute in DOUBLE."""
+    a = np.vstack(a.to_numpy()).astype(np.float64)
+    b = np.vstack(b.to_numpy()).astype(np.float64)
+    return (a * b).sum(1) / (np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1) + 1e-12)
+
+
 def cosine_topk_bruteforce(
     corpus: DataFrame, queries: DataFrame, k: int = 5,
     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -138,14 +147,10 @@ def cosine_topk_ivf(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            a = np.vstack(pdf["qv"].to_numpy()).astype(np.float64)
-            b = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            cos = (a * b).sum(1) / (
-                np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1) + 1e-12
-            )
-            yield pd.DataFrame(
-                {"query_id": pdf["query_id"], "neighbor_id": pdf["nid"], "cosine": cos}
-            )
+            yield pd.DataFrame({
+                "query_id": pdf["query_id"], "neighbor_id": pdf["nid"],
+                "cosine": row_cosine(pdf["qv"], pdf["v"]),
+            })
 
     scored = cand.select("query_id", "qv", "nid", "v").mapInPandas(
         score, "query_id long, neighbor_id long, cosine double"

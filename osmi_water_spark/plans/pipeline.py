@@ -11,8 +11,8 @@ stages:
 
 Each checkpointable stage can persist to parquet (Iceberg in production)
 and is resumable: an existing ``_SUCCESS``-marked output is read back
-instead of recomputed, and a ``_lineage`` table records per-stage,
-per-partition row counts + wall time (BASELINE.json:14).
+instead of recomputed, and a ``_lineage`` table records each written
+stage's output row count + wall time (BASELINE.json:14).
 """
 
 from __future__ import annotations
@@ -57,8 +57,8 @@ class Lineage:
     every stage output, and locally it was a measured share of the
     per-stage fixed cost that capped aggregate scaling efficiency. The
     per-partition rows it produced reflected the *re-read's* split, not
-    the write's, so only the partition_id=-1 aggregate row was ever
-    write-side truth — that row is what ``observe`` now records.)"""
+    the write's, so only the stage total was ever write-side truth — that
+    total is what ``observe`` now records.)"""
 
     def __init__(self) -> None:
         self.rows: list[dict] = []
@@ -73,14 +73,9 @@ class Lineage:
         obs = Observation(f"lineage_{stage}_{self._seq}")
         return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
-    def record(self, stage: str, obs, t0: float, input_rows: int | None = None,
-               fingerprint: str = "") -> None:
+    def record(self, stage: str, obs, t0: float) -> None:
         wall = int((time.time() - t0) * 1000)
-        self.rows.append(
-            dict(stage=stage, partition_id=-1, input_rows=int(input_rows or -1),
-                 output_rows=int(obs.get["rows"]), wall_ms=wall,
-                 input_fingerprint=fingerprint)
-        )
+        self.rows.append(dict(stage=stage, output_rows=int(obs.get["rows"]), wall_ms=wall))
 
     def dataframe(self, spark: SparkSession) -> DataFrame:
         from osmi_water_spark.schemas import LINEAGE

@@ -134,10 +134,7 @@ TILE_VALIDATION = T.StructType(
 LINEAGE = T.StructType(
     [
         T.StructField("stage", T.StringType(), True),
-        T.StructField("partition_id", T.IntegerType(), True),
-        T.StructField("input_rows", T.LongType(), True),
         T.StructField("output_rows", T.LongType(), True),
         T.StructField("wall_ms", T.LongType(), True),
-        T.StructField("input_fingerprint", T.StringType(), True),
     ]
 )

@@ -113,7 +113,7 @@ def _wrap64(v: int) -> int:
 def minhash_expected(docs, threshold=0.5, bands=16, rows=4, n=3,
                      max_bucket=None):
     """Expected near-dup pairs; ``max_bucket`` mirrors the engine's
-    star-cap semantics (lsh_candidate_pairs): an over-cap bucket emits only
+    star-cap semantics (bucket_pairs): an over-cap bucket emits only
     (min-id, other) pairs. Returns (pairs, n_overcap_buckets)."""
     shingles = {did: _gram_set(text, n) for did, text in docs}
     sigs = {}

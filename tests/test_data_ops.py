@@ -235,6 +235,8 @@ def test_minhash_batch_chunking_boundary(monkeypatch):
     batch = D.minhash_signatures_batch(TEXTS)
     for i, t in enumerate(TEXTS):
         assert (batch[i] == D.minhash_signature(t or "")).all()
+    # the same chunker cuts the simhash sign expansion
+    assert D.simhash_batch(TEXTS).tolist() == [_naive_simhash(t) for t in TEXTS]
 
 
 def test_simhash_batch_matches_per_doc():

@@ -157,3 +157,34 @@ def test_geometry_bytes_plans_run_no_python(spark):
         p = plan_of(df)
         assert [n for n in PYTHON_NODES if n in p] == [], name
         assert df.count() > 0, name
+
+
+
+@pytest.mark.parametrize(
+    "op, kw",
+    [
+        ("minhash_near_dups", dict(threshold=0.5)),
+        ("minhash_near_dups", dict(threshold=0.5, salt=4, max_bucket=2)),
+        ("simhash_near_dups", dict(max_hamming=8)),
+        ("embedding_near_dups", dict(threshold=0.8)),
+        ("embedding_near_dups", dict(threshold=0.8, salt=4, max_bucket=2)),
+    ],
+    ids=["minhash", "minhash_capped", "simhash", "embedding", "embedding_capped"],
+)
+def test_near_dup_signature_udf_runs_once(spark, op, kw):
+    """Every near-dup plan runs its signature UDF once, capped or not: all
+    bucket_pairs branches (both self-join sides and the cap's window
+    columns) read one Exchange. Inputs are the oracle corpora, where the
+    cap binds, so the star branch is live in the executed plan."""
+    from osmi_water_spark.operators import dedup as D
+    from osmi_water_spark.plans.testdata_queries import EMB_SKEW_FIXTURE
+    from osmi_water_spark.sources.docs_gen import dedup_corpus, docs_dataframe
+
+    if op == "embedding_near_dups":
+        rows = spark.read.parquet(EMB_SKEW_FIXTURE)
+    else:
+        rows = docs_dataframe(spark, dedup_corpus())
+    df = getattr(D, op)(rows, **kw)
+    assert df.collect()  # executes df's own plan, so explain shows the final one
+    final = plan_of(df).split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+    assert final.count("ArrowEvalPython (") == 1, final
