@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -198,18 +199,25 @@ def adaptive_cover_cells(
     return F.expr(out)
 
 
+def _np_ix(lon, res: int):
+    """Numpy twin of ``_ix_sql``: identical IEEE op order
+    ((lon+180.0)/360.0*n, floor, clamp)."""
+    n = float(1 << res)
+    return np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, (1 << res) - 1).astype(np.int64)
+
+
+def _np_iy(lat, res: int):
+    """Numpy twin of ``_iy_sql``."""
+    n = float(1 << res)
+    return np.clip(np.floor((lat + 90.0) / 180.0 * n), 0, (1 << res) - 1).astype(np.int64)
+
+
 def np_cell_of(lon, lat, res: int):
-    """Numpy twin of :func:`cell_of` — identical IEEE op order
-    ((lon+180.0)/360.0*n, floor, clamp) so a point gets the SAME cell id
+    """Numpy twin of :func:`cell_of`, so a point gets the SAME cell id
     whether computed JVM-side or inside an Arrow batch (the map-side PIP
     probe relies on exact parity with the Spark-computed polygon cover)."""
-    import numpy as np
-
-    n = float(1 << res)
-    hi = (1 << res) - 1
-    ix = np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, hi).astype(np.int64)
-    iy = np.clip(np.floor((lat + 90.0) / 180.0 * n), 0, hi).astype(np.int64)
-    return (np.int64(res) << RES_BITS_SHIFT) + (iy << IY_SHIFT) + ix
+    return ((np.int64(res) << RES_BITS_SHIFT) + (_np_iy(lat, res) << IY_SHIFT)
+            + _np_ix(lon, res))
 
 
 def np_cover_boxes(minx, miny, maxx, maxy, res_min: int = 3, res_max: int = DEFAULT_RES,
@@ -218,24 +226,13 @@ def np_cover_boxes(minx, miny, maxx, maxy, res_min: int = 3, res_max: int = DEFA
     cell range as (res, ix0, iy0, width, height) int64 arrays. The cover
     has ``(width * height).sum()`` cells, so a caller can bound it before
     ``np_cover`` allocates it."""
-    import numpy as np
-
     minx = np.asarray(minx, dtype=np.float64)
     miny = np.asarray(miny, dtype=np.float64)
     maxx = np.asarray(maxx, dtype=np.float64)
     maxy = np.asarray(maxy, dtype=np.float64)
-
-    def _ix(x, r):
-        n = float(1 << r)
-        return np.clip(np.floor((x + 180.0) / 360.0 * n), 0, (1 << r) - 1).astype(np.int64)
-
-    def _iy(y, r):
-        n = float(1 << r)
-        return np.clip(np.floor((y + 90.0) / 180.0 * n), 0, (1 << r) - 1).astype(np.int64)
-
     res = np.full(minx.shape, res_min, dtype=np.int64)
     for r in range(res_min + 1, res_max + 1):
-        cnt = (_ix(maxx, r) - _ix(minx, r) + 1) * (_iy(maxy, r) - _iy(miny, r) + 1)
+        cnt = (_np_ix(maxx, r) - _np_ix(minx, r) + 1) * (_np_iy(maxy, r) - _np_iy(miny, r) + 1)
         res = np.where(cnt <= max_cells, r, res)
 
     ix0 = np.empty_like(res)
@@ -244,8 +241,8 @@ def np_cover_boxes(minx, miny, maxx, maxy, res_min: int = 3, res_max: int = DEFA
     iy1 = np.empty_like(res)
     for r in np.unique(res):
         m = res == r
-        ix0[m], ix1[m] = _ix(minx[m], int(r)), _ix(maxx[m], int(r))
-        iy0[m], iy1[m] = _iy(miny[m], int(r)), _iy(maxy[m], int(r))
+        ix0[m], ix1[m] = _np_ix(minx[m], int(r)), _np_ix(maxx[m], int(r))
+        iy0[m], iy1[m] = _np_iy(miny[m], int(r)), _np_iy(maxy[m], int(r))
     return res, ix0, iy0, ix1 - ix0 + 1, iy1 - iy0 + 1
 
 
@@ -261,8 +258,6 @@ def np_cover(minx, miny, maxx, maxy, res_min: int = 3, res_max: int = DEFAULT_RE
     whole cover from the ALREADY-COLLECTED parts instead of running a
     second Spark job over the polygon side (guide §8: decide with small
     rows)."""
-    import numpy as np
-
     res, ix0, iy0, w, h = np_cover_boxes(minx, miny, maxx, maxy, res_min, res_max, max_cells)
     counts = w * h
     offs = np.zeros(len(counts) + 1, dtype=np.int64)

@@ -1,19 +1,20 @@
 """WKB geometry: scalar encoders (the spec that tests pin the Arrow and
-SQL builders to), the SQL multi-geometry builder, the decoder the ray
-cast needs, and vectorized point-in-polygon, pure numpy.
+SQL builders to), the SQL closed-way and multi-geometry builders, the
+decoder the ray cast needs, and vectorized point-in-polygon, pure numpy.
 
 The reference round-trips GEOS -> WKB -> OGR (/root/reference/src/
 waterway.hpp:50-66); we store WKB ``binary`` directly (little-endian ISO
 WKB, EPSG:4326 lon/lat). Geometry is built once as bytes and never
 re-parsed on its way to the ray cast:
 
-* LineStrings, closed-way Polygons and points come from the Arrow scatter
-  builders in ``wkb_vec``; relation polygons from ``wkb_polygon`` at ring
-  assembly.
-* MultiLineStrings and MultiPolygons are their members' bytes behind a
-  9-byte header, so ``multi_wkb_sql`` builds them in SQL without decoding.
+* LineStrings and points come from the Arrow scatter builders in
+  ``wkb_vec``; relation polygons from ``wkb_polygon`` at ring assembly.
+* A closed way's Polygon is its LineString's point block behind a 9-byte
+  header, and MultiLineStrings and MultiPolygons are their members' bytes
+  behind one, so ``ring_polygon_sql`` and ``multi_wkb_sql`` build them in
+  SQL without decoding.
 * ``parse_wkb`` runs only where edges are needed: ``FlatPolygonIndex.build``
-  (the PIP refine) and tests.
+  (the PIP refine) and tests. ``FlatPolygonIndex`` holds the one ray cast.
 
 No GEOS/shapely dependency exists in this environment, so containment is
 an even-odd ray cast vectorized over numpy point batches — semantics match
@@ -78,6 +79,24 @@ def multi_wkb_sql(gtype: int, parts: str) -> str:
             f"array_join(transform({parts}, __wkb_part -> hex(__wkb_part)), '')))")
 
 
+def ring_polygon_sql(ls: str, coords: str) -> str:
+    """SQL text of the one-ring Polygon WKB of a closed way, null where the
+    ring is degenerate. ``ls`` is the ``make_linestring`` struct of
+    ``coords``: a one-ring Polygon is its LineString's point block behind
+    the 9-byte header ``01 | u32(3) | u32(1)``. The gates are the scalar
+    spec's: at least 4 raw points, at least 4 deduped points (73 bytes of
+    LineString), and first point equal to last. Dedup keeps the first point
+    and the last point's value, so the raw endpoints decide closure. Spark
+    compares NaN = NaN as true where numpy does not, hence ``isnan``; ANSI
+    mode raises on ``c[i]`` out of range even in an untaken branch, hence
+    ``get``."""
+    first, last = f"get({coords}, 0)", f"get({coords}, size({coords}) - 1)"
+    return (f"CASE WHEN size({coords}) >= 4 AND length({ls}.wkb) >= 73 "
+            f"AND {first}.lon = {last}.lon AND {first}.lat = {last}.lat "
+            f"AND NOT isnan({first}.lon) AND NOT isnan({first}.lat) "
+            f"THEN concat(X'010300000001000000', substring({ls}.wkb, 6)) END")
+
+
 # ---------------- decoding (tests / refine stage) ----------------
 
 
@@ -130,38 +149,11 @@ def _parse_one(mv: memoryview, off: int):
 
 
 def points_in_rings(px: np.ndarray, py: np.ndarray, rings: list[np.ndarray]) -> np.ndarray:
-    """Even-odd ray cast of N points against one polygon (outer + holes).
-
-    Vectorized over the point batch; boundary points return False (GEOS
-    ``contains`` tests the interior only). O(N x total_vertices).
-    """
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    inside = np.zeros(px.shape[0], dtype=bool)
-    boundary = np.zeros(px.shape[0], dtype=bool)
-    for ring in rings:
-        r = np.asarray(ring, dtype=np.float64)
-        x1, y1 = r[:-1, 0], r[:-1, 1]
-        x2, y2 = r[1:, 0], r[1:, 1]
-        # edges as (E,) arrays; broadcast against (N,1) points
-        pxc, pyc = px[:, None], py[:, None]
-        # boundary test: collinear and within segment bbox
-        cross = (x2 - x1) * (pyc - y1) - (y2 - y1) * (pxc - x1)
-        on_seg = (
-            (np.abs(cross) < 1e-12)
-            & (pxc >= np.minimum(x1, x2) - 1e-12)
-            & (pxc <= np.maximum(x1, x2) + 1e-12)
-            & (pyc >= np.minimum(y1, y2) - 1e-12)
-            & (pyc <= np.maximum(y1, y2) + 1e-12)
-        )
-        boundary |= on_seg.any(axis=1)
-        # even-odd crossing test (half-open rule avoids double-count at vertices)
-        cond = (y1 <= pyc) != (y2 <= pyc)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = x1 + (pyc - y1) * (x2 - x1) / (y2 - y1)
-        crossings = cond & (pxc < xint)
-        inside ^= (crossings.sum(axis=1) % 2).astype(bool)
-    return inside & ~boundary
+    """Even-odd ray cast of N points against one polygon (closed rings:
+    outer + holes); boundary points return False (GEOS ``contains`` tests
+    the interior only). The one-part case of ``FlatPolygonIndex``."""
+    idx = FlatPolygonIndex.of_parts([(0, rings)])
+    return idx.eval(px, py, np.zeros(len(px), dtype=np.int64))
 
 
 # ---------------- flat polygon index (batch PIP without per-part calls) ----------------
@@ -178,8 +170,9 @@ class FlatPolygonIndex:
     dominated the whole PIP join and flattened its 8->32-core scaling. Here
     the batch expands to (point, part, edge) instances with integer index
     arithmetic and runs ONE vectorized ray cast per batch (chunked to bound
-    peak memory), identical even-odd/boundary-exclusive semantics to
-    points_in_rings (OR over a key's parts).
+    peak memory): even-odd crossings, boundary points excluded, OR over a
+    key's parts. It is the package's only ray cast; ``points_in_rings`` is
+    its one-part case.
     """
 
     def __init__(self, keys: list):
@@ -194,25 +187,30 @@ class FlatPolygonIndex:
         self.key_id = {k: i for i, k in enumerate(keys)}
 
     @staticmethod
-    def build(items) -> "FlatPolygonIndex":
-        """items: iterable of (key, polygon wkb), one per polygon part. A
-        key may repeat: its parts are OR-ed, matching the reference's
+    def of_parts(parts) -> "FlatPolygonIndex":
+        """parts: iterable of (key, rings), one per polygon part, each ring
+        an (n, 2) lon/lat array. Rings must be closed (last point equal to
+        the first): the bbox prefilter in ``eval`` is only exact then. A key
+        may repeat: its parts are OR-ed, matching the reference's
         per-polygon STRtree entries (areahandler.hpp:48-62)."""
-        items = list(items)
-        keys: list = []
-        seen = set()
-        for k, _ in items:
-            if k not in seen:
-                seen.add(k)
-                keys.append(k)
-        idx = FlatPolygonIndex(keys)
-        for k, buf in items:
-            gtype, rings = parse_wkb(bytes(buf))
-            if gtype != POLYGON:
-                raise ValueError(f"not a polygon WKB: type={gtype}")
+        parts = list(parts)
+        idx = FlatPolygonIndex(list(dict.fromkeys(k for k, _ in parts)))
+        for k, rings in parts:
             idx._add_part(idx.key_id[k], rings)
         idx._freeze()
         return idx
+
+    @staticmethod
+    def build(items) -> "FlatPolygonIndex":
+        """items: iterable of (key, Polygon WKB): each WKB parsed, then
+        ``of_parts``."""
+        def rings_of(buf):
+            gtype, rings = parse_wkb(bytes(buf))
+            if gtype != POLYGON:
+                raise ValueError(f"not a polygon WKB: type={gtype}")
+            return rings
+
+        return FlatPolygonIndex.of_parts((k, rings_of(buf)) for k, buf in items)
 
     def _add_part(self, key_idx: int, rings) -> None:
         x1s, y1s, x2s, y2s = [], [], [], []
@@ -320,7 +318,6 @@ class FlatPolygonIndex:
         X1, Y1 = self.ex1[eidx], self.ey1[eidx]
         X2, Y2 = self.ex2[eidx], self.ey2[eidx]
         PX, PY = px[pidx], py[pidx]
-        # identical formulas/constants to points_in_rings
         cross = (X2 - X1) * (PY - Y1) - (Y2 - Y1) * (PX - X1)
         on_seg = (
             (np.abs(cross) < 1e-12)
@@ -329,6 +326,7 @@ class FlatPolygonIndex:
             & (PY >= np.minimum(Y1, Y2) - 1e-12)
             & (PY <= np.maximum(Y1, Y2) + 1e-12)
         )
+        # half-open rule: a vertex on the ray counts for one of its edges
         cond = (Y1 <= PY) != (Y2 <= PY)
         with np.errstate(divide="ignore", invalid="ignore"):
             xint = X1 + (PY - Y1) * (X2 - X1) / (Y2 - Y1)

@@ -4,9 +4,11 @@ guide §4.2: an Arrow ``binary`` column is ONE contiguous data buffer plus
 an offsets array, so per-feature WKB can be assembled with numpy scatter
 writes into a single buffer instead of a per-row Python loop of
 ``struct.pack`` + ``bytes`` concatenation (the shape the round-2..5
-``make_linestring``/``_closed_way_polygon``/``_point_wkb`` pandas UDFs
-had). Byte-identical to the scalar ``wkb.py`` builders and the previous
-pandas UDF semantics — pinned by tests/test_wkb_cells.py parity tests.
+``make_linestring``/``_point_wkb`` pandas UDFs had). Byte-identical to the
+scalar ``wkb.py`` builders and the previous pandas UDF semantics — pinned
+by tests/test_wkb_cells.py parity tests. ``linestring_struct`` is the one
+builder for lines and rings: a closed way's Polygon is its LineString's
+bytes behind a new header, in SQL (``wkb.ring_polygon_sql``).
 
 All scatters are chunked (<= ``_CHUNK`` points per fancy-index write) so
 intermediates stay cache-resident (see the dedup.py ``_PERM_CHUNK`` note
@@ -86,7 +88,7 @@ def _binary_array(n, ok, out_off, data):
     )
 
 
-def _bbox_arrays(n, ok, krow, klon, klat, kcum):
+def _bbox_arrays(n, ok, klon, klat, kcum):
     """Per-ok-row min/max over the kept flat coords."""
     minx = np.full(n, np.nan)
     miny = np.full(n, np.nan)
@@ -103,25 +105,17 @@ def _bbox_arrays(n, ok, krow, klon, klat, kcum):
     return [pa.array(v, type=pa.float64(), mask=mask) for v in (minx, miny, maxx, maxy)]
 
 
-def _kept(n, row_of, keep, lon, lat):
-    krow = row_of[keep]
-    m = np.bincount(krow, minlength=n).astype(np.int64)
-    kcum = np.zeros(n, dtype=np.int64)
-    if n > 1:
-        np.cumsum(m[:-1], out=kcum[1:])
-    return lon[keep], lat[keep], krow, m, kcum
-
-
 def linestring_struct(arr: "pa.Array") -> "pa.StructArray":
     """G2 (make_linestring): coords -> struct(wkb, ok, minx..maxy).
     WKB layout per ok row: 01 | u32(2) | u32(m) | m x (f8 lon, f8 lat)."""
     n, valid, lens, lon, lat = _list_flat(arr)
     row_of, keep = _consecutive_dedup(n, valid, lens, lon, lat)
-    klon, klat, krow, m, kcum = _kept(n, row_of, keep, lon, lat)
+    krow = row_of[keep]
+    m = np.bincount(krow, minlength=n).astype(np.int64)
     ok = valid & (m >= 2)
     # drop kept points of not-ok rows from the scatter
-    sel = ok[krow]
-    klon, klat, krow = klon[sel], klat[sel], krow[sel]
+    sel = keep & ok[row_of]
+    klon, klat, krow = lon[sel], lat[sel], row_of[sel]
     m_ok = np.where(ok, m, 0)
     kcum_ok = np.zeros(n, dtype=np.int64)
     if n > 1:
@@ -139,7 +133,7 @@ def linestring_struct(arr: "pa.Array") -> "pa.StructArray":
         rank = np.arange(klon.size, dtype=np.int64) - kcum_ok[krow]
         _scatter_coords(data, out_off[krow] + 9 + 16 * rank, klon, klat)
     wkb = _binary_array(n, ok, out_off, data)
-    bbox = _bbox_arrays(n, ok, krow, klon, klat, kcum_ok)
+    bbox = _bbox_arrays(n, ok, klon, klat, kcum_ok)
     fields = [
         pa.field("wkb", pa.binary()),
         pa.field("ok", pa.bool_(), nullable=False),  # matches _LS_SCHEMA
@@ -147,48 +141,6 @@ def linestring_struct(arr: "pa.Array") -> "pa.StructArray":
         pa.field("maxx", pa.float64()), pa.field("maxy", pa.float64()),
     ]
     return pa.StructArray.from_arrays([wkb, pa.array(ok)] + bbox, fields=fields)
-
-
-def closed_way_polygon_struct(arr: "pa.Array") -> "pa.StructArray":
-    """G4 closed-way areas (_closed_way_polygon): coords -> struct(wkb,
-    minx..maxy); null where the ring is degenerate. Polygon WKB layout per
-    ok row: 01 | u32(3) | u32(1) | u32(m) | coords."""
-    n, valid, lens, lon, lat = _list_flat(arr)
-    valid = valid & (lens >= 4)  # raw-length gate BEFORE dedup (scalar spec)
-    row_of, keep = _consecutive_dedup(n, valid, lens, lon, lat)
-    klon, klat, krow, m, kcum = _kept(n, row_of, keep, lon, lat)
-    ok = valid & (m >= 4)
-    # closed-ring gate: first deduped point == last deduped point
-    ok_idx0 = np.flatnonzero(ok)
-    if ok_idx0.size:
-        first = kcum[ok_idx0]
-        last = first + m[ok_idx0] - 1
-        closed = (klon[first] == klon[last]) & (klat[first] == klat[last])
-        ok[ok_idx0] = closed
-    sel = ok[krow]
-    klon, klat, krow = klon[sel], klat[sel], krow[sel]
-    m_ok = np.where(ok, m, 0)
-    kcum_ok = np.zeros(n, dtype=np.int64)
-    if n > 1:
-        np.cumsum(m_ok[:-1], out=kcum_ok[1:])
-    sizes = np.where(ok, 13 + 16 * m_ok, 0)
-    out_off = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(sizes, out=out_off[1:])
-    data = np.zeros(int(out_off[-1]), dtype=np.uint8)
-    ok_idx = np.flatnonzero(ok)
-    if ok_idx.size:
-        ho = out_off[ok_idx]
-        data[ho] = 1
-        data[ho + 1] = 3  # POLYGON
-        data[ho + 5] = 1  # n_rings = 1
-        _u32_scatter(data, ho + 9, m_ok[ok_idx])
-        rank = np.arange(klon.size, dtype=np.int64) - kcum_ok[krow]
-        _scatter_coords(data, out_off[krow] + 13 + 16 * rank, klon, klat)
-    wkb = _binary_array(n, ok, out_off, data)
-    bbox = _bbox_arrays(n, ok, krow, klon, klat, kcum_ok)
-    return pa.StructArray.from_arrays(
-        [wkb] + bbox, names=["wkb", "minx", "miny", "maxx", "maxy"]
-    )
 
 
 def point_wkb_array(lon: "pa.Array", lat: "pa.Array") -> "pa.Array":

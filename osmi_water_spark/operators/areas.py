@@ -6,7 +6,9 @@ The reference delegates to libosmium's MultipolygonManager + Assembler
 then AreaHandler (/root/reference/src/areahandler.hpp:82-98) applies the
 F7 gate (polygon row) and the F5 gate (PIP index entry per polygon part).
 
-Spark shape: closed tagged ways pass through directly; multipolygon
+Spark shape: a closed tagged way's one-ring Polygon is its linestring's
+bytes behind a Polygon header (``make_linestring`` plus the SQL of
+``wkb.ring_polygon_sql``), with no shuffle and one Arrow pass; multipolygon
 relations group their member way segments and an ``applyInPandas`` stage
 assembles rings (greedy endpoint chaining), classifies outer/inner by
 member role, and nests holes into their containing outer. Each area
@@ -21,13 +23,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from osmi_water_spark.functions import tags as TG
 from osmi_water_spark.functions import wkb as W
+from osmi_water_spark.operators.assemble import make_linestring
 
 _AREA_SCHEMA = (
     "area_key string, "
@@ -148,8 +149,9 @@ def build_areas(
     struct(part_wkb[Polygon], minx, miny, maxx, maxy) per polygon, in
     MultiPolygon member order; the area bbox is the min/max over its parts.
 
-    Closed F2-tagged ways become single-ring areas directly (no shuffle);
-    multipolygon relations shuffle once on relation id for ring assembly.
+    Closed F2-tagged ways become single-ring areas from their linestring
+    (no shuffle); multipolygon relations shuffle once on relation id for
+    ring assembly.
     """
     # --- closed tagged ways (from_way areas) ---
     closed = ways_located.filter(
@@ -166,14 +168,14 @@ def build_areas(
         "coords",
     )
     way_areas_g = (
-        way_areas.withColumn("g", _closed_way_polygon("coords"))
-        .drop("coords")
-        .filter("g.wkb IS NOT NULL")
+        way_areas.withColumn("ls", make_linestring("coords"))
+        .withColumn("part_wkb", F.expr(W.ring_polygon_sql("ls", "coords")))
+        .filter("part_wkb IS NOT NULL")
         .selectExpr(
             "area_key", "way_id", "relation_id", "tags", "ts",
-            "array(named_struct('part_wkb', g.wkb, 'minx', g.minx, 'miny', g.miny, "
-            "'maxx', g.maxx, 'maxy', g.maxy)) AS parts",
-            "g.minx AS minx", "g.miny AS miny", "g.maxx AS maxx", "g.maxy AS maxy",
+            "array(named_struct('part_wkb', part_wkb, 'minx', ls.minx, 'miny', ls.miny, "
+            "'maxx', ls.maxx, 'maxy', ls.maxy)) AS parts",
+            "ls.minx AS minx", "ls.miny AS miny", "ls.maxx AS maxx", "ls.maxy AS maxy",
         )
     )
 
@@ -209,30 +211,6 @@ def build_areas(
     cols = ["area_key", "way_id", "relation_id", "tags", "ts", "parts",
             "minx", "miny", "maxx", "maxy"]
     return way_areas_g.select(*cols).unionByName(rel_areas.select(*cols))
-
-
-_CW_SCHEMA = T.StructType(
-    [
-        T.StructField("wkb", T.BinaryType(), True),
-        T.StructField("minx", T.DoubleType(), True),
-        T.StructField("miny", T.DoubleType(), True),
-        T.StructField("maxx", T.DoubleType(), True),
-        T.StructField("maxy", T.DoubleType(), True),
-    ]
-)
-
-
-@F.arrow_udf(_CW_SCHEMA)
-def _closed_way_polygon(coords: pa.Array) -> pa.Array:
-    """Closed way -> single-ring Polygon WKB + bbox. The bbox rides
-    along so downstream cell covers (polygon_table) run as JVM expressions
-    instead of re-parsing the WKB per row in Python; min/max over the
-    deduped ring equals min/max over the raw coords. Arrow-native flat
-    scatter build (functions/wkb_vec.py, see make_linestring) —
-    byte-identical, parity-pinned by tests/test_wkb_cells.py."""
-    from osmi_water_spark.functions import wkb_vec
-
-    return wkb_vec.closed_way_polygon_struct(coords)
 
 
 def polygon_table(areas: DataFrame, cell_res: int) -> DataFrame:

@@ -48,7 +48,7 @@ _LS_SCHEMA = T.StructType(
 
 
 @F.arrow_udf(_LS_SCHEMA)
-def make_linestring(coords: pa.Array) -> pa.Array:
+def _make_linestring(coords: pa.Array) -> pa.Array:
     """G2 — located coords -> LineString WKB + bbox. Consecutive duplicate
     coordinates deduped (use_nodes::unique); <2 remaining points -> ok=false
     (the reference's geometry_error path).
@@ -62,6 +62,15 @@ def make_linestring(coords: pa.Array) -> pa.Array:
     from osmi_water_spark.functions import wkb_vec
 
     return wkb_vec.linestring_struct(coords)
+
+
+# asNondeterministic (as dedup's signature UDFs): a filter on the struct's
+# fields — build_areas' ``part_wkb IS NOT NULL``, whose SQL reads ``ls`` —
+# is pushed below the projection, and the optimizer DUPLICATES a
+# deterministic UDF under the pushed filter: the whole linestring pass
+# would run twice. The function is pure; the flag only forbids the
+# optimizer from re-evaluating or reordering it.
+make_linestring = _make_linestring.asNondeterministic()
 
 
 def accepted_relations(relations: DataFrame) -> DataFrame:

@@ -56,10 +56,9 @@ def feature_tile_assignment(df: DataFrame, kind: str, id_col: str, z: int, cell_
     cell = F.explode("h3_cells").alias("cell")
     c = df.select(F.col(id_col).alias("feature_id"), cell)
     # cell centre -> tile (cells are finer than or comparable to tiles here)
-    n = f"pow(2.0D, cast(cast(shiftright(cell, {C.RES_BITS_SHIFT}) as int) as double))"
-    lon = f"((cast(cell % {1 << C.IY_SHIFT} as long) + 0.5D) / {n} * 360.0D - 180.0D)"
-    lat = (f"((cast(shiftright(cell, {C.IY_SHIFT}) % {1 << C.IY_SHIFT} as long) + 0.5D)"
-           f" / {n} * 180.0D - 90.0D)")
+    n = f"pow(2.0D, cast({C._cell_res_sql('cell')} as double))"
+    lon = f"(({C._cell_ix_sql('cell')} + 0.5D) / {n} * 360.0D - 180.0D)"
+    lat = f"(({C._cell_iy_sql('cell')} + 0.5D) / {n} * 180.0D - 90.0D)"
     return c.select(
         F.lit(kind).alias("table"),
         "feature_id",

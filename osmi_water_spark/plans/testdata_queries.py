@@ -538,18 +538,25 @@ rects AS (
 
 def _pip_inputs(spark, sf_dir):
     """J5 inputs: node points and one rectangle part per nation. The rect
-    WKB is the closed-way polygon builder over its closed 5-point ring."""
-    from osmi_water_spark.operators.areas import _closed_way_polygon
+    WKB is a closed way's polygon (``make_linestring`` plus
+    ``wkb.ring_polygon_sql``) over its closed 5-point ring."""
+    from osmi_water_spark.functions.wkb import ring_polygon_sql
+    from osmi_water_spark.operators.assemble import make_linestring
 
     corners = [("x0", "y0"), ("x1", "y0"), ("x1", "y1"), ("x0", "y1"), ("x0", "y0")]
     ring = "array(" + ", ".join(
         f"named_struct('lon', {x}, 'lat', {y})" for x, y in corners
     ) + ")"
-    parts = _rects(spark, sf_dir).select(
-        F.col("poly_id").cast("string").alias("area_key"),
-        _closed_way_polygon(F.expr(ring)).getField("wkb").alias("part_wkb"),
-        F.col("x0").alias("minx"), F.col("y0").alias("miny"),
-        F.col("x1").alias("maxx"), F.col("y1").alias("maxy"),
+    parts = (
+        _rects(spark, sf_dir)
+        .withColumn("coords", F.expr(ring))
+        .withColumn("ls", make_linestring("coords"))
+        .select(
+            F.col("poly_id").cast("string").alias("area_key"),
+            F.expr(ring_polygon_sql("ls", "coords")).alias("part_wkb"),
+            F.col("x0").alias("minx"), F.col("y0").alias("miny"),
+            F.col("x1").alias("maxx"), F.col("y1").alias("maxy"),
+        )
     )
     points = _nodes_geo(spark, sf_dir).select(
         F.col("node_id").alias("point_id"), "lon", "lat"

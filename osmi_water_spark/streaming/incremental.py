@@ -47,7 +47,6 @@ def stream_extract(
 def stream_text_quality(
     spark: SparkSession,
     pages_dir: str,
-    checkpoint_dir: str,
     window: str = "1 hour",
     watermark: str = "2 hours",
 ):

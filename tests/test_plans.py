@@ -159,6 +159,26 @@ def test_geometry_bytes_plans_run_no_python(spark):
         assert df.count() > 0, name
 
 
+def test_closed_way_linestring_udf_runs_once(spark):
+    """A closed way's Polygon is its linestring's bytes behind a Polygon
+    header (``wkb.ring_polygon_sql``): with the inputs materialized, the
+    executed areas plan holds one Arrow pass, ``make_linestring``, not
+    copied under the pushed ``part_wkb IS NOT NULL`` filter."""
+    from osmi_water_spark.operators import areas as AR
+    from osmi_water_spark.operators.extract import extract_entities, split_entities
+    from osmi_water_spark.operators.locate import locate_ways
+    from osmi_water_spark.sources import pages_gen as PG
+
+    pages = PG.pages_dataframe(spark, PG.pages_rows(["w06_rivermouth_pip", "w12_multipolygon"]))
+    nodes, ways, relations = split_entities(extract_entities(pages))
+    relations = relations.localCheckpoint()
+    ways_located = locate_ways(ways, nodes).localCheckpoint()
+    areas = AR.build_areas(ways_located, relations)
+    rows = areas.collect()  # executes areas' own plan, so explain shows the final one
+    assert any(r.way_id != 0 for r in rows), "no closed-way area"
+    final = plan_of(areas).split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+    assert final.count("ArrowEvalPython (") == 1, final
+
 
 @pytest.mark.parametrize(
     "op, kw",

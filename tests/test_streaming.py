@@ -42,7 +42,7 @@ def test_stream_quality_plan(spark, tmp_path):
 
     pages_dir = str(tmp_path / "pages")
     _write_pages(spark, PG.pages_rows(["w01_chain"]), pages_dir)
-    agg = stream_text_quality(spark, pages_dir, str(tmp_path / "c2"))
+    agg = stream_text_quality(spark, pages_dir)
     assert agg.isStreaming
     q = (
         agg.writeStream.format("memory")

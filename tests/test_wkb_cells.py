@@ -338,19 +338,44 @@ def test_arrow_linestring_matches_scalar_spec(spark):
         assert r.maxx == maxx and r.maxy == maxy, c
 
 
-def test_arrow_closed_way_matches_scalar_spec(spark):
-    from osmi_water_spark.operators.areas import _closed_way_polygon
+def _closed_way_polygons(spark, cases, polygon_sql):
+    from osmi_water_spark.operators.assemble import make_linestring
 
-    cases = _coords_cases()
     rows = [( [{"lon": x, "lat": y} for x, y in c] if c is not None else None,)
             for c in cases]
     df = spark.createDataFrame(rows, "coords array<struct<lon:double,lat:double>>")
-    got = df.select(_closed_way_polygon("coords").alias("g")).select(
-        "g.wkb", "g.minx", "g.miny", "g.maxx", "g.maxy").collect()
+    return (
+        df.withColumn("ls", make_linestring("coords"))
+        .select(F.expr(polygon_sql("ls", "coords")).alias("wkb"),
+                "ls.minx", "ls.miny", "ls.maxx", "ls.maxy")
+        .collect()
+    )
+
+
+def test_arrow_closed_way_matches_scalar_spec(spark):
+    """A closed way's polygon (``ring_polygon_sql`` over ``make_linestring``)
+    against the scalar spec, WKB bytes and, where there is a polygon, bbox.
+    The ±0.0 ring is closed (numpy 0.0 == -0.0); the NaN-endpoint ring is
+    not (numpy NaN != NaN, where Spark SQL's NaN = NaN is true)."""
+    from osmi_water_spark.functions.wkb import ring_polygon_sql
+
+    nan = float("nan")
+    signed_zero = [(0.0, -0.0), (1.0, 0.0), (1.0, 1.0), (-0.0, 0.0)]
+    nan_ends = [(nan, 1.0), (1.0, 0.0), (1.0, 1.0), (0.0, 1.0), (nan, 1.0)]
+    cases = _coords_cases() + [signed_zero, nan_ends]
+    got = _closed_way_polygons(spark, cases, ring_polygon_sql)
     for c, r in zip(cases, got):
         wkb, minx, miny, maxx, maxy = _scalar_closed_way(c)
         assert (bytes(r.wkb) if r.wkb is not None else None) == wkb, c
-        assert r.minx == minx and r.miny == miny and r.maxx == maxx and r.maxy == maxy, c
+        if wkb is not None:
+            assert (r.minx, r.miny, r.maxx, r.maxy) == (minx, miny, maxx, maxy), c
+    assert got[-2].wkb is not None and got[-1].wkb is None
+
+    def without_nan_guard(ls, coords):
+        return ring_polygon_sql(ls, coords).replace(
+            f"AND NOT isnan(get({coords}, 0).lon) AND NOT isnan(get({coords}, 0).lat) ", "")
+
+    assert _closed_way_polygons(spark, [nan_ends], without_nan_guard)[0].wkb is not None
 
 
 def test_arrow_point_wkb_matches_scalar_spec(spark):
