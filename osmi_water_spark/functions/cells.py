@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 RES_BITS_SHIFT = 58
 IY_SHIFT = 29
+MIN_COVER_RES = 3  # coarsest adaptive cover resolution
 DEFAULT_RES = 7  # ~312 km cells; fixtures are small worlds
 MAX_COVER_CELLS = 64
 
@@ -169,7 +170,7 @@ def adaptive_cover_res(
     miny: str,
     maxx: str,
     maxy: str,
-    res_min: int = 3,
+    res_min: int = MIN_COVER_RES,
     res_max: int = DEFAULT_RES,
     max_cells: int = MAX_COVER_CELLS,
 ) -> Column:
@@ -186,7 +187,7 @@ def adaptive_cover_cells(
     miny: str,
     maxx: str,
     maxy: str,
-    res_min: int = 3,
+    res_min: int = MIN_COVER_RES,
     res_max: int = DEFAULT_RES,
     max_cells: int = MAX_COVER_CELLS,
 ) -> Column:
@@ -220,7 +221,8 @@ def np_cell_of(lon, lat, res: int):
             + _np_ix(lon, res))
 
 
-def np_cover_boxes(minx, miny, maxx, maxy, res_min: int = 3, res_max: int = DEFAULT_RES,
+def np_cover_boxes(minx, miny, maxx, maxy, res_min: int = MIN_COVER_RES,
+                   res_max: int = DEFAULT_RES,
                    max_cells: int = MAX_COVER_CELLS):
     """The per-box half of ``np_cover``: each box's cover resolution and
     cell range as (res, ix0, iy0, width, height) int64 arrays. The cover
@@ -246,7 +248,8 @@ def np_cover_boxes(minx, miny, maxx, maxy, res_min: int = 3, res_max: int = DEFA
     return res, ix0, iy0, ix1 - ix0 + 1, iy1 - iy0 + 1
 
 
-def np_cover(minx, miny, maxx, maxy, res_min: int = 3, res_max: int = DEFAULT_RES,
+def np_cover(minx, miny, maxx, maxy, res_min: int = MIN_COVER_RES,
+             res_max: int = DEFAULT_RES,
              max_cells: int = MAX_COVER_CELLS):
     """Numpy twin of adaptive_cover_res + adaptive_cover_cells over ARRAYS
     of bboxes: returns (res_per_box int64, flat cell ids int64, owner box

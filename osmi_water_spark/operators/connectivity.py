@@ -1,4 +1,4 @@
-"""Stage D — J3/A1-A5/E1/E4: endpoint connectivity analysis.
+"""Stage D — J3/A1-A5/E1: endpoint connectivity analysis.
 
 The reference's ``node_map`` (endpoint -> connected ways,
 /root/reference/src/datastorage.hpp:203-210) + ``analyse_nodes``
@@ -84,10 +84,3 @@ def error_mask(stats: DataFrame) -> DataFrame:
     )
     return stats.select("node_id", mask.alias("mask"))
 
-
-def split_candidates(masks: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """E4 (waterway.hpp:139-154): mask==0 -> normal nodes (emitted now),
-    else -> candidate set for passes 3/4."""
-    normal = masks.filter(F.col("mask") == 0)
-    candidates = masks.filter(F.col("mask") != 0)
-    return normal, candidates

@@ -26,9 +26,9 @@ bound (``should_broadcast_parts``)?
   one hot cell across k shuffle partitions (BASELINE.json:6 skew
   mitigation). AQE skew-join splitting stays on underneath.
 
-Polygon fan-out is bounded by ``max_cells`` per part (big polygons coarsen
-resolution instead of exploding); point fan-out is bounded by the number of
-distinct cover resolutions actually present.
+Polygon fan-out is bounded by ``C.MAX_COVER_CELLS`` per part (big polygons
+coarsen resolution instead of exploding); point fan-out is bounded by the
+number of distinct cover resolutions actually present.
 """
 
 from __future__ import annotations
@@ -148,12 +148,11 @@ def _probe_refine(
         yield pa.RecordBatch.from_arrays(arrays, names)
 
 
-def should_broadcast_parts(n_parts: int, n_bytes: int,
-                           max_parts: int = MAX_BROADCAST_PARTS,
-                           max_bytes: int = MAX_BROADCAST_BYTES) -> bool:
+def should_broadcast_parts(n_parts: int, n_bytes: int) -> bool:
     """Pure decision function (unit-tested): broadcast only when the polygon
-    side is small by BOTH row count and total WKB bytes."""
-    return n_parts <= max_parts and n_bytes <= max_bytes
+    side is small by BOTH row count and total WKB bytes
+    (``MAX_BROADCAST_PARTS``, ``MAX_BROADCAST_BYTES``, read at call time)."""
+    return n_parts <= MAX_BROADCAST_PARTS and n_bytes <= MAX_BROADCAST_BYTES
 
 
 def _refine_arrow_parts(
@@ -223,12 +222,8 @@ def _fit_probe(part_rows: list, boxes: list, res_min: int, res_max: int,
 def pip_join(
     points: DataFrame,
     polygon_parts: DataFrame,
-    res_min: int = 3,
-    res_max: int = C.DEFAULT_RES,
-    max_cells: int = C.MAX_COVER_CELLS,
     salt: int = 1,
     broadcast_parts: bool | None = None,
-    dedup_pairs: bool = True,
     carry_lonlat: bool = False,
     unique_points: bool = False,
 ) -> DataFrame:
@@ -240,7 +235,7 @@ def pip_join(
     - True: the map-side probe. One collect brings the polygon side to the
       driver, which builds a ``CellProbeIndex`` (cell cover + flat ray-cast
       index) and broadcasts it; the points stream through one narrow
-      ``mapInArrow``. If the cover at ``max_cells`` per part exceeds
+      ``mapInArrow``. If the cover at ``C.MAX_COVER_CELLS`` per part exceeds
       ``MAX_PROBE_CELLS``, the per-part budget is halved until it fits:
       the cover only prefilters, so a coarser one gives the same pairs.
       Only when even one cell per part is over the cap does the join run
@@ -253,6 +248,10 @@ def pip_join(
     bytes (the probe needs both within the broadcast bounds) and collects
     the cover resolutions the partitioned arm joins on.
 
+    Every part is covered at the finest resolution in
+    [``C.MIN_COVER_RES``, ``C.DEFAULT_RES``] whose bbox cover stays within
+    ``C.MAX_COVER_CELLS`` cells (read at call time).
+
     ``salt`` > 1 replicates the partitioned arm's polygon side k ways and
     routes each point to one deterministic replica — use when single cells
     are hot. The probe has no shuffle to salt.
@@ -260,13 +259,9 @@ def pip_join(
     ``unique_points``: caller-declared contract that ``point_id`` values are
     unique. In probe mode this makes the join fully shuffle-free (the
     in-batch dedup already guarantees pair uniqueness per input row).
-
-    ``dedup_pairs=False`` disables only the GLOBAL dedup shuffle; the
-    per-batch (point, area) dedup inside the refine kernels is
-    unconditional, so callers never observe raw per-part/per-cell
-    candidate multiplicity either way.
     """
     spark = points.sparkSession
+    res_min, res_max, max_cells = C.MIN_COVER_RES, C.DEFAULT_RES, C.MAX_COVER_CELLS
     schema = REFINE_SCHEMA_LONLAT if carry_lonlat else REFINE_SCHEMA
     box = ("minx", "miny", "maxx", "maxy")
 
@@ -281,10 +276,7 @@ def pip_join(
         ).collect()[0]
         res_list = list(stats["res"])
         if broadcast_parts is None:
-            broadcast_parts = should_broadcast_parts(
-                int(stats["n"]), int(stats["nbytes"]),
-                MAX_BROADCAST_PARTS, MAX_BROADCAST_BYTES,
-            )
+            broadcast_parts = should_broadcast_parts(int(stats["n"]), int(stats["nbytes"]))
 
     if broadcast_parts:
         # ONE collect brings the whole polygon side (bounded by the
@@ -311,12 +303,9 @@ def pip_join(
             # input point_ids. When the caller declares ids unique
             # (``unique_points``) the result is shuffle-FREE end to end —
             # scan -> mapInArrow -> done.
-            return (
-                refined.dropDuplicates(["point_id", "area_key"])
-                if dedup_pairs and not unique_points else refined
-            )
+            return refined if unique_points else refined.dropDuplicates(["point_id", "area_key"])
         # even one cell per part is over the cap: join partitioned, at the
-        # requested budget
+        # full budget
         res_list = np.unique(C.np_cover_boxes(*boxes, res_min, res_max, max_cells)[0]).tolist()
     if not res_list:
         return spark.createDataFrame([], schema)
@@ -351,15 +340,12 @@ def pip_join(
     refined = cand.select("point_id", "area_key", "part_wkb", "lon", "lat").mapInArrow(
         lambda it: _refine_arrow_parts(it, carry_lonlat), schema
     )
-    return refined.dropDuplicates(["point_id", "area_key"]) if dedup_pairs else refined
+    return refined.dropDuplicates(["point_id", "area_key"])
 
 
 def pip_exists(points: DataFrame, polygon_parts: DataFrame, **kw) -> DataFrame:
     """Semi-join flavor: point_ids contained in ANY polygon (the reference's
-    break-at-first-hit, falsepositives.hpp:137-139). Skips the pair-level
-    dedup shuffle — only the point-id distinct remains."""
-    return (
-        pip_join(points, polygon_parts, dedup_pairs=False, **kw)
-        .select("point_id")
-        .distinct()
-    )
+    break-at-first-hit, falsepositives.hpp:137-139). A projection of
+    ``pip_join``: Catalyst drops the pair dedup under the point-id distinct
+    (RemoveRedundantAggregates), so one aggregate remains."""
+    return pip_join(points, polygon_parts, **kw).select("point_id").distinct()

@@ -5,9 +5,10 @@ stages:
   A extract      pages -> nodes/ways/relations          (Arrow UDF scan)
   B locate       J1 equi-join                           (shuffle on node id)
   C assemble     J2 + G2-G4 + O1-O3                     (shuffle on rel id)
-  D connectivity J3 + A1-A5 + E4                        (shuffle on node id)
+  D connectivity J3 + A1-A5 + E1                        (shuffle on node id)
   E passes 3/4   J4 hit-count join + J5 cell PIP join   (shuffles on node id / cell)
-  F finalize     E2 + O4 + tiles                        (narrow)
+                 + E2: one final mask per endpoint node
+  F finalize     E5 way-error union + O4 + tiles        (narrow)
 
 Each checkpointable stage can persist to parquet (Iceberg in production)
 and is resumable: an existing ``_SUCCESS``-marked output is read back
@@ -93,19 +94,12 @@ class Sink:
     iceberg branch is plain ``writeTo``/``read.table`` calls."""
 
     def __init__(self, out_dir: str, fmt: str = "parquet", catalog: str | None = None,
-                 bucket_spec: dict[str, tuple[int, str]] | None = None,
                  partition_spec: dict[str, str] | None = None):
         if fmt not in ("parquet", "iceberg"):
             raise ValueError(f"unknown sink format: {fmt}")
         if fmt == "iceberg" and not catalog:
             raise ValueError("iceberg sink needs a catalog (e.g. 'prod.db')")
         self.out_dir, self.fmt, self.catalog = out_dir, fmt, catalog
-        # stage name -> (n_buckets, column): write that checkpoint as a
-        # BUCKETED table so downstream joins/aggs on the column read it
-        # pre-partitioned (no Exchange on that side). Same-session resume
-        # reads the bucketed table; a fresh session without the catalog
-        # entry falls back to a plain parquet read (correct, un-bucketed).
-        self.bucket_spec = bucket_spec or {}
         # stage name -> hive-partition column: a fused multi-output stage
         # (e.g. 'tiles') is written once partitioned by its discriminator,
         # so each logical output reads back with partition pruning.
@@ -113,12 +107,6 @@ class Sink:
 
     def _table(self, name: str) -> str:
         return f"{self.catalog}.{name}"
-
-    def _bucket_table(self, name: str) -> str:
-        import hashlib as _h
-
-        tag = _h.md5(self.out_dir.encode()).hexdigest()[:8]
-        return f"osmi_ckpt_{tag}_{name}"
 
     def path(self, name: str) -> str:
         return os.path.join(self.out_dir, name)
@@ -134,18 +122,7 @@ class Sink:
 
     def write(self, df: DataFrame, name: str) -> None:
         if self.fmt == "parquet":
-            if name in self.bucket_spec:
-                n, col = self.bucket_spec[name]
-                tbl = self._bucket_table(name)
-                spark = df.sparkSession
-                spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-                (
-                    df.write.mode("overwrite")
-                    .bucketBy(n, col).sortBy(col)
-                    .option("path", self.path(name))
-                    .saveAsTable(tbl)
-                )
-            elif name in self.partition_spec:
+            if name in self.partition_spec:
                 (
                     df.write.mode("overwrite")
                     .partitionBy(self.partition_spec[name])
@@ -158,8 +135,6 @@ class Sink:
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         if self.fmt == "parquet":
-            if name in self.bucket_spec and spark.catalog.tableExists(self._bucket_table(name)):
-                return spark.read.table(self._bucket_table(name))
             return spark.read.parquet(self.path(name))
         return spark.read.table(self._table(name))
 
@@ -222,26 +197,19 @@ def run_pipeline(
     with_lineage: bool = True,
     sink_format: str = "parquet",
     sink_catalog: str | None = None,
-    bucket_entities: int | None = None,
     entities: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """pages -> the four output tables + tile tables (+ checkpoints).
 
     Every intermediate that several consumers read (entities, located
-    ways, way geometries, areas, PIP parts, error masks, pass-3/4 results)
-    is materialized once by ``_checkpoint`` as a local checkpoint, in both
-    modes; the run releases all of them before it returns or raises. Without
+    ways, way geometries, areas, PIP parts, pass-3 masks) is materialized
+    once by ``_checkpoint`` as a local checkpoint, in both modes; the run
+    releases all of them before it returns or raises. Without
     ``out_dir`` (cached mode) the returned tables are materialized local
     checkpoints too, which the caller owns; with ``out_dir`` they are reads
     of the sink tables. Local checkpoints have no lineage, so losing an
     executor mid-run fails the run: checkpointed mode with ``resume=True``
     is the durable path.
-
-    ``bucket_entities``: write the entities checkpoint as a table bucketed
-    by id (N buckets) — the J1 locate join then reads its nodes side
-    pre-partitioned on the join key (one Exchange instead of two). On a
-    100-TB run this is the difference between re-shuffling the node table
-    on every pass and shuffling it once at ingest.
 
     ``entities``: skip Stage A and run the batch DAG from an
     already-extracted entities table (the streaming/incremental
@@ -249,10 +217,8 @@ def run_pipeline(
     streaming/incremental.py:incremental_pipeline)."""
     held: list[DataFrame] = []  # every local checkpoint this run makes
     try:
-        bucket_spec = {"entities": (bucket_entities, "id")} if bucket_entities else None
         sink = (
-            Sink(out_dir, sink_format, sink_catalog, bucket_spec,
-                 partition_spec={"tiles": "_t"})
+            Sink(out_dir, sink_format, sink_catalog, partition_spec={"tiles": "_t"})
             if out_dir else None
         )
         lineage = Lineage() if (with_lineage and sink) else None
@@ -285,38 +251,27 @@ def run_pipeline(
         way_errors = parts["way_errors"]
         relations_out = AS.assemble_relations(relations, parts["geoms"], cell_res)
 
-        # areas / masks / pass outputs fan out to several consumers below —
-        # each is materialized here, so its consumers' plans start at a scan
+        # areas and PIP parts fan out to several consumers below — each is
+        # materialized here, so its consumers' plans start at a scan
         areas = _checkpoint(AR.build_areas(ways_located, relations), held)
         polygons_out = AR.polygon_table(areas, cell_res)
         pip_parts = _checkpoint(AR.pip_index(areas), held)
 
-        # ---- Stage D: connectivity ----
-        masks = _checkpoint(CN.error_mask(CN.node_stats(remembered)), held)
-        normal, candidates = CN.split_candidates(masks)
+        # ---- Stage D: connectivity (one mask per endpoint node) ----
+        masks = CN.error_mask(CN.node_stats(remembered))
 
-        # ---- Stage E: passes 3 + 4 ----
-        after3 = _checkpoint(FP.apply_pass3(candidates, ways), held)
+        # ---- Stage E: passes 3 + 4 -> the final mask (E2 included) ----
+        # mask-0 nodes ride through both passes unchanged (E4); after3 is
+        # read twice by pass 4 (its PIP points and the contained join)
+        after3 = _checkpoint(FP.apply_pass3(masks, ways), held)
         # pip_join picks its strategy from the materialized parts: when they
         # fit the broadcast bound, one collect builds a cell index and the
         # points stream through a single mapInArrow probe (no explode, no join)
-        after4 = _checkpoint(FP.apply_pass4(after3, locations, pip_parts, salt=salt), held)
+        final = FP.apply_pass4(after3, locations, pip_parts, salt=salt)
 
-        # ---- Stage F: finalize nodes table (O4) ----
-        emitted3 = after3.filter(F.col("emitted3")).select("node_id", F.lit(0).alias("final_mask"))
-        emitted4 = after4.filter(F.col("emitted4")).select("node_id", F.lit(0).alias("final_mask"))
-        survivors = after4.filter(~F.col("emitted4")).select(
-            "node_id", E.switch_poss("mask4").alias("final_mask")
-        )
-        normal_rows = normal.select("node_id", F.col("mask").alias("final_mask"))
+        # ---- Stage F: finalize nodes table (E5 + O4) ----
         way_error_rows = way_errors.select("node_id", F.lit(E.WAY).alias("final_mask"))
-
-        all_nodes = (
-            normal_rows.unionByName(way_error_rows)
-            .unionByName(emitted3)
-            .unionByName(emitted4)
-            .unionByName(survivors)
-        )
+        all_nodes = final.unionByName(way_error_rows)
         # location join: normal emission requires a location (handle_node skips
         # unlocated nodes, waterway.hpp:142-147); fixtures locate everything.
         located = all_nodes.join(locations, "node_id", "inner")

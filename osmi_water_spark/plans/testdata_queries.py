@@ -589,7 +589,10 @@ def q_j5_pip(spark, sf_dir):
 
 
 def q_j5_pip_salted(spark, sf_dir):
-    """J5 with deterministic 8-way salting — result must be identical."""
+    """J5 with ``salt=8`` — result must be identical. The query pins
+    ``broadcast_parts=True``, and the probe arm has no shuffle to salt, so
+    ``salt`` is a no-op here; salting of the partitioned arm is checked by
+    tests/test_spatial_join.py::test_salted_partitioned_arm_matches_brute_force."""
     return _pip_query(spark, sf_dir, salt=8)
 
 

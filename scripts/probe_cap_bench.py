@@ -7,7 +7,9 @@ the shuffle-free mapInArrow probe.
 ``cover_cells`` is the cover at the requested per-polygon budget. When it
 is over MAX_PROBE_CELLS, pip_join halves the budget until the cover fits
 and probes with that coarser cover (same pairs: the cover only
-prefilters), so the run also measures the coarsened probe.
+prefilters), so the run also measures the coarsened probe. The requested
+``res_max`` and budget are set as ``cells.DEFAULT_RES`` and
+``cells.MAX_COVER_CELLS``, which pip_join reads at call time.
 
 Usage: SPARK_GRAFT_CPUS=8 python scripts/probe_cap_bench.py \
            [n_points] [n_polys] [res_max] [max_cells_per_poly]
@@ -46,6 +48,7 @@ def main() -> None:
     pts, parts = build_inputs(spark, n_points, n_polys)
     parts = parts.cache()
     parts.count()
+    C.DEFAULT_RES, C.MAX_COVER_CELLS = res_max, max_cells
 
     # the cover size at the requested budget (one counting job, outside
     # the timed windows); over MAX_PROBE_CELLS, pip_join probes coarser
@@ -53,22 +56,19 @@ def main() -> None:
         parts.withColumn(
             "cell",
             F.explode(
-                C.adaptive_cover_cells("minx", "miny", "maxx", "maxy", 3, res_max, max_cells)
+                C.adaptive_cover_cells("minx", "miny", "maxx", "maxy",
+                                       C.MIN_COVER_RES, res_max, max_cells)
             ),
         ).select("cell", "area_key").distinct().count()
     )
 
     # warm the python/Arrow worker path on a small slice
-    pip_join(pts.limit(10000), parts, res_max=res_max, max_cells=max_cells,
-             broadcast_parts=True).count()
+    pip_join(pts.limit(10000), parts, broadcast_parts=True).count()
 
     # build: everything up to the returned (lazy) DataFrame — parts
     # collect, cover count, numpy/index assembly, broadcast registration
     t0 = time.time()
-    pairs = pip_join(
-        pts, parts, res_max=res_max, max_cells=max_cells,
-        broadcast_parts=True, unique_points=True,
-    )
+    pairs = pip_join(pts, parts, broadcast_parts=True, unique_points=True)
     t_build = time.time() - t0
 
     # lookup: the shuffle-free scan -> mapInArrow probe over all points

@@ -68,42 +68,6 @@ def test_tag_predicates_are_codegen(spark):
     assert "CASE WHEN" in p
 
 
-def test_bucketed_checkpoint_skips_exchange(spark, tmp_path):
-    """Sink bucket_spec: a checkpoint written bucketed on the join key is
-    read back pre-partitioned — the join plans ONE Exchange (the derived
-    side) instead of two. At 100 TB this is 'shuffle the node table once
-    at ingest, never again'."""
-    from pyspark.sql import functions as F
-
-    from osmi_water_spark.plans.pipeline import Sink
-
-    sink = Sink(str(tmp_path), bucket_spec={"entities": (4, "id")})
-    df = spark.range(1000).select("id", (F.col("id") * 2).alias("v"))
-    sink.write(df, "entities")
-    back = sink.read(spark, "entities")
-    other = spark.range(500).select((F.col("id") * 3 % 1000).alias("id"), F.lit(1).alias("w"))
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        joined = back.join(other, "id").select("id", "v", "w")
-        p = plan_of(joined)
-        # exactly ONE Exchange node: the non-bucketed side. The bucketed
-        # scan must feed the SortMergeJoin through Sort only.
-        n_exchanges = p.count("Exchange (")
-        assert n_exchanges == 1, f"expected 1 Exchange (non-bucketed side), plan:\n{p}"
-        assert "Bucketed: true" in p, p
-        # round-trip sanity: same result as the plain-parquet path
-        plain = Sink(str(tmp_path / "plain"))
-        plain.write(df, "entities")
-        want = plain.read(spark, "entities").join(other, "id").select(F.sum("v")).first()[0]
-        assert joined.select(F.sum("v")).first()[0] == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        spark.sql("DROP TABLE IF EXISTS " + sink._bucket_table("entities"))
-
-
 def test_extraction_decode_is_jvm_side(spark):
     """Round-3 contract: Stage A payload decode is Catalyst (regexp_extract
     + from_json) — the ONLY Python in the stage is the text UDF, and

@@ -72,6 +72,19 @@ def test_multi_part_area_pip_exists(spark):
     assert got == {1, 2, 3}
 
 
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_pip_exists_plans_one_aggregate(spark, broadcast):
+    """pip_exists is a projection of pip_join: Catalyst drops the pair
+    dedup under the point-id distinct, so the optimized plan holds one
+    Aggregate in either arm, and a duplicated point id comes out once."""
+    parts = _two_part_area(spark)
+    pts = _points(spark).unionByName(_points(spark).filter("point_id = 1"))
+    df = pip_exists(pts, parts, broadcast_parts=broadcast)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Aggregate [") == 1, plan
+    assert sorted(r.point_id for r in df.collect()) == [1, 2, 3]
+
+
 def test_broadcast_decision_is_byte_bounded():
     assert should_broadcast_parts(10, 1000)
     assert should_broadcast_parts(MAX_BROADCAST_PARTS, MAX_BROADCAST_BYTES)
