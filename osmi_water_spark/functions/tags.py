@@ -25,12 +25,17 @@ AREA_EXCLUDE_VALUES = ["river", "drain", "stream", "canal", "ditch", "riverbank"
 # are spliced in, so operator precedence inside them cannot leak.
 
 
+def sql_str(s: str) -> str:
+    """A Python string as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _vs(tags: str, key: str) -> str:
     return f"({tags})['{key}']"
 
 
 def _in(expr: str, values: list[str]) -> str:
-    return f"{expr} IN ({', '.join(repr(v) for v in values)})"
+    return f"{expr} IN ({', '.join(sql_str(v) for v in values)})"
 
 
 def is_waterway(tags: str, is_relation: bool) -> Column:
@@ -137,9 +142,14 @@ def get_waterway_category(way_type: str) -> Column:
     )
 
 
-def get_width_tag(tags: str) -> Column:
+def width_tag_sql(tags: str) -> str:
     """P5 — tagcheck.hpp:191-201. width, else est_width, else null."""
-    return F.expr(f"coalesce({_vs(tags, 'width')}, {_vs(tags, 'est_width')})")
+    return f"coalesce({_vs(tags, 'width')}, {_vs(tags, 'est_width')})"
+
+
+def get_width_tag(tags: str) -> Column:
+    """P5 as a Column (``width_tag_sql``)."""
+    return F.expr(width_tag_sql(tags))
 
 
 def get_construction(tags: str) -> Column:

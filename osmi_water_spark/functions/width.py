@@ -1,4 +1,4 @@
-"""P6/P7 — width-tag parsing with unit conversion, as a vectorized pandas UDF.
+"""P6/P7 — width-tag parsing with unit conversion, as Spark SQL text.
 
 Matches /root/reference/src/datastorage.hpp:143-201 semantically, including
 its quirks:
@@ -10,9 +10,15 @@ its quirks:
 * unit suffixes (after optional whitespace): m (case-insensitive, no-op),
   km (x1000), mi (x1609.344), nmi (x1852), a lone ' (feet), a lone " (inch),
   and the X'Y" feet-inches combo; any other residue -> width=-1 + error;
-* the reference computes in C ``float`` (32-bit) with the C promotion rules;
-  we reproduce that with numpy float32 (the float value is internal only —
-  the reference never writes the width column, quirk SURVEY.md §7.6.2).
+* the reference computes in C ``float`` (32-bit) with the C promotion rules:
+  int-literal factors multiply in FLOAT, double-literal ones in DOUBLE and
+  narrow back (the float value is internal only — the reference never
+  writes the width column, quirk SURVEY.md §7.6.2).
+
+``strtof`` and ``isspace`` run in the C locale, so whitespace is exactly
+``[ \\t\\n\\v\\f\\r]`` and digits are ``[0-9]``: a tag ending in a newline
+keeps its newline in the unit residue (-1 + error), and non-ASCII spaces or
+digits parse nothing (-1, no error).
 
 Null input -> (0.0, false) (datastorage.hpp:144-147).
 """
@@ -20,100 +26,69 @@ Null input -> (0.0, false) (datastorage.hpp:144-147).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
+from osmi_water_spark.functions.tags import sql_str
+
+_WS = r"[ \t\n\x0B\f\r]"
 # strtof prefix: optional whitespace, optional sign, digits with optional
 # decimal point (or leading point), optional exponent.
-_NUM_RE = r"^([\s]*[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?)(.*)$"
-# feet-inches inner number (strtof again: may have ws + sign)
-_INCH_RE = r"^([\s]*[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?)(.*)$"
+_NUM = rf"{_WS}*[+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?"
+# group 1 the number, group 3 the unit residue after whitespace
+SPLIT_RE = rf"^({_NUM})({_WS}*)((?s).*)\z"
+# X'Y" residue: the inches are a second strtof
+_INCH_RE = rf"^'({_NUM})\"\z"
 
-_WIDTH_SCHEMA = T.StructType(
-    [
-        T.StructField("width", T.FloatType(), True),
-        T.StructField("width_error", T.BooleanType(), True),
-    ]
-)
+_FEET, _INCH = sql_str("'"), sql_str('"')
+_TMP = ["_wtag", "_wfix", "_wnum", "_wres", "_wn", "_winch"]
 
 
-def parse_width_batch(s: pd.Series) -> pd.DataFrame:
-    """Vectorized width parse of a string Series -> DataFrame(width, width_error)."""
-    n = len(s)
-    width = np.zeros(n, dtype=np.float32)
-    error = np.zeros(n, dtype=bool)
-    isnull = s.isna().to_numpy()
-    vals = s.fillna("")
+def with_width(df: DataFrame, tag_sql: str) -> DataFrame:
+    """``df`` plus ``width float`` and ``width_error boolean`` parsed from
+    the SQL expression ``tag_sql``.
 
-    # comma fix-up (first comma only) flags an error
-    has_comma = vals.str.contains(",", regex=False).to_numpy() & ~isnull
-    fixed = vals.str.replace(",", ".", n=1, regex=False)
-    error |= has_comma
-
-    ext = fixed.str.extract(_NUM_RE, expand=True)
-    numpart, rest = ext[0], ext[1]
-    no_num = numpart.isna().to_numpy() & ~isnull
-    width[no_num] = -1.0  # strtof consumed nothing: width=-1, error untouched
-
-    parsed = ~numpart.isna().to_numpy() & ~isnull
-    if parsed.any():
-        width[parsed] = numpart[parsed].astype(np.float64).astype(np.float32)
-        rest_stripped = rest.fillna("").str.lstrip()
-        low = rest_stripped.str.lower()
-
-        # done only when *endptr == '\0' BEFORE whitespace skipping: a
-        # residue of pure whitespace ('5 ') enters the unit branch, matches
-        # no unit, and falls to the else -> width=-1 + error
-        # (datastorage.hpp:160-187; strcasecmp("", "m") != 0).
-        done = ~parsed | (rest.fillna("") == "").to_numpy()
-        m_m = parsed & (low == "m").to_numpy()
-        m_km = parsed & (low == "km").to_numpy()
-        m_mi = parsed & (low == "mi").to_numpy()
-        m_nmi = parsed & (low == "nmi").to_numpy()
-        m_ft = parsed & (rest_stripped == "'").to_numpy()
-        m_in = parsed & (rest_stripped == '"').to_numpy()
-        # C arithmetic: int literals multiply in float32, double literals
-        # promote to float64 then narrow back (datastorage.hpp:165-180).
-        width[m_km] = width[m_km] * np.float32(1000)
-        width[m_mi] = (width[m_mi].astype(np.float64) * 1609.344).astype(np.float32)
-        width[m_nmi] = width[m_nmi] * np.float32(1852)
-        width[m_ft] = (width[m_ft].astype(np.float64) * 12.0 * 0.0254).astype(np.float32)
-        width[m_in] = (width[m_in].astype(np.float64) * 0.0254).astype(np.float32)
-
-        handled = done | m_m | m_km | m_mi | m_nmi | m_ft | m_in
-        # X'Y" feet-inches path (datastorage.hpp:175-184)
-        m_combo = parsed & ~handled & rest_stripped.str.startswith("'").to_numpy()
-        if m_combo.any():
-            after = rest_stripped[m_combo].str[1:]
-            iext = after.str.extract(_INCH_RE, expand=True)
-            inum, irest = iext[0], iext[1]
-            ok = (~inum.isna() & (irest == '"')).to_numpy()
-            idx = np.flatnonzero(m_combo)
-            good, bad = idx[ok], idx[~ok]
-            if good.size:
-                inch = inum[ok].astype(np.float64).to_numpy()
-                w = width[good].astype(np.float64)
-                width[good] = ((w * 12 + inch) * 0.0254).astype(np.float32)
-            width[bad] = -1.0
-            error[bad] = True
-        unknown = parsed & ~handled & ~m_combo
-        width[unknown] = -1.0
-        error[unknown] = True
-
-    return pd.DataFrame({"width": width, "width_error": error})
-
-
-@pandas_udf(_WIDTH_SCHEMA)
-def parse_width(s: pd.Series) -> pd.DataFrame:
-    return parse_width_batch(s)
-
-
-def width_struct(width_tag: Column) -> Column:
-    """Column helper: tags width string -> struct(width float, width_error bool)."""
-    return parse_width(width_tag)
+    Each step is its own projection: Catalyst does not collapse a
+    projection whose regex result the next one reads more than once, so
+    every regex runs once per row (one ``F.expr`` would repeat the shared
+    split in every CASE branch that reads it)."""
+    fixed = df.withColumn("_wtag", F.expr(tag_sql)).withColumn(
+        "_wfix", F.expr(f"regexp_replace(_wtag, {sql_str('^([^,]*),')}, '$1.')")
+    )
+    split = fixed.withColumns({
+        "_wnum": F.expr(f"regexp_extract(_wfix, {sql_str(SPLIT_RE)}, 1)"),
+        "_wres": F.expr(f"regexp_extract(_wfix, {sql_str(SPLIT_RE)}, 3)"),
+    })
+    unit = split.withColumns({
+        "_wn": F.expr("CASE WHEN _wnum <> '' THEN CAST(CAST(_wnum AS DOUBLE) AS FLOAT) END"),
+        "_winch": F.expr(f"regexp_extract(_wres, {sql_str(_INCH_RE)}, 1)"),
+    })
+    # a unit the reference accepts; an empty residue (nothing after the
+    # number, not even whitespace) keeps the number as is
+    known = (
+        "length(_wnum) = length(_wfix) OR lower(_wres) IN ('m', 'km', 'mi', 'nmi') "
+        f"OR _wres IN ({_FEET}, {_INCH}) OR _winch <> ''"
+    )
+    return unit.withColumns({
+        "width": F.expr(
+            "CASE WHEN _wtag IS NULL THEN CAST(0 AS FLOAT) "
+            "WHEN _wnum = '' THEN CAST(-1 AS FLOAT) "
+            "WHEN length(_wnum) = length(_wfix) OR lower(_wres) = 'm' THEN _wn "
+            "WHEN lower(_wres) = 'km' THEN _wn * CAST(1000 AS FLOAT) "
+            "WHEN lower(_wres) = 'mi' THEN CAST(CAST(_wn AS DOUBLE) * 1609.344D AS FLOAT) "
+            "WHEN lower(_wres) = 'nmi' THEN _wn * CAST(1852 AS FLOAT) "
+            f"WHEN _wres = {_FEET} THEN CAST(CAST(_wn AS DOUBLE) * 12.0D * 0.0254D AS FLOAT) "
+            f"WHEN _wres = {_INCH} THEN CAST(CAST(_wn AS DOUBLE) * 0.0254D AS FLOAT) "
+            "WHEN _winch <> '' THEN "
+            "CAST((CAST(_wn AS DOUBLE) * 12 + CAST(_winch AS DOUBLE)) * 0.0254D AS FLOAT) "
+            "ELSE CAST(-1 AS FLOAT) END"
+        ),
+        "width_error": F.expr(
+            "CASE WHEN _wtag IS NULL THEN false "
+            f"WHEN _wnum = '' OR {known} THEN instr(_wtag, ',') > 0 "
+            "ELSE true END"
+        ),
+    }).drop(*_TMP)
 
 
 def width2string(width: float) -> str:

@@ -33,7 +33,7 @@ from pyspark.sql import types as T
 from osmi_water_spark.functions import cells as C
 from osmi_water_spark.functions import tags as TG
 from osmi_water_spark.functions import wkb as W
-from osmi_water_spark.functions.width import width_struct
+from osmi_water_spark.functions.width import with_width
 
 _LS_SCHEMA = T.StructType(
     [
@@ -143,8 +143,7 @@ def assemble_ways(way_rows: DataFrame, cell_res: int = C.DEFAULT_RES) -> dict[st
     'geoms': per-membership geometry}. ``way_rows`` feeds all four, so the
     pipeline materializes it first."""
     ok = way_rows.filter(F.col("ls.ok"))
-    wd = ok.withColumn("wd", width_struct(TG.get_width_tag("tags")))
-    ways_out = wd.select(
+    ways_out = with_width(ok, TG.width_tag_sql("tags")).select(
         F.expr("id AS way_id"),
         F.expr("way_type AS type"),
         TG.name_or_empty("tags").alias("name"),
@@ -154,7 +153,7 @@ def assemble_ways(way_rows: DataFrame, cell_res: int = C.DEFAULT_RES) -> dict[st
         F.expr("CAST(NULL AS STRING) AS width"),  # parsed, never written (quirk)
         TG.format_lastchange("ts").alias("lastchange"),
         TG.get_construction("tags").alias("construction"),
-        F.expr("CASE WHEN wd.width_error THEN 'true' ELSE 'false' END AS width_error"),
+        F.expr("CASE WHEN width_error THEN 'true' ELSE 'false' END AS width_error"),
         F.expr("CAST(NULL AS STRING) AS tagging_error"),
         F.expr("ls.wkb AS geom_wkb"),
         C.bbox_cover_cells("ls.minx", "ls.miny", "ls.maxx", "ls.maxy", cell_res).alias("h3_cells"),

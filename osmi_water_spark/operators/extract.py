@@ -3,10 +3,11 @@
 Replaces the reference's OSM-file readers (/root/reference/src/
 waterinspector.cpp:113, :123, :140) with a JVM-first projection over the
 ``pages`` table: the geo payload is sliced out with ``regexp_extract``
-and decoded with ``from_json`` — both whole-stage-codegen JVM expressions
-— so the ONLY Python in the stage is the visible-text extraction, a thin
-Arrow-batched ``pandas_udf`` of vectorized ``.str`` regex ops (the
-byte-identical-text-per-url invariant, BASELINE.json input_hint).
+and decoded with ``from_json``, and the visible text (the
+byte-identical-text-per-url invariant, BASELINE.json input_hint) is four
+``regexp_replace`` calls — all whole-stage-codegen JVM expressions, so the
+stage runs no Python. ``html`` is decoded as UTF-8 by ``CAST(html AS
+STRING)``; undecodable bytes become U+FFFD instead of failing the run.
 
 Round 2 ran the whole stage (JSON decode included) as per-row Python
 inside ``mapInPandas``; the interpreter was the named suspect for the
@@ -19,18 +20,15 @@ column/partition pruning (SURVEY.md §4 row 1).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
+from osmi_water_spark.functions.tags import sql_str
 from osmi_water_spark.schemas import RELATION_MEMBER
 
 _SCRIPT_RE = r"(?s)<script[^>]*>.*?</script>"
 _BLOCK_CLOSE_RE = r"</(?:title|h1|h2|h3|p|div|li)>"
 _TAG_RE = r"<[^>]*>"
-# shared by pandas (re) and Catalyst (java.util.regex): both support (?s)
 _PAYLOAD_RE = r'(?s)<script type="application/osm\+json">(.*?)</script>'
 
 # the "entities" stage contract (checkpointed between runs): typed columns,
@@ -52,20 +50,17 @@ _ENTITY_DDL = (
 )
 
 
-def extract_text_series(html: pd.Series) -> pd.Series:
-    """Vectorized HTML -> visible text. The extraction contract: script
-    blocks removed, block-level closers become newlines, all other markup
-    stripped, trailing newlines trimmed."""
-    s = html.map(lambda b: b.decode("utf-8") if isinstance(b, (bytes, bytearray)) else b)
-    s = s.str.replace(_SCRIPT_RE, "", regex=True)
-    s = s.str.replace(_BLOCK_CLOSE_RE, "\n", regex=True)
-    s = s.str.replace(_TAG_RE, "", regex=True)
-    return s.str.rstrip("\n")
-
-
-@pandas_udf(T.StringType())
-def _text_udf(html: pd.Series) -> pd.Series:
-    return extract_text_series(html)
+def _text_sql() -> str:
+    """HTML -> visible text as SQL, the extraction contract: script blocks
+    removed, block-level closers become newlines, all other markup
+    stripped, trailing newlines trimmed (``\\z``, not ``$``: Java's ``$``
+    also matches before a final ``\\r``)."""
+    sql = "CAST(html AS STRING)"
+    for pattern, repl in (
+        (_SCRIPT_RE, ""), (_BLOCK_CLOSE_RE, "\n"), (_TAG_RE, ""), (r"\n+\z", "")
+    ):
+        sql = f"regexp_replace({sql}, {sql_str(pattern)}, {sql_str(repl)})"
+    return sql
 
 
 def extract_entities(pages: DataFrame) -> DataFrame:
@@ -76,7 +71,7 @@ def extract_entities(pages: DataFrame) -> DataFrame:
     ent = F.from_json(payload, _ENTITY_DDL)
     return pages.select(
         "url",
-        _text_udf(F.col("html")).alias("text"),
+        F.expr(_text_sql()).alias("text"),
         (F.length(payload) > 0).alias("_has_payload"),
         ent.alias("_e"),
     ).selectExpr(

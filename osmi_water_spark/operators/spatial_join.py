@@ -43,7 +43,6 @@ from osmi_water_spark.functions import cells as C
 from osmi_water_spark.functions import wkb as W
 
 REFINE_SCHEMA = "point_id long, area_key string"
-REFINE_SCHEMA_LONLAT = "point_id long, area_key string, lon double, lat double"
 
 # broadcast-parts auto decision: both bounds must hold. The byte bound is
 # the one that matters at scale — 200k coastline parts can be multi-GB of
@@ -103,7 +102,7 @@ class CellProbeIndex:
 
 
 def _probe_refine(
-    batches: Iterator["pa.RecordBatch"], probe: "CellProbeIndex", carry_lonlat: bool
+    batches: Iterator["pa.RecordBatch"], probe: "CellProbeIndex"
 ) -> Iterator["pa.RecordBatch"]:
     """Map-side PIP: per Arrow batch of points, gather candidate areas from
     the broadcast cover (one searchsorted per resolution), dedup (point,
@@ -136,16 +135,13 @@ def _probe_refine(
             uniq[1:] = (sk[1:] != sk[:-1]) | (sr[1:] != sr[:-1])
             rows, kk = sr[uniq], sk[uniq]
         keep = probe.index.eval(lon[rows], lat[rows], kk)
-        rsel, ksel = rows[keep], kk[keep]
-        arrays = [
-            pa.array(ids[rsel], type=pa.int64()),
-            pa.array(probe.keys[ksel], type=pa.string()),
-        ]
-        names = ["point_id", "area_key"]
-        if carry_lonlat:
-            arrays += [pa.array(lon[rsel]), pa.array(lat[rsel])]
-            names += ["lon", "lat"]
-        yield pa.RecordBatch.from_arrays(arrays, names)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(ids[rows[keep]], type=pa.int64()),
+                pa.array(probe.keys[kk[keep]], type=pa.string()),
+            ],
+            ["point_id", "area_key"],
+        )
 
 
 def should_broadcast_parts(n_parts: int, n_bytes: int) -> bool:
@@ -155,9 +151,7 @@ def should_broadcast_parts(n_parts: int, n_bytes: int) -> bool:
     return n_parts <= MAX_BROADCAST_PARTS and n_bytes <= MAX_BROADCAST_BYTES
 
 
-def _refine_arrow_parts(
-    batches: Iterator["pa.RecordBatch"], carry_lonlat: bool
-) -> Iterator["pa.RecordBatch"]:
+def _refine_arrow_parts(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
     """Exact containment refine over (point_id, area_key, part_wkb, lon,
     lat) record batches: dictionary-encode the WKB column (one parse per
     DISTINCT part per batch), then ONE flat vectorized ray cast for the
@@ -176,8 +170,7 @@ def _refine_arrow_parts(
         parts = d.dictionary.to_pylist()
         index = W.FlatPolygonIndex.build(enumerate(parts))
         keep = index.eval(lon, lat, codes)
-        cols = ["point_id", "area_key"] + (["lon", "lat"] if carry_lonlat else [])
-        yield rb.select(cols).filter(pa.array(keep))
+        yield rb.select(["point_id", "area_key"]).filter(pa.array(keep))
 
 
 def _fit_probe(part_rows: list, boxes: list, res_min: int, res_max: int,
@@ -224,7 +217,6 @@ def pip_join(
     polygon_parts: DataFrame,
     salt: int = 1,
     broadcast_parts: bool | None = None,
-    carry_lonlat: bool = False,
     unique_points: bool = False,
 ) -> DataFrame:
     """points(point_id, lon, lat) x parts(area_key, part_wkb, minx..maxy)
@@ -262,7 +254,6 @@ def pip_join(
     """
     spark = points.sparkSession
     res_min, res_max, max_cells = C.MIN_COVER_RES, C.DEFAULT_RES, C.MAX_COVER_CELLS
-    schema = REFINE_SCHEMA_LONLAT if carry_lonlat else REFINE_SCHEMA
     box = ("minx", "miny", "maxx", "maxy")
 
     res_list = []
@@ -285,7 +276,7 @@ def pip_join(
         # exact twin of the JVM expressions).
         part_rows = polygon_parts.select("area_key", "part_wkb", *box).collect()
         if not part_rows:
-            return spark.createDataFrame([], schema)
+            return spark.createDataFrame([], REFINE_SCHEMA)
         boxes = [[r[c] for r in part_rows] for c in box]
         probe = _fit_probe(part_rows, boxes, res_min, res_max, max_cells)
         if probe is not None:
@@ -296,7 +287,7 @@ def pip_join(
             # (best 1.69 s no-spread vs 2.08 s spread at sf1.0); at scale
             # the point side arrives wide and shuffle-free is the design.
             refined = points.select("point_id", "lon", "lat").mapInArrow(
-                lambda it: _probe_refine(it, bcp.value, carry_lonlat), schema
+                lambda it: _probe_refine(it, bcp.value), REFINE_SCHEMA
             )
             # pairs are already unique per input ROW (in-batch dedup across
             # resolutions), so the global dedup only collapses duplicate
@@ -308,7 +299,7 @@ def pip_join(
         # full budget
         res_list = np.unique(C.np_cover_boxes(*boxes, res_min, res_max, max_cells)[0]).tolist()
     if not res_list:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], REFINE_SCHEMA)
 
     cover = polygon_parts.withColumn(
         "cell",
@@ -338,7 +329,7 @@ def pip_join(
         cover.select(*keys, "area_key", "part_wkb", *box), keys, "inner"
     ).filter(env)
     refined = cand.select("point_id", "area_key", "part_wkb", "lon", "lat").mapInArrow(
-        lambda it: _refine_arrow_parts(it, carry_lonlat), schema
+        _refine_arrow_parts, REFINE_SCHEMA
     )
     return refined.dropDuplicates(["point_id", "area_key"])
 

@@ -120,14 +120,16 @@ def parse_width(raw) -> tuple[float, bool]:
         error = True
     import re
 
-    m = re.match(r"^[\s]*[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?", s)
-    if not m or not m.group(0).strip():
+    # C locale: isspace is exactly " \t\n\v\f\r", digits are ASCII
+    num = re.compile(r"[\s]*[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?", re.ASCII)
+    m = num.match(s)
+    if not m:
         return -1.0, error
     width = float(m.group(0))
     rest_raw = s[m.end():]
     if not rest_raw:
         return width, error
-    rest = rest_raw.lstrip()
+    rest = rest_raw.lstrip(" \t\n\v\f\r")
     if not rest:
         # whitespace-only residue: the unit branch matches nothing and
         # falls to the else (datastorage.hpp:160-187)
@@ -146,8 +148,8 @@ def parse_width(raw) -> tuple[float, bool]:
     if rest == '"':
         return width * 0.0254, error
     if rest.startswith("'"):
-        m2 = re.match(r"^[\s]*[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?", rest[1:])
-        if m2 and m2.group(0).strip() and rest[1 + m2.end():] == '"':
+        m2 = num.match(rest, 1)
+        if m2 and rest[m2.end():] == '"':
             return (width * 12 + float(m2.group(0))) * 0.0254, error
         return -1.0, True
     return -1.0, True

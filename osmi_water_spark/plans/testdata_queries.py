@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from osmi_water_spark.functions import cells as C
 from osmi_water_spark.functions import errors as E
 from osmi_water_spark.functions import tags as TG
-from osmi_water_spark.functions.width import width_struct
+from osmi_water_spark.functions.width import with_width
 from osmi_water_spark.parallel import spread_input
 
 
@@ -300,15 +300,10 @@ FROM typed
 
 def q_p6_width(spark, sf_dir):
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    k = F.col("p_partkey")
-    nw = len(WIDTH_LIST_P6)
-    raw = F.element_at(
-        F.array(*[F.lit(w).cast("string") for w in WIDTH_LIST_P6]), (k % nw + 1).cast("int")
-    )
-    return part.select(k.alias("part_id"), width_struct(raw).alias("w")).select(
-        "part_id",
-        F.col("w.width").cast("double").alias("width"),
-        F.col("w.width_error").alias("width_error"),
+    arr = ", ".join("NULL" if w is None else TG.sql_str(w) for w in WIDTH_LIST_P6)
+    raw = f"element_at(array({arr}), CAST(part_id % {len(WIDTH_LIST_P6)} + 1 AS INT))"
+    return with_width(part.select(F.col("p_partkey").alias("part_id")), raw).select(
+        "part_id", F.col("width").cast("double").alias("width"), "width_error"
     )
 
 
@@ -703,16 +698,12 @@ def q_map_layers(spark, sf_dir):
     derived ways table (the de-facto downstream query workload)."""
     df = _ways_geo(spark, sf_dir, _ncust(spark, sf_dir))
     t = "tags"
-    wd = width_struct(TG.get_width_tag(t)).alias("wd")
-    base = df.select(
+    base = with_width(df, TG.width_tag_sql(t)).select(
         TG.get_way_type(t).alias("way_type"),
         TG.name_or_empty(t).alias("name"),
         TG.get_construction(t).alias("construction"),
-        wd,
-    ).select(
-        "way_type", "name", "construction",
-        F.col("wd.width").cast("double").alias("width"),
-        F.when(F.col("wd.width_error"), "true").otherwise("false").alias("width_error"),
+        F.col("width").cast("double").alias("width"),
+        F.when(F.col("width_error"), "true").otherwise("false").alias("width_error"),
     )
     return _layer_counts(base, MAP_LAYERS)
 

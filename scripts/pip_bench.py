@@ -79,10 +79,10 @@ def main() -> None:
     pip_join(pts.limit(10000), parts, salt=4).count()
 
     t0 = time.time()
-    # lon/lat carried through the refine: tile assignment is a narrow map,
-    # no join back to the point table
-    pairs = pip_join(pts, parts, salt=8, carry_lonlat=True, unique_points=True)
-    out = pairs.select(
+    # the pairs join back to their points for lon/lat, as
+    # __spark_entry__.entry() does
+    pairs = pip_join(pts, parts, salt=8, unique_points=True)
+    out = pairs.join(pts, "point_id").select(
         "point_id", "area_key", C.tile_id(F.col("lon"), F.col("lat"), 8).alias("tile_id")
     )
     n_out = out.count()

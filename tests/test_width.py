@@ -2,11 +2,9 @@
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 import pytest
 
-from osmi_water_spark.functions.width import parse_width_batch, width2string
+from osmi_water_spark.functions.width import width2string, with_width
 
 CASES = [
     # (input, expected_width, expected_error)
@@ -39,43 +37,43 @@ CASES = [
     ("5\t", -1.0, True),
     ("  4.5 ", -1.0, True),
     (" 2.5\t ", -1.0, True),
+    # a trailing newline is unit residue like any other C-locale space
+    ("5\n", -1.0, True),
+    ("5 km\n", -1.0, True),
+    ("5\n\n", -1.0, True),
+    ("6'7\"\n", -1.0, True),
+    # C locale: no other space or digit counts — strtof consumes nothing
+    ("\x1c5", -1.0, False),
+    ("\xa05", -1.0, False),
+    ("\u0663", -1.0, False),      # ARABIC-INDIC DIGIT THREE
 ]
 
 
+@pytest.fixture(scope="module")
+def parsed(spark):
+    """Every case through ``with_width`` in one Spark query, by row."""
+    df = spark.createDataFrame(
+        [(i, c[0]) for i, c in enumerate(CASES)], "i int, w string"
+    )
+    return with_width(df, "w").orderBy("i").collect()
+
+
 @pytest.mark.parametrize("raw,w,err", CASES)
-def test_parse_width_case(raw, w, err):
-    out = parse_width_batch(pd.Series([raw]))
-    got_w, got_e = float(out["width"][0]), bool(out["width_error"][0])
+def test_parse_width_case(parsed, raw, w, err):
+    row = parsed[CASES.index((raw, w, err))]
+    got_w, got_e = float(row.width), bool(row.width_error)
     assert got_e == err, f"{raw!r}: error {got_e} != {err}"
     assert got_w == pytest.approx(w, rel=1e-6), f"{raw!r}: width {got_w} != {w}"
 
 
-def test_parse_width_batch_vectorized():
-    s = pd.Series([c[0] for c in CASES])
-    out = parse_width_batch(s)
-    np.testing.assert_allclose(
-        out["width"].to_numpy(), [c[1] for c in CASES], rtol=1e-6
-    )
-    assert list(out["width_error"]) == [c[2] for c in CASES]
-
-
-def test_parse_width_in_spark(spark):
-    from pyspark.sql import functions as F
-
-    from osmi_water_spark.functions.width import width_struct
-
-    df = spark.createDataFrame(
-        [(i, c[0]) for i, c in enumerate(CASES)], "i int, w string"
-    )
-    rows = (
-        df.select("i", width_struct(F.col("w")).alias("r"))
-        .select("i", "r.width", "r.width_error")
-        .orderBy("i")
-        .collect()
-    )
-    for row, (raw, w, err) in zip(rows, CASES):
-        assert bool(row.width_error) == err, raw
-        assert float(row.width) == pytest.approx(w, rel=1e-6), raw
+def test_parse_width_in_spark(spark, parsed):
+    """``with_width`` keeps the input columns and rows and adds the
+    reference's C types (float width, boolean error)."""
+    df = spark.createDataFrame([], "i int, w string")
+    assert with_width(df, "w").dtypes == [
+        ("i", "int"), ("w", "string"), ("width", "float"), ("width_error", "boolean")
+    ]
+    assert [(r.i, r.w) for r in parsed] == [(i, c[0]) for i, c in enumerate(CASES)]
 
 
 def test_parse_width_oracle_parity():
