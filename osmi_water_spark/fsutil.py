@@ -1,11 +1,11 @@
 """Filesystem helpers that go through the Hadoop FileSystem API.
 
 Driver-local ``os.path`` checks are correct only on a local/shared POSIX
-filesystem; the checkpoint/epoch idempotency contracts must also hold when
-the destination is an object store or HDFS (the production posture —
-BASELINE.json:6). Routing existence/listing through the path's own
+filesystem; the stage-checkpoint resume check must also hold when the
+destination is an object store or HDFS (the production posture —
+BASELINE.json:6). Routing the existence check through the path's own
 ``FileSystem`` implementation makes the same code correct for ``file:``,
-``hdfs:``, ``s3a:``, … URIs. (ADVICE.md round 3, incremental.py item.)
+``hdfs:``, ``s3a:``, … URIs. (ADVICE.md round 3.)
 """
 
 from __future__ import annotations
@@ -24,10 +24,3 @@ def exists(spark: SparkSession, path: str) -> bool:
     fs, hpath = _fs_and_path(spark, path)
     return bool(fs.exists(hpath))
 
-
-def list_names(spark: SparkSession, path: str) -> list[str]:
-    """Child entry names of a directory ([] if it doesn't exist)."""
-    fs, hpath = _fs_and_path(spark, path)
-    if not fs.exists(hpath):
-        return []
-    return [st.getPath().getName() for st in fs.listStatus(hpath)]

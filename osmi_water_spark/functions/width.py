@@ -18,7 +18,10 @@ its quirks:
 ``strtof`` and ``isspace`` run in the C locale, so whitespace is exactly
 ``[ \\t\\n\\v\\f\\r]`` and digits are ``[0-9]``: a tag ending in a newline
 keeps its newline in the unit residue (-1 + error), and non-ASCII spaces or
-digits parse nothing (-1, no error).
+digits parse nothing (-1, no error). ``strtof`` also reads hex floats
+(``0x1.8p1``, the ``p`` exponent optional), ``inf``/``infinity`` and
+``nan``/``nan(chars)``; ``strcasecmp`` folds ASCII letters only, so a
+non-ASCII residue is never a unit.
 
 Null input -> (0.0, false) (datastorage.hpp:144-147).
 """
@@ -32,16 +35,35 @@ from pyspark.sql import functions as F
 from osmi_water_spark.functions.tags import sql_str
 
 _WS = r"[ \t\n\x0B\f\r]"
-# strtof prefix: optional whitespace, optional sign, digits with optional
-# decimal point (or leading point), optional exponent.
-_NUM = rf"{_WS}*[+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?"
+_HEX = r"[0-9a-fA-F]"
+# strtof prefix: optional whitespace, optional sign, then a hex float
+# (digits with optional point, optional binary exponent), a decimal (digits
+# with optional point, or a leading point, optional exponent), or inf,
+# infinity, nan, nan(chars) in any ASCII case.
+_NUM = (
+    rf"{_WS}*[+-]?(?:0[xX](?:{_HEX}+\.?{_HEX}*|\.{_HEX}+)(?:[pP][+-]?[0-9]+)?"
+    r"|(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?"
+    r"|(?i:inf(?:inity)?|nan(?:\([0-9A-Za-z_]*\))?))"
+)
 # group 1 the number, group 3 the unit residue after whitespace
 SPLIT_RE = rf"^({_NUM})({_WS}*)((?s).*)\z"
 # X'Y" residue: the inches are a second strtof
 _INCH_RE = rf"^'({_NUM})\"\z"
 
 _FEET, _INCH = sql_str("'"), sql_str('"')
-_TMP = ["_wtag", "_wfix", "_wnum", "_wres", "_wn", "_winch"]
+_TMP = ["_wtag", "_wfix", "_wnum", "_wres", "_wn", "_winch", "_wunit"]
+
+
+def _strtod_sql(col: str) -> str:
+    """The double value of ``col``, a ``_NUM`` match. Spark's cast reads
+    decimals, inf/infinity and hex floats with a ``p`` exponent; NaN's
+    other spellings and a hex float without an exponent need rewriting,
+    which only the rows the cast rejects pay for."""
+    return (
+        f"coalesce(try_cast({col} AS DOUBLE), "
+        f"CASE WHEN contains(lower({col}), 'nan') THEN CAST('NaN' AS DOUBLE) "
+        f"ELSE CAST(concat({col}, 'p0') AS DOUBLE) END)"
+    )
 
 
 def with_width(df: DataFrame, tag_sql: str) -> DataFrame:
@@ -60,27 +82,30 @@ def with_width(df: DataFrame, tag_sql: str) -> DataFrame:
         "_wres": F.expr(f"regexp_extract(_wfix, {sql_str(SPLIT_RE)}, 3)"),
     })
     unit = split.withColumns({
-        "_wn": F.expr("CASE WHEN _wnum <> '' THEN CAST(CAST(_wnum AS DOUBLE) AS FLOAT) END"),
+        "_wn": F.expr(f"CASE WHEN _wnum <> '' THEN CAST({_strtod_sql('_wnum')} AS FLOAT) END"),
         "_winch": F.expr(f"regexp_extract(_wres, {sql_str(_INCH_RE)}, 1)"),
+        # strcasecmp folds ASCII only: a residue with any non-ASCII
+        # character stays as is, so it never equals a unit
+        "_wunit": F.expr("IF(octet_length(_wres) = length(_wres), lower(_wres), _wres)"),
     })
     # a unit the reference accepts; an empty residue (nothing after the
     # number, not even whitespace) keeps the number as is
     known = (
-        "length(_wnum) = length(_wfix) OR lower(_wres) IN ('m', 'km', 'mi', 'nmi') "
+        "length(_wnum) = length(_wfix) OR _wunit IN ('m', 'km', 'mi', 'nmi') "
         f"OR _wres IN ({_FEET}, {_INCH}) OR _winch <> ''"
     )
     return unit.withColumns({
         "width": F.expr(
             "CASE WHEN _wtag IS NULL THEN CAST(0 AS FLOAT) "
             "WHEN _wnum = '' THEN CAST(-1 AS FLOAT) "
-            "WHEN length(_wnum) = length(_wfix) OR lower(_wres) = 'm' THEN _wn "
-            "WHEN lower(_wres) = 'km' THEN _wn * CAST(1000 AS FLOAT) "
-            "WHEN lower(_wres) = 'mi' THEN CAST(CAST(_wn AS DOUBLE) * 1609.344D AS FLOAT) "
-            "WHEN lower(_wres) = 'nmi' THEN _wn * CAST(1852 AS FLOAT) "
+            "WHEN length(_wnum) = length(_wfix) OR _wunit = 'm' THEN _wn "
+            "WHEN _wunit = 'km' THEN _wn * CAST(1000 AS FLOAT) "
+            "WHEN _wunit = 'mi' THEN CAST(CAST(_wn AS DOUBLE) * 1609.344D AS FLOAT) "
+            "WHEN _wunit = 'nmi' THEN _wn * CAST(1852 AS FLOAT) "
             f"WHEN _wres = {_FEET} THEN CAST(CAST(_wn AS DOUBLE) * 12.0D * 0.0254D AS FLOAT) "
             f"WHEN _wres = {_INCH} THEN CAST(CAST(_wn AS DOUBLE) * 0.0254D AS FLOAT) "
             "WHEN _winch <> '' THEN "
-            "CAST((CAST(_wn AS DOUBLE) * 12 + CAST(_winch AS DOUBLE)) * 0.0254D AS FLOAT) "
+            f"CAST((CAST(_wn AS DOUBLE) * 12 + {_strtod_sql('_winch')}) * 0.0254D AS FLOAT) "
             "ELSE CAST(-1 AS FLOAT) END"
         ),
         "width_error": F.expr(

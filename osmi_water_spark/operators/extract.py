@@ -101,13 +101,14 @@ def validate_entities_schema(spark, path: str) -> None:
     contract before a resume/finalize reads it. The typed members/tags
     contract has changed across engine versions; forcing EXTRACT_SCHEMA
     onto a stale directory would silently null-fill or fail deep in the
-    DAG with a confusing error (ADVICE.md r3). Hive partition columns
-    (kind=/epoch=) may add fields; every contract field must match."""
+    DAG with a confusing error (ADVICE.md r3). A Hive partition column
+    (the streaming sink's ``kind=``) is read back from the directory
+    names; every contract field must match."""
     from pyspark.sql import types as T2
 
     want = T2.StructType.fromDDL(EXTRACT_SCHEMA)
     # mergeSchema: without it Spark samples ONE footer, so a mixed-version
-    # dir (old-contract epochs + new-contract epochs appended after an
+    # dir (old-contract files plus new-contract batches appended after an
     # upgrade — the exact incremental scenario this guards) can pass if the
     # sampled file happens to be new-schema. Merging unions every file's
     # schema; a contract-type conflict then either surfaces as a changed
@@ -115,9 +116,9 @@ def validate_entities_schema(spark, path: str) -> None:
     # with the stale-checkpoint message).
     try:
         got_schema = spark.read.option("mergeSchema", "true").parquet(path).schema
-    except Exception as e:  # irreconcilable epoch schemas: same verdict
+    except Exception as e:  # irreconcilable file schemas: same verdict
         raise ValueError(
-            f"stale entities checkpoint at {path}: epoch schemas conflict "
+            f"stale entities checkpoint at {path}: file schemas conflict "
             f"({e}) — delete the checkpoint (and downstream stage dirs "
             "built from it) and re-run"
         ) from e

@@ -15,7 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from osmi_water_spark.operators.dedup import _HYPER
+from osmi_water_spark.operators.dedup import hyperplane_bucket
 
 
 def row_cosine(a: pd.Series, b: pd.Series) -> np.ndarray:
@@ -89,54 +89,30 @@ def cosine_topk_ivf(
     id_col: str = "vec_id", vec_col: str = "embedding",
     bits: int = 6, probe_flips: int = 2, exclude_self: bool = True,
 ) -> DataFrame:
-    """IVF/LSH-bucketed ANN: corpus bucketed by the first ``bits`` signs of
-    seeded hyperplane projections; each query multiprobes its bucket and
-    all buckets within ``probe_flips`` bit flips. Approximate — recall
-    grows with probes; on corpora with genuinely close neighbors (high
-    cosine) recall is near 1, on uniform-random vectors it degrades (the
-    neighbors are barely closer than everything else)."""
-    planes = _HYPER[:bits]
+    """IVF/LSH-bucketed ANN: corpus bucketed by the low ``bits`` bits of
+    the near-dup hyperplane bucket (``dedup.hyperplane_bucket``, at most
+    16); each query multiprobes its bucket and all buckets within
+    ``probe_flips`` bit flips. Approximate — recall grows with probes; on
+    corpora with genuinely close neighbors (high cosine) recall is near 1,
+    on uniform-random vectors it degrades (the neighbors are barely closer
+    than everything else)."""
+    if bits > 16:
+        raise ValueError(f"cosine_topk_ivf: bits={bits}, the hyperplane bucket has 16")
+    low = (1 << bits) - 1
+    # probe i of a query is its bucket XOR masks[i]: every mask of at most
+    # probe_flips set bits, enumerated once here
+    masks = [m for m in range(low + 1) if m.bit_count() <= probe_flips]
 
-    def bucket_of(m: np.ndarray) -> np.ndarray:
-        signs = (m @ planes.T) > 0
-        return (signs * (1 << np.arange(bits))).sum(axis=1).astype(np.int64)
-
-    def corpus_batch(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            m = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            yield pd.DataFrame({"nid": pdf["nid"], "v": pdf["v"], "bucket": bucket_of(m)})
-
-    c = corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("v")).mapInPandas(
-        corpus_batch, "nid long, v array<double>, bucket long"
+    c = corpus.select(
+        F.col(id_col).alias("nid"), F.col(vec_col).alias("v"),
+        hyperplane_bucket(vec_col).bitwiseAND(low).alias("bucket"),
     )
-
-    def query_batch(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            m = np.vstack(pdf["qv"].to_numpy()).astype(np.float64)
-            base = bucket_of(m)
-            rows = {"query_id": [], "qv": [], "bucket": []}
-            from itertools import combinations
-
-            for qid, qv, b in zip(pdf["query_id"], pdf["qv"], base):
-                probes = {int(b)}
-                for nf in range(1, probe_flips + 1):
-                    for combo in combinations(range(bits), nf):
-                        x = int(b)
-                        for i in combo:
-                            x ^= 1 << i
-                        probes.add(x)
-                for p in sorted(probes):
-                    rows["query_id"].append(qid)
-                    rows["qv"].append(qv)
-                    rows["bucket"].append(p)
-            yield pd.DataFrame(rows)
-
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")).mapInPandas(
-        query_batch, "query_id long, qv array<double>, bucket long"
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
+        hyperplane_bucket(vec_col).bitwiseAND(low).alias("home"),
+    ).select(
+        "query_id", "qv",
+        F.explode(F.transform(F.lit(masks), lambda m: F.col("home").bitwiseXOR(m))).alias("bucket"),
     )
 
     cand = q.join(c, "bucket", "inner")

@@ -10,6 +10,8 @@ set-based re-formulation of the delete_error_node state machine.
 from __future__ import annotations
 
 import datetime as dt
+import math
+import re
 from collections import defaultdict
 
 
@@ -108,6 +110,23 @@ def get_construction(tags: dict) -> str:
     return ""
 
 
+def _strtod(text: str) -> float:
+    """The value of a strtof prefix: decimal, hex float, inf or nan."""
+    t = text.strip(" \t\n\v\f\r").lower()
+    if "nan" in t:
+        return math.nan
+    return float.fromhex(t) if "x" in t else float(t)
+
+
+# strtof's C-locale prefix: isspace is exactly " \t\n\v\f\r", digits are
+# ASCII; hex floats, inf/infinity and nan/nan(chars) too
+_STRTOF = re.compile(
+    r"\s*[+-]?(?:0x(?:[0-9a-f]+\.?[0-9a-f]*|\.[0-9a-f]+)(?:p[+-]?\d+)?"
+    r"|(?:\d+\.?\d*|\.\d+)(?:e[+-]?\d+)?|inf(?:inity)?|nan(?:\(\w*\))?)",
+    re.ASCII | re.IGNORECASE,
+)
+
+
 def parse_width(raw) -> tuple[float, bool]:
     """datastorage.hpp:143-191 transcription (float precision irrelevant —
     only the error flag is output)."""
@@ -118,14 +137,10 @@ def parse_width(raw) -> tuple[float, bool]:
     if "," in s:
         s = s.replace(",", ".", 1)
         error = True
-    import re
-
-    # C locale: isspace is exactly " \t\n\v\f\r", digits are ASCII
-    num = re.compile(r"[\s]*[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?", re.ASCII)
-    m = num.match(s)
+    m = _STRTOF.match(s)
     if not m:
         return -1.0, error
-    width = float(m.group(0))
+    width = _strtod(m.group(0))
     rest_raw = s[m.end():]
     if not rest_raw:
         return width, error
@@ -134,7 +149,8 @@ def parse_width(raw) -> tuple[float, bool]:
         # whitespace-only residue: the unit branch matches nothing and
         # falls to the else (datastorage.hpp:160-187)
         return -1.0, True
-    low = rest.lower()
+    # strcasecmp folds ASCII letters only
+    low = rest.lower() if rest.isascii() else rest
     if low == "m":
         return width, error
     if low == "km":
@@ -148,9 +164,9 @@ def parse_width(raw) -> tuple[float, bool]:
     if rest == '"':
         return width * 0.0254, error
     if rest.startswith("'"):
-        m2 = num.match(rest, 1)
+        m2 = _STRTOF.match(rest, 1)
         if m2 and rest[m2.end():] == '"':
-            return (width * 12 + float(m2.group(0))) * 0.0254, error
+            return (width * 12 + _strtod(m2.group(0))) * 0.0254, error
         return -1.0, True
     return -1.0, True
 

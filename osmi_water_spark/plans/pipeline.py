@@ -212,9 +212,9 @@ def run_pipeline(
     is the durable path.
 
     ``entities``: skip Stage A and run the batch DAG from an
-    already-extracted entities table (the streaming/incremental
-    orchestration hands over the stream-accumulated table here —
-    streaming/incremental.py:incremental_pipeline)."""
+    already-extracted entities table
+    (streaming/incremental.py:incremental_pipeline hands over one snapshot
+    of the table ``stream_extract``'s file sink has committed)."""
     held: list[DataFrame] = []  # every local checkpoint this run makes
     try:
         sink = (

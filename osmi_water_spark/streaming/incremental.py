@@ -4,14 +4,18 @@
 The reference is a bounded 3-pass batch job with no streaming semantics
 (SURVEY.md §2.10), so the engine's core stays batch; this module covers
 the *ingest* half of a production deployment — new page files land in an
-object store, extraction keeps up incrementally, and the batch pipeline
-(or its resume path) runs over the growing entities table. Exactly the
-"batch-incremental" design BASELINE.json:14 asks for, expressed with
-``readStream`` -> the same Arrow extraction -> ``writeStream`` with
-checkpointing (restart-safe, exactly-once per file).
+object store, extraction keeps up incrementally, and the resumable batch
+pipeline runs over the growing entities table. This is the
+"batch-incremental" design BASELINE.json:14 asks for: ``readStream`` ->
+the batch extraction projection -> Spark's parquet file sink. The
+checkpoint's source offsets and the sink's commit log (``_spark_metadata``)
+make each page file land exactly once across restarts, and readers of the
+sink directory see only the files of committed batches.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -26,22 +30,22 @@ def stream_extract(
     pages_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """Incremental pages -> entities: one streaming query, file-source
-    exactly-once, partitioned by entity kind for downstream pruning."""
+    """Incremental pages -> entities: one streaming query that drains the
+    page files not yet seen (``availableNow``) into a parquet file sink,
+    exactly-once per file, partitioned by entity kind for downstream
+    pruning."""
     pages = spark.readStream.schema(PAGES).parquet(pages_dir)
-    entities = extract_entities(pages)  # same JVM-decode projection as batch
-    writer = (
-        entities.writeStream.format("parquet")
+    return (
+        extract_entities(pages)  # same JVM-decode projection as batch
+        .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .partitionBy("kind")
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_text_quality(
@@ -127,85 +131,41 @@ def stream_lang_stats(
 # ---------------- incremental full-pipeline orchestration ----------------
 
 
-def append_entities_batch(batch_df, epoch_id: int, ents_dir: str) -> None:
-    """foreachBatch sink for the entities stream: one parquet directory per
-    epoch, written atomically and SKIPPED when already committed — after a
-    crash Spark replays the last uncommitted epoch, and the idempotency
-    check turns the replay into exactly-once (the standard foreachBatch
-    contract: the sink must be idempotent by (destination, epoch))."""
-    import os as _os
-
-    from osmi_water_spark import fsutil
-
-    dest = _os.path.join(ents_dir, f"epoch={epoch_id}")
-    # Hadoop FS API, not os.path: the idempotency check must also hold when
-    # ents_dir is an object store / HDFS URI, not only local disk
-    if fsutil.exists(batch_df.sparkSession, _os.path.join(dest, "_SUCCESS")):
-        return  # replayed epoch — already durable
-    batch_df.write.mode("overwrite").parquet(dest)
-
-
 def incremental_pipeline(
     spark: SparkSession,
     pages_dir: str,
     work_dir: str,
-    available_now: bool = True,
-    await_stream: bool = True,
-    finalize: bool = True,
     **pipeline_kw,
 ):
     """The batch-incremental composition BASELINE.json's north rule implies:
-    Structured Streaming drives extraction incrementally (foreachBatch ->
-    epoch-partitioned entities parquet, exactly-once), then the RESUMABLE
-    batch DAG (plans/pipeline.py, per-stage checkpoints + lineage) runs
-    from the accumulated entities table. Restart-safe end to end: killing
-    the stream resumes from the streaming checkpoint; killing the batch
-    half resumes from the last completed stage checkpoint.
+    ``stream_extract`` drains the pages that arrived since the last call
+    into ``work_dir/entities_stream``, then the RESUMABLE batch DAG
+    (plans/pipeline.py, per-stage checkpoints + lineage) runs over one
+    snapshot of the accumulated entities table. Restart-safe end to end:
+    a killed ingest resumes from the streaming checkpoint; a killed batch
+    half resumes from its last completed stage.
 
-    Returns (query, out): the streaming query (already drained when
-    ``available_now and await_stream``) and the pipeline output dict
-    (``None`` unless ``finalize``).
+    Returns the pipeline output dict. The streaming query has terminated
+    by then; a failed query raises here.
     """
-    import functools
-    import os as _os
+    from osmi_water_spark.operators.extract import EXTRACT_SCHEMA, validate_entities_schema
+    from osmi_water_spark.plans.pipeline import run_pipeline
 
-    ents_dir = _os.path.join(work_dir, "entities_stream")
-    ckpt_dir = _os.path.join(work_dir, "_stream_ckpt")
-    pages = spark.readStream.schema(PAGES).parquet(pages_dir)
-    writer = (
-        extract_entities(pages)
-        .writeStream.foreachBatch(functools.partial(append_entities_batch, ents_dir=ents_dir))
-        .option("checkpointLocation", ckpt_dir)
-        .outputMode("append")
+    ents_dir = os.path.join(work_dir, "entities_stream")
+    stream_extract(
+        spark, pages_dir, ents_dir, os.path.join(work_dir, "_stream_ckpt")
+    ).awaitTermination()
+    # a pre-contract-change entities dir must fail loudly, not be silently
+    # null-filled by the forced schema (ADVICE.md r3)
+    validate_entities_schema(spark, ents_dir)
+    entities = spark.read.schema(EXTRACT_SCHEMA).parquet(ents_dir)
+    # batch-half checkpoints are keyed by the snapshot's committed file
+    # count, which grows with every non-empty ingest batch: a call over a
+    # GROWN table gets a fresh output dir (stage outputs of the old
+    # snapshot are stale), a call over the same snapshot resumes from the
+    # last completed stage
+    return run_pipeline(
+        spark, pages=None, entities=entities,
+        out_dir=os.path.join(work_dir, f"out_f{len(entities.inputFiles()):05d}"),
+        resume=True, **pipeline_kw,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now and await_stream:
-        query.awaitTermination()
-    out = None
-    if finalize:
-        from osmi_water_spark.operators.extract import EXTRACT_SCHEMA
-        from osmi_water_spark.plans.pipeline import run_pipeline
-
-        # batch-half checkpoints are keyed by the entities snapshot (epoch
-        # count): a finalize CRASH over the same snapshot resumes from the
-        # last completed stage; a finalize over a GROWN table gets a fresh
-        # checkpoint dir (stage outputs of the old snapshot are stale)
-        from osmi_water_spark import fsutil
-        from osmi_water_spark.operators.extract import validate_entities_schema
-
-        epochs = [
-            d for d in fsutil.list_names(spark, ents_dir) if d.startswith("epoch=")
-        ]
-        if epochs:
-            # a pre-contract-change entities dir must fail loudly, not be
-            # silently null-filled by the forced schema (ADVICE.md r3)
-            validate_entities_schema(spark, ents_dir)
-        entities = spark.read.schema(EXTRACT_SCHEMA).parquet(ents_dir)
-        out = run_pipeline(
-            spark, pages=None, entities=entities,
-            out_dir=_os.path.join(work_dir, f"out_e{len(epochs):05d}"),
-            resume=True, **pipeline_kw,
-        )
-    return query, out

@@ -145,11 +145,11 @@ def test_stale_entities_checkpoint_fails_loudly(spark, tmp_path):
 
 
 def test_mixed_epoch_checkpoint_fails_loudly(spark, tmp_path):
-    """A MIXED-version entities dir — old-contract epochs plus new-contract
-    epochs appended after an engine upgrade, the exact incremental_pipeline
+    """A MIXED-version entities dir — old-contract files plus new-contract
+    batches appended after an engine upgrade, the exact incremental_pipeline
     scenario the guard targets — must fail validation even when Spark's
     single-footer schema sampling would happen to pick a new-contract file
-    (ADVICE.md r4: validate with mergeSchema so every epoch is checked)."""
+    (ADVICE.md r4: validate with mergeSchema so every file is checked)."""
     import pytest
 
     from osmi_water_spark.operators.extract import (
@@ -158,23 +158,26 @@ def test_mixed_epoch_checkpoint_fails_loudly(spark, tmp_path):
     )
     from osmi_water_spark.sources import pages_gen as PG2
 
+    def append(df, path):  # the streaming file sink's layout
+        df.write.mode("append").partitionBy("kind").parquet(path)
+
     path = str(tmp_path / "entities")
-    # epoch=0: OLD contract (string members/tags — pre-typed-columns engine)
-    spark.createDataFrame(
+    # OLD contract (string members/tags — pre-typed-columns engine)
+    append(spark.createDataFrame(
         [("u", "t", "way", 1, None, None, "[1,2]", "[]", "{}", 0)],
         "url string, text string, kind string, id long, lon double, "
         "lat double, node_ids string, members string, tags string, ts long",
-    ).write.parquet(path + "/epoch=0")
-    # epoch=1: CURRENT contract
-    extract_entities(
+    ), path)
+    # CURRENT contract, appended later
+    append(extract_entities(
         PG2.pages_dataframe(spark, PG.pages_rows(["w01_chain"])[:2])
-    ).write.parquet(path + "/epoch=1")
+    ), path)
     with pytest.raises(ValueError, match="stale entities checkpoint"):
         validate_entities_schema(spark, path)
     # sanity: a PURE current-contract dir still validates clean
     clean = str(tmp_path / "entities_clean")
-    extract_entities(
+    append(extract_entities(
         PG2.pages_dataframe(spark, PG.pages_rows(["w01_chain"])[:2])
-    ).write.parquet(clean + "/epoch=1")
+    ), clean)
     validate_entities_schema(spark, clean)
     assert EXTRACT_SCHEMA  # contract string stays importable for callers

@@ -121,9 +121,11 @@ def test_stream_lang_stats_stateful(spark, tmp_path):
 
 
 def test_incremental_pipeline_restart_equals_batch(spark, tmp_path):
-    """The foreachBatch-orchestrated incremental pipeline, killed between
-    micro-batch waves and restarted from its checkpoint, must produce
-    byte-equal output tables to the one-shot batch run over all pages."""
+    """Three incremental_pipeline calls over a growing pages dir: wave 1;
+    wave 2, whose restarted ingest reads only the delta and whose tables
+    must equal the one-shot batch run over all pages; and a call with no
+    new pages, which must resume in wave 2's output dir (same snapshot)
+    rather than recompute."""
     from osmi_water_spark.plans.pipeline import run_pipeline
     from osmi_water_spark.streaming.incremental import incremental_pipeline
 
@@ -131,22 +133,22 @@ def test_incremental_pipeline_restart_equals_batch(spark, tmp_path):
     work = str(tmp_path / "work")
     rows_a = PG.pages_rows(["w01_chain", "w10_relation"])
     rows_b = PG.pages_rows(["w02_name_change", "w12_donut"])
+    tables = ("nodes", "ways", "relations", "polygons")
 
-    # wave 1 arrives; stream drains and stops (the "kill" between waves)
+    def files(out):
+        return {name: sorted(out[name].inputFiles()) for name in tables}
+
     _write_pages(spark, rows_a, pages_dir)
-    q1, _ = incremental_pipeline(spark, pages_dir, work, finalize=False)
-    assert not q1.isActive
+    first = files(incremental_pipeline(spark, pages_dir, work, with_lineage=False))
 
-    # wave 2 arrives; RESTARTED query processes only the delta, then the
-    # resumable batch DAG finalizes from the accumulated entities table
     _write_pages(spark, rows_b, pages_dir)
-    _, out = incremental_pipeline(spark, pages_dir, work, with_lineage=False)
+    out = incremental_pipeline(spark, pages_dir, work, with_lineage=False)
 
     batch = run_pipeline(
         spark, PG.pages_dataframe(spark, rows_a + rows_b),
         out_dir=None, with_lineage=False,
     )
-    for name in ("nodes", "ways", "relations", "polygons"):
+    for name in tables:
         inc, ref = out[name], batch[name]
         # parquet round-trip flips (nested) nullability flags; names+types
         # must match (simpleString carries no nullability)
@@ -156,23 +158,50 @@ def test_incremental_pipeline_restart_equals_batch(spark, tmp_path):
         assert inc.exceptAll(ref).count() == 0, f"{name}: extra rows"
         assert ref.exceptAll(inc).count() == 0, f"{name}: missing rows"
 
+    # the grown snapshot got a fresh output dir; an unchanged one reuses it
+    second = files(out)
+    assert all(set(first[n]).isdisjoint(second[n]) for n in tables)
+    again = incremental_pipeline(spark, pages_dir, work, with_lineage=False)
+    assert files(again) == second
 
-def test_append_entities_batch_epoch_replay_idempotent(spark, tmp_path):
-    """A replayed foreachBatch epoch (crash between sink write and offset
-    commit) must not duplicate rows."""
-    from osmi_water_spark.operators.extract import extract_entities
-    from osmi_water_spark.streaming.incremental import append_entities_batch
 
-    ents_dir = str(tmp_path / "ents")
-    df = extract_entities(PG.pages_dataframe(spark, PG.pages_rows(["w01_chain"])))
-    append_entities_batch(df, 0, ents_dir)
-    n1 = spark.read.parquet(ents_dir).count()
-    append_entities_batch(df, 0, ents_dir)  # replay of the SAME epoch
-    assert spark.read.parquet(ents_dir).count() == n1
-    # a replay carrying DIFFERENT rows (nondeterministic upstream) must
-    # still be skipped — the committed epoch is the durable truth
-    df2 = extract_entities(PG.pages_dataframe(spark, PG.pages_rows(["w02_chain"])))
-    append_entities_batch(df2, 0, ents_dir)
-    assert spark.read.parquet(ents_dir).count() == n1
-    append_entities_batch(df, 1, ents_dir)  # a genuinely new epoch appends
-    assert spark.read.parquet(ents_dir).count() == 2 * n1
+def test_incremental_entities_layout(spark, tmp_path):
+    """The entities table incremental_pipeline leaves (the file sink,
+    partitioned by kind) equals the batch extraction of the same pages,
+    including a payload-less page (null kind: the Hive default partition)
+    and a malformed-payload page (corrupt = true)."""
+    import os
+    import re
+
+    from pyspark.sql import functions as F
+
+    from osmi_water_spark.operators.extract import EXTRACT_SCHEMA, extract_entities
+    from osmi_water_spark.streaming.incremental import incremental_pipeline
+
+    rows = PG.pages_rows(["w01_chain"])
+    broken, payload_less = dict(rows[0]), dict(rows[1])
+    broken["html"] = broken["html"].replace(b'"kind"', b'"kin', 1)
+    payload_less["html"] = re.sub(
+        rb'(?s)<script type="application/osm\+json">.*?</script>', b"",
+        payload_less["html"],
+    )
+    pages = [broken, payload_less, *rows[2:]]
+    pages_dir = str(tmp_path / "pages")
+    work = str(tmp_path / "work")
+    _write_pages(spark, pages, pages_dir)
+    incremental_pipeline(spark, pages_dir, work, with_lineage=False)
+
+    ents_dir = os.path.join(work, "entities_stream")
+    assert "kind=__HIVE_DEFAULT_PARTITION__" in os.listdir(ents_dir)
+
+    # set operations reject map columns: compare tags as sorted entries
+    def comparable(df):
+        return df.withColumn("tags", F.array_sort(F.map_entries("tags")))
+
+    got = comparable(spark.read.schema(EXTRACT_SCHEMA).parquet(ents_dir))
+    want = comparable(extract_entities(PG.pages_dataframe(spark, pages)))
+    assert got.columns == want.columns
+    assert got.exceptAll(want).count() == 0, "extra rows"
+    assert want.exceptAll(got).count() == 0, "missing rows"
+    assert got.filter("corrupt").count() == 1
+    assert got.filter("kind IS NULL AND NOT corrupt").count() == 1

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+
 import pytest
 
 from osmi_water_spark.functions.width import width2string, with_width
@@ -46,6 +48,19 @@ CASES = [
     ("\x1c5", -1.0, False),
     ("\xa05", -1.0, False),
     ("\u0663", -1.0, False),      # ARABIC-INDIC DIGIT THREE
+    # strtof's other forms: hex floats (p exponent optional), inf, nan
+    ("0x10", 16.0, False),
+    ("0x1.8p1", 3.0, False),
+    ("0x.8", 0.5, False),
+    ("0x10 km", 16000.0, False),
+    ("inf", math.inf, False),
+    ("-Infinity", -math.inf, False),
+    ("nan(12)", math.nan, False),
+    ("0x", -1.0, True),            # strtof reads "0", residue "x"
+    ("0x1p", -1.0, True),          # residue "p"
+    ("infinit", -1.0, True),       # residue "init"
+    ("in", -1.0, False),           # nothing parsed
+    ("5 \u212am", -1.0, True),     # KELVIN SIGN: strcasecmp folds ASCII only
 ]
 
 
@@ -63,7 +78,7 @@ def test_parse_width_case(parsed, raw, w, err):
     row = parsed[CASES.index((raw, w, err))]
     got_w, got_e = float(row.width), bool(row.width_error)
     assert got_e == err, f"{raw!r}: error {got_e} != {err}"
-    assert got_w == pytest.approx(w, rel=1e-6), f"{raw!r}: width {got_w} != {w}"
+    assert got_w == pytest.approx(w, rel=1e-6, nan_ok=True), f"{raw!r}: width {got_w} != {w}"
 
 
 def test_parse_width_in_spark(spark, parsed):
@@ -84,7 +99,7 @@ def test_parse_width_oracle_parity():
     for raw, w, err in CASES:
         ow, oe = oracle_parse(raw)
         assert oe == err, raw
-        assert ow == pytest.approx(w, rel=1e-6), raw
+        assert ow == pytest.approx(w, rel=1e-6, nan_ok=True), raw
 
 
 def test_switch_poss_idempotent(spark):
