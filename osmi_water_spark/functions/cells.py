@@ -1,5 +1,5 @@
-"""Grid-cell spatial index + slippy (z/x/y) raster tile math, all as native
-Spark column expressions (JVM-side, codegen-friendly — no UDFs).
+"""Grid-cell spatial index + slippy (z/x/y) raster tile math, all as SQL
+text over native Spark functions (JVM-side, codegen-friendly — no UDFs).
 
 This is the engine's replacement for the reference's GEOS ``STRtree``
 envelope index (/root/reference/src/areahandler.hpp:57-59,
@@ -23,6 +23,7 @@ raster<->vector assignment demanded by the graft (BASELINE.json:6).
 from __future__ import annotations
 
 import math
+import re
 
 import numpy as np
 from pyspark.sql import Column
@@ -34,17 +35,7 @@ MIN_COVER_RES = 3  # coarsest adaptive cover resolution
 DEFAULT_RES = 7  # ~312 km cells; fixtures are small worlds
 MAX_COVER_CELLS = 64
 
-
-def _clamp(c: Column, lo: Column, hi: Column) -> Column:
-    return F.greatest(lo, F.least(hi, c))
-
-
-def _encode(res: Column, ix: Column, iy: Column) -> Column:
-    return (
-        F.shiftleft(res.cast("long"), RES_BITS_SHIFT)
-        + F.shiftleft(iy.cast("long"), IY_SHIFT)
-        + ix.cast("long")
-    )
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
 # ---- SQL text: the one definition of each cell formula ----
@@ -54,29 +45,48 @@ def _encode(res: Column, ix: Column, iy: Column) -> Column:
 # call instead of dozens of py4j round-trips per nested Column tree while
 # the DAG is built. Literal forms are chosen for exact types and IEEE op
 # order: `180.0D` (double, NOT the default decimal), `0L` for long
-# literals. ``np_cell_of``/``np_cover`` are the numpy twins the Arrow PIP
-# probe needs; tests/test_wkb_cells.py pins them to this text row for row.
+# literals. A resolution is SQL text too, so one formula serves a literal
+# resolution and a per-row one (a cell's own, or a polygon's adaptive
+# cover resolution): `pow(2.0D, res)` is exact for res <= 20, and
+# Catalyst folds it to a literal when res is one, so a literal
+# resolution's plan holds no POWER. ``np_cell_of``/``np_cover`` are the
+# numpy twins the Arrow PIP probe needs; tests/test_wkb_cells.py pins them
+# to this text row for row.
 
 
-def _ix_sql(lon: str, res: int) -> str:
-    n = repr(float(1 << res))
-    return (f"greatest(0L, least({(1 << res) - 1}L, "
-            f"floor((({lon}) + 180.0D) / 360.0D * {n}D)))")
+def _sql(c: Column | str) -> str:
+    """SQL text of a point argument: SQL text as given, or the name of a
+    bare column reference such as ``F.col("lon")`` (the form
+    ``__spark_entry__.py`` passes). Any other Column raises TypeError."""
+    jc = getattr(c, "_jc", None)
+    if jc is None:
+        return c
+    name = jc.toString()
+    if not _IDENT.fullmatch(name):
+        raise TypeError(f"expected SQL text or a bare column reference, got Column {name}")
+    return name
 
 
-def _iy_sql(lat: str, res: int) -> str:
-    n = repr(float(1 << res))
-    return (f"greatest(0L, least({(1 << res) - 1}L, "
-            f"floor((({lat}) + 90.0D) / 180.0D * {n}D)))")
+def _clamp_sql(i: str, res: int | str) -> str:
+    """``i`` clamped to [0, 2^res - 1], the cell range of one axis."""
+    return f"greatest(0L, least(cast(pow(2.0D, {res}) as long) - 1L, {i}))"
 
 
-def _encode_sql(res: str, ix: str, iy: str) -> str:
+def _ix_sql(lon: str, res: int | str) -> str:
+    return _clamp_sql(f"floor((({lon}) + 180.0D) / 360.0D * pow(2.0D, {res}))", res)
+
+
+def _iy_sql(lat: str, res: int | str) -> str:
+    return _clamp_sql(f"floor((({lat}) + 90.0D) / 180.0D * pow(2.0D, {res}))", res)
+
+
+def _encode_sql(res: int | str, ix: str, iy: str) -> str:
     return (f"(shiftleft(cast({res} as long), {RES_BITS_SHIFT}) + "
             f"shiftleft(cast({iy} as long), {IY_SHIFT}) + cast({ix} as long))")
 
 
-def _cell_of_sql(lon: str, lat: str, res: int) -> str:
-    return _encode_sql(str(res), _ix_sql(lon, res), _iy_sql(lat, res))
+def _cell_of_sql(lon: str, lat: str, res: int | str) -> str:
+    return _encode_sql(res, _ix_sql(lon, res), _iy_sql(lat, res))
 
 
 def _cell_res_sql(cell: str) -> str:
@@ -103,24 +113,10 @@ def cell_iy(cell: str) -> Column:
     return F.expr(_cell_iy_sql(cell))
 
 
-def _ix_of(lon: Column, res: int) -> Column:
-    n = F.lit(float(1 << res))
-    raw = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n)
-    return _clamp(raw, F.lit(0), F.lit((1 << res) - 1))
-
-
-def _iy_of(lat: Column, res: int) -> Column:
-    n = F.lit(float(1 << res))
-    raw = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * n)
-    return _clamp(raw, F.lit(0), F.lit((1 << res) - 1))
-
-
 def cell_of(lon: Column | str, lat: Column | str, res: int = DEFAULT_RES) -> Column:
-    """Point -> grid cell id at a fixed resolution."""
-    if isinstance(lon, str) and isinstance(lat, str):
-        return F.expr(_cell_of_sql(lon, lat, res))
-    # Column arm kept only because __spark_entry__.py (frozen) passes F.col
-    return _encode(F.lit(res), _ix_of(lon, res), _iy_of(lat, res))
+    """Point -> grid cell id at a fixed resolution. ``lon``/``lat`` are SQL
+    text or bare column references."""
+    return F.expr(_cell_of_sql(_sql(lon), _sql(lat), res))
 
 
 def cell_of_multi(lon: str, lat: str, resolutions: list[int]) -> Column:
@@ -131,22 +127,20 @@ def cell_of_multi(lon: str, lat: str, resolutions: list[int]) -> Column:
     )
 
 
-def _bbox_cover_cells_sql(minx: str, miny: str, maxx: str, maxy: str, res: int) -> str:
+def bbox_cover_cells(minx: str, miny: str, maxx: str, maxy: str, res: int | str) -> Column:
+    """All cells at ``res`` intersecting the bbox (envelope cover), iy
+    outer, ix inner. ``res`` is an int or SQL text, e.g. a column holding
+    ``adaptive_cover_res``.
+
+    Built from sequence+transform+flatten so it stays inside codegen.
+    """
     # the lambda variables are named so that no caller column can shadow
     # them inside the bbox expressions
     ix0, ix1 = _ix_sql(minx, res), _ix_sql(maxx, res)
     iy0, iy1 = _iy_sql(miny, res), _iy_sql(maxy, res)
-    enc = _encode_sql(str(res), "__cov_ix", "__cov_iy")
-    return (f"flatten(transform(sequence({iy0}, {iy1}), "
-            f"__cov_iy -> transform(sequence({ix0}, {ix1}), __cov_ix -> {enc})))")
-
-
-def bbox_cover_cells(minx: str, miny: str, maxx: str, maxy: str, res: int) -> Column:
-    """All cells at ``res`` intersecting the bbox (envelope cover).
-
-    Built from sequence+transform+flatten so it stays inside codegen.
-    """
-    return F.expr(_bbox_cover_cells_sql(minx, miny, maxx, maxy, res))
+    enc = _encode_sql(res, "__cov_ix", "__cov_iy")
+    return F.expr(f"flatten(transform(sequence({iy0}, {iy1}), "
+                  f"__cov_iy -> transform(sequence({ix0}, {ix1}), __cov_ix -> {enc})))")
 
 
 def _bbox_cover_count_sql(minx: str, miny: str, maxx: str, maxy: str, res: int) -> str:
@@ -176,28 +170,12 @@ def adaptive_cover_res(
 ) -> Column:
     """Finest resolution in [res_min, res_max] whose bbox cover stays within
     ``max_cells`` — bounds the explode fan-out per polygon regardless of
-    polygon size (big lakes coarsen instead of exploding)."""
+    polygon size (big lakes coarsen instead of exploding). The cover itself
+    is ``bbox_cover_cells`` at this resolution: project it into a column
+    once and pass that column's name."""
     return F.expr(
         _adaptive_cover_res_sql(minx, miny, maxx, maxy, res_min, res_max, max_cells)
     )
-
-
-def adaptive_cover_cells(
-    minx: str,
-    miny: str,
-    maxx: str,
-    maxy: str,
-    res_min: int = MIN_COVER_RES,
-    res_max: int = DEFAULT_RES,
-    max_cells: int = MAX_COVER_CELLS,
-) -> Column:
-    """Bbox cover at the adaptive resolution (array<long>)."""
-    res = _adaptive_cover_res_sql(minx, miny, maxx, maxy, res_min, res_max, max_cells)
-    out = _bbox_cover_cells_sql(minx, miny, maxx, maxy, res_min)
-    for r in range(res_min + 1, res_max + 1):
-        out = (f"(CASE WHEN {res} = {r} THEN "
-               f"{_bbox_cover_cells_sql(minx, miny, maxx, maxy, r)} ELSE {out} END)")
-    return F.expr(out)
 
 
 def _np_ix(lon, res: int):
@@ -251,7 +229,7 @@ def np_cover_boxes(minx, miny, maxx, maxy, res_min: int = MIN_COVER_RES,
 def np_cover(minx, miny, maxx, maxy, res_min: int = MIN_COVER_RES,
              res_max: int = DEFAULT_RES,
              max_cells: int = MAX_COVER_CELLS):
-    """Numpy twin of adaptive_cover_res + adaptive_cover_cells over ARRAYS
+    """Numpy twin of adaptive_cover_res + bbox_cover_cells over ARRAYS
     of bboxes: returns (res_per_box int64, flat cell ids int64, owner box
     index int64). Identical IEEE op order to the JVM expressions
     ((x+180.0)/360.0*n, floor, clamp; finest res in [res_min, res_max]
@@ -279,12 +257,9 @@ def k_ring(cell: str, k: int = 1) -> Column:
     resolution, clamped to the grid (the kNN candidate ring, J6). No
     antimeridian wrap (documented limit)."""
     res, ix, iy = _cell_res_sql(cell), _cell_ix_sql(cell), _cell_iy_sql(cell)
-    # shiftleft needs a literal bit count; 2^res via pow (exact for res<=20)
-    hi = f"(cast(pow(2.0D, cast({res} as double)) as long) - 1L)"
 
     def span(i: str) -> str:
-        return (f"sequence(greatest(0L, least({hi}, {i} - {k})), "
-                f"greatest(0L, least({hi}, {i} + {k})))")
+        return f"sequence({_clamp_sql(f'{i} - {k}', res)}, {_clamp_sql(f'{i} + {k}', res)})"
 
     enc = _encode_sql(res, "__ring_ix", "__ring_iy")
     return F.expr(f"flatten(transform({span(iy)}, "
@@ -294,41 +269,26 @@ def k_ring(cell: str, k: int = 1) -> Column:
 # ---------------- raster (slippy z/x/y) tiles ----------------
 
 
-def tile_xy(lon: Column, lat: Column, z: int) -> tuple[Column, Column]:
-    """Web-mercator tile coordinates. Formula written identically to the
-    DuckDB oracle (ln(tan + 1/cos)) so both engines run the same IEEE ops."""
-    n = F.lit(float(1 << z))
-    tx = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n)
-    lat_rad = lat * F.lit(math.pi) / F.lit(180.0)
-    ty = F.floor(
-        (F.lit(1.0) - F.log(F.tan(lat_rad) + F.lit(1.0) / F.cos(lat_rad)) / F.lit(math.pi))
-        / F.lit(2.0)
-        * n
-    )
-    lim = F.lit((1 << z) - 1)
-    return _clamp(tx, F.lit(0), lim), _clamp(ty, F.lit(0), lim)
-
-
-def _tile_xy_sql(lon: str, lat: str, z: int) -> tuple[str, str]:
-    n = repr(float(1 << z))
+def _tile_id_sql(lon: str, lat: str, z: int) -> str:
+    """Web-mercator tile id: x is the cell x at resolution z; y is written
+    identically to the DuckDB oracle (ln(tan + 1/cos)) so both engines run
+    the same IEEE ops."""
     pi = repr(math.pi)
-    lim = (1 << z) - 1
-    tx = f"floor((({lon}) + 180.0D) / 360.0D * {n}D)"
     lat_rad = f"(({lat}) * {pi}D / 180.0D)"
     ty = (f"floor((1.0D - ln(tan({lat_rad}) + 1.0D / cos({lat_rad})) / {pi}D)"
-          f" / 2.0D * {n}D)")
-    return (f"greatest(0L, least({lim}L, {tx}))",
-            f"greatest(0L, least({lim}L, {ty}))")
-
-
-def _tile_id_sql(lon: str, lat: str, z: int) -> str:
-    tx, ty = _tile_xy_sql(lon, lat, z)
-    return _encode_sql(str(z), tx, ty)
+          f" / 2.0D * pow(2.0D, {z}))")
+    return _encode_sql(z, _ix_sql(lon, z), _clamp_sql(ty, z))
 
 
 def tile_id(lon: Column | str, lat: Column | str, z: int) -> Column:
-    if isinstance(lon, str) and isinstance(lat, str):
-        return F.expr(_tile_id_sql(lon, lat, z))
-    # Column arm kept only because __spark_entry__.py (frozen) passes F.col
-    tx, ty = tile_xy(lon, lat, z)
-    return _encode(F.lit(z), tx, ty.cast("long"))
+    """Point -> z/x/y tile id. ``lon``/``lat`` are SQL text or bare column
+    references."""
+    return F.expr(_tile_id_sql(_sql(lon), _sql(lat), z))
+
+
+def cell_tile_id(cell: str, z: int) -> Column:
+    """Cell id (SQL text) -> id of the z tile holding the cell's centre."""
+    n = f"pow(2.0D, {_cell_res_sql(cell)})"
+    lon = f"(({_cell_ix_sql(cell)} + 0.5D) / {n} * 360.0D - 180.0D)"
+    lat = f"(({_cell_iy_sql(cell)} + 0.5D) / {n} * 180.0D - 90.0D)"
+    return F.expr(_tile_id_sql(lon, lat, z))

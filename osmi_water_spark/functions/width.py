@@ -28,7 +28,6 @@ Null input -> (0.0, false) (datastorage.hpp:144-147).
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -116,25 +115,10 @@ def with_width(df: DataFrame, tag_sql: str) -> DataFrame:
     }).drop(*_TMP)
 
 
-def width2string(width: float) -> str:
+def width2string(width: str) -> Column:
     """P7 — datastorage.hpp:193-201. Dead code in the reference (width is
-    never written) but kept for parity tests: round(w*10), zero-pad to 2,
-    re-insert the decimal point before the last digit."""
-    x = float(width) * 10
-    # C round() is half-away-from-zero (Python's round is banker's)
-    rounded = int(np.floor(x + 0.5)) if x >= 0 else int(np.ceil(x - 0.5))
-    s = str(rounded)
-    if len(s) == 1:
-        s = "0" + s
-    return s[:-1] + "." + s[-1]
-
-
-def width2string_col(width: Column) -> Column:
-    """Expression version of width2string (JVM-side)."""
-    rounded = F.round(width.cast("double") * 10).cast("long").cast("string")
-    padded = F.when(F.length(rounded) == 1, F.concat(F.lit("0"), rounded)).otherwise(rounded)
-    return F.concat(
-        F.substring(padded, 1, F.length(padded) - 1).cast("string"),
-        F.lit("."),
-        F.substring(padded, -1, 1),
-    )
+    never written) but kept for parity: round(w*10) half away from zero
+    (C ``round``; Spark's ``round`` is HALF_UP), zero-pad to 2 digits,
+    re-insert the decimal point before the last digit. ``width``: SQL text."""
+    r = f"cast(cast(round(cast(({width}) as double) * 10) as long) as string)"
+    return F.expr(f"regexp_replace(lpad({r}, greatest(length({r}), 2), '0'), '(.)$', '.$1')")

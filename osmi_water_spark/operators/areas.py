@@ -86,10 +86,6 @@ def _chain_rings(segments: list[np.ndarray]) -> tuple[list[np.ndarray], bool]:
     return rings, ok
 
 
-def _ring_contains_point(ring: np.ndarray, x: float, y: float) -> bool:
-    return bool(W.points_in_rings(np.array([x]), np.array([y]), [ring])[0])
-
-
 def assemble_polygons(
     outer_segs: list[np.ndarray], inner_segs: list[np.ndarray]
 ) -> list[list[np.ndarray]] | None:
@@ -105,9 +101,9 @@ def assemble_polygons(
         return None
     polys: list[list[np.ndarray]] = [[o] for o in outers]
     for hole in inners:
-        hx, hy = float(hole[0, 0]), float(hole[0, 1])
+        hx, hy = hole[:1, 0], hole[:1, 1]
         for poly in polys:
-            if _ring_contains_point(poly[0], hx, hy):
+            if W.points_in_rings(hx, hy, [poly[0]])[0]:
                 poly.append(hole)
                 break
     return polys

@@ -301,10 +301,10 @@ def pip_join(
     if not res_list:
         return spark.createDataFrame([], REFINE_SCHEMA)
 
+    # each part's cover resolution is projected once; the cover reads it
     cover = polygon_parts.withColumn(
-        "cell",
-        F.explode(C.adaptive_cover_cells(*box, res_min, res_max, max_cells)),
-    )
+        "_cover_res", C.adaptive_cover_res(*box, res_min, res_max, max_cells)
+    ).withColumn("cell", F.explode(C.bbox_cover_cells(*box, "_cover_res")))
     pts = points.select(
         "point_id",
         "lon",

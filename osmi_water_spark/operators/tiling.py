@@ -16,16 +16,10 @@ NODE_ERROR_CLASSES = [
 ]
 
 
-def assign_node_tiles(nodes_out: DataFrame, z: int) -> DataFrame:
-    """nodes output -> + tile_id column (vector->raster assignment)."""
-    return nodes_out.withColumn("tile_id", C.tile_id("lon", "lat", z))
-
-
 def tile_validation(nodes_out: DataFrame, z: int) -> DataFrame:
     """Per-tile x error-class counts (the validation tables replacing the
     sqlite sink, BASELINE.json:6). Classes: the six error flags, the two
     specifics, and 'normal'."""
-    n = assign_node_tiles(nodes_out, z)
     # one SQL-text expression, parsed once
     whens = ", ".join(
         f"CASE WHEN {c} = 'true' THEN '{c.removesuffix('_error')}' END"
@@ -33,8 +27,8 @@ def tile_validation(nodes_out: DataFrame, z: int) -> DataFrame:
     )
     classes = (f"array_compact(array({whens}, "
                f"CASE WHEN specific != '' THEN specific END))")
-    exploded = n.select(
-        "tile_id",
+    exploded = nodes_out.select(
+        C.tile_id("lon", "lat", z).alias("tile_id"),
         F.expr(
             f"explode(CASE WHEN size({classes}) > 0 THEN {classes} "
             f"ELSE array('normal') END)"
@@ -47,20 +41,13 @@ def tile_validation(nodes_out: DataFrame, z: int) -> DataFrame:
     )
 
 
-def feature_tile_assignment(df: DataFrame, kind: str, id_col: str, z: int, cell_res: int) -> DataFrame:
+def feature_tile_assignment(df: DataFrame, kind: str, id_col: str, z: int) -> DataFrame:
     """Geometry tables -> (kind, feature_id, tile_id) via the h3_cells
-    decoration: raster<->vector mapping is cell-bbox -> tile cover.
-
-    The cell-centre -> tile chain is SQL text handed to ``C.tile_id`` (one
-    parse for the whole chain)."""
-    cell = F.explode("h3_cells").alias("cell")
-    c = df.select(F.col(id_col).alias("feature_id"), cell)
-    # cell centre -> tile (cells are finer than or comparable to tiles here)
-    n = f"pow(2.0D, cast({C._cell_res_sql('cell')} as double))"
-    lon = f"(({C._cell_ix_sql('cell')} + 0.5D) / {n} * 360.0D - 180.0D)"
-    lat = f"(({C._cell_iy_sql('cell')} + 0.5D) / {n} * 180.0D - 90.0D)"
+    decoration: each cover cell goes to the tile holding its centre (cells
+    are finer than or comparable to tiles here)."""
+    c = df.select(F.col(id_col).alias("feature_id"), F.explode("h3_cells").alias("cell"))
     return c.select(
         F.lit(kind).alias("table"),
         "feature_id",
-        C.tile_id(lon, lat, z).alias("tile_id"),
+        C.cell_tile_id("cell", z).alias("tile_id"),
     ).distinct()

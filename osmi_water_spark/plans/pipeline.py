@@ -93,17 +93,12 @@ class Sink:
     is exercised with parquet by tests/test_determinism_resume.py and the
     iceberg branch is plain ``writeTo``/``read.table`` calls."""
 
-    def __init__(self, out_dir: str, fmt: str = "parquet", catalog: str | None = None,
-                 partition_spec: dict[str, str] | None = None):
+    def __init__(self, out_dir: str, fmt: str = "parquet", catalog: str | None = None):
         if fmt not in ("parquet", "iceberg"):
             raise ValueError(f"unknown sink format: {fmt}")
         if fmt == "iceberg" and not catalog:
             raise ValueError("iceberg sink needs a catalog (e.g. 'prod.db')")
         self.out_dir, self.fmt, self.catalog = out_dir, fmt, catalog
-        # stage name -> hive-partition column: a fused multi-output stage
-        # (e.g. 'tiles') is written once partitioned by its discriminator,
-        # so each logical output reads back with partition pruning.
-        self.partition_spec = partition_spec or {}
 
     def _table(self, name: str) -> str:
         return f"{self.catalog}.{name}"
@@ -122,14 +117,7 @@ class Sink:
 
     def write(self, df: DataFrame, name: str) -> None:
         if self.fmt == "parquet":
-            if name in self.partition_spec:
-                (
-                    df.write.mode("overwrite")
-                    .partitionBy(self.partition_spec[name])
-                    .parquet(self.path(name))
-                )
-            else:
-                df.write.mode("overwrite").parquet(self.path(name))
+            df.write.mode("overwrite").parquet(self.path(name))
         else:
             df.writeTo(self._table(name)).createOrReplace()
 
@@ -202,7 +190,7 @@ def run_pipeline(
     """pages -> the four output tables + tile tables (+ checkpoints).
 
     Every intermediate that several consumers read (entities, located
-    ways, way geometries, areas, PIP parts, pass-3 masks) is materialized
+    ways, way geometries, areas, pass-3 masks) is materialized
     once by ``_checkpoint`` as a local checkpoint, in both modes; the run
     releases all of them before it returns or raises. Without
     ``out_dir`` (cached mode) the returned tables are materialized local
@@ -217,10 +205,7 @@ def run_pipeline(
     of the table ``stream_extract``'s file sink has committed)."""
     held: list[DataFrame] = []  # every local checkpoint this run makes
     try:
-        sink = (
-            Sink(out_dir, sink_format, sink_catalog, partition_spec={"tiles": "_t"})
-            if out_dir else None
-        )
+        sink = Sink(out_dir, sink_format, sink_catalog) if out_dir else None
         lineage = Lineage() if (with_lineage and sink) else None
 
         # ---- Stage A: extraction (skipped when entities are handed over) ----
@@ -251,11 +236,11 @@ def run_pipeline(
         way_errors = parts["way_errors"]
         relations_out = AS.assemble_relations(relations, parts["geoms"], cell_res)
 
-        # areas and PIP parts fan out to several consumers below — each is
-        # materialized here, so its consumers' plans start at a scan
+        # areas fan out to several consumers below (the polygons table and
+        # the PIP parts, which pip_join reads twice) — materialized here, so
+        # their plans start at a scan
         areas = _checkpoint(AR.build_areas(ways_located, relations), held)
         polygons_out = AR.polygon_table(areas, cell_res)
-        pip_parts = _checkpoint(AR.pip_index(areas), held)
 
         # ---- Stage D: connectivity (one mask per endpoint node) ----
         masks = CN.error_mask(CN.node_stats(remembered))
@@ -264,10 +249,11 @@ def run_pipeline(
         # mask-0 nodes ride through both passes unchanged (E4); after3 is
         # read twice by pass 4 (its PIP points and the contained join)
         after3 = _checkpoint(FP.apply_pass3(masks, ways), held)
-        # pip_join picks its strategy from the materialized parts: when they
-        # fit the broadcast bound, one collect builds a cell index and the
+        # pip_join picks its strategy from an aggregate over the PIP parts
+        # (a filter plus an inline of the areas checkpoint): when they fit
+        # the broadcast bound, one collect builds a cell index and the
         # points stream through a single mapInArrow probe (no explode, no join)
-        final = FP.apply_pass4(after3, locations, pip_parts, salt=salt)
+        final = FP.apply_pass4(after3, locations, AR.pip_index(areas), salt=salt)
 
         # ---- Stage F: finalize nodes table (E5 + O4) ----
         way_error_rows = way_errors.select("node_id", F.lit(E.WAY).alias("final_mask"))
@@ -315,17 +301,16 @@ def run_pipeline(
             "fid", F.when(F.col("way_id") != 0, F.col("way_id")).otherwise(F.col("relation_id"))
         )
         ta = (
-            TI.feature_tile_assignment(out["ways"], "ways", "way_id", tile_z, cell_res)
-            .unionByName(TI.feature_tile_assignment(polys_fid, "polygons", "fid", tile_z, cell_res))
+            TI.feature_tile_assignment(out["ways"], "ways", "way_id", tile_z)
+            .unionByName(TI.feature_tile_assignment(polys_fid, "polygons", "fid", tile_z))
             .unionByName(
-                TI.feature_tile_assignment(
-                    out["relations"], "relations", "relation_id", tile_z, cell_res
-                )
+                TI.feature_tile_assignment(out["relations"], "relations", "relation_id", tile_z)
             )
         )
         # the two tile tables are FUSED into one stage: a union-with-kind
-        # written once (hive-partitioned by the discriminator, so each logical
-        # output reads back with partition pruning). Round 3 ran them as two
+        # written once, unpartitioned, with the discriminator ``_t`` as a
+        # plain column (a partitioned write of an empty table leaves no file
+        # to read the schema back from). Round 3 ran them as two
         # jobs with two commits; the per-stage profile showed the small stages
         # at eff 0.4-0.55 — pure fixed cost, halved by the fusion.
         tiles_union = tv.withColumn("_t", F.lit("v")).unionByName(

@@ -1192,13 +1192,12 @@ FROM mem m JOIN orders o ON o.o_orderkey = m.ref
 
 def q_p7_width2string(spark, sf_dir):
     """P7 — the reference's dead-code width formatter, JVM-side expression."""
-    from osmi_water_spark.functions.width import width2string_col
+    from osmi_water_spark.functions.width import width2string
 
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    k = F.col("p_partkey")
     # positive widths with one decimal: w = (k%500)/10 + 0.25
-    w = ((k % 500) / 10.0 + 0.25)
-    return part.select(k.alias("part_id"), width2string_col(w).alias("width_str"))
+    w = "(p_partkey % 500) / 10.0D + 0.25D"
+    return part.select(F.col("p_partkey").alias("part_id"), width2string(w).alias("width_str"))
 
 
 SQL_P7 = """

@@ -155,10 +155,13 @@ def incremental_pipeline(
     stream_extract(
         spark, pages_dir, ents_dir, os.path.join(work_dir, "_stream_ckpt")
     ).awaitTermination()
-    # a pre-contract-change entities dir must fail loudly, not be silently
-    # null-filled by the forced schema (ADVICE.md r3)
-    validate_entities_schema(spark, ents_dir)
     entities = spark.read.schema(EXTRACT_SCHEMA).parquet(ents_dir)
+    n_files = len(entities.inputFiles())
+    if n_files:
+        # a pre-contract-change entities dir must fail loudly, not be
+        # silently null-filled by the forced schema (ADVICE.md r3); a sink
+        # that has committed no file yet has no schema to check
+        validate_entities_schema(spark, ents_dir)
     # batch-half checkpoints are keyed by the snapshot's committed file
     # count, which grows with every non-empty ingest batch: a call over a
     # GROWN table gets a fresh output dir (stage outputs of the old
@@ -166,6 +169,6 @@ def incremental_pipeline(
     # last completed stage
     return run_pipeline(
         spark, pages=None, entities=entities,
-        out_dir=os.path.join(work_dir, f"out_f{len(entities.inputFiles()):05d}"),
+        out_dir=os.path.join(work_dir, f"out_f{n_files:05d}"),
         resume=True, **pipeline_kw,
     )

@@ -54,11 +54,11 @@ def main() -> None:
     # the timed windows); over MAX_PROBE_CELLS, pip_join probes coarser
     cover_cells = (
         parts.withColumn(
-            "cell",
-            F.explode(
-                C.adaptive_cover_cells("minx", "miny", "maxx", "maxy",
-                                       C.MIN_COVER_RES, res_max, max_cells)
-            ),
+            "_cover_res",
+            C.adaptive_cover_res("minx", "miny", "maxx", "maxy",
+                                 C.MIN_COVER_RES, res_max, max_cells),
+        ).withColumn(
+            "cell", F.explode(C.bbox_cover_cells("minx", "miny", "maxx", "maxy", "_cover_res")),
         ).select("cell", "area_key").distinct().count()
     )
 

@@ -83,6 +83,30 @@ def test_lineage_counts_every_written_stage(spark, tmp_path):
         assert r.wall_ms >= 0, r.stage
 
 
+def test_checkpointed_run_on_empty_entities(spark, tmp_path):
+    """An empty entities table runs in checkpointed mode and resumes: every
+    stage dir, the tiles one included, holds a file to read the schema
+    back from, and the ``resume=True`` re-run reads the six empty tables
+    without rewriting them."""
+    import os
+
+    from osmi_water_spark.operators.extract import EXTRACT_SCHEMA
+
+    out_dir = str(tmp_path / "ckpt_empty")
+    tables = ("ways", "relations", "polygons", "nodes", "tile_validation", "tile_assignment")
+    empty = spark.createDataFrame([], EXTRACT_SCHEMA)
+    first = run_pipeline(spark, None, entities=empty, out_dir=out_dir, resume=True,
+                         with_lineage=False)
+    assert {t: first[t].count() for t in tables} == dict.fromkeys(tables, 0)
+    tiles_mtime = os.path.getmtime(f"{out_dir}/tiles/_SUCCESS")
+    again = run_pipeline(spark, None, entities=empty, out_dir=out_dir, resume=True,
+                         with_lineage=False)
+    for t in tables:
+        assert again[t].columns == first[t].columns, t
+        assert again[t].count() == 0, t
+    assert os.path.getmtime(f"{out_dir}/tiles/_SUCCESS") == tiles_mtime
+
+
 def test_rerun_overwrite_consistency(spark, tmp_path):
     """Stale state underneath: a non-resume re-run overwrites checkpoints
     and still produces the same tables."""

@@ -165,6 +165,24 @@ def test_incremental_pipeline_restart_equals_batch(spark, tmp_path):
     assert files(again) == second
 
 
+def test_incremental_pipeline_empty_pages(spark, tmp_path):
+    """A pages dir that holds no files yet: the sink commits no file, the
+    schema check is skipped (there is nothing stale to check), and the
+    batch half returns six empty tables from ``out_f00000``."""
+    import os
+
+    from osmi_water_spark.streaming.incremental import incremental_pipeline
+
+    pages_dir = str(tmp_path / "pages")
+    work = str(tmp_path / "work")
+    os.makedirs(pages_dir)
+    out = incremental_pipeline(spark, pages_dir, work, with_lineage=False)
+    tables = ("nodes", "ways", "relations", "polygons", "tile_validation", "tile_assignment")
+    assert {t: out[t].count() for t in tables} == dict.fromkeys(tables, 0)
+    assert all("/out_f00000/" in f for t in tables for f in out[t].inputFiles())
+    assert os.path.isdir(os.path.join(work, "out_f00000", "tiles"))
+
+
 def test_incremental_entities_layout(spark, tmp_path):
     """The entities table incremental_pipeline leaves (the file sink,
     partitioned by kind) equals the batch extraction of the same pages,

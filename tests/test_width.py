@@ -119,10 +119,13 @@ def test_switch_poss_idempotent(spark):
     assert got == [e for _, e in cases]
 
 
-def test_width2string():
+def test_width2string(spark):
     # datastorage.hpp:193-201 (dead code in the reference, parity anyway)
-    assert width2string(3.5) == "3.5"
-    assert width2string(0.5) == "0.5"
-    assert width2string(12.34) == "12.3"
-    assert width2string(0.04) == "0.0"
-    assert width2string(3.25) == "3.3"  # C round: half away from zero
+    cases = [
+        (3.5, "3.5"), (0.5, "0.5"), (12.34, "12.3"), (0.04, "0.0"),
+        (3.25, "3.3"),  # C round: half away from zero
+    ]
+    row = spark.range(1).select(
+        *[width2string(f"{w!r}D").alias(f"w{i}") for i, (w, _) in enumerate(cases)]
+    ).first()
+    assert list(row) == [want for _, want in cases]

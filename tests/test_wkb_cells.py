@@ -94,10 +94,10 @@ def test_bbox_cover_and_adaptive(spark):
     df = spark.createDataFrame([(0.0, 0.0, 10.0, 5.0)], "minx double, miny double, maxx double, maxy double")
     cols = ["minx", "miny", "maxx", "maxy"]
     row = df.select(
+        *cols,
         F.size(C.bbox_cover_cells(*cols, 7)).alias("n7"),
         C.adaptive_cover_res(*cols, 3, 7, 8).alias("ar"),
-        F.size(C.adaptive_cover_cells(*cols, 3, 7, 8)).alias("an"),
-    ).first()
+    ).select("n7", "ar", F.size(C.bbox_cover_cells(*cols, "ar")).alias("an")).first()
     # res7 cells are 2.8125 x 1.40625 deg -> 10deg spans 4-5 cells x, 5deg 4-5 cells y
     assert row.n7 >= 12
     assert row.an <= 8  # adaptive cover respects the bound
@@ -136,15 +136,14 @@ def test_k_ring(spark):
 
 
 def test_tile_xy_reference_values(spark):
-    # Zurich at z=10 -> x=536, y=358 (known slippy-map value)
+    # Zurich at z=10 -> x=536, y=358 (known slippy-map value), from SQL
+    # text and from bare column references alike
     df = spark.createDataFrame([(8.54, 47.37)], "lon double, lat double")
-    tx, ty = C.tile_xy(F.col("lon"), F.col("lat"), 10)
-    row = df.select(tx.alias("x"), ty.alias("y")).first()
-    assert (row.x, row.y) == (536, 358)
-    t = df.select(C.tile_id("lon", "lat", 10).alias("t")).select(
-        C.cell_res("t").alias("z"), C.cell_ix("t").alias("x"), C.cell_iy("t").alias("y"),
-    ).first()
-    assert (t.z, t.x, t.y) == (10, 536, 358)
+    for lon, lat in (("lon", "lat"), (F.col("lon"), F.col("lat"))):
+        t = df.select(C.tile_id(lon, lat, 10).alias("t")).select(
+            C.cell_res("t").alias("z"), C.cell_ix("t").alias("x"), C.cell_iy("t").alias("y"),
+        ).first()
+        assert (t.z, t.x, t.y) == (10, 536, 358)
 
 
 def test_errors_switch_poss(spark):
@@ -169,9 +168,9 @@ def test_errors_switch_poss(spark):
 
 
 def test_sql_text_twins_match_column_builders(spark):
-    """cell_of and tile_id keep a Column arm because __spark_entry__.py
-    calls them with F.col; it must produce identical values and types to
-    the SQL text for the same points."""
+    """cell_of and tile_id read a bare column reference by name because
+    __spark_entry__.py calls them with F.col: identical values and types
+    to the SQL text for the same points. Any other Column is refused."""
     import random
 
     rng = random.Random(11)
@@ -195,6 +194,43 @@ def test_sql_text_twins_match_column_builders(spark):
         )
     ).count()
     assert bad == 0
+    for fn, arg in ((C.cell_of, 7), (C.tile_id, 8)):
+        with pytest.raises(TypeError):
+            fn(F.col("lon") + 1, F.col("lat"), arg)
+        with pytest.raises(TypeError):
+            fn(F.col("lon"), F.col("lat").alias("y"), arg)
+
+
+def test_literal_resolutions_fold(spark):
+    """A resolution is SQL text (``pow(2.0D, res)``): a literal one folds
+    to constants, so the optimized plans hold no POWER, and a per-row
+    resolution column gives the same cells as the literal forms."""
+    import random
+
+    rng = random.Random(5)
+    rows = [(rng.uniform(-185, 185), rng.uniform(-95, 95), rng.choice([3, 5, 7, 8]))
+            for _ in range(400)]
+    df = spark.createDataFrame(rows, "lon double, lat double, r int")
+    box = ("lon", "lat", "lon + 10.0D", "lat + 5.0D")
+    literal = df.select(  # aliased: a default name is the expression's text
+        C.cell_of("lon", "lat", 7).alias("c"), C.tile_id("lon", "lat", 8).alias("t"),
+        C.bbox_cover_cells(*box, 7).alias("cov"),
+    )
+    plan = literal._jdf.queryExecution().optimizedPlan().toString().upper()
+    assert "POW" not in plan
+
+    def per_res(fn):
+        return "CASE " + " ".join(f"WHEN r = {v} THEN {fn(v)}" for v in (3, 5, 7, 8)) + " END"
+
+    got = df.select(
+        F.expr(C._cell_of_sql("lon", "lat", "r")).alias("c"),
+        F.expr(per_res(lambda v: C._cell_of_sql("lon", "lat", v))).alias("c_lit"),
+        C.bbox_cover_cells(*box, "r").alias("cov"),
+        *[C.bbox_cover_cells(*box, v).alias(f"cov{v}") for v in (3, 5, 7, 8)],
+    ).collect()
+    for row in got:
+        assert row.c == row.c_lit
+        assert row.cov == row[f"cov{row.c_lit >> C.RES_BITS_SHIFT}"]
 
 
 def _cover_edge_bboxes(res_max: int, max_cells: int) -> list[tuple]:
@@ -219,9 +255,11 @@ def _cover_edge_bboxes(res_max: int, max_cells: int) -> list[tuple]:
 
 def test_np_kernels_match_sql_cover(spark):
     """The map-side PIP probe computes cells in numpy (np_cell_of, np_cover)
-    and joins them against covers the SQL text defines, so the numpy
-    kernels must match the SQL row for row: resolution per bbox, cell ids
-    in order, owner index, and point cells at every resolution."""
+    and joins them against covers the SQL text defines (the bbox cover at
+    each box's adaptive resolution, as the partitioned join composes it),
+    so the numpy kernels must match the SQL row for row: resolution per
+    bbox, cell ids in order, owner index, and point cells at every
+    resolution."""
     import random
 
     rng = random.Random(11)
@@ -239,7 +277,8 @@ def test_np_kernels_match_sql_cover(spark):
         got = df.select(
             "i", *cols,
             C.adaptive_cover_res(*cols, res_min, res_max, max_cells).alias("res"),
-            C.adaptive_cover_cells(*cols, res_min, res_max, max_cells).alias("cells"),
+        ).select(
+            "i", *cols, "res", C.bbox_cover_cells(*cols, "res").alias("cells"),
         ).orderBy("i").collect()
         res, cells, owner = C.np_cover(
             [r.minx for r in got], [r.miny for r in got],
