@@ -163,11 +163,5 @@ def point_wkb_array(lon: "pa.Array", lat: "pa.Array") -> "pa.Array":
         ho = out_off[ok_idx]
         data[ho] = 1
         data[ho + 1] = 1  # POINT
-        for lo in range(0, ok_idx.size, _CHUNK):
-            hi = min(lo + _CHUNK, ok_idx.size)
-            sl = ok_idx[lo:hi]
-            xb = x[sl].astype("<f8").view(np.uint8).reshape(-1, 8)
-            yb = y[sl].astype("<f8").view(np.uint8).reshape(-1, 8)
-            data[ho[lo:hi, None] + 5 + np.arange(8, dtype=np.int64)] = xb
-            data[ho[lo:hi, None] + 13 + np.arange(8, dtype=np.int64)] = yb
+        _scatter_coords(data, ho + 5, x[ok_idx], y[ok_idx])
     return _binary_array(n, ok, out_off, data)

@@ -16,25 +16,29 @@ scripts/make_dedup_fixtures.py — an independent plain-Python scalar
 implementation over the deterministic sources/docs_gen corpus):
 
 * token hash   = crc32(utf-8 token), tokens = ``\\W+`` split of lower()
-* n-gram hash  = FNV-1a fold of the n token hashes in uint64 wrap
-  arithmetic (``g = (g ^ h) * FNV_PRIME mod 2^64`` from the FNV offset
-  basis), reinterpreted as signed int64; docs shorter than n tokens fold
-  all their tokens into one gram
+* n-gram hash  = FNV-1a fold of the 3 (``_NGRAM``) token hashes in uint64
+  wrap arithmetic (``g = (g ^ h) * FNV_PRIME mod 2^64`` from the FNV
+  offset basis), reinterpreted as signed int64; docs shorter than 3
+  tokens fold all their tokens into one gram
 * minhash      = per-perm min of ``(a*x + b)`` in int64 wrap, mod 2^61-1
-* band hash    = md5 of the comma-joined signature slice (JVM-side)
+* band hash    = md5 of the comma-joined 4-row signature slice, 16 bands
+  (JVM-side)
 * simhash      = sign-sum of per-token FNV-1a-64 bits (byte-wise FNV-1a
   over the utf-8 token — round 4 replaced blake2b, whose per-token Python
   digest was the last interpreted hash on the hot path; fixtures
   regenerated)
 
 The batch path tokenizes once (``_batch_tokens``) and hashes each
-DISTINCT token once per Arrow batch (pd.factorize); the token hashes
-themselves are vectorized: the distinct tokens' utf-8 bytes are laid
-flat via pyarrow and crc32/FNV-1a run as numpy passes over byte
-POSITIONS (loop length = longest token, not token count). Every gram
-fold / permutation / sign-sum is flat vectorized numpy, and the Jaccard
-verify counts all pairs' intersections in one flat lexsort pass — there
-is no per-token, per-gram, or per-pair Python in the hot path.
+DISTINCT token once per Arrow batch (pd.factorize). The crc32 is one
+zlib call per distinct token: a numpy byte-position crc32 measured no
+faster (27 ms vs zlib's 25 ms for 167,014 distinct tokens, 4-core
+host), so zlib's C loop is the one crc32. SimHash's FNV-1a, which no C
+library here provides, runs as numpy passes over the byte POSITIONS of
+the distinct tokens laid flat via pyarrow (loop length = longest token,
+not token count). Every gram fold / permutation / sign-sum is flat
+vectorized numpy, and the Jaccard verify counts all pairs'
+intersections in one flat lexsort pass — there is no per-gram or
+per-pair Python in the hot path.
 """
 
 from __future__ import annotations
@@ -80,15 +84,20 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 _FNV_PRIME = 1099511628211
 _FNV_OFFSET = 14695981039346656037
 _FNV_PRIME_U = np.uint64(_FNV_PRIME)
+# the signature shape: tokens per gram, LSH bands x rows per band
+_NGRAM = 3
+_BANDS = 16
+_BAND_ROWS = _NUM_PERM // _BANDS
 
 
-def _gram_hash_ints(text: str, n: int = 3) -> list[int]:
+def _gram_hash_ints(text: str) -> list[int]:
     """Scalar SPEC of the gram hash (plain Python ints, explicit mod 2^64):
     the batch path and the fixture oracle must both match this exactly."""
     toks = [t for t in _TOKEN_RE.split((text or "").lower()) if t]
     hs = [zlib.crc32(t.encode()) for t in toks]
     if not hs:
         return []
+    n = _NGRAM
     windows = [hs] if len(hs) < n else [hs[i : i + n] for i in range(len(hs) - n + 1)]
     out = []
     for w in windows:
@@ -99,123 +108,18 @@ def _gram_hash_ints(text: str, n: int = 3) -> list[int]:
     return out
 
 
-def shingle_hashes(text: str, n: int = 3) -> np.ndarray:
+def shingle_hashes(text: str) -> np.ndarray:
     """Sorted DISTINCT gram hashes of one doc (the Jaccard set spec)."""
-    return np.array(sorted(set(_gram_hash_ints(text, n))), dtype=np.int64)
+    return np.array(sorted(set(_gram_hash_ints(text))), dtype=np.int64)
 
 
-def minhash_signature(text: str, n: int = 3) -> np.ndarray:
-    h = shingle_hashes(text, n)
+def minhash_signature(text: str) -> np.ndarray:
+    h = shingle_hashes(text)
     if h.size == 0:
         return np.zeros(_NUM_PERM, dtype=np.int64)
     # (a*x + b) mod p for all perms at once: (P, S) matrix min over shingles
     vals = (np.multiply.outer(_A, h) + _B[:, None]) % _MERSENNE
     return vals.min(axis=1)
-
-
-def _make_crc32_table() -> np.ndarray:
-    t = np.arange(256, dtype=np.uint32)
-    for _ in range(8):
-        t = np.where(t & 1, np.uint32(0xEDB88320) ^ (t >> np.uint32(1)), t >> np.uint32(1))
-    return t
-
-
-_CRC32_TABLE = _make_crc32_table()
-
-
-def _flat_utf8(strs) -> tuple[np.ndarray, np.ndarray]:
-    """Strings -> (flat utf-8 byte array, int64 offsets) via pyarrow — the
-    encode happens once in C, no per-string Python."""
-    import pyarrow as pa
-
-    arr = pa.array(strs, type=pa.large_string())
-    offs = np.frombuffer(arr.buffers()[1], dtype=np.int64)[
-        arr.offset : arr.offset + len(arr) + 1
-    ]
-    dbuf = arr.buffers()[2]
-    data = np.frombuffer(dbuf, dtype=np.uint8) if dbuf is not None else np.empty(0, np.uint8)
-    return data, offs
-
-
-def _byte_position_loop(strs, init, step, scalar_tail=None, tail_cutoff=8):
-    """Shared driver for byte-wise string hashes, vectorized over STRINGS:
-    the Python loop runs over byte POSITIONS (bounded by the longest
-    string), each iteration a flat numpy table/multiply step over every
-    string still live at that position (length-sorted so the live set is a
-    prefix — total work O(total bytes), like the scalar hash).
-
-    Two guards against the adversarial webtext shape — a batch whose
-    longest "token" is a multi-KB unbroken blob (minified JS, base64),
-    which would otherwise run thousands of interpreted positions on a
-    near-empty live set (VERDICT.md r4 What's-wrong #4):
-      - ALL positions' live-prefix counts come from ONE vectorized
-        searchsorted, not a Python-level binary search per position;
-      - once at most ``tail_cutoff`` strings remain live, ``scalar_tail``
-        (value-identical per-string finisher: zlib for crc32, int-loop for
-        FNV) hashes each remainder in one call instead of per-position
-        1-to-8-element numpy ops (measured 308 ms -> ~2 ms on a 200-token
-        batch with one 32 KiB blob, scripts/tokenhash_bench.py)."""
-    data, offs = _flat_utf8(strs)
-    lens = np.diff(offs)
-    n = lens.size
-    order = np.argsort(-lens, kind="stable")
-    lens_s, starts_s = lens[order], offs[:-1][order]
-    neg = -lens_s  # ascending; live count at position k = #(lens > k)
-    h = np.full(n, init[0], dtype=init[1])
-    maxlen = int(lens_s[0]) if n else 0
-    live = np.searchsorted(neg, -np.arange(1, maxlen + 1, dtype=np.int64), side="right")
-    for k in range(maxlen):
-        m = int(live[k])
-        if m == 0:
-            break
-        if scalar_tail is not None and m <= tail_cutoff:
-            for i in range(m):
-                st, ln = int(starts_s[i]), int(lens_s[i])
-                h[i] = scalar_tail(int(h[i]), data[st + k : st + ln].tobytes())
-            break
-        h[:m] = step(h[:m], data[starts_s[:m] + k])
-    out = np.empty(n, dtype=init[1])
-    out[order] = h
-    return out
-
-
-def _crc32_tail(state: int, tail: bytes) -> int:
-    """Finish one string's CRC-32 from the loop's INTERNAL state (zlib's
-    public value = state ^ 0xFFFFFFFF on both sides of the call)."""
-    import zlib
-
-    return zlib.crc32(tail, state ^ 0xFFFFFFFF) ^ 0xFFFFFFFF
-
-
-def _crc32_strs(strs) -> np.ndarray:
-    """Vectorized zlib.crc32 over each utf-8 string (identical values:
-    table-driven reflected CRC-32, init/final xor 0xFFFFFFFF)."""
-    h = _byte_position_loop(
-        strs, (0xFFFFFFFF, np.uint32),
-        lambda c, b: _CRC32_TABLE[(c ^ b) & np.uint32(0xFF)] ^ (c >> np.uint32(8)),
-        scalar_tail=_crc32_tail,
-    )
-    return (h ^ np.uint32(0xFFFFFFFF)).astype(np.uint64)
-
-
-def _fnv_tail(state: int, tail: bytes) -> int:
-    """Finish one string's FNV-1a-64 with a plain-int byte loop (exact
-    uint64 wrap via the mask)."""
-    p = int(_FNV_PRIME_U)
-    for b in tail:
-        state = ((state ^ b) * p) & 0xFFFFFFFFFFFFFFFF
-    return state
-
-
-def _fnv1a64_strs(strs) -> np.ndarray:
-    """Vectorized byte-wise FNV-1a-64 over each utf-8 string (the simhash
-    token hash): h = (h ^ byte) * FNV_PRIME in uint64 wrap, from the
-    offset basis. Matches _token_hash exactly."""
-    return _byte_position_loop(
-        strs, (_FNV_OFFSET, np.uint64),
-        lambda h, b: (h ^ b) * _FNV_PRIME_U,
-        scalar_tail=_fnv_tail,
-    )
 
 
 def _batch_tokens(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -234,42 +138,37 @@ def _batch_tokens(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 
 def _token_hashes_batch(texts) -> tuple[np.ndarray, np.ndarray]:
-    """All docs' tokens -> (flat crc32 hashes uint64, per-doc offsets); the
-    distinct tokens' crc32s are one vectorized byte-position pass
-    (_crc32_strs) — no per-token Python."""
+    """All docs' tokens -> (flat crc32 hashes uint64, per-doc offsets): one
+    zlib.crc32 call per DISTINCT token of the batch, expanded to every
+    occurrence by one gather."""
     codes, uniques, offsets = _batch_tokens(texts)
-    return _crc32_strs(uniques)[codes], offsets
+    h = np.fromiter(map(zlib.crc32, map(str.encode, uniques)), dtype=np.uint64, count=len(uniques))
+    return h[codes], offsets
 
 
-def _gram_hashes(th: np.ndarray, offsets: np.ndarray, n: int = 3) -> tuple[np.ndarray, np.ndarray]:
+def _gram_hashes(th: np.ndarray, offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Flat token hashes + per-doc offsets -> (flat gram hashes uint64,
-    per-doc gram offsets). The FNV-1a fold runs as n vectorized uint64
-    passes over ALL full-width gram positions of the batch at once; grams
-    never cross doc boundaries (validity mask on the flat position array).
-    Docs with 0 < len < n tokens fold all tokens into one gram (spec)."""
+    per-doc gram offsets). A doc's windows are one per full-width position
+    or, for a doc of 0 < len < _NGRAM tokens, one holding all its tokens
+    (spec); windows never cross doc boundaries. The FNV-1a fold runs as
+    _NGRAM unmasked uint64 passes over ALL windows of the batch at once;
+    after each pass the windows it ran past (short docs' windows, which
+    read the next doc's tokens or the padding) get their value back."""
     lengths = np.diff(offsets)
-    ndocs = lengths.size
-    gram_counts = np.where(lengths >= n, lengths - n + 1, np.minimum(lengths, 1))
-    goff = np.zeros(ndocs + 1, dtype=np.int64)
-    np.cumsum(gram_counts, out=goff[1:])
-    gout = np.zeros(int(goff[-1]), dtype=np.uint64)
-    if th.size:
-        doc_of = np.repeat(np.arange(ndocs, dtype=np.int64), lengths)
-        if th.size >= n:
-            pos = np.arange(th.size - n + 1, dtype=np.int64)
-            start = pos[doc_of[pos] == doc_of[pos + n - 1]]
-            g = np.full(start.size, np.uint64(_FNV_OFFSET), dtype=np.uint64)
-            for k in range(n):
-                g = (g ^ th[start + k]) * _FNV_PRIME_U
-            d = doc_of[start]
-            gout[goff[d] + (start - offsets[d])] = g
-        # short docs (rare): plain-int fold, exact uint64 wrap
-        for d in np.flatnonzero((lengths > 0) & (lengths < n)):
-            gi = _FNV_OFFSET
-            for hv in th[offsets[d] : offsets[d + 1]].tolist():
-                gi = ((gi ^ hv) * _FNV_PRIME) % (1 << 64)
-            gout[goff[d]] = gi
-    return gout, goff
+    full = lengths >= _NGRAM
+    counts = np.where(full, lengths - _NGRAM + 1, np.minimum(lengths, 1))
+    goff = np.zeros(lengths.size + 1, dtype=np.int64)
+    np.cumsum(counts, out=goff[1:])
+    start = np.arange(goff[-1], dtype=np.int64) + np.repeat(offsets[:-1] - goff[:-1], counts)
+    width = np.repeat(np.where(full, _NGRAM, lengths), counts)
+    th = np.concatenate([th, np.zeros(_NGRAM - 1, dtype=np.uint64)])
+    g = np.full(start.size, _FNV_OFFSET, dtype=np.uint64)
+    for k in range(_NGRAM):
+        done = np.flatnonzero(width <= k)
+        kept = g[done]
+        g = (g ^ th[start + k]) * _FNV_PRIME_U
+        g[done] = kept
+    return g, goff
 
 
 # flat-array permutation work is chunked so each (64, S) int64 intermediate
@@ -294,15 +193,16 @@ def _doc_chunks(starts: np.ndarray, total: int):
         doc_lo = doc_hi
 
 
-def minhash_signatures_batch(texts, n: int = 3) -> np.ndarray:
-    """Whole-batch minhash: one vectorized tokenize/gram-hash pass over the
-    batch (_token_hashes_batch + _gram_hashes — per-distinct-token crc32 is
-    the only Python), then the 64 permutations as a single (chunked)
-    vectorized pass with np.minimum.reduceat segment-mins per doc.
+def minhash_signatures_batch(texts) -> np.ndarray:
+    """Whole-batch minhash: one tokenize/gram-hash pass over the batch
+    (_token_hashes_batch + _gram_hashes — one zlib.crc32 call per distinct
+    token is the only per-token Python), then the 64 permutations as a
+    single (chunked) vectorized pass with np.minimum.reduceat segment-mins
+    per doc.
     Value-identical to minhash_signature per doc (same gram hashes, same
     int64 wrap arithmetic; min is order- and duplicate-insensitive)."""
     th, toff = _token_hashes_batch(texts)
-    gh, goff = _gram_hashes(th, toff, n)
+    gh, goff = _gram_hashes(th, toff)
     flat = gh.view(np.int64)
     counts = np.diff(goff)
     out = np.zeros((len(texts), _NUM_PERM), dtype=np.int64)
@@ -337,21 +237,20 @@ def _minhash_udf(text: pd.Series) -> pd.Series:
 minhash_udf = _minhash_udf.asNondeterministic()
 
 
-def minhash_bands(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    bands: int = 16, rows: int = 4,
-) -> DataFrame:
+def minhash_bands(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """doc -> (doc_id, band, band_hash) bucket rows (LSH banding)."""
-    assert bands * rows == _NUM_PERM
     sig = _spread(docs).select(
         F.col(id_col).alias("doc_id"), minhash_udf(F.col(text_col)).alias("sig")
     )
     band_cols = [
         F.struct(
             F.lit(b).alias("band"),
-            F.md5(F.concat_ws(",", *[F.element_at("sig", b * rows + r + 1).cast("string") for r in range(rows)])).alias("band_hash"),
+            F.md5(F.concat_ws(",", *[
+                F.element_at("sig", b * _BAND_ROWS + r + 1).cast("string")
+                for r in range(_BAND_ROWS)
+            ])).alias("band_hash"),
         )
-        for b in range(bands)
+        for b in range(_BANDS)
     ]
     return sig.select(
         "doc_id", F.explode(F.array(*band_cols)).alias("bb")
@@ -442,7 +341,7 @@ _VERIFY_SCHEMA = "a long, b long, jaccard double"
 
 
 def verify_jaccard(pairs: DataFrame, docs: DataFrame, text_col="text", id_col="doc_id",
-                   n: int = 3, threshold: float = 0.7) -> DataFrame:
+                   threshold: float = 0.7) -> DataFrame:
     """Exact shingle-set Jaccard on candidate pairs only (join back the two
     texts, one Arrow pass)."""
     d = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("t"))
@@ -462,7 +361,7 @@ def verify_jaccard(pairs: DataFrame, docs: DataFrame, text_col="text", id_col="d
                 pd.concat([pdf["ta"], pdf["tb"]], ignore_index=True).fillna("")
             )
             th, toff = _token_hashes_batch(list(uniq))
-            gh, goff = _gram_hashes(th, toff, n)
+            gh, goff = _gram_hashes(th, toff)
             # distinct-gram SETS of all unique texts in one flat sorted
             # store: sort each text's gram segment (one segmented lexsort),
             # then drop within-segment duplicates
@@ -520,6 +419,8 @@ def minhash_near_dups(
 
 # ---------------- simhash ----------------
 
+_SIMHASH_CHUNKS = 4  # candidate buckets: the simhash's four 16-bit chunks
+
 
 def _token_hash(t: str) -> int:
     """Scalar SPEC of the simhash token hash: byte-wise FNV-1a-64 over the
@@ -531,6 +432,66 @@ def _token_hash(t: str) -> int:
     for b in t.encode():
         h = ((h ^ b) * _FNV_PRIME) % (1 << 64)
     return h
+
+
+def _flat_utf8(strs) -> tuple[np.ndarray, np.ndarray]:
+    """Strings -> (flat utf-8 byte array, int64 offsets) via pyarrow — the
+    encode happens once in C, no per-string Python."""
+    import pyarrow as pa
+
+    arr = pa.array(strs, type=pa.large_string())
+    offs = np.frombuffer(arr.buffers()[1], dtype=np.int64)[
+        arr.offset : arr.offset + len(arr) + 1
+    ]
+    dbuf = arr.buffers()[2]
+    data = np.frombuffer(dbuf, dtype=np.uint8) if dbuf is not None else np.empty(0, np.uint8)
+    return data, offs
+
+
+# at most this many strings still live -> finish them with plain ints
+_TAIL_CUTOFF = 8
+
+
+def _fnv1a64_strs(strs) -> np.ndarray:
+    """Byte-wise FNV-1a-64 over each utf-8 string (the simhash token hash):
+    h = (h ^ byte) * FNV_PRIME in uint64 wrap, from the offset basis.
+    Matches _token_hash exactly.
+
+    Vectorized over STRINGS: the Python loop runs over byte POSITIONS
+    (bounded by the longest string), each iteration one flat numpy step
+    over every string still live at that position (length-sorted so the
+    live set is a prefix — total work O(total bytes), like the scalar
+    hash). Two guards against the adversarial webtext shape — a batch
+    whose longest "token" is a multi-KB unbroken blob (minified JS,
+    base64), which would otherwise run thousands of interpreted positions
+    on a near-empty live set (VERDICT.md r4 What's-wrong #4):
+      - ALL positions' live-prefix counts come from ONE vectorized
+        searchsorted, not a Python-level binary search per position;
+      - once at most ``_TAIL_CUTOFF`` strings remain live, a plain-int
+        byte loop finishes each of them (exact uint64 wrap via the mask)
+        instead of per-position 1-to-8-element numpy ops (measured
+        308 ms -> ~2 ms on a 200-token batch with one 32 KiB blob)."""
+    data, offs = _flat_utf8(strs)
+    lens = np.diff(offs)
+    order = np.argsort(-lens, kind="stable")
+    lens_s, starts_s = lens[order], offs[:-1][order]
+    h = np.full(lens.size, _FNV_OFFSET, dtype=np.uint64)
+    maxlen = int(lens_s[0]) if lens.size else 0
+    # live count at position k = #(lens > k); -lens_s is ascending
+    live = np.searchsorted(-lens_s, -np.arange(1, maxlen + 1, dtype=np.int64), side="right")
+    for k in range(maxlen):
+        m = int(live[k])
+        if m <= _TAIL_CUTOFF:
+            for i in range(m):
+                st, ln, hi = int(starts_s[i]), int(lens_s[i]), int(h[i])
+                for b in data[st + k : st + ln].tobytes():
+                    hi = ((hi ^ b) * _FNV_PRIME) & 0xFFFFFFFFFFFFFFFF
+                h[i] = hi
+            break
+        h[:m] = (h[:m] ^ data[starts_s[:m] + k]) * _FNV_PRIME_U
+    out = np.empty_like(h)
+    out[order] = h
+    return out
 
 
 def simhash64(text: str) -> int:
@@ -582,10 +543,10 @@ simhash_udf = _simhash_udf.asNondeterministic()
 
 
 def simhash_near_dups(docs: DataFrame, max_hamming: int = 3, text_col: str = "text",
-                      id_col: str = "doc_id", chunks: int = 4) -> DataFrame:
-    """Pairs sharing any (64/chunks)-bit simhash chunk whose hamming
-    distance is <= ``max_hamming`` -> (a, b, hamming). The classic 64/4
-    split catches all pairs with hamming distance <= 3.
+                      id_col: str = "doc_id") -> DataFrame:
+    """Pairs sharing any (64/_SIMHASH_CHUNKS)-bit simhash chunk whose
+    hamming distance is <= ``max_hamming`` -> (a, b, hamming). The classic
+    64/4 split catches all pairs with hamming distance <= 3.
 
     The hamming filter runs BELOW the distinct's exchange: a dup-heavy
     corpus collapses into hot chunk buckets whose self-join emits O(n^2)
@@ -598,9 +559,10 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3, text_col: str = "te
     sh = _spread(docs).select(
         F.col(id_col).alias("id"), simhash_udf(F.col(text_col)).alias("sh")
     )
-    w = 64 // chunks
+    w = 64 // _SIMHASH_CHUNKS
     vals = [
-        F.shiftrightunsigned("sh", c * w).bitwiseAND(F.lit((1 << w) - 1)) for c in range(chunks)
+        F.shiftrightunsigned("sh", c * w).bitwiseAND(F.lit((1 << w) - 1))
+        for c in range(_SIMHASH_CHUNKS)
     ]
     rows = sh.select("id", "sh", F.posexplode(F.array(*vals)).alias("chunk", "val"))
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))

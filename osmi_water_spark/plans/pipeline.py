@@ -12,8 +12,9 @@ stages:
 
 Each checkpointable stage can persist to parquet (Iceberg in production)
 and is resumable: an existing ``_SUCCESS``-marked output is read back
-instead of recomputed, and a ``_lineage`` table records each written
-stage's output row count + wall time (BASELINE.json:14).
+instead of recomputed, and a ``_lineage`` table records each stage's
+output row count + wall time (BASELINE.json:14); a resumed stage keeps
+the row of the run that wrote it.
 """
 
 from __future__ import annotations
@@ -63,6 +64,7 @@ class Lineage:
 
     def __init__(self) -> None:
         self.rows: list[dict] = []
+        self.resumed: list[str] = []  # stages read back, not written, this run
         self._seq = 0
 
     def attach(self, stage: str, df: DataFrame):
@@ -78,10 +80,18 @@ class Lineage:
         wall = int((time.time() - t0) * 1000)
         self.rows.append(dict(stage=stage, output_rows=int(obs.get["rows"]), wall_ms=wall))
 
-    def dataframe(self, spark: SparkSession) -> DataFrame:
+    def write(self, spark: SparkSession, sink: Sink) -> DataFrame:
+        """Write ``_lineage``: this run's rows, plus each resumed stage's
+        row from the previous ``_lineage`` (collected first — the write
+        overwrites the table it is read from)."""
         from osmi_water_spark.schemas import LINEAGE
 
-        return spark.createDataFrame(self.rows or [], LINEAGE)
+        rows = list(self.rows)
+        if self.resumed and sink.exists(spark, "_lineage"):
+            prev = sink.read(spark, "_lineage").where(F.col("stage").isin(self.resumed))
+            rows += [r.asDict() for r in prev.collect()]
+        sink.write(spark.createDataFrame(rows, LINEAGE), "_lineage")
+        return sink.read(spark, "_lineage")
 
 
 class Sink:
@@ -108,11 +118,11 @@ class Sink:
 
     def exists(self, spark: SparkSession, name: str) -> bool:
         if self.fmt == "parquet":
-            # Hadoop FS API, not os.path: correct on object stores / HDFS
-            # too, not only a driver-local POSIX filesystem
-            from osmi_water_spark import fsutil
-
-            return fsutil.exists(spark, os.path.join(self.path(name), "_SUCCESS"))
+            # the path's own Hadoop FileSystem, not os.path: correct on
+            # object stores and HDFS too, not only a driver-local POSIX
+            # filesystem
+            hpath = spark._jvm.org.apache.hadoop.fs.Path(os.path.join(self.path(name), "_SUCCESS"))
+            return bool(hpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hpath))
         return spark.catalog.tableExists(self._table(name))
 
     def write(self, df: DataFrame, name: str) -> None:
@@ -163,6 +173,8 @@ def _stage(sink: Sink | None, name: str, compute, spark: SparkSession,
     if not sink:
         return _checkpoint(compute(), held)
     if resume and sink.exists(spark, name):
+        if lineage is not None:
+            lineage.resumed.append(name)
         return sink.read(spark, name)
     t0 = time.time()
     df = compute()
@@ -329,8 +341,7 @@ def run_pipeline(
         )
 
         if lineage is not None:
-            sink.write(lineage.dataframe(spark), "_lineage")
-            out["_lineage"] = sink.read(spark, "_lineage")
+            out["_lineage"] = lineage.write(spark, sink)
         return out
     except BaseException:
         # a failed run must not leave its checkpoints behind either

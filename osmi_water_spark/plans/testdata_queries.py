@@ -164,15 +164,6 @@ def _ways_geo(spark: SparkSession, sf_dir: str, ncust: int):
     )
 
 
-SQL_WAYS_GEO = """
-ways_geo AS (
-  SELECT o_orderkey AS id,
-         (o_orderkey % 4 + 3) AS nlen
-  FROM orders
-)
-"""
-
-
 def _nodes_geo(spark: SparkSession, sf_dir: str):
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     c = F.col("c_custkey")

@@ -1,13 +1,14 @@
 """Deterministic near-dup document corpus for the dedup oracle gate.
 
 The MinHash/SimHash operators are defined by seeded hash functions
-(crc32 token hashes + FNV-1a gram folding; blake2b token hashes), which
-no SQL engine reproduces natively — so their DuckDB oracles follow the
-``pipeline_nodes`` fixture pattern: a deterministic corpus (this module,
-shared INPUT data), an expected pair set precomputed by an INDEPENDENT
-plain-Python implementation (scripts/make_dedup_fixtures.py — scalar
-loops, no numpy, no engine imports on the value path), and an oracle
-that is a plain ``SELECT`` over the resulting parquet fixture.
+(MinHash: crc32 token hashes + FNV-1a gram folding; SimHash: FNV-1a
+token hashes), which no SQL engine reproduces natively — so their
+DuckDB oracles follow the ``pipeline_nodes`` fixture pattern: a
+deterministic corpus (this module, shared INPUT data), an expected
+pair set precomputed by an INDEPENDENT plain-Python implementation
+(scripts/make_dedup_fixtures.py — scalar loops, no numpy, no engine
+imports on the value path), and an oracle that is a plain ``SELECT``
+over the resulting parquet fixture.
 
 The corpus has controlled structure: per base document one of {exact
 duplicate, near duplicate (~5% token mutations), two chained near-dups,

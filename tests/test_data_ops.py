@@ -222,10 +222,16 @@ def test_minhash_batch_matches_per_doc():
         minhash_signatures_batch,
     )
 
-    batch = minhash_signatures_batch(TEXTS)
-    for i, t in enumerate(TEXTS):
-        want = minhash_signature(t or "")
-        assert (batch[i] == want).all(), f"doc {i} signature diverged"
+    # the mixed batch, then each branch of the batch gram fold on its own:
+    # only full-width windows (every doc >= 3 tokens), and only short-doc
+    # windows (0-2 tokens)
+    full_width = [t for t in TEXTS if t and len(t.split()) >= 3]
+    short = ["", None, "one", "two tokens", "x", "ß ü"]
+    for texts in (TEXTS, full_width, short):
+        batch = minhash_signatures_batch(texts)
+        for i, t in enumerate(texts):
+            want = minhash_signature(t or "")
+            assert (batch[i] == want).all(), f"doc {i} of {texts[:2]} signature diverged"
 
 
 def test_minhash_batch_chunking_boundary(monkeypatch):
@@ -423,16 +429,14 @@ def test_knn_cells_widen_recovers_sparse_points(spark):
 
 
 def test_byte_position_hashes_match_scalar_on_adversarial_batch():
-    """`_crc32_strs` / `_fnv1a64_strs` must equal the scalar references
-    (zlib.crc32 / plain-int FNV-1a-64) on the shapes the vectorized loop
-    special-cases: a multi-KB unbroken token (the scalar-tail branch,
-    VERDICT r4 What's-wrong #4), empty strings, multibyte utf-8, and
-    lengths straddling the tail cutoff."""
-    import zlib
-
+    """`_fnv1a64_strs` must equal the scalar reference (plain-int
+    FNV-1a-64) on the shapes the vectorized loop special-cases: a multi-KB
+    unbroken token (the scalar-tail branch, VERDICT r4 What's-wrong #4),
+    empty strings, multibyte utf-8, and lengths straddling the tail
+    cutoff."""
     import numpy as _np
 
-    from osmi_water_spark.operators.dedup import _crc32_strs, _fnv1a64_strs
+    from osmi_water_spark.operators.dedup import _fnv1a64_strs
 
     def fnv1a64(s: str) -> int:
         h = 14695981039346656037
@@ -446,10 +450,6 @@ def test_byte_position_hashes_match_scalar_on_adversarial_batch():
         + ["", "a", "ab", "ünïcode-ß" * 7]           # empty / 1-byte / multibyte
         + ["m" * n for n in (7, 8, 9, 63, 64, 65)]   # straddle tail_cutoff prefixes
     )
-    got_crc = _crc32_strs(batch)
-    want_crc = _np.array([zlib.crc32(s.encode()) for s in batch], dtype=_np.uint64)
-    assert (got_crc == want_crc).all()
-
     got_fnv = _fnv1a64_strs(batch)
     want_fnv = _np.array([fnv1a64(s) for s in batch], dtype=_np.uint64)
     assert (got_fnv == want_fnv).all()

@@ -70,17 +70,28 @@ def test_lineage_counts_every_written_stage(spark, tmp_path):
     """The default checkpointed run (lineage on, as scripts/run_pipeline_job.py
     runs it) over all fixture worlds: ``_lineage`` holds one row per written
     stage, and each row's output_rows is the count of that stage's table as
-    read back from the sink."""
+    read back from the sink. After losing ``nodes``, a ``resume=True`` run
+    rewrites only that stage, and its ``_lineage`` still holds one row per
+    stage: the resumed stages keep the first run's rows."""
     out_dir = str(tmp_path / "ckpt_lineage")
-    out = run_pipeline(spark, PG.pages_dataframe(spark, PG.pages_rows()), out_dir=out_dir)
-    lineage = out["_lineage"].collect()
+    pages = PG.pages_dataframe(spark, PG.pages_rows())
     stages = ["entities", "ways_located", "ways", "relations", "polygons", "nodes", "tiles"]
-    assert out["_lineage"].columns == ["stage", "output_rows", "wall_ms"]
-    assert sorted(r.stage for r in lineage) == sorted(stages)
     sink = Sink(out_dir)
-    for r in lineage:
-        assert r.output_rows == sink.read(spark, r.stage).count() > 0, r.stage
-        assert r.wall_ms >= 0, r.stage
+    first = None
+    for resume in (False, True):
+        out = run_pipeline(spark, pages, out_dir=out_dir, resume=resume)
+        lineage = out["_lineage"].collect()
+        assert out["_lineage"].columns == ["stage", "output_rows", "wall_ms"]
+        assert sorted(r.stage for r in lineage) == sorted(stages)
+        for r in lineage:
+            assert r.output_rows == sink.read(spark, r.stage).count() > 0, r.stage
+            assert r.wall_ms >= 0, r.stage
+        if first is None:
+            first = {r.stage: r for r in lineage}
+            shutil.rmtree(sink.path("nodes"))
+    assert {r.stage: r for r in lineage if r.stage != "nodes"} == {
+        s: r for s, r in first.items() if s != "nodes"
+    }
 
 
 def test_checkpointed_run_on_empty_entities(spark, tmp_path):
