@@ -10,6 +10,14 @@ stages:
                  + E2: one final mask per endpoint node
   F finalize     E5 way-error union + O4 + tiles        (narrow)
 
+The driver runs A and B in line, then the rest as a DAG of run-once
+thunks: the way rows (C), the areas, the pass-3 masks (D + E pass 3) and
+the prepared PIP join over the areas. The four output leaves are
+submitted to a thread pool together, and each computes or waits for only
+the thunks it reads, so the way-rows branch and the areas branch overlap
+and a resumed leaf computes nothing. The run's local checkpoints are
+released once every leaf has settled, on success and on failure.
+
 Each checkpointable stage can persist to parquet (Iceberg in production)
 and is resumable: an existing ``_SUCCESS``-marked output is read back
 instead of recomputed, and a ``_lineage`` table records each stage's
@@ -20,7 +28,9 @@ the row of the run that wrote it.
 from __future__ import annotations
 
 import os
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor, wait
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +43,7 @@ from osmi_water_spark.operators import areas as AR
 from osmi_water_spark.operators import assemble as AS
 from osmi_water_spark.operators import connectivity as CN
 from osmi_water_spark.operators import false_positives as FP
+from osmi_water_spark.operators import spatial_join as SJ
 from osmi_water_spark.operators import tiling as TI
 from osmi_water_spark.operators.extract import extract_entities, split_entities
 from osmi_water_spark.operators.locate import locate_ways, node_locations
@@ -186,6 +197,29 @@ def _stage(sink: Sink | None, name: str, compute, spark: SparkSession,
     return sink.read(spark, name)
 
 
+def _once(compute):
+    """A thread-safe run-once thunk: the first caller runs ``compute``, and
+    every later or concurrent caller waits for it and gets the same value
+    (or the same exception). The waiters block on a lock held by a running
+    thread, never on a queued task."""
+    lock = threading.Lock()
+    box: list = []
+
+    def get():
+        with lock:
+            if not box:
+                try:
+                    box.append((compute(), None))
+                except BaseException as e:
+                    box.append((None, e))
+        value, err = box[0]
+        if err is not None:
+            raise err
+        return value
+
+    return get
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame | None,
@@ -201,15 +235,27 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """pages -> the four output tables + tile tables (+ checkpoints).
 
+    Stages A and B run first, in line. Behind them the run is a DAG of
+    run-once thunks (``_once``): ``way_rows`` (C), ``areas``, ``after3``
+    (D + pass 3) and the prepared PIP join (``spatial_join.pip_prepare``
+    over the areas' parts). Each is computed by the first consumer that
+    needs it; the others wait for it. The four output leaves (ways,
+    relations, polygons, nodes) are submitted to a thread pool at once,
+    and each pulls only what it reads: the way-rows branch and the areas
+    branch run concurrently, and the nodes leaf requests ``after3`` and
+    the PIP join concurrently. A resumed leaf pulls nothing, so a run whose
+    leaves all exist computes no intermediate. The tiles stage reads the
+    four leaves.
+
     Every intermediate that several consumers read (entities, located
-    ways, way geometries, areas, pass-3 masks) is materialized
-    once by ``_checkpoint`` as a local checkpoint, in both modes; the run
-    releases all of them before it returns or raises. Without
-    ``out_dir`` (cached mode) the returned tables are materialized local
-    checkpoints too, which the caller owns; with ``out_dir`` they are reads
-    of the sink tables. Local checkpoints have no lineage, so losing an
-    executor mid-run fails the run: checkpointed mode with ``resume=True``
-    is the durable path.
+    ways, way geometries, areas, pass-3 masks) is materialized once by
+    ``_checkpoint`` as a local checkpoint, in both modes. The run releases
+    all of them once every leaf has settled, before it returns or raises.
+    Without ``out_dir`` (cached mode) the returned tables are materialized
+    local checkpoints too, which the caller owns; with ``out_dir`` they
+    are reads of the sink tables. Local checkpoints have no lineage, so
+    losing an executor mid-run fails the run: checkpointed mode with
+    ``resume=True`` is the durable path.
 
     ``entities``: skip Stage A and run the batch DAG from an
     already-extracted entities table
@@ -241,70 +287,75 @@ def run_pipeline(
         locations = node_locations(nodes)
 
         # ---- Stage C: assembly ----
-        way_rows = _checkpoint(AS.build_way_rows(relations, ways_located), held)
-        parts = AS.assemble_ways(way_rows, cell_res)
-        ways_out = parts["ways"]
-        remembered = parts["remembered"]
-        way_errors = parts["way_errors"]
-        relations_out = AS.assemble_relations(relations, parts["geoms"], cell_res)
+        way_rows = _once(
+            lambda: _checkpoint(AS.build_way_rows(relations, ways_located), held)
+        )
+        assembled = _once(lambda: AS.assemble_ways(way_rows(), cell_res))
+        # areas fan out to the polygons table and the PIP parts; they read
+        # only ways_located and relations, so this branch runs beside the
+        # way-rows one
+        areas = _once(lambda: _checkpoint(AR.build_areas(ways_located, relations), held))
 
-        # areas fan out to several consumers below (the polygons table and
-        # the PIP parts, which pip_join reads twice) — materialized here, so
-        # their plans start at a scan
-        areas = _checkpoint(AR.build_areas(ways_located, relations), held)
-        polygons_out = AR.polygon_table(areas, cell_res)
-
-        # ---- Stage D: connectivity (one mask per endpoint node) ----
-        masks = CN.error_mask(CN.node_stats(remembered))
-
-        # ---- Stage E: passes 3 + 4 -> the final mask (E2 included) ----
+        # ---- Stages D + E pass 3: one mask per endpoint node ----
         # mask-0 nodes ride through both passes unchanged (E4); after3 is
         # read twice by pass 4 (its PIP points and the contained join)
-        after3 = _checkpoint(FP.apply_pass3(masks, ways), held)
-        # pip_join picks its strategy from an aggregate over the PIP parts
-        # (a filter plus an inline of the areas checkpoint): when they fit
-        # the broadcast bound, one collect builds a cell index and the
-        # points stream through a single mapInArrow probe (no explode, no join)
-        final = FP.apply_pass4(after3, locations, AR.pip_index(areas), salt=salt)
+        after3 = _once(lambda: _checkpoint(
+            FP.apply_pass3(CN.error_mask(CN.node_stats(assembled()["remembered"])), ways),
+            held,
+        ))
+        # the PIP polygon side: pip_prepare's eager part (the strategy
+        # aggregate, the parts collect, the cell index and its broadcast)
+        # reads only the areas checkpoint, so it runs while after3 is built
+        contains = _once(lambda: SJ.pip_prepare(AR.pip_index(areas()), salt=salt))
 
-        # ---- Stage F: finalize nodes table (E5 + O4) ----
-        way_error_rows = way_errors.select("node_id", F.lit(E.WAY).alias("final_mask"))
-        all_nodes = final.unionByName(way_error_rows)
-        # location join: normal emission requires a location (handle_node skips
-        # unlocated nodes, waterway.hpp:142-147); fixtures locate everything.
-        located = all_nodes.join(locations, "node_id", "inner")
-        ecols = E.node_output_columns("final_mask")
-        nodes_out = located.select(
-            F.col("node_id").cast("string").alias("node_id"),
-            *[v.alias(k) for k, v in ecols.items()],
-            _point_wkb("lon", "lat").alias("geom_wkb"),
-            C.cell_of("lon", "lat", cell_res).alias("h3_cell"),
-            "lon",
-            "lat",
-        )
+        def nodes_out() -> DataFrame:
+            # ---- Stage E pass 4 + Stage F: the final mask, finalized ----
+            # the PIP join is prepared on the leaves' pool (below) while
+            # this thread builds after3
+            prepared = pool.submit(contains)
+            final = FP.apply_pass4(after3(), locations, prepared.result())
+            way_error_rows = assembled()["way_errors"].select(
+                "node_id", F.lit(E.WAY).alias("final_mask")
+            )
+            all_nodes = final.unionByName(way_error_rows)
+            # location join: normal emission requires a location (handle_node
+            # skips unlocated nodes, waterway.hpp:142-147); fixtures locate
+            # everything.
+            located = all_nodes.join(locations, "node_id", "inner")
+            ecols = E.node_output_columns("final_mask")
+            return located.select(
+                F.col("node_id").cast("string").alias("node_id"),
+                *[v.alias(k) for k, v in ecols.items()],
+                _point_wkb("lon", "lat").alias("geom_wkb"),
+                C.cell_of("lon", "lat", cell_res).alias("h3_cell"),
+                "lon",
+                "lat",
+            )
 
-        # the four output tables are independent leaves of the DAG: submit
-        # their stage jobs CONCURRENTLY (SparkSession is thread-safe; their
-        # shared upstreams are already materialized, so the leaves only read
-        # them). In checkpointed mode this overlaps four write barriers that
-        # were serial — per-stage fixed cost (job launch, output commit) was
-        # the measured non-scaling share of the pipeline wall (BENCH.md round
-        # 3 stage profile), and it shrinks by the overlap factor. On a real
-        # cluster this is the standard multi-job scheduler pattern.
-        from concurrent.futures import ThreadPoolExecutor
-
-        out: dict[str, DataFrame] = {}
         leaves = {
-            "ways": lambda: ways_out,
-            "relations": lambda: relations_out,
-            "polygons": lambda: polygons_out,
-            "nodes": lambda: nodes_out,
+            "ways": lambda: assembled()["ways"],
+            "relations": lambda: AS.assemble_relations(
+                relations, assembled()["geoms"], cell_res
+            ),
+            "polygons": lambda: AR.polygon_table(areas(), cell_res),
+            "nodes": nodes_out,
         }
-        with ThreadPoolExecutor(max_workers=len(leaves)) as ex:
+        # The leaves' stage jobs run CONCURRENTLY (SparkSession is
+        # thread-safe). In checkpointed mode this also overlaps four write
+        # barriers. One thread per task (the four leaves plus the nodes
+        # leaf's PIP request), so no task waits in the queue behind a task
+        # that waits on it. Every leaf settles before a result is read (a
+        # leaf's failure would otherwise shut the pool while the nodes leaf
+        # may still submit), and leaving the block waits for the PIP
+        # request too, so the release below runs only after all of them
+        # have settled, whether one failed or not.
+        out: dict[str, DataFrame] = {}
+        with ThreadPoolExecutor(max_workers=len(leaves) + 1) as pool:
             futs = {
-                name: ex.submit(_stage, sink, name, compute, spark, lineage, resume, held)
+                name: pool.submit(_stage, sink, name, compute, spark, lineage, resume, held)
                 for name, compute in leaves.items()
             }
+            wait(futs.values())
             for name, fut in futs.items():
                 out[name] = fut.result()
 

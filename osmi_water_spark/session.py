@@ -5,7 +5,11 @@ what we would set on a 1000-executor cluster as well: AQE on (runtime
 re-planning, skew-join splitting), Arrow on (all pandas-UDF stages are
 Arrow-batched), UTC session timezone (oracle comparability), shuffle
 partitions ~ cores locally (on a cluster: 2-3x total cores, or let AQE
-coalesce from a high initial number).
+coalesce from a high initial number). PySpark's DataFrame debugging
+(call-site capture on every DataFrame/Column call) is off: it made every
+expression several py4j round-trips dearer and imported IPython into the
+driver, at the price of query errors that no longer name the Python line
+that built the failing expression.
 """
 
 from __future__ import annotations
@@ -60,6 +64,13 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
         .config("spark.sql.session.timeZone", "UTC")
+        # no call-site capture: by default every DataFrame/Column call walks
+        # the Python stack, tries an IPython import and sends the call site
+        # to the JVM (44 py4j round-trips per small Column expression instead
+        # of 9). What is lost: when a query fails, its error no longer names
+        # the Python file:line of the DataFrame call that built the failing
+        # expression. extra_conf can turn it back on.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")

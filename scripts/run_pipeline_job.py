@@ -30,7 +30,16 @@ def main() -> None:
     # only fills gaps when run standalone
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("osmi-water-pipeline").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("osmi-water-pipeline")
+        # no call-site capture (as in osmi_water_spark.session.get_spark):
+        # every DataFrame/Column call would walk the Python stack and add
+        # py4j round-trips. What is lost: when a query fails, its error no
+        # longer names the Python file:line of the DataFrame call that
+        # built the failing expression.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .getOrCreate()
+    )
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     from osmi_water_spark.plans.pipeline import run_pipeline

@@ -177,3 +177,35 @@ def test_iceberg_sink_roundtrip_when_jars_present(tmp_path):
     assert got.count() == 10 and {r.v for r in got.collect()} == {2 * i for i in range(10)}
     sink.write(df.filter(F.col("id") < 5), "t1")  # createOrReplace overwrite
     assert sink.read(spark, "t1").count() == 5
+
+
+def test_resumed_run_computes_nothing(spark, tmp_path, monkeypatch):
+    """After a complete checkpointed run, a ``resume=True`` run reads every
+    stage back: it makes no local checkpoint (way rows, areas, pass-3
+    masks) and prepares no PIP join, and returns the first run's tables."""
+    from osmi_water_spark.operators import spatial_join as SJ
+    from osmi_water_spark.plans import pipeline
+
+    calls = {"_checkpoint": 0, "pip_prepare": 0}
+
+    def counted(name, fn):
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    monkeypatch.setattr(pipeline, "_checkpoint", counted("_checkpoint", pipeline._checkpoint))
+    monkeypatch.setattr(SJ, "pip_prepare", counted("pip_prepare", SJ.pip_prepare))
+    out_dir = str(tmp_path / "ckpt_resume")
+    pages = PG.pages_dataframe(spark, PG.pages_rows(["w06_rivermouth_pip", "w10_relation"]))
+    tables = ("ways", "relations", "polygons", "nodes", "tile_validation", "tile_assignment")
+    first = run_pipeline(spark, pages, out_dir=out_dir, with_lineage=False)
+    want = {t: sorted(first[t].collect(), key=repr) for t in tables}
+    assert calls == {"_checkpoint": 3, "pip_prepare": 1}
+
+    calls.update(dict.fromkeys(calls, 0))
+    second = run_pipeline(spark, pages, out_dir=out_dir, resume=True, with_lineage=False)
+    assert calls == {"_checkpoint": 0, "pip_prepare": 0}
+    for t in tables:
+        assert sorted(second[t].collect(), key=repr) == want[t], t

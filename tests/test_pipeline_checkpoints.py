@@ -113,3 +113,65 @@ def test_failed_run_releases_its_checkpoints(spark, monkeypatch):
     with pytest.raises(RuntimeError, match="tile stage failed"):
         run_pipeline(spark, pages, out_dir=None, with_lineage=False)
     assert _persisted_rdd_ids(spark) == before
+
+
+@pytest.mark.parametrize("checkpointed", [False, True], ids=["cached", "checkpointed"])
+def test_failed_branch_releases_every_checkpoint(spark, tmp_path, monkeypatch, checkpointed):
+    """A leaf that raises while the other branches still run: the run
+    re-raises its error, and only after every branch has settled, so the
+    checkpoints the other branches made are released too."""
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("polygon table failed")
+
+    monkeypatch.setattr(pipeline.AR, "polygon_table", fail)
+    before = _persisted_rdd_ids(spark)
+    pages = PG.pages_dataframe(spark, PG.pages_rows(["w06_rivermouth_pip", "w10_relation"]))
+    out_dir = str(tmp_path / "ck") if checkpointed else None
+    with pytest.raises(RuntimeError, match="polygon table failed"):
+        run_pipeline(spark, pages, out_dir=out_dir, with_lineage=False)
+    assert _persisted_rdd_ids(spark) - before == set()
+
+
+def test_once_runs_compute_once_under_contention():
+    """``pipeline._once`` under more threads than cores and a short switch
+    interval: the compute runs once, every caller gets its value, and a
+    compute that raises raises the same error to every caller without
+    running again."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    runs = []
+    start = threading.Barrier(16)
+
+    def slow(value):
+        def compute():
+            runs.append(value)
+            time.sleep(0.05)
+            if isinstance(value, Exception):
+                raise value
+            return value
+
+        return compute
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for value in (object(), RuntimeError("compute failed")):
+            runs.clear()
+            thunk = pipeline._once(slow(value))
+
+            def call():
+                start.wait(timeout=10)
+                try:
+                    return thunk()
+                except RuntimeError as e:
+                    return e
+
+            with ThreadPoolExecutor(max_workers=16) as ex:
+                got = [f.result(timeout=30) for f in [ex.submit(call) for _ in range(16)]]
+            assert runs == [value]
+            assert all(g is value for g in got)
+    finally:
+        sys.setswitchinterval(interval)

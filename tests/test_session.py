@@ -75,3 +75,41 @@ def test_local_cluster_registration_wait():
         assert "failed to register" in got["deadline_error"]
     else:
         assert got["registered_within_getOrCreate"] == 4
+
+
+# a fresh driver: PySpark reads the debugging conf once per process, and
+# IPython, once imported, stays in sys.modules
+_NO_CAPTURE_PROBE = r"""
+import json, sys
+from pyspark.sql import functions as F
+from osmi_water_spark.session import get_spark
+s = get_spark(app_name="no-call-site-capture", master="local[1]", shuffle_partitions=1)
+cols = [(F.col("id") + F.lit(i)).alias(f"c{i}") for i in range(5)]
+rows = s.range(3).select(*cols, F.when(F.col("id") > 1, "big").alias("size")).collect()
+print("PROBE:" + json.dumps({
+    "conf": s.conf.get("spark.python.sql.dataFrameDebugging.enabled"),
+    "ipython": "IPython" in sys.modules,
+    "rows": len(rows),
+}))
+s.stop()
+"""
+
+
+def test_get_spark_captures_no_call_sites():
+    """get_spark turns PySpark's DataFrame debugging off: building Column
+    expressions and a select walks no Python stack, so IPython (which the
+    capture tries to import) never enters the driver."""
+    env = dict(os.environ)
+    env["PYTHONPATH"] = REPO + (
+        ":" + env["PYTHONPATH"] if env.get("PYTHONPATH") else ""
+    )
+    env.pop("SPARK_GRAFT_MASTER", None)
+    r = subprocess.run(
+        [sys.executable, "-c", _NO_CAPTURE_PROBE],
+        capture_output=True, text=True, timeout=600, env=env, cwd=REPO,
+    )
+    lines = [l for l in r.stdout.splitlines() if l.startswith("PROBE:")]
+    assert r.returncode == 0 and lines, r.stderr[-2000:]
+    assert json.loads(lines[-1][len("PROBE:"):]) == {
+        "conf": "false", "ipython": False, "rows": 3,
+    }
