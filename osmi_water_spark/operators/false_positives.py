@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from osmi_water_spark.functions import errors as E
 from osmi_water_spark.functions import tags as TG
-from osmi_water_spark.operators.spatial_join import PipJoin
+from osmi_water_spark.operators.spatial_join import pip_exists
 
 
 def pass3_hits(ways: DataFrame) -> DataFrame:
@@ -75,16 +75,16 @@ def apply_pass3(masks: DataFrame, ways: DataFrame) -> DataFrame:
     return c.select("node_id", F.expr(mask3).alias("mask3"))
 
 
-def apply_pass4(after3: DataFrame, locations: DataFrame, contains: PipJoin) -> DataFrame:
+def apply_pass4(
+    after3: DataFrame, locations: DataFrame, polygon_parts: DataFrame, salt: int = 1,
+) -> DataFrame:
     """after3(node_id, mask3) x polygon index -> (node_id, final_mask) for
-    every row of ``after3``. ``contains`` is the polygon index prepared by
-    ``spatial_join.pip_prepare``. Only held, located nodes are PIP-tested;
-    the final mask is E2's ``switch_poss`` over the pass-4 mask."""
+    every row of ``after3``. Only held, located nodes are PIP-tested; the
+    final mask is E2's ``switch_poss`` over the pass-4 mask."""
     pts = after3.filter(F.col("mask3") != 0).join(locations, "node_id", "inner").select(
         F.col("node_id").alias("point_id"), "lon", "lat"
     )
-    # the pip_exists projection of the prepared join
-    contained = contains(pts).select("point_id").distinct().withColumnRenamed(
+    contained = pip_exists(pts, polygon_parts, salt=salt).withColumnRenamed(
         "point_id", "node_id"
     ).withColumn("contained", F.lit(True))
     r = after3.join(contained, "node_id", "left").withColumn(

@@ -33,7 +33,7 @@ number of distinct cover resolutions actually present.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -212,22 +212,16 @@ def _fit_probe(part_rows: list, boxes: list, res_min: int, res_max: int,
     )
 
 
-# a prepared join: (points, unique_points=False) -> pairs
-PipJoin = Callable[..., DataFrame]
-
-
-def pip_prepare(
+def pip_join(
+    points: DataFrame,
     polygon_parts: DataFrame,
     salt: int = 1,
     broadcast_parts: bool | None = None,
-) -> PipJoin:
-    """The polygon side of the join, prepared now: parts(area_key,
-    part_wkb, minx..maxy) -> a lazy ``join(points, unique_points=False)``
-    that maps points(point_id, lon, lat) to the contained pairs
-    (point_id, area_key), deduplicated.
+    unique_points: bool = False,
+) -> DataFrame:
+    """points(point_id, lon, lat) x parts(area_key, part_wkb, minx..maxy)
+    -> contained pairs (point_id, area_key), deduplicated.
 
-    Everything eager happens here and reads only the polygon side, so a
-    caller can prepare it while the points are still being computed.
     Two physical arms, chosen by ``broadcast_parts``:
 
     - True: the map-side probe. One collect brings the polygon side to the
@@ -254,17 +248,13 @@ def pip_prepare(
     routes each point to one deterministic replica — use when single cells
     are hot. The probe has no shuffle to salt.
 
-    The join's ``unique_points``: caller-declared contract that
-    ``point_id`` values are unique. In probe mode this makes the join fully
-    shuffle-free (the in-batch dedup already guarantees pair uniqueness
-    per input row).
+    ``unique_points``: caller-declared contract that ``point_id`` values are
+    unique. In probe mode this makes the join fully shuffle-free (the
+    in-batch dedup already guarantees pair uniqueness per input row).
     """
-    spark = polygon_parts.sparkSession
+    spark = points.sparkSession
     res_min, res_max, max_cells = C.MIN_COVER_RES, C.DEFAULT_RES, C.MAX_COVER_CELLS
     box = ("minx", "miny", "maxx", "maxy")
-
-    def empty(points: DataFrame, unique_points: bool = False) -> DataFrame:
-        return spark.createDataFrame([], REFINE_SCHEMA)
 
     res_list = []
     if broadcast_parts is not True:
@@ -286,83 +276,62 @@ def pip_prepare(
         # exact twin of the JVM expressions).
         part_rows = polygon_parts.select("area_key", "part_wkb", *box).collect()
         if not part_rows:
-            return empty
+            return spark.createDataFrame([], REFINE_SCHEMA)
         boxes = [[r[c] for r in part_rows] for c in box]
         probe = _fit_probe(part_rows, boxes, res_min, res_max, max_cells)
         if probe is not None:
             bcp = spark.sparkContext.broadcast(probe)
-
-            def probe_join(points: DataFrame, unique_points: bool = False) -> DataFrame:
-                # NOT spread_input-widened (r6 A/B, interleaved): the probe
-                # is already cheap per point, so the extra exchange's stage
-                # barrier cost more than the 1-2-core serialization it
-                # fixed (best 1.69 s no-spread vs 2.08 s spread at sf1.0);
-                # at scale the point side arrives wide and shuffle-free is
-                # the design.
-                refined = points.select("point_id", "lon", "lat").mapInArrow(
-                    lambda it: _probe_refine(it, bcp.value), REFINE_SCHEMA
-                )
-                # pairs are already unique per input ROW (in-batch dedup
-                # across resolutions), so the global dedup only collapses
-                # duplicate input point_ids. When the caller declares ids
-                # unique (``unique_points``) the result is shuffle-FREE end
-                # to end — scan -> mapInArrow -> done.
-                return refined if unique_points else refined.dropDuplicates(
-                    ["point_id", "area_key"]
-                )
-
-            return probe_join
+            # NOT spread_input-widened (r6 A/B, interleaved): the probe is
+            # already cheap per point, so the extra exchange's stage
+            # barrier cost more than the 1-2-core serialization it fixed
+            # (best 1.69 s no-spread vs 2.08 s spread at sf1.0); at scale
+            # the point side arrives wide and shuffle-free is the design.
+            refined = points.select("point_id", "lon", "lat").mapInArrow(
+                lambda it: _probe_refine(it, bcp.value), REFINE_SCHEMA
+            )
+            # pairs are already unique per input ROW (in-batch dedup across
+            # resolutions), so the global dedup only collapses duplicate
+            # input point_ids. When the caller declares ids unique
+            # (``unique_points``) the result is shuffle-FREE end to end —
+            # scan -> mapInArrow -> done.
+            return refined if unique_points else refined.dropDuplicates(["point_id", "area_key"])
         # even one cell per part is over the cap: join partitioned, at the
         # full budget
         res_list = np.unique(C.np_cover_boxes(*boxes, res_min, res_max, max_cells)[0]).tolist()
     if not res_list:
-        return empty
+        return spark.createDataFrame([], REFINE_SCHEMA)
 
     # each part's cover resolution is projected once; the cover reads it
     cover = polygon_parts.withColumn(
         "_cover_res", C.adaptive_cover_res(*box, res_min, res_max, max_cells)
     ).withColumn("cell", F.explode(C.bbox_cover_cells(*box, "_cover_res")))
-    keys = ["cell", "salt"] if salt > 1 else ["cell"]
+    pts = points.select(
+        "point_id",
+        "lon",
+        "lat",
+        F.explode(C.cell_of_multi("lon", "lat", res_list)).alias("cell"),
+    )
+
     if salt > 1:
         cover = cover.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-    cover = cover.select(*keys, "area_key", "part_wkb", *box)
+        pts = pts.withColumn("salt", F.pmod(F.hash("point_id"), F.lit(salt)))
+        keys = ["cell", "salt"]
+    else:
+        keys = ["cell"]
+
     # envelope check before the exact refine (cheap column filter, mirrors
     # the STRtree envelope query precisely):
     env = (
         (F.col("lon") >= F.col("minx")) & (F.col("lon") <= F.col("maxx"))
         & (F.col("lat") >= F.col("miny")) & (F.col("lat") <= F.col("maxy"))
     )
-
-    def cell_join(points: DataFrame, unique_points: bool = False) -> DataFrame:
-        pts = points.select(
-            "point_id",
-            "lon",
-            "lat",
-            F.explode(C.cell_of_multi("lon", "lat", res_list)).alias("cell"),
-        )
-        if salt > 1:
-            pts = pts.withColumn("salt", F.pmod(F.hash("point_id"), F.lit(salt)))
-        cand = pts.join(cover, keys, "inner").filter(env)
-        refined = cand.select("point_id", "area_key", "part_wkb", "lon", "lat").mapInArrow(
-            _refine_arrow_parts, REFINE_SCHEMA
-        )
-        return refined.dropDuplicates(["point_id", "area_key"])
-
-    return cell_join
-
-
-def pip_join(
-    points: DataFrame,
-    polygon_parts: DataFrame,
-    salt: int = 1,
-    broadcast_parts: bool | None = None,
-    unique_points: bool = False,
-) -> DataFrame:
-    """points(point_id, lon, lat) x parts(area_key, part_wkb, minx..maxy)
-    -> contained pairs (point_id, area_key), deduplicated:
-    ``pip_prepare`` over the parts, applied to the points. The arms and
-    the parameters are described there."""
-    return pip_prepare(polygon_parts, salt, broadcast_parts)(points, unique_points)
+    cand = pts.join(
+        cover.select(*keys, "area_key", "part_wkb", *box), keys, "inner"
+    ).filter(env)
+    refined = cand.select("point_id", "area_key", "part_wkb", "lon", "lat").mapInArrow(
+        _refine_arrow_parts, REFINE_SCHEMA
+    )
+    return refined.dropDuplicates(["point_id", "area_key"])
 
 
 def pip_exists(points: DataFrame, polygon_parts: DataFrame, **kw) -> DataFrame:

@@ -11,18 +11,19 @@ stages:
   F finalize     E5 way-error union + O4 + tiles        (narrow)
 
 The driver runs A and B in line, then the rest as a DAG of run-once
-thunks: the way rows (C), the areas, the pass-3 masks (D + E pass 3) and
-the prepared PIP join over the areas. The four output leaves are
-submitted to a thread pool together, and each computes or waits for only
-the thunks it reads, so the way-rows branch and the areas branch overlap
-and a resumed leaf computes nothing. The run's local checkpoints are
-released once every leaf has settled, on success and on failure.
+thunks: the way rows (C), the areas and the pass-3 masks (D + E pass 3).
+The four output leaves are submitted to a thread pool together, and each
+computes or waits for only the thunks it reads, so the way-rows branch
+and the areas branch overlap and a resumed leaf computes nothing. The
+run's local checkpoints are released once every leaf has settled, on
+success and on failure.
 
 Each checkpointable stage can persist to parquet (Iceberg in production)
 and is resumable: an existing ``_SUCCESS``-marked output is read back
 instead of recomputed, and a ``_lineage`` table records each stage's
 output row count + wall time (BASELINE.json:14); a resumed stage keeps
-the row of the run that wrote it.
+the row of the run that wrote it. A stage's wall time is its own write:
+the shared intermediates its build computed or waited for are not in it.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ from __future__ import annotations
 import os
 import threading
 import time
-from concurrent.futures import ThreadPoolExecutor, wait
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -43,7 +44,6 @@ from osmi_water_spark.operators import areas as AR
 from osmi_water_spark.operators import assemble as AS
 from osmi_water_spark.operators import connectivity as CN
 from osmi_water_spark.operators import false_positives as FP
-from osmi_water_spark.operators import spatial_join as SJ
 from osmi_water_spark.operators import tiling as TI
 from osmi_water_spark.operators.extract import extract_entities, split_entities
 from osmi_water_spark.operators.locate import locate_ways, node_locations
@@ -180,15 +180,17 @@ def _stage(sink: Sink | None, name: str, compute, spark: SparkSession,
     """One pipeline stage output. With a sink: checkpoint-or-resume, one
     sink table/dir per stage, returned as a read of that table. Without
     one: materialized by ``_checkpoint``, so every consumer reads the
-    stored rows."""
+    stored rows. The lineage clock starts once ``compute`` has returned
+    the stage's lazy DataFrame: the shared intermediates that ``compute``
+    materialized or waited for are not in the stage's ``wall_ms``."""
     if not sink:
         return _checkpoint(compute(), held)
     if resume and sink.exists(spark, name):
         if lineage is not None:
             lineage.resumed.append(name)
         return sink.read(spark, name)
-    t0 = time.time()
     df = compute()
+    t0 = time.time()
     if lineage is not None:
         df, obs = lineage.attach(name, df)
     sink.write(df, name)
@@ -236,16 +238,14 @@ def run_pipeline(
     """pages -> the four output tables + tile tables (+ checkpoints).
 
     Stages A and B run first, in line. Behind them the run is a DAG of
-    run-once thunks (``_once``): ``way_rows`` (C), ``areas``, ``after3``
-    (D + pass 3) and the prepared PIP join (``spatial_join.pip_prepare``
-    over the areas' parts). Each is computed by the first consumer that
+    run-once thunks (``_once``): ``way_rows`` (C), ``areas`` and
+    ``after3`` (D + pass 3). Each is computed by the first consumer that
     needs it; the others wait for it. The four output leaves (ways,
     relations, polygons, nodes) are submitted to a thread pool at once,
-    and each pulls only what it reads: the way-rows branch and the areas
-    branch run concurrently, and the nodes leaf requests ``after3`` and
-    the PIP join concurrently. A resumed leaf pulls nothing, so a run whose
-    leaves all exist computes no intermediate. The tiles stage reads the
-    four leaves.
+    and each pulls only what it reads, so the way-rows branch and the
+    areas branch run concurrently. A resumed leaf pulls nothing, so a run
+    whose leaves all exist computes no intermediate. The tiles stage reads
+    the four leaves.
 
     Every intermediate that several consumers read (entities, located
     ways, way geometries, areas, pass-3 masks) is materialized once by
@@ -303,17 +303,14 @@ def run_pipeline(
             FP.apply_pass3(CN.error_mask(CN.node_stats(assembled()["remembered"])), ways),
             held,
         ))
-        # the PIP polygon side: pip_prepare's eager part (the strategy
-        # aggregate, the parts collect, the cell index and its broadcast)
-        # reads only the areas checkpoint, so it runs while after3 is built
-        contains = _once(lambda: SJ.pip_prepare(AR.pip_index(areas()), salt=salt))
 
         def nodes_out() -> DataFrame:
             # ---- Stage E pass 4 + Stage F: the final mask, finalized ----
-            # the PIP join is prepared on the leaves' pool (below) while
-            # this thread builds after3
-            prepared = pool.submit(contains)
-            final = FP.apply_pass4(after3(), locations, prepared.result())
+            # pip_join picks its strategy from an aggregate over the PIP
+            # parts (a filter plus an inline of the areas checkpoint): when
+            # they fit the broadcast bound, one collect builds a cell index
+            # and the points stream through a single mapInArrow probe
+            final = FP.apply_pass4(after3(), locations, AR.pip_index(areas()), salt=salt)
             way_error_rows = assembled()["way_errors"].select(
                 "node_id", F.lit(E.WAY).alias("final_mask")
             )
@@ -342,20 +339,16 @@ def run_pipeline(
         }
         # The leaves' stage jobs run CONCURRENTLY (SparkSession is
         # thread-safe). In checkpointed mode this also overlaps four write
-        # barriers. One thread per task (the four leaves plus the nodes
-        # leaf's PIP request), so no task waits in the queue behind a task
-        # that waits on it. Every leaf settles before a result is read (a
-        # leaf's failure would otherwise shut the pool while the nodes leaf
-        # may still submit), and leaving the block waits for the PIP
-        # request too, so the release below runs only after all of them
-        # have settled, whether one failed or not.
+        # barriers. One thread per leaf, so no leaf waits in the queue
+        # behind a leaf that holds a thunk it needs. Leaving the block
+        # waits for every leaf, so the release below runs only after all
+        # of them have settled, whether one failed or not.
         out: dict[str, DataFrame] = {}
-        with ThreadPoolExecutor(max_workers=len(leaves) + 1) as pool:
+        with ThreadPoolExecutor(max_workers=len(leaves)) as pool:
             futs = {
                 name: pool.submit(_stage, sink, name, compute, spark, lineage, resume, held)
                 for name, compute in leaves.items()
             }
-            wait(futs.values())
             for name, fut in futs.items():
                 out[name] = fut.result()
 

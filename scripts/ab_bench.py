@@ -6,7 +6,8 @@
 
 Each pair runs ``perfbench/run.py --workload W --seed S --seconds X`` once
 in each checkout, one after the other, on one seed per pair (``--seed0``,
-``--seed0 + 1``, ...). Which side goes first alternates from pair to pair,
+``--seed0 + 1``, ...). ``X`` is the benchmark's own ``run_seconds`` from
+``BENCHMARK.json``. Which side goes first alternates from pair to pair,
 so a slow drift of the host weighs on both sides alike. The benchmark
 itself is not changed: each checkout runs its own ``perfbench/run.py``.
 
@@ -27,13 +28,18 @@ import subprocess
 import sys
 import time
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+with open(os.path.join(ROOT, "BENCHMARK.json")) as _f:
+    RUN_SECONDS = json.load(_f)["run_seconds"]
+TIMEOUT_S = 900  # per run; a cold run takes well under a minute
 
-def run_once(checkout: str, workload: str, seed: int, seconds: float, timeout: float) -> dict:
+
+def run_once(checkout: str, workload: str, seed: int) -> dict:
     """One benchmark run in ``checkout``; its last stdout line, parsed."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds)]
+           "--seed", str(seed), "--seconds", str(RUN_SECONDS)]
     t0 = time.time()
-    r = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True, timeout=timeout)
+    r = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True, timeout=TIMEOUT_S)
     lines = r.stdout.strip().splitlines()
     try:
         result = json.loads(lines[-1])
@@ -69,8 +75,6 @@ def main(argv=None) -> int:
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--tag", required=True)
     ap.add_argument("--seed0", type=int, default=701)
-    ap.add_argument("--seconds", type=float, default=1.0)
-    ap.add_argument("--timeout", type=float, default=900.0, help="per run, in seconds")
     ap.add_argument("--out", default=".")
     args = ap.parse_args(argv)
 
@@ -83,7 +87,7 @@ def main(argv=None) -> int:
         seed = args.seed0 + i
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for pos, side in enumerate(order):
-            res = run_once(sides[side], args.workload, seed, args.seconds, args.timeout)
+            res = run_once(sides[side], args.workload, seed)
             runs.append({"pair": i, "seed": seed, "side": side, "first": pos == 0,
                          "result": res})
             m = values(res)
@@ -126,13 +130,12 @@ def record(args, sides: dict[str, str], commits: dict, runs: list[dict]) -> dict
         "command": (
             f"scripts/ab_bench.py {os.path.basename(sides['parent'])} "
             f"{os.path.basename(sides['change'])} --workload {args.workload} "
-            f"--pairs {args.pairs} --tag {args.tag} --seed0 {args.seed0} "
-            f"--seconds {args.seconds:g}"
+            f"--pairs {args.pairs} --tag {args.tag} --seed0 {args.seed0}"
         ),
         "workload": args.workload,
         "pairs": args.pairs,
         "seeds": [args.seed0, args.seed0 + args.pairs - 1],
-        "seconds": args.seconds,
+        "seconds": RUN_SECONDS,
         "host": {"cpus": os.cpu_count(), "machine": platform.machine(),
                  "python": platform.python_version()},
         "date": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),

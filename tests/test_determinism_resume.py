@@ -182,11 +182,12 @@ def test_iceberg_sink_roundtrip_when_jars_present(tmp_path):
 def test_resumed_run_computes_nothing(spark, tmp_path, monkeypatch):
     """After a complete checkpointed run, a ``resume=True`` run reads every
     stage back: it makes no local checkpoint (way rows, areas, pass-3
-    masks) and prepares no PIP join, and returns the first run's tables."""
+    masks) and runs no PIP join (whose strategy aggregate and parts
+    collect are eager), and returns the first run's tables."""
     from osmi_water_spark.operators import spatial_join as SJ
     from osmi_water_spark.plans import pipeline
 
-    calls = {"_checkpoint": 0, "pip_prepare": 0}
+    calls = {"_checkpoint": 0, "pip_join": 0}
 
     def counted(name, fn):
         def wrapper(*args, **kwargs):
@@ -196,16 +197,16 @@ def test_resumed_run_computes_nothing(spark, tmp_path, monkeypatch):
         return wrapper
 
     monkeypatch.setattr(pipeline, "_checkpoint", counted("_checkpoint", pipeline._checkpoint))
-    monkeypatch.setattr(SJ, "pip_prepare", counted("pip_prepare", SJ.pip_prepare))
+    monkeypatch.setattr(SJ, "pip_join", counted("pip_join", SJ.pip_join))
     out_dir = str(tmp_path / "ckpt_resume")
     pages = PG.pages_dataframe(spark, PG.pages_rows(["w06_rivermouth_pip", "w10_relation"]))
     tables = ("ways", "relations", "polygons", "nodes", "tile_validation", "tile_assignment")
     first = run_pipeline(spark, pages, out_dir=out_dir, with_lineage=False)
     want = {t: sorted(first[t].collect(), key=repr) for t in tables}
-    assert calls == {"_checkpoint": 3, "pip_prepare": 1}
+    assert calls == {"_checkpoint": 3, "pip_join": 1}
 
     calls.update(dict.fromkeys(calls, 0))
     second = run_pipeline(spark, pages, out_dir=out_dir, resume=True, with_lineage=False)
-    assert calls == {"_checkpoint": 0, "pip_prepare": 0}
+    assert calls == {"_checkpoint": 0, "pip_join": 0}
     for t in tables:
         assert sorted(second[t].collect(), key=repr) == want[t], t

@@ -13,7 +13,6 @@ import numpy as np
 from osmi_water_spark.functions import errors as E
 from osmi_water_spark.functions import wkb as W
 from osmi_water_spark.operators.false_positives import apply_pass3, apply_pass4
-from osmi_water_spark.operators.spatial_join import pip_prepare
 
 MASKS = [
     0,
@@ -89,7 +88,7 @@ def test_final_mask_matches_sequential_rules(spark):
     final = apply_pass4(
         after3,
         spark.createDataFrame(locations, "node_id long, lon double, lat double"),
-        pip_prepare(parts),
+        parts,
     )
     assert after3.columns == ["node_id", "mask3"]
     assert final.columns == ["node_id", "final_mask"]
