@@ -25,7 +25,6 @@ from __future__ import annotations
 import math
 import re
 
-import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -49,9 +48,9 @@ _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 # resolution and a per-row one (a cell's own, or a polygon's adaptive
 # cover resolution): `pow(2.0D, res)` is exact for res <= 20, and
 # Catalyst folds it to a literal when res is one, so a literal
-# resolution's plan holds no POWER. ``np_cell_of``/``np_cover`` are the
-# numpy twins the Arrow PIP probe needs; tests/test_wkb_cells.py pins them
-# to this text row for row.
+# resolution's plan holds no POWER. The Arrow PIP probe reads its point
+# cells and its cover from these formulas too, so each has this one
+# definition.
 
 
 def _sql(c: Column | str) -> str:
@@ -148,108 +147,37 @@ def _bbox_cover_count_sql(minx: str, miny: str, maxx: str, maxy: str, res: int) 
             f"({_iy_sql(maxy, res)} - {_iy_sql(miny, res)} + 1L))")
 
 
-def _adaptive_cover_res_sql(minx: str, miny: str, maxx: str, maxy: str,
-                            res_min: int, res_max: int, max_cells: int) -> str:
-    # finest qualifying resolution wins: each coarser choice nests inside
-    # the ELSE of the next finer one
-    expr = str(res_min)
-    for r in range(res_min + 1, res_max + 1):
-        expr = (f"(CASE WHEN {_bbox_cover_count_sql(minx, miny, maxx, maxy, r)}"
-                f" <= {max_cells}L THEN {r} ELSE {expr} END)")
-    return expr
+def bbox_cover_counts(minx: str, miny: str, maxx: str, maxy: str,
+                      res_min: int = MIN_COVER_RES, res_max: int = DEFAULT_RES) -> list[Column]:
+    """The bbox cover's cell count at each resolution in [res_min, res_max],
+    coarsest first. Project them into columns once: the adaptive
+    resolution and cover size at any cell budget read those columns."""
+    return [F.expr(_bbox_cover_count_sql(minx, miny, maxx, maxy, r))
+            for r in range(res_min, res_max + 1)]
 
 
-def adaptive_cover_res(
-    minx: str,
-    miny: str,
-    maxx: str,
-    maxy: str,
-    res_min: int = MIN_COVER_RES,
-    res_max: int = DEFAULT_RES,
-    max_cells: int = MAX_COVER_CELLS,
-) -> Column:
-    """Finest resolution in [res_min, res_max] whose bbox cover stays within
-    ``max_cells`` — bounds the explode fan-out per polygon regardless of
-    polygon size (big lakes coarsen instead of exploding). The cover itself
-    is ``bbox_cover_cells`` at this resolution: project it into a column
-    once and pass that column's name."""
-    return F.expr(
-        _adaptive_cover_res_sql(minx, miny, maxx, maxy, res_min, res_max, max_cells)
-    )
+def _adaptive_pick_sql(counts: list[str], max_cells: int, values: list[str]) -> str:
+    # finest qualifying resolution wins; the coarsest is the fallback
+    whens = " ".join(f"WHEN {counts[i]} <= {max_cells}L THEN {values[i]}"
+                     for i in reversed(range(1, len(counts))))
+    return f"(CASE {whens} ELSE {values[0]} END)" if whens else values[0]
 
 
-def _np_ix(lon, res: int):
-    """Numpy twin of ``_ix_sql``: identical IEEE op order
-    ((lon+180.0)/360.0*n, floor, clamp)."""
-    n = float(1 << res)
-    return np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, (1 << res) - 1).astype(np.int64)
+def adaptive_cover_res(counts: list[str], res_min: int = MIN_COVER_RES,
+                       max_cells: int = MAX_COVER_CELLS) -> Column:
+    """Finest resolution whose bbox cover stays within ``max_cells``, else
+    ``res_min``: bounds the explode fan-out per polygon regardless of its
+    size (big lakes coarsen instead of exploding). ``counts`` name the
+    projected ``bbox_cover_counts`` columns, coarsest first. The cover
+    itself is ``bbox_cover_cells`` at this resolution: project it into a
+    column once and pass that column's name."""
+    values = [str(res_min + i) for i in range(len(counts))]
+    return F.expr(_adaptive_pick_sql(counts, max_cells, values))
 
 
-def _np_iy(lat, res: int):
-    """Numpy twin of ``_iy_sql``."""
-    n = float(1 << res)
-    return np.clip(np.floor((lat + 90.0) / 180.0 * n), 0, (1 << res) - 1).astype(np.int64)
-
-
-def np_cell_of(lon, lat, res: int):
-    """Numpy twin of :func:`cell_of`, so a point gets the SAME cell id
-    whether computed JVM-side or inside an Arrow batch (the map-side PIP
-    probe relies on exact parity with the Spark-computed polygon cover)."""
-    return ((np.int64(res) << RES_BITS_SHIFT) + (_np_iy(lat, res) << IY_SHIFT)
-            + _np_ix(lon, res))
-
-
-def np_cover_boxes(minx, miny, maxx, maxy, res_min: int = MIN_COVER_RES,
-                   res_max: int = DEFAULT_RES,
-                   max_cells: int = MAX_COVER_CELLS):
-    """The per-box half of ``np_cover``: each box's cover resolution and
-    cell range as (res, ix0, iy0, width, height) int64 arrays. The cover
-    has ``(width * height).sum()`` cells, so a caller can bound it before
-    ``np_cover`` allocates it."""
-    minx = np.asarray(minx, dtype=np.float64)
-    miny = np.asarray(miny, dtype=np.float64)
-    maxx = np.asarray(maxx, dtype=np.float64)
-    maxy = np.asarray(maxy, dtype=np.float64)
-    res = np.full(minx.shape, res_min, dtype=np.int64)
-    for r in range(res_min + 1, res_max + 1):
-        cnt = (_np_ix(maxx, r) - _np_ix(minx, r) + 1) * (_np_iy(maxy, r) - _np_iy(miny, r) + 1)
-        res = np.where(cnt <= max_cells, r, res)
-
-    ix0 = np.empty_like(res)
-    ix1 = np.empty_like(res)
-    iy0 = np.empty_like(res)
-    iy1 = np.empty_like(res)
-    for r in np.unique(res):
-        m = res == r
-        ix0[m], ix1[m] = _np_ix(minx[m], int(r)), _np_ix(maxx[m], int(r))
-        iy0[m], iy1[m] = _np_iy(miny[m], int(r)), _np_iy(maxy[m], int(r))
-    return res, ix0, iy0, ix1 - ix0 + 1, iy1 - iy0 + 1
-
-
-def np_cover(minx, miny, maxx, maxy, res_min: int = MIN_COVER_RES,
-             res_max: int = DEFAULT_RES,
-             max_cells: int = MAX_COVER_CELLS):
-    """Numpy twin of adaptive_cover_res + bbox_cover_cells over ARRAYS
-    of bboxes: returns (res_per_box int64, flat cell ids int64, owner box
-    index int64). Identical IEEE op order to the JVM expressions
-    ((x+180.0)/360.0*n, floor, clamp; finest res in [res_min, res_max]
-    whose cover count stays <= max_cells, else res_min) and identical cell
-    order (iy outer, ix inner) so a driver-side cover is byte-equal to the
-    Spark-computed one. Used by the probe-mode PIP join to derive the
-    whole cover from the ALREADY-COLLECTED parts instead of running a
-    second Spark job over the polygon side (guide §8: decide with small
-    rows)."""
-    res, ix0, iy0, w, h = np_cover_boxes(minx, miny, maxx, maxy, res_min, res_max, max_cells)
-    counts = w * h
-    offs = np.zeros(len(counts) + 1, dtype=np.int64)
-    np.cumsum(counts, out=offs[1:])
-    total = int(offs[-1])
-    owner = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
-    t = np.arange(total, dtype=np.int64) - offs[owner]
-    iy = iy0[owner] + t // w[owner]
-    ix = ix0[owner] + t % w[owner]
-    cells = (res[owner] << RES_BITS_SHIFT) + (iy << IY_SHIFT) + ix
-    return res, cells, owner
+def adaptive_cover_size(counts: list[str], max_cells: int = MAX_COVER_CELLS) -> Column:
+    """Cell count of the bbox cover at ``adaptive_cover_res``."""
+    return F.expr(_adaptive_pick_sql(counts, max_cells, counts))
 
 
 def k_ring(cell: str, k: int = 1) -> Column:

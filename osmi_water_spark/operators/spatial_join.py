@@ -11,15 +11,18 @@ Reference: STRtree envelope query + PreparedPolygon::contains
   vectorized ray-cast refine   == prepared contains
   distinct(point, area)        == first-containing-polygon break
 
-Two physical arms, one question: does the polygon side fit the broadcast
-bound (``should_broadcast_parts``)?
+Every cell, of a point or of a cover, is the SQL text of
+``functions/cells.py``. One aggregate over the polygon side settles which
+of two physical arms runs:
 
-- Yes: the map-side probe. The driver builds the cover and the flat
-  ray-cast index from one collect and broadcasts them as a
-  ``CellProbeIndex``; the points stream through one narrow mapInArrow with
-  no shuffle. A cover over ``MAX_PROBE_CELLS`` is coarsened (the per-part
-  cell budget halves) until it fits.
-- No: the partitioned cell join. The cover is exploded in SQL and
+- The map-side probe, when the polygon side fits the broadcast bound
+  (``should_broadcast_parts``) and its cover fits ``MAX_PROBE_CELLS`` at
+  some per-part cell budget (the largest of ``C.MAX_COVER_CELLS``, halved
+  step by step, that fits). One collect brings the parts and their cover
+  at that budget to the driver, which builds a ``CellProbeIndex`` and
+  broadcasts it; the points, their cells computed in SQL, stream through
+  one narrow mapInArrow with no shuffle.
+- Otherwise the partitioned cell join. The cover is exploded in SQL and
   equi-joined to the points' cells; that join is the only shuffle. Dense
   cells are optionally *salted*: the polygon side replicates cell rows k
   ways and points pick a deterministic salt from their id hash, spreading
@@ -68,8 +71,7 @@ class CellProbeIndex:
     once the cover outgrew Spark's broadcast-join threshold; a cover over
     ``MAX_PROBE_CELLS`` is built coarser rather than joined."""
 
-    def __init__(self, cover_pairs: np.ndarray, index: "W.FlatPolygonIndex",
-                 res_list: list[int], keys: list):
+    def __init__(self, cover_pairs: np.ndarray, index: "W.FlatPolygonIndex", keys: list):
         pairs = np.asarray(cover_pairs, dtype=np.int64).reshape(-1, 2)
         order = np.lexsort((pairs[:, 1], pairs[:, 0]))
         pairs = pairs[order]
@@ -84,7 +86,6 @@ class CellProbeIndex:
         self.cand_start = starts.astype(np.int64)
         self.cand_count = np.diff(np.append(starts, len(cells))).astype(np.int64)
         self.index = index
-        self.res_list = list(res_list)
         self.keys = np.asarray(keys, dtype=object)
 
     def candidates(self, cells: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -105,8 +106,9 @@ def _probe_refine(
     batches: Iterator["pa.RecordBatch"], probe: "CellProbeIndex"
 ) -> Iterator["pa.RecordBatch"]:
     """Map-side PIP: per Arrow batch of points, gather candidate areas from
-    the broadcast cover (one searchsorted per resolution), dedup (point,
-    area) pairs, and run one flat vectorized ray cast. Zero shuffle."""
+    the broadcast cover (one searchsorted per resolution of the points'
+    ``cells``), dedup (point, area) pairs, and run one flat vectorized ray
+    cast. Zero shuffle."""
     import pyarrow as pa
 
     for rb in batches:
@@ -115,16 +117,17 @@ def _probe_refine(
         ids = rb.column("point_id").to_numpy(zero_copy_only=False)
         lon = rb.column("lon").to_numpy(zero_copy_only=False)
         lat = rb.column("lat").to_numpy(zero_copy_only=False)
+        cells = rb.column("cells").flatten().to_numpy().reshape(rb.num_rows, -1)
         rows_parts, key_parts = [], []
-        for res in probe.res_list:
-            r, k = probe.candidates(C.np_cell_of(lon, lat, res))
+        for j in range(cells.shape[1]):
+            r, k = probe.candidates(cells[:, j])
             rows_parts.append(r)
             key_parts.append(k)
-        rows = np.concatenate(rows_parts) if rows_parts else np.empty(0, np.int64)
-        kk = np.concatenate(key_parts) if key_parts else np.empty(0, np.int64)
+        rows = np.concatenate(rows_parts)
+        kk = np.concatenate(key_parts)
         if rows.size == 0:
             continue
-        if len(probe.res_list) > 1:
+        if cells.shape[1] > 1:
             # a (point, area) pair can arrive once per resolution — dedup.
             # (Single-res probes skip this: candidates() emits pairs already
             # sorted and unique — rows ascend, the per-cell key list is
@@ -173,42 +176,24 @@ def _refine_arrow_parts(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.Rec
         yield rb.select(["point_id", "area_key"]).filter(pa.array(keep))
 
 
-def _fit_probe(part_rows: list, boxes: list, res_min: int, res_max: int,
-               max_cells: int) -> CellProbeIndex | None:
-    """The probe over the collected parts, its cover built at the largest
-    per-part budget (``max_cells``, halved while over the cap) whose cover
-    fits ``MAX_PROBE_CELLS``; None if even one cell per part does not fit.
-    A coarser cover yields more candidates but the same pairs: the cover
-    only prefilters, the ray cast decides containment. The cap is checked on the per-box counts BEFORE the cover exists, so an
-    over-cap cover is never built on the driver. The count is of (cell,
-    part) pairs, before CellProbeIndex's (cell, key) dedup."""
-    budget = max_cells
-    res, _, _, w, h = C.np_cover_boxes(*boxes, res_min, res_max, budget)
-    while int((w * h).sum()) > MAX_PROBE_CELLS and budget > 1:
-        budget //= 2
-        res, _, _, w, h = C.np_cover_boxes(*boxes, res_min, res_max, budget)
-    if int((w * h).sum()) > MAX_PROBE_CELLS:
-        return None
-    # The flat index is built ONCE on the driver over every (area_key,
-    # part) row — multi-part areas (a multipolygon with several outer
-    # rings, areahandler.hpp:48-62) keep each part; eval ORs over a key's
-    # parts — then shipped per executor.
-    index = W.FlatPolygonIndex.build(
-        (r["area_key"], bytes(r["part_wkb"])) for r in part_rows
-    )
-    _, cover_cells, cover_owner = C.np_cover(*boxes, res_min, res_max, budget)
-    key_of_part = np.fromiter(
-        (index.key_id[r["area_key"]] for r in part_rows),
-        dtype=np.int64, count=len(part_rows),
-    )
-    keys_by_id = [None] * len(index.key_id)
-    for k, i in index.key_id.items():
-        keys_by_id[i] = k
-    # CellProbeIndex dedups (cell, key) pairs at build time — same set as a
-    # cover.distinct() job, computed from the driver arrays
+def _build_probe(parts: "pa.Table") -> CellProbeIndex:
+    """The probe over the collected (area_key, part_wkb, cells) parts. The
+    flat index is built ONCE on the driver over every (area_key, part) row
+    — multi-part areas (a multipolygon with several outer rings,
+    areahandler.hpp:48-62) keep each part; eval ORs over a key's parts —
+    then shipped per executor."""
+    import pyarrow.compute as pc
+
+    keys = parts.column("area_key").to_pylist()
+    index = W.FlatPolygonIndex.build(zip(keys, parts.column("part_wkb").to_pylist()))
+    key_of_part = np.fromiter((index.key_id[k] for k in keys), dtype=np.int64, count=len(keys))
+    cells = parts.column("cells").combine_chunks()
+    per_part = pc.fill_null(pc.list_value_length(cells), 0).to_numpy(zero_copy_only=False)
+    # CellProbeIndex dedups the (cell, key) pairs of parts sharing a key
     return CellProbeIndex(
-        np.column_stack([cover_cells, key_of_part[cover_owner]]),
-        index, np.unique(res).tolist(), keys_by_id,
+        np.column_stack([cells.flatten().to_numpy(zero_copy_only=False),
+                         np.repeat(key_of_part, per_part)]),
+        index, sorted(index.key_id, key=index.key_id.get),
     )
 
 
@@ -216,33 +201,32 @@ def pip_join(
     points: DataFrame,
     polygon_parts: DataFrame,
     salt: int = 1,
-    broadcast_parts: bool | None = None,
     unique_points: bool = False,
 ) -> DataFrame:
     """points(point_id, lon, lat) x parts(area_key, part_wkb, minx..maxy)
     -> contained pairs (point_id, area_key), deduplicated.
 
-    Two physical arms, chosen by ``broadcast_parts``:
+    Each part's bbox cover count at every resolution in
+    [``C.MIN_COVER_RES``, ``C.DEFAULT_RES``] is projected once. One
+    aggregate over those columns gives the part count, the WKB bytes, the
+    cover resolutions at the full per-part budget ``C.MAX_COVER_CELLS``
+    (all read at call time), and the cover's size at each halved budget.
+    From these the arm is chosen before anything is collected:
 
-    - True: the map-side probe. One collect brings the polygon side to the
-      driver, which builds a ``CellProbeIndex`` (cell cover + flat ray-cast
-      index) and broadcasts it; the points stream through one narrow
-      ``mapInArrow``. If the cover at ``C.MAX_COVER_CELLS`` per part exceeds
-      ``MAX_PROBE_CELLS``, the per-part budget is halved until it fits:
-      the cover only prefilters, so a coarser one gives the same pairs.
-      Only when even one cell per part is over the cap does the join run
-      partitioned.
-    - False: the partitioned cell join. The cover is exploded in SQL,
-      equi-joined to the points' cells (shuffle), and each candidate's
-      ``part_wkb`` is refined by the Arrow ray cast.
+    - The map-side probe, when ``should_broadcast_parts`` holds and the
+      cover at some budget fits ``MAX_PROBE_CELLS``: the largest such
+      budget is used. The cover only prefilters, so a coarser one gives the
+      same pairs. One collect brings the parts and their cover cells to
+      the driver, which builds a ``CellProbeIndex`` and broadcasts it; the
+      points, their cells computed in SQL, stream through one narrow
+      ``mapInArrow``.
+    - Otherwise the partitioned cell join, at the full budget. The cover is
+      exploded in SQL, equi-joined to the points' cells (shuffle), and each
+      candidate's ``part_wkb`` is refined by the Arrow ray cast.
 
-    None = auto: one aggregate over the polygon side counts parts and WKB
-    bytes (the probe needs both within the broadcast bounds) and collects
-    the cover resolutions the partitioned arm joins on.
-
-    Every part is covered at the finest resolution in
-    [``C.MIN_COVER_RES``, ``C.DEFAULT_RES``] whose bbox cover stays within
-    ``C.MAX_COVER_CELLS`` cells (read at call time).
+    A point with a null lon or lat matches nothing: its cells are the
+    grid's last ones on that axis (SQL ``greatest``/``least`` skip nulls),
+    but the envelope check before the ray cast drops it in either arm.
 
     ``salt`` > 1 replicates the partitioned arm's polygon side k ways and
     routes each point to one deterministic replica — use when single cells
@@ -255,61 +239,57 @@ def pip_join(
     spark = points.sparkSession
     res_min, res_max, max_cells = C.MIN_COVER_RES, C.DEFAULT_RES, C.MAX_COVER_CELLS
     box = ("minx", "miny", "maxx", "maxy")
+    counts = [f"_n{r}" for r in range(res_min, res_max + 1)]
+    budgets = [max_cells >> k for k in range(max_cells.bit_length())]  # max_cells .. 1
 
-    res_list = []
-    if broadcast_parts is not True:
-        stats = polygon_parts.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum(F.length("part_wkb")), F.lit(0)).alias("nbytes"),
-            F.array_sort(F.collect_set(
-                C.adaptive_cover_res(*box, res_min, res_max, max_cells)
-            )).alias("res"),
-        ).collect()[0]
-        res_list = list(stats["res"])
-        if broadcast_parts is None:
-            broadcast_parts = should_broadcast_parts(int(stats["n"]), int(stats["nbytes"]))
+    parts = polygon_parts.select(
+        "area_key", "part_wkb", *box,
+        *[c.alias(n) for c, n in zip(C.bbox_cover_counts(*box, res_min, res_max), counts)],
+    )
+    stats = parts.agg(
+        F.count("*").alias("n"),
+        F.sum(F.length("part_wkb")).alias("nbytes"),
+        F.array_sort(F.collect_set(C.adaptive_cover_res(counts, res_min, max_cells))).alias("res"),
+        *[F.sum(C.adaptive_cover_size(counts, b)).alias(f"cells_{b}") for b in budgets],
+    ).collect()[0]
+    if not stats["n"]:
+        return spark.createDataFrame([], REFINE_SCHEMA)
 
-    if broadcast_parts:
-        # ONE collect brings the whole polygon side (bounded by the
-        # broadcast decision) to the driver: WKB for the flat index AND the
-        # bboxes, from which the cover is derived in numpy (C.np_cover —
-        # exact twin of the JVM expressions).
-        part_rows = polygon_parts.select("area_key", "part_wkb", *box).collect()
-        if not part_rows:
-            return spark.createDataFrame([], REFINE_SCHEMA)
-        boxes = [[r[c] for r in part_rows] for c in box]
-        probe = _fit_probe(part_rows, boxes, res_min, res_max, max_cells)
-        if probe is not None:
-            bcp = spark.sparkContext.broadcast(probe)
+    if should_broadcast_parts(stats["n"], stats["nbytes"] or 0):
+        fits = [b for b in budgets if (stats[f"cells_{b}"] or 0) <= MAX_PROBE_CELLS]
+        if fits:
+            # ONE collect brings the whole polygon side (bounded by the
+            # broadcast decision) and its cover at the chosen budget
+            tbl = parts.withColumn(
+                "res", C.adaptive_cover_res(counts, res_min, fits[0])
+            ).select(
+                "area_key", "part_wkb", "res", C.bbox_cover_cells(*box, "res").alias("cells")
+            ).toArrow()
+            res_list = sorted(set(tbl.column("res").to_pylist()))
+            bcp = spark.sparkContext.broadcast(_build_probe(tbl))
             # NOT spread_input-widened (r6 A/B, interleaved): the probe is
             # already cheap per point, so the extra exchange's stage
             # barrier cost more than the 1-2-core serialization it fixed
             # (best 1.69 s no-spread vs 2.08 s spread at sf1.0); at scale
             # the point side arrives wide and shuffle-free is the design.
-            refined = points.select("point_id", "lon", "lat").mapInArrow(
-                lambda it: _probe_refine(it, bcp.value), REFINE_SCHEMA
-            )
+            refined = points.select(
+                "point_id", "lon", "lat", C.cell_of_multi("lon", "lat", res_list).alias("cells")
+            ).mapInArrow(lambda it: _probe_refine(it, bcp.value), REFINE_SCHEMA)
             # pairs are already unique per input ROW (in-batch dedup across
             # resolutions), so the global dedup only collapses duplicate
             # input point_ids. When the caller declares ids unique
             # (``unique_points``) the result is shuffle-FREE end to end —
             # scan -> mapInArrow -> done.
             return refined if unique_points else refined.dropDuplicates(["point_id", "area_key"])
-        # even one cell per part is over the cap: join partitioned, at the
-        # full budget
-        res_list = np.unique(C.np_cover_boxes(*boxes, res_min, res_max, max_cells)[0]).tolist()
-    if not res_list:
-        return spark.createDataFrame([], REFINE_SCHEMA)
 
-    # each part's cover resolution is projected once; the cover reads it
-    cover = polygon_parts.withColumn(
-        "_cover_res", C.adaptive_cover_res(*box, res_min, res_max, max_cells)
+    cover = parts.withColumn(
+        "_cover_res", C.adaptive_cover_res(counts, res_min, max_cells)
     ).withColumn("cell", F.explode(C.bbox_cover_cells(*box, "_cover_res")))
     pts = points.select(
         "point_id",
         "lon",
         "lat",
-        F.explode(C.cell_of_multi("lon", "lat", res_list)).alias("cell"),
+        F.explode(C.cell_of_multi("lon", "lat", stats["res"])).alias("cell"),
     )
 
     if salt > 1:

@@ -560,13 +560,10 @@ def _pip_query(spark, sf_dir, salt: int):
     from osmi_water_spark.operators.spatial_join import pip_join
 
     points, parts = _pip_inputs(spark, sf_dir)
-    # explicit knobs (as the pipeline passes them) so the standalone query
-    # measures the JOIN, not auto-mode's planning aggregate: broadcast
-    # decision pinned (tiny rect set), unique ids declared (node_id is a
-    # key) -> probe mode is shuffle-free end to end.
-    return _pip_pairs(pip_join(
-        points, parts, salt=salt, broadcast_parts=True, unique_points=True,
-    ))
+    # unique ids declared (node_id is a key): the probe arm, which the
+    # planning aggregate picks for this tiny rect set, is shuffle-free end
+    # to end
+    return _pip_pairs(pip_join(points, parts, salt=salt, unique_points=True))
 
 
 def q_j5_pip(spark, sf_dir):
@@ -575,18 +572,19 @@ def q_j5_pip(spark, sf_dir):
 
 
 def q_j5_pip_salted(spark, sf_dir):
-    """J5 with ``salt=8`` — result must be identical. The query pins
-    ``broadcast_parts=True``, and the probe arm has no shuffle to salt, so
-    ``salt`` is a no-op here; salting of the partitioned arm is checked by
-    tests/test_spatial_join.py::test_salted_partitioned_arm_matches_brute_force."""
+    """J5 with ``salt=8`` — result must be identical. The rect set fits the
+    probe arm, which has no shuffle to salt, so ``salt`` is a no-op here;
+    salting of the partitioned arm is checked by
+    tests/test_spatial_join.py::test_salted_partitioned_arm_matches_brute_force.
+    The three J5 queries differ only in ``salt`` and ``unique_points``;
+    they stay three because ORACLES and the benchmark name each one."""
     return _pip_query(spark, sf_dir, salt=8)
 
 
 def q_j5_pip_auto(spark, sf_dir):
-    """J5 with every knob left to AUTO (the planning aggregate and the
-    broadcast decision): same result as the pinned q_j5_pip — the planning
-    job is ergonomics, not semantics. Benched alongside the pinned row so
-    its overhead is a recorded number (VERDICT.md r3 #7)."""
+    """J5 with every argument left at its default: same result as
+    q_j5_pip, and the same planning aggregate and arm; only the pair dedup
+    that ``unique_points`` skips is added."""
     from osmi_water_spark.operators.spatial_join import pip_join
 
     return _pip_pairs(pip_join(*_pip_inputs(spark, sf_dir)))

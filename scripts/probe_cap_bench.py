@@ -1,7 +1,7 @@
 """J5 probe-mode stress near MAX_PROBE_CELLS (VERDICT.md r3 #6): builds a
 multi-million-cell cover (many polygons at a fine adaptive resolution) and
-reports the probe build wall (parts collect + cover count + cover and index
-assembly + broadcast) separately from the per-point lookup throughput of
+reports the probe build wall (planning aggregate + parts-and-cover collect +
+index assembly + broadcast) separately from the per-point lookup throughput of
 the shuffle-free mapInArrow probe.
 
 ``cover_cells`` is the cover at the requested per-polygon budget. When it
@@ -52,23 +52,27 @@ def main() -> None:
 
     # the cover size at the requested budget (one counting job, outside
     # the timed windows); over MAX_PROBE_CELLS, pip_join probes coarser
+    box = ("minx", "miny", "maxx", "maxy")
+    counts = [f"_n{r}" for r in range(C.MIN_COVER_RES, res_max + 1)]
+    count_cols = C.bbox_cover_counts(*box, C.MIN_COVER_RES, res_max)
     cover_cells = (
-        parts.withColumn(
-            "_cover_res",
-            C.adaptive_cover_res("minx", "miny", "maxx", "maxy",
-                                 C.MIN_COVER_RES, res_max, max_cells),
+        parts.select(
+            "area_key", *box, *[c.alias(n) for c, n in zip(count_cols, counts)],
         ).withColumn(
-            "cell", F.explode(C.bbox_cover_cells("minx", "miny", "maxx", "maxy", "_cover_res")),
+            "_cover_res", C.adaptive_cover_res(counts, C.MIN_COVER_RES, max_cells),
+        ).withColumn(
+            "cell", F.explode(C.bbox_cover_cells(*box, "_cover_res")),
         ).select("cell", "area_key").distinct().count()
     )
 
     # warm the python/Arrow worker path on a small slice
-    pip_join(pts.limit(10000), parts, broadcast_parts=True).count()
+    pip_join(pts.limit(10000), parts).count()
 
-    # build: everything up to the returned (lazy) DataFrame — parts
-    # collect, cover count, numpy/index assembly, broadcast registration
+    # build: everything up to the returned (lazy) DataFrame — the planning
+    # aggregate, the parts-and-cover collect, index assembly, broadcast
+    # registration
     t0 = time.time()
-    pairs = pip_join(pts, parts, broadcast_parts=True, unique_points=True)
+    pairs = pip_join(pts, parts, unique_points=True)
     t_build = time.time() - t0
 
     # lookup: the shuffle-free scan -> mapInArrow probe over all points

@@ -1,6 +1,7 @@
 """J5 pip_join edge cases: multi-part areas under both arms, the
 byte-bounded broadcast decision, the probe's cover cap, salting of the
-partitioned arm, and the empty-polygon-side schema.
+partitioned arm, null coordinates, and the empty-polygon-side schema.
+A test forces the partitioned arm by lowering ``MAX_BROADCAST_BYTES``.
 
 The reference indexes each polygon part separately in its STRtree
 (/root/reference/src/areahandler.hpp:48-62), so an area whose MultiPolygon
@@ -14,6 +15,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import osmi_water_spark.operators.spatial_join as SJ
+from osmi_water_spark.functions import cells as C
 from osmi_water_spark.functions import wkb as W
 from osmi_water_spark.operators.spatial_join import (
     MAX_BROADCAST_BYTES,
@@ -22,6 +25,15 @@ from osmi_water_spark.operators.spatial_join import (
     pip_join,
     should_broadcast_parts,
 )
+
+
+def _force_partitioned(monkeypatch):
+    """No polygon side fits the broadcast bound: pip_join joins partitioned."""
+    monkeypatch.setattr(SJ, "MAX_BROADCAST_BYTES", -1)
+
+
+def _joined(df) -> bool:
+    return "Join" in df._jdf.queryExecution().optimizedPlan().toString()
 
 
 def _rect_wkb(x0, y0, x1, y1):
@@ -55,34 +67,37 @@ def _points(spark):
 
 
 @pytest.mark.parametrize("broadcast", [True, False])
-def test_multi_part_area_both_paths(spark, broadcast):
+def test_multi_part_area_both_paths(spark, monkeypatch, broadcast):
     parts = _two_part_area(spark)
     pts = _points(spark)
-    got = {
-        (r.point_id, r.area_key)
-        for r in pip_join(pts, parts, broadcast_parts=broadcast).collect()
-    }
-    assert got == {(1, "A"), (2, "A"), (3, "B")}
+    if not broadcast:
+        _force_partitioned(monkeypatch)
+    df = pip_join(pts, parts)
+    assert _joined(df) != broadcast
+    assert {(r.point_id, r.area_key) for r in df.collect()} == {(1, "A"), (2, "A"), (3, "B")}
     # an empty polygon side still yields the pairs schema
-    empty = pip_join(pts, parts.limit(0), broadcast_parts=broadcast)
+    empty = pip_join(pts, parts.limit(0))
     assert empty.columns == ["point_id", "area_key"] and empty.count() == 0
 
 
 def test_multi_part_area_pip_exists(spark):
     parts = _two_part_area(spark)
     pts = _points(spark)
-    got = {r.point_id for r in pip_exists(pts, parts, broadcast_parts=True).collect()}
+    got = {r.point_id for r in pip_exists(pts, parts).collect()}
     assert got == {1, 2, 3}
 
 
 @pytest.mark.parametrize("broadcast", [True, False])
-def test_pip_exists_plans_one_aggregate(spark, broadcast):
+def test_pip_exists_plans_one_aggregate(spark, monkeypatch, broadcast):
     """pip_exists is a projection of pip_join: Catalyst drops the pair
     dedup under the point-id distinct, so the optimized plan holds one
     Aggregate in either arm, and a duplicated point id comes out once."""
     parts = _two_part_area(spark)
     pts = _points(spark).unionByName(_points(spark).filter("point_id = 1"))
-    df = pip_exists(pts, parts, broadcast_parts=broadcast)
+    if not broadcast:
+        _force_partitioned(monkeypatch)
+    df = pip_exists(pts, parts)
+    assert _joined(df) != broadcast
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("Aggregate [") == 1, plan
     assert sorted(r.point_id for r in df.collect()) == [1, 2, 3]
@@ -97,20 +112,14 @@ def test_broadcast_decision_is_byte_bounded():
 
 
 def test_auto_decision_picks_nonbroadcast_for_fat_parts(spark, monkeypatch):
-    """End-to-end: the auto decision consults total WKB bytes, not just the
+    """End-to-end: the decision consults total WKB bytes, not just the
     row count, and the non-broadcast fallback stays correct."""
-    import osmi_water_spark.operators.spatial_join as SJ
-
     parts = _two_part_area(spark)
     pts = _points(spark)
     monkeypatch.setattr(SJ, "MAX_BROADCAST_BYTES", 8)  # everything is "fat"
-    # should_broadcast_parts reads module globals via default args at call
-    # time only if re-bound — pass through the public entry instead:
-    got = {
-        (r.point_id, r.area_key)
-        for r in SJ.pip_join(pts, parts, broadcast_parts=None).collect()
-    }
-    assert got == {(1, "A"), (2, "A"), (3, "B")}
+    df = pip_join(pts, parts)
+    assert _joined(df)
+    assert {(r.point_id, r.area_key) for r in df.collect()} == {(1, "A"), (2, "A"), (3, "B")}
 
 
 def _salt_case(spark):
@@ -119,8 +128,6 @@ def _salt_case(spark):
     resolution, plus uniform ones. Returns (parts, points, expected pairs)
     with the expectation from a numpy brute force over strict interiors;
     the random rect edges never coincide with a dyadic cell edge."""
-    from osmi_water_spark.functions import cells as C
-
     rng = np.random.RandomState(11)
     x0 = rng.uniform(-30.0, 30.0, 30)
     y0 = rng.uniform(-20.0, 20.0, 30)
@@ -159,30 +166,29 @@ def _salt_case(spark):
 
 
 @pytest.mark.parametrize("salt", [1, 3, 8])
-def test_salted_partitioned_arm_matches_brute_force(spark, salt):
+def test_salted_partitioned_arm_matches_brute_force(spark, monkeypatch, salt):
     """Salting the partitioned arm's cell join (polygon side replicated k
     ways, each point routed to one replica) changes no pair, and the
     result carries each (point, area) pair once."""
     parts, pts, want = _salt_case(spark)
-    df = pip_join(pts, parts, broadcast_parts=False, salt=salt)
-    assert "Join" in df._jdf.queryExecution().optimizedPlan().toString()
+    _force_partitioned(monkeypatch)
+    df = pip_join(pts, parts, salt=salt)
+    assert _joined(df)
     rows = [(r.point_id, r.area_key) for r in df.collect()]
     assert len(rows) == len(set(rows)) and set(rows) == want
-    exists = pip_exists(pts, parts, broadcast_parts=False, salt=salt)
+    exists = pip_exists(pts, parts, salt=salt)
     assert {r.point_id for r in exists.collect()} == {p for p, _ in want}
 
 
 def test_auto_partitioned_plans_with_one_job(spark, monkeypatch):
-    """Auto mode settles the broadcast decision and the partitioned arm's
-    cover resolutions in one aggregate: building the join runs exactly
-    one query before any action on its result, and launches exactly the
-    jobs of one global aggregate (with AQE on, that is a shuffle-map job
-    plus a result job)."""
-    import osmi_water_spark.operators.spatial_join as SJ
-
+    """One aggregate settles the arm and the partitioned arm's cover
+    resolutions: building the partitioned join runs exactly one query
+    before any action on its result, and launches exactly the jobs of one
+    global aggregate (with AQE on, that is a shuffle-map job plus a result
+    job). Building the probe arm runs that aggregate plus one collect of
+    the parts and their cover."""
     parts = _two_part_area(spark)
     pts = _points(spark)
-    monkeypatch.setattr(SJ, "MAX_BROADCAST_BYTES", 8)
     sc = spark.sparkContext
     store = spark._jsparkSession.sharedState().statusStore()
 
@@ -198,11 +204,51 @@ def test_auto_partitioned_plans_with_one_job(spark, monkeypatch):
         jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         return out, jobs, store.executionsCount() - n_exec
 
+    want = {(1, "A"), (2, "A"), (3, "B")}
     _, agg_jobs, _ = run_in_group("one-aggregate", lambda: parts.agg(F.count("*")).collect())
-    df, jobs, queries = run_in_group("pip-join-planning", lambda: SJ.pip_join(pts, parts))
-    assert agg_jobs >= 1 and jobs == agg_jobs and queries == 1
+    assert agg_jobs >= 1
+
+    df, jobs, queries = run_in_group("pip-join-probe", lambda: pip_join(pts, parts))
+    assert not _joined(df)
+    assert jobs == agg_jobs + 1 and queries == 2
+    assert {(r.point_id, r.area_key) for r in df.collect()} == want
+
+    _force_partitioned(monkeypatch)
+    df, jobs, queries = run_in_group("pip-join-partitioned", lambda: pip_join(pts, parts))
+    assert _joined(df)
+    assert jobs == agg_jobs and queries == 1
+    assert {(r.point_id, r.area_key) for r in df.collect()} == want
+
+
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_null_coordinates_match_nothing(spark, monkeypatch, broadcast):
+    """A point with a null lon or lat matches no polygon in either arm,
+    while the points beside it in the same batch still match. The SQL cell
+    of a null coordinate is the grid's last cell on that axis (``greatest``
+    and ``least`` skip nulls), so area N, which covers the north-east
+    corner, has the null points as candidates; the envelope check before
+    the ray cast drops them."""
+    corner = [("N", bytearray(_rect_wkb(170.0, 80.0, 180.0, 90.0)), 170.0, 80.0, 180.0, 90.0)]
+    parts = _two_part_area(spark).unionByName(spark.createDataFrame(
+        corner, "area_key string, part_wkb binary, minx double, miny double, "
+        "maxx double, maxy double"))
+    pts = _points(spark).unionByName(spark.createDataFrame(
+        [(5, None, 85.0), (6, 175.0, None), (7, None, None), (8, 175.0, 85.0)],
+        "point_id long, lon double, lat double",
+    )).coalesce(1)
+    cand = pts.filter("point_id IN (5, 6, 7)").select(
+        F.arrays_overlap(
+            C.cell_of_multi("lon", "lat", [C.DEFAULT_RES]),
+            C.bbox_cover_cells("170.0D", "80.0D", "180.0D", "90.0D", C.DEFAULT_RES),
+        ).alias("hit")
+    ).collect()
+    assert [r.hit for r in cand] == [True] * 3
+    if not broadcast:
+        _force_partitioned(monkeypatch)
+    df = pip_join(pts, parts)
+    assert _joined(df) != broadcast
     assert {(r.point_id, r.area_key) for r in df.collect()} == {
-        (1, "A"), (2, "A"), (3, "B")
+        (1, "A"), (2, "A"), (3, "B"), (8, "N")
     }
 
 
@@ -250,7 +296,7 @@ def test_cell_probe_candidates():
     index = W.FlatPolygonIndex.build([("a", W.wkb_polygon([ring]))])
     # cover: cell 10 -> keys {1,0} (dup 0), cell 20 -> {2}
     pairs = np.array([[10, 1], [10, 0], [10, 0], [20, 2]], dtype=np.int64)
-    probe = CellProbeIndex(pairs, index, [7], ["a", "b", "c"])
+    probe = CellProbeIndex(pairs, index, ["a", "b", "c"])
     rows, kk = probe.candidates(np.array([20, 10, 99, 10], dtype=np.int64))
     got = list(zip(rows.tolist(), kk.tolist()))
     assert got == [(0, 2), (1, 0), (1, 1), (3, 0), (3, 1)]
@@ -258,32 +304,13 @@ def test_cell_probe_candidates():
     assert got == sorted(set(got))
 
 
-def test_np_cell_of_matches_formula():
-    import numpy as np
-
-    from osmi_water_spark.functions import cells as C
-
-    lon = np.array([-180.0, -0.1, 0.0, 179.99, 180.0])
-    lat = np.array([-90.0, 45.0, 0.0, -0.1, 90.0])
-    res = 7
-    n = float(1 << res)
-    hi = (1 << res) - 1
-    ix = np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, hi).astype(np.int64)
-    iy = np.clip(np.floor((lat + 90.0) / 180.0 * n), 0, hi).astype(np.int64)
-    want = (np.int64(res) << 58) + (iy << 29) + ix
-    assert (C.np_cell_of(lon, lat, res) == want).all()
-
-
 def test_probe_cap_checked_before_cover_is_built(spark, monkeypatch):
-    """The probe cap is checked on the per-box cover counts. A cover of
-    exactly MAX_PROBE_CELLS pairs is probed as built. An over-cap cover is
-    coarsened: the per-part budget halves until the count fits, and only
-    that cover is built, still with no join. A cap below the one-cell
-    cover runs the partitioned join WITHOUT building any cover. All three
-    give the same pairs."""
-    import osmi_water_spark.operators.spatial_join as SJ
-    from osmi_water_spark.functions import cells as C
-
+    """The probe cap is checked on the aggregate's cover sizes, before any
+    cover is collected. A cover of exactly MAX_PROBE_CELLS pairs is
+    collected at the full per-part budget. An over-cap cover is coarsened:
+    the largest halved budget whose cover fits is collected, still with no
+    join. A cap below the one-cell cover runs the partitioned join and
+    collects no cover. All three give the same pairs."""
     rows = [
         (float(i % 10), float(i // 10), float(i % 10) + 1.5, float(i // 10) + 1.5)
         for i in range(40)
@@ -300,43 +327,41 @@ def test_probe_cap_checked_before_cover_is_built(spark, monkeypatch):
         [(i, float(i % 12) + 0.7, float(i % 7) + 0.7) for i in range(300)],
         "point_id long, lon double, lat double",
     )
+    counts = [f"n{r}" for r in range(C.MIN_COVER_RES, C.DEFAULT_RES + 1)]
+    counted = parts.select(*[c.alias(n) for c, n in zip(
+        C.bbox_cover_counts("minx", "miny", "maxx", "maxy"), counts)])
 
     def n_cover(max_cells):
-        _, _, _, w, h = C.np_cover_boxes(*zip(*rows), 3, C.DEFAULT_RES, max_cells)
-        return int((w * h).sum())
+        return counted.agg(F.sum(C.adaptive_cover_size(counts, max_cells))).first()[0]
 
     n_pairs = n_cover(C.MAX_COVER_CELLS)  # pip_join's default budget
     n_one = n_cover(1)
     assert n_one < n_pairs - 1  # coarsening has room to fit
 
-    covers = []
+    collected = []
 
-    def np_cover_spy(*a, **k):
-        out = np_cover(*a, **k)
-        covers.append((a[6], len(out[1])))  # (max_cells, cover pairs)
-        return out
+    def build_spy(tbl):
+        collected.append(sum(len(c) for c in tbl.column("cells").to_pylist()))
+        return build_probe(tbl)
 
-    np_cover = C.np_cover
-    monkeypatch.setattr(C, "np_cover", np_cover_spy)
+    build_probe = SJ._build_probe
+    monkeypatch.setattr(SJ, "_build_probe", build_spy)
 
     def run(cap):
         monkeypatch.setattr(SJ, "MAX_PROBE_CELLS", cap)
-        covers.clear()
-        df = pip_join(pts, parts, broadcast_parts=True)
-        pairs = {(r.point_id, r.area_key) for r in df.collect()}
-        return pairs, "Join" in df._jdf.queryExecution().optimizedPlan().toString()
+        collected.clear()
+        df = pip_join(pts, parts)
+        return {(r.point_id, r.area_key) for r in df.collect()}, _joined(df)
 
     at_cap, joined = run(n_pairs)
-    assert covers == [(C.MAX_COVER_CELLS, n_pairs)] and not joined
+    assert collected == [n_pairs] and not joined
 
     over_cap, joined = run(n_pairs - 1)
     assert not joined  # still one narrow mapInArrow
-    assert len(covers) == 1
-    budget, cells = covers[0]
-    assert budget < C.MAX_COVER_CELLS and cells <= n_pairs - 1
+    assert len(collected) == 1 and n_one <= collected[0] <= n_pairs - 1
 
     partitioned, joined = run(n_one - 1)
-    assert covers == [] and joined  # partitioned arm, no cover built
+    assert collected == [] and joined  # partitioned arm, no cover collected
     assert at_cap == over_cap == partitioned and len(at_cap) > 0
 
 
@@ -362,7 +387,7 @@ def test_cell_probe_index_at_cap_scale():
         )]))) for i in range(1)
     )
     t0 = time.time()
-    probe = CellProbeIndex(pairs, idx, [7], [str(i) for i in range(1000)])
+    probe = CellProbeIndex(pairs, idx, [str(i) for i in range(1000)])
     build_s = time.time() - t0
     # regression bound: an interpreted per-row build takes MINUTES at 4M
     # rows; the vectorized build takes seconds. 120s keeps the guard while

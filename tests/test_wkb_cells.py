@@ -93,10 +93,13 @@ def test_cell_encode_decode(spark):
 def test_bbox_cover_and_adaptive(spark):
     df = spark.createDataFrame([(0.0, 0.0, 10.0, 5.0)], "minx double, miny double, maxx double, maxy double")
     cols = ["minx", "miny", "maxx", "maxy"]
+    counts = ["c3", "c4", "c5", "c6", "c7"]
     row = df.select(
+        *cols, *[c.alias(n) for c, n in zip(C.bbox_cover_counts(*cols, 3, 7), counts)],
+    ).select(
         *cols,
         F.size(C.bbox_cover_cells(*cols, 7)).alias("n7"),
-        C.adaptive_cover_res(*cols, 3, 7, 8).alias("ar"),
+        C.adaptive_cover_res(counts, 3, 8).alias("ar"),
     ).select("n7", "ar", F.size(C.bbox_cover_cells(*cols, "ar")).alias("an")).first()
     # res7 cells are 2.8125 x 1.40625 deg -> 10deg spans 4-5 cells x, 5deg 4-5 cells y
     assert row.n7 >= 12
@@ -253,17 +256,32 @@ def _cover_edge_bboxes(res_max: int, max_cells: int) -> list[tuple]:
     return out
 
 
-def test_np_kernels_match_sql_cover(spark):
-    """The map-side PIP probe computes cells in numpy (np_cell_of, np_cover)
-    and joins them against covers the SQL text defines (the bbox cover at
-    each box's adaptive resolution, as the partitioned join composes it),
-    so the numpy kernels must match the SQL row for row: resolution per
-    bbox, cell ids in order, owner index, and point cells at every
-    resolution."""
+def test_sql_cover_matches_python_spec(spark):
+    """The cover and point cells are SQL text only; the map-side PIP probe
+    and the partitioned join both read them. Check them against a plain
+    Python spec of the formulas: resolution, cover size and cell ids (in
+    order) per bbox at several budgets, and point cells at several
+    resolutions."""
     import random
+
+    def ix(lon, r):
+        return min((1 << r) - 1, max(0, math.floor((lon + 180.0) / 360.0 * (1 << r))))
+
+    def iy(lat, r):
+        return min((1 << r) - 1, max(0, math.floor((lat + 90.0) / 180.0 * (1 << r))))
+
+    def cells_at(b, r):  # iy outer, ix inner
+        return [(r << 58) + (y << 29) + x
+                for y in range(iy(b[1], r), iy(b[3], r) + 1)
+                for x in range(ix(b[0], r), ix(b[2], r) + 1)]
+
+    def size_at(b, r):
+        return (ix(b[2], r) - ix(b[0], r) + 1) * (iy(b[3], r) - iy(b[1], r) + 1)
 
     rng = random.Random(11)
     res_min, res_max = 3, 7
+    counts = [f"n{r}" for r in range(res_min, res_max + 1)]
+    cols = ["minx", "miny", "maxx", "maxy"]
     for max_cells in (8, 64):
         boxes = [
             (x, y, x + rng.uniform(0, 40), y + rng.uniform(0, 20))
@@ -273,36 +291,31 @@ def test_np_kernels_match_sql_cover(spark):
             [(i, *b) for i, b in enumerate(boxes)],
             "i int, minx double, miny double, maxx double, maxy double",
         )
-        cols = ["minx", "miny", "maxx", "maxy"]
+        count_cols = C.bbox_cover_counts(*cols, res_min, res_max)
         got = df.select(
-            "i", *cols,
-            C.adaptive_cover_res(*cols, res_min, res_max, max_cells).alias("res"),
+            "i", *cols, *[c.alias(n) for c, n in zip(count_cols, counts)],
         ).select(
-            "i", *cols, "res", C.bbox_cover_cells(*cols, "res").alias("cells"),
+            "i", *cols,
+            C.adaptive_cover_res(counts, res_min, max_cells).alias("res"),
+            C.adaptive_cover_size(counts, max_cells).alias("size"),
+        ).select(
+            "i", "res", "size", C.bbox_cover_cells(*cols, "res").alias("cells"),
         ).orderBy("i").collect()
-        res, cells, owner = C.np_cover(
-            [r.minx for r in got], [r.miny for r in got],
-            [r.maxx for r in got], [r.maxy for r in got],
-            res_min, res_max, max_cells,
-        )
-        assert res.tolist() == [r.res for r in got]
-        assert cells.tolist() == [c for r in got for c in r.cells]
-        assert owner.tolist() == [i for i, r in enumerate(got) for _ in r.cells]
-        counts = {len(r.cells) for r in got}
-        assert max_cells in counts  # the boundary cases really hit the cap
+        for b, row in zip(boxes, got):
+            res = next((r for r in range(res_max, res_min, -1)
+                        if size_at(b, r) <= max_cells), res_min)
+            assert (row.res, row.size, row.cells) == (res, size_at(b, res), cells_at(b, res)), b
+        assert max_cells in {r.size for r in got}  # the boundary cases really hit the cap
 
     pts = [(b[0], b[1]) for b in boxes] + [(b[2], b[3]) for b in boxes]
     resolutions = [3, 5, 7, 20]
-    pdf = spark.createDataFrame(
+    got = spark.createDataFrame(
         [(i, *p) for i, p in enumerate(pts)], "i int, lon double, lat double"
-    )
-    got = pdf.select(
+    ).select(
         "i", "lon", "lat", C.cell_of_multi("lon", "lat", resolutions).alias("c")
     ).orderBy("i").collect()
-    lon = np.array([r.lon for r in got])
-    lat = np.array([r.lat for r in got])
-    for k, res in enumerate(resolutions):
-        assert C.np_cell_of(lon, lat, res).tolist() == [r.c[k] for r in got]
+    for row in got:
+        assert row.c == [(r << 58) + (iy(row.lat, r) << 29) + ix(row.lon, r) for r in resolutions]
 
 
 def _scalar_linestring(pts):
