@@ -66,6 +66,11 @@ def _sql(c: Column | str) -> str:
     return name
 
 
+def _null_or_sql(args: tuple[str, ...], expr: str) -> str:
+    """``expr``, or NULL when an arg is null (the clamps' greatest/least skip nulls)."""
+    return f"CASE WHEN {' OR '.join(f'({a}) IS NULL' for a in args)} THEN NULL ELSE {expr} END"
+
+
 def _clamp_sql(i: str, res: int | str) -> str:
     """``i`` clamped to [0, 2^res - 1], the cell range of one axis."""
     return f"greatest(0L, least(cast(pow(2.0D, {res}) as long) - 1L, {i}))"
@@ -85,7 +90,7 @@ def _encode_sql(res: int | str, ix: str, iy: str) -> str:
 
 
 def _cell_of_sql(lon: str, lat: str, res: int | str) -> str:
-    return _encode_sql(res, _ix_sql(lon, res), _iy_sql(lat, res))
+    return _null_or_sql((lon, lat), _encode_sql(res, _ix_sql(lon, res), _iy_sql(lat, res)))
 
 
 def _cell_res_sql(cell: str) -> str:
@@ -113,8 +118,8 @@ def cell_iy(cell: str) -> Column:
 
 
 def cell_of(lon: Column | str, lat: Column | str, res: int = DEFAULT_RES) -> Column:
-    """Point -> grid cell id at a fixed resolution. ``lon``/``lat`` are SQL
-    text or bare column references."""
+    """Point -> grid cell id at a fixed resolution, NULL for a null
+    coordinate. ``lon``/``lat`` are SQL text or bare column references."""
     return F.expr(_cell_of_sql(_sql(lon), _sql(lat), res))
 
 
@@ -138,13 +143,15 @@ def bbox_cover_cells(minx: str, miny: str, maxx: str, maxy: str, res: int | str)
     ix0, ix1 = _ix_sql(minx, res), _ix_sql(maxx, res)
     iy0, iy1 = _iy_sql(miny, res), _iy_sql(maxy, res)
     enc = _encode_sql(res, "__cov_ix", "__cov_iy")
-    return F.expr(f"flatten(transform(sequence({iy0}, {iy1}), "
-                  f"__cov_iy -> transform(sequence({ix0}, {ix1}), __cov_ix -> {enc})))")
+    return F.expr(_null_or_sql((minx, miny, maxx, maxy), (
+        f"flatten(transform(sequence({iy0}, {iy1}), "
+        f"__cov_iy -> transform(sequence({ix0}, {ix1}), __cov_ix -> {enc})))")))
 
 
 def _bbox_cover_count_sql(minx: str, miny: str, maxx: str, maxy: str, res: int) -> str:
-    return (f"(({_ix_sql(maxx, res)} - {_ix_sql(minx, res)} + 1L) * "
-            f"({_iy_sql(maxy, res)} - {_iy_sql(miny, res)} + 1L))")
+    return _null_or_sql((minx, miny, maxx, maxy), (
+        f"(({_ix_sql(maxx, res)} - {_ix_sql(minx, res)} + 1L) * "
+        f"({_iy_sql(maxy, res)} - {_iy_sql(miny, res)} + 1L))"))
 
 
 def bbox_cover_counts(minx: str, miny: str, maxx: str, maxy: str,
@@ -172,7 +179,7 @@ def adaptive_cover_res(counts: list[str], res_min: int = MIN_COVER_RES,
     itself is ``bbox_cover_cells`` at this resolution: project it into a
     column once and pass that column's name."""
     values = [str(res_min + i) for i in range(len(counts))]
-    return F.expr(_adaptive_pick_sql(counts, max_cells, values))
+    return F.expr(_null_or_sql(counts[:1], _adaptive_pick_sql(counts, max_cells, values)))
 
 
 def adaptive_cover_size(counts: list[str], max_cells: int = MAX_COVER_CELLS) -> Column:
@@ -205,12 +212,12 @@ def _tile_id_sql(lon: str, lat: str, z: int) -> str:
     lat_rad = f"(({lat}) * {pi}D / 180.0D)"
     ty = (f"floor((1.0D - ln(tan({lat_rad}) + 1.0D / cos({lat_rad})) / {pi}D)"
           f" / 2.0D * pow(2.0D, {z}))")
-    return _encode_sql(z, _ix_sql(lon, z), _clamp_sql(ty, z))
+    return _null_or_sql((lon, lat), _encode_sql(z, _ix_sql(lon, z), _clamp_sql(ty, z)))
 
 
 def tile_id(lon: Column | str, lat: Column | str, z: int) -> Column:
-    """Point -> z/x/y tile id. ``lon``/``lat`` are SQL text or bare column
-    references."""
+    """Point -> z/x/y tile id, NULL for a null coordinate. ``lon``/``lat``
+    are SQL text or bare column references."""
     return F.expr(_tile_id_sql(_sql(lon), _sql(lat), z))
 
 

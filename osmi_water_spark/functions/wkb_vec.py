@@ -23,7 +23,7 @@ import pyarrow as pa
 _CHUNK = 65_536
 
 
-def _list_flat(arr: "pa.Array"):
+def list_flat(arr: "pa.Array"):
     """ListArray<struct<lon,lat>> -> (n, valid, lens, flat lon, flat lat).
     ``flatten()`` concatenates the values of each non-null row, so
     ``np.repeat(arange(n), lens)`` maps flat elements to rows regardless
@@ -108,7 +108,7 @@ def _bbox_arrays(n, ok, klon, klat, kcum):
 def linestring_struct(arr: "pa.Array") -> "pa.StructArray":
     """G2 (make_linestring): coords -> struct(wkb, ok, minx..maxy).
     WKB layout per ok row: 01 | u32(2) | u32(m) | m x (f8 lon, f8 lat)."""
-    n, valid, lens, lon, lat = _list_flat(arr)
+    n, valid, lens, lon, lat = list_flat(arr)
     row_of, keep = _consecutive_dedup(n, valid, lens, lon, lat)
     krow = row_of[keep]
     m = np.bincount(krow, minlength=n).astype(np.int64)

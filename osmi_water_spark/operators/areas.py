@@ -9,25 +9,32 @@ F7 gate (polygon row) and the F5 gate (PIP index entry per polygon part).
 Spark shape: a closed tagged way's one-ring Polygon is its linestring's
 bytes behind a Polygon header (``make_linestring`` plus the SQL of
 ``wkb.ring_polygon_sql``), with no shuffle and one Arrow pass; multipolygon
-relations group their member way segments and an ``applyInPandas`` stage
-assembles rings (greedy endpoint chaining), classifies outer/inner by
-member role, and nests holes into their containing outer. Each area
-carries its polygon *parts* (Polygon WKB + bbox) out of assembly: the
-polygons table joins them into a MultiPolygon in SQL, and the PIP index
-takes one row per part with its own bbox (matching the reference's
+relations group their member way segments and an ``applyInArrow`` stage
+assembles rings over the group's flat lon/lat buffers (greedy endpoint
+chaining), classifies outer/inner by member role, and nests holes into
+their containing outer; a failed area emits no row. Each area carries
+its polygon *parts* (Polygon WKB + bbox) out of assembly: the polygons
+table joins them into a MultiPolygon in SQL, and the PIP index takes one
+row per part with its own bbox (matching the reference's
 envelope-per-polygon STRtree inserts, areahandler.hpp:48-62). No stage
 re-parses an area's WKB.
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.conversion import to_arrow_schema
+from pyspark.sql.types import StructType
 
+from osmi_water_spark.functions import cells as C
 from osmi_water_spark.functions import tags as TG
 from osmi_water_spark.functions import wkb as W
+from osmi_water_spark.functions import wkb_vec as V
 from osmi_water_spark.operators.assemble import make_linestring
 
 _AREA_SCHEMA = (
@@ -35,10 +42,11 @@ _AREA_SCHEMA = (
     "parts array<struct<part_wkb binary, minx double, miny double, maxx double, maxy double>>, "
     "minx double, miny double, maxx double, maxy double"
 )
+_BOX = ("minx", "miny", "maxx", "maxy")
 
 
 def _chain_rings(segments: list[np.ndarray]) -> tuple[list[np.ndarray], bool]:
-    """Greedy endpoint chaining of line segments into closed rings
+    """Greedy endpoint chaining of (n, 2) lon/lat segments into closed rings
     (the Assembler's ring-building, osmium_geos_factory geos_factory.hpp:195-270
     re-expressed; segments may need reversing). O(n) via an endpoint hash
     map — the previous linear rescan per append made one 10k-member
@@ -48,9 +56,7 @@ def _chain_rings(segments: list[np.ndarray]) -> tuple[list[np.ndarray], bool]:
     closed chain is degenerate, <4 points) — libosmium's Assembler errors
     the WHOLE area in that case, it does not emit the rings that did close.
     """
-    segs = [np.asarray(s, dtype=np.float64) for s in segments if s is not None and len(s) >= 2]
-    from collections import defaultdict
-
+    segs = [s for s in segments if len(s) >= 2]
     ends: dict[tuple[float, float], list[tuple[int, bool]]] = defaultdict(list)
     for i, s in enumerate(segs):
         ends[(s[0, 0], s[0, 1])].append((i, True))
@@ -78,11 +84,8 @@ def _chain_rings(segments: list[np.ndarray]) -> tuple[list[np.ndarray], bool]:
             parts.append(s[1:])
             tail = (s[-1, 0], s[-1, 1])
         else:
-            cur = np.vstack(parts) if len(parts) > 1 else parts[0]
-            if len(cur) >= 4:
-                rings.append(cur)
-            else:
-                ok = False  # degenerate closed ring
+            rings.append(np.vstack(parts) if len(parts) > 1 else parts[0])
+            ok &= len(rings[-1]) >= 4  # a degenerate closed ring fails the area too
     return rings, ok
 
 
@@ -95,9 +98,7 @@ def assemble_polygons(
     errored, no partial geometry is emitted)."""
     outers, ok_outer = _chain_rings(outer_segs)
     inners, ok_inner = _chain_rings(inner_segs)
-    if not (ok_outer and ok_inner):
-        return None
-    if not outers:
+    if not (ok_outer and ok_inner and outers):
         return None
     polys: list[list[np.ndarray]] = [[o] for o in outers]
     for hole in inners:
@@ -109,32 +110,27 @@ def assemble_polygons(
     return polys
 
 
-def _assemble_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    key = pdf["area_key"].iloc[0]
+def _assemble_group(key: tuple, table: pa.Table, schema: pa.Schema) -> pa.Table:
+    """One relation's member rows (role, coords) -> its area row, or no row
+    when assembly fails; members are views of the group's flat buffers."""
+    _, _, lens, lon, lat = V.list_flat(table.column("coords"))
+    xy = np.column_stack((lon, lat))
     outer, inner = [], []
-    for role, pts in zip(pdf["role"], pdf["coords"]):
-        seg = np.array([[p["lon"], p["lat"]] for p in pts], dtype=np.float64) if pts is not None and len(pts) else None
-        if seg is None:
-            continue
+    for role, hi, n in zip(table.column("role").to_pylist(), np.cumsum(lens), lens):
         # osmium treats empty role as outer
-        (inner if role == "inner" else outer).append(seg)
+        (inner if role == "inner" else outer).append(xy[hi - n:hi])
     polys = assemble_polygons(outer, inner)
+    if polys is None:
+        return schema.empty_table()
     # parts and bboxes computed here, once at assembly, so the polygons
     # table, the PIP index and the cell covers never re-parse the WKB
-    parts, bbox = None, [None] * 4
-    if polys is not None:
-        lo = [np.vstack(rings).min(axis=0) for rings in polys]
-        hi = [np.vstack(rings).max(axis=0) for rings in polys]
-        parts = [
-            {"part_wkb": W.wkb_polygon(rings), "minx": float(mn[0]), "miny": float(mn[1]),
-             "maxx": float(mx[0]), "maxy": float(mx[1])}
-            for rings, mn, mx in zip(polys, lo, hi)
-        ]
-        bbox = [float(v) for v in (*np.min(lo, axis=0), *np.max(hi, axis=0))]
-    return pd.DataFrame(
-        {"area_key": [key], "parts": [parts], "minx": [bbox[0]],
-         "miny": [bbox[1]], "maxx": [bbox[2]], "maxy": [bbox[3]]}
-    )
+    box = np.array([[*np.vstack(rings).min(axis=0), *np.vstack(rings).max(axis=0)]
+                    for rings in polys])
+    parts = [{"part_wkb": W.wkb_polygon(rings), **dict(zip(_BOX, b.tolist()))}
+             for rings, b in zip(polys, box)]
+    bbox = dict(zip(_BOX, [*box[:, :2].min(axis=0).tolist(), *box[:, 2:].max(axis=0).tolist()]))
+    row = {"area_key": key[0].as_py(), "parts": parts, **bbox}
+    return pa.Table.from_pylist([row], schema=schema)
 
 
 def build_areas(
@@ -192,9 +188,9 @@ def build_areas(
         "m.role AS role",
         "coords",
     )
-    rel_geoms = (
-        segs.groupBy("area_key").applyInPandas(_assemble_group, _AREA_SCHEMA)
-        .filter(F.col("parts").isNotNull())
+    schema = to_arrow_schema(StructType.fromDDL(_AREA_SCHEMA))
+    rel_geoms = segs.groupBy("area_key").applyInArrow(
+        lambda key, table: _assemble_group(key, table, schema), _AREA_SCHEMA
     )
     rel_areas = mp_rels.selectExpr(
         "concat('r', id) AS area_key",
@@ -218,8 +214,6 @@ def polygon_table(areas: DataFrame, cell_res: int) -> DataFrame:
     (functions/cells.bbox_cover_cells). The int() vs
     floor() clamp difference is vacuous for coordinates >= -180/-90 and
     the cell iteration order (iy outer, ix inner) is identical."""
-    from osmi_water_spark.functions import cells as C
-
     gated = areas.filter(TG.is_water_area("tags"))
     return gated.select(
         "way_id",

@@ -224,9 +224,7 @@ def pip_join(
       exploded in SQL, equi-joined to the points' cells (shuffle), and each
       candidate's ``part_wkb`` is refined by the Arrow ray cast.
 
-    A point with a null lon or lat matches nothing: its cells are the
-    grid's last ones on that axis (SQL ``greatest``/``least`` skip nulls),
-    but the envelope check before the ray cast drops it in either arm.
+    A point with a null lon or lat has null cells: it is dropped before either arm.
 
     ``salt`` > 1 replicates the partitioned arm's polygon side k ways and
     routes each point to one deterministic replica — use when single cells
@@ -241,6 +239,7 @@ def pip_join(
     box = ("minx", "miny", "maxx", "maxy")
     counts = [f"_n{r}" for r in range(res_min, res_max + 1)]
     budgets = [max_cells >> k for k in range(max_cells.bit_length())]  # max_cells .. 1
+    points = points.filter("lon IS NOT NULL AND lat IS NOT NULL")
 
     parts = polygon_parts.select(
         "area_key", "part_wkb", *box,

@@ -51,7 +51,8 @@ def test_pipeline_plans_stay_flat(spark):
     """Every SQL execution of a cached-mode run (construction plus the
     output counts) and every output table's formatted plan stays under
     64 KB. A nested ``.cache()`` on the pipeline path embeds its whole
-    upstream plan in every consumer's plan, which takes these to MBs."""
+    upstream plan in every consumer's plan, which takes these to MBs.
+    No execution runs a pandas node: the Python stages are Arrow ones."""
     sc = spark.sparkContext
     store = spark._jsparkSession.sharedState().statusStore()
     first = _last_execution_id(store) + 1
@@ -62,12 +63,15 @@ def test_pipeline_plans_stay_flat(spark):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     last = _last_execution_id(store)
     assert last >= first
-    sizes = {}
+    sizes, pandas = {}, {}
     for eid in range(first, last + 1):
         ui = store.execution(eid)
         if ui.isDefined():
-            sizes[eid] = len(ui.get().physicalPlanDescription().encode())
+            plan = ui.get().physicalPlanDescription()
+            sizes[eid] = len(plan.encode())
+            pandas[eid] = [n for n in ("FlatMapGroupsInPandas", "MapInPandas") if n in plan]
     assert sizes and max(sizes.values()) <= PLAN_BYTES_MAX, sizes
+    assert not any(pandas.values()), pandas
     for t in TABLES:
         plan = sc._jvm.PythonSQLUtils.explainString(out[t]._jdf.queryExecution(), "formatted")
         assert len(plan.encode()) <= PLAN_BYTES_MAX, (t, len(plan))

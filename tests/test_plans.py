@@ -102,7 +102,7 @@ def test_width_parse_runs_each_regex_once(spark):
 
 
 PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow",
-                "FlatMapGroupsInPandas")
+                "FlatMapGroupsInPandas", "FlatMapGroupsInArrow")
 
 
 def test_geometry_bytes_plans_run_no_python(spark):

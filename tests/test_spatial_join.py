@@ -224,10 +224,10 @@ def test_auto_partitioned_plans_with_one_job(spark, monkeypatch):
 def test_null_coordinates_match_nothing(spark, monkeypatch, broadcast):
     """A point with a null lon or lat matches no polygon in either arm,
     while the points beside it in the same batch still match. The SQL cell
-    of a null coordinate is the grid's last cell on that axis (``greatest``
-    and ``least`` skip nulls), so area N, which covers the north-east
-    corner, has the null points as candidates; the envelope check before
-    the ray cast drops them."""
+    of a null coordinate is null, not the grid's last cell on that axis
+    (where ``greatest`` and ``least``, which skip nulls, would put it), so
+    area N, which covers the north-east corner, does not hold the null
+    points; ``pip_join`` drops them before either arm."""
     corner = [("N", bytearray(_rect_wkb(170.0, 80.0, 180.0, 90.0)), 170.0, 80.0, 180.0, 90.0)]
     parts = _two_part_area(spark).unionByName(spark.createDataFrame(
         corner, "area_key string, part_wkb binary, minx double, miny double, "
@@ -237,12 +237,13 @@ def test_null_coordinates_match_nothing(spark, monkeypatch, broadcast):
         "point_id long, lon double, lat double",
     )).coalesce(1)
     cand = pts.filter("point_id IN (5, 6, 7)").select(
+        C.cell_of_multi("lon", "lat", [C.DEFAULT_RES]).alias("cells"),
         F.arrays_overlap(
             C.cell_of_multi("lon", "lat", [C.DEFAULT_RES]),
             C.bbox_cover_cells("170.0D", "80.0D", "180.0D", "90.0D", C.DEFAULT_RES),
         ).alias("hit")
     ).collect()
-    assert [r.hit for r in cand] == [True] * 3
+    assert [(r.cells, r.hit) for r in cand] == [([None], None)] * 3
     if not broadcast:
         _force_partitioned(monkeypatch)
     df = pip_join(pts, parts)

@@ -236,6 +236,10 @@ def test_literal_resolutions_fold(spark):
         assert row.cov == row[f"cov{row.c_lit >> C.RES_BITS_SHIFT}"]
 
 
+_NULL_BBOXES = [(None, 0.0, 1.0, 1.0), (0.0, None, 1.0, 1.0), (0.0, 0.0, None, 1.0),
+                (0.0, 0.0, 1.0, None), (None, None, None, None)]
+
+
 def _cover_edge_bboxes(res_max: int, max_cells: int) -> list[tuple]:
     """Bboxes on the edges of the cover math: the lon/lat limits, exact
     cell edges, zero width, and covers of exactly ``max_cells`` cells and
@@ -260,8 +264,9 @@ def test_sql_cover_matches_python_spec(spark):
     """The cover and point cells are SQL text only; the map-side PIP probe
     and the partitioned join both read them. Check them against a plain
     Python spec of the formulas: resolution, cover size and cell ids (in
-    order) per bbox at several budgets, and point cells at several
-    resolutions."""
+    order) per bbox at several budgets, and point cells and tile ids at
+    several resolutions. The spec of a null bbox edge or a null coordinate
+    is null."""
     import random
 
     def ix(lon, r):
@@ -286,7 +291,7 @@ def test_sql_cover_matches_python_spec(spark):
         boxes = [
             (x, y, x + rng.uniform(0, 40), y + rng.uniform(0, 20))
             for x, y in ((rng.uniform(-185, 175), rng.uniform(-95, 85)) for _ in range(300))
-        ] + _cover_edge_bboxes(res_max, max_cells)
+        ] + _cover_edge_bboxes(res_max, max_cells) + _NULL_BBOXES
         df = spark.createDataFrame(
             [(i, *b) for i, b in enumerate(boxes)],
             "i int, minx double, miny double, maxx double, maxy double",
@@ -302,6 +307,9 @@ def test_sql_cover_matches_python_spec(spark):
             "i", "res", "size", C.bbox_cover_cells(*cols, "res").alias("cells"),
         ).orderBy("i").collect()
         for b, row in zip(boxes, got):
+            if None in b:
+                assert (row.res, row.size, row.cells) == (None, None, None), b
+                continue
             res = next((r for r in range(res_max, res_min, -1)
                         if size_at(b, r) <= max_cells), res_min)
             assert (row.res, row.size, row.cells) == (res, size_at(b, res), cells_at(b, res)), b
@@ -312,10 +320,16 @@ def test_sql_cover_matches_python_spec(spark):
     got = spark.createDataFrame(
         [(i, *p) for i, p in enumerate(pts)], "i int, lon double, lat double"
     ).select(
-        "i", "lon", "lat", C.cell_of_multi("lon", "lat", resolutions).alias("c")
+        "i", "lon", "lat", C.cell_of_multi("lon", "lat", resolutions).alias("c"),
+        C.cell_of("lon", "lat", 7).alias("c7"), C.tile_id("lon", "lat", 8).alias("t"),
     ).orderBy("i").collect()
+    assert sum(row.lon is None or row.lat is None for row in got) == 6
     for row in got:
+        if row.lon is None or row.lat is None:
+            assert (row.c, row.c7, row.t) == ([None] * len(resolutions), None, None), row
+            continue
         assert row.c == [(r << 58) + (iy(row.lat, r) << 29) + ix(row.lon, r) for r in resolutions]
+        assert row.c7 == row.c[2] and row.t is not None
 
 
 def _scalar_linestring(pts):
