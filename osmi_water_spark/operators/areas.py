@@ -11,13 +11,13 @@ bytes behind a Polygon header (``make_linestring`` plus the SQL of
 ``wkb.ring_polygon_sql``), with no shuffle and one Arrow pass; multipolygon
 relations group their member way segments and an ``applyInArrow`` stage
 assembles rings over the group's flat lon/lat buffers (greedy endpoint
-chaining), classifies outer/inner by member role, and nests holes into
-their containing outer; a failed area emits no row. Each area carries
-its polygon *parts* (Polygon WKB + bbox) out of assembly: the polygons
-table joins them into a MultiPolygon in SQL, and the PIP index takes one
-row per part with its own bbox (matching the reference's
-envelope-per-polygon STRtree inserts, areahandler.hpp:48-62). No stage
-re-parses an area's WKB.
+chaining in member order), classifies outer/inner by member role, and
+nests holes into their containing outer; a failed area emits no row.
+Each area carries its polygon *parts* (Polygon WKB + bbox) out of
+assembly: the polygons table joins them into a MultiPolygon in SQL, and
+the PIP index takes one row per part with its own bbox (matching the
+reference's envelope-per-polygon STRtree inserts, areahandler.hpp:48-62).
+No stage re-parses an area's WKB.
 """
 
 from __future__ import annotations
@@ -111,8 +111,10 @@ def assemble_polygons(
 
 
 def _assemble_group(key: tuple, table: pa.Table, schema: pa.Schema) -> pa.Table:
-    """One relation's member rows (role, coords) -> its area row, or no row
-    when assembly fails; members are views of the group's flat buffers."""
+    """One relation's member rows (member_pos, role, coords) -> its area row,
+    or no row when assembly fails; members are views of the group's flat
+    buffers, in member order (the rows arrive in the join's order)."""
+    table = table.sort_by("member_pos")
     _, _, lens, lon, lat = V.list_flat(table.column("coords"))
     xy = np.column_stack((lon, lat))
     outer, inner = [], []
@@ -177,16 +179,14 @@ def build_areas(
     )
     members = mp_rels.select(
         F.col("id").alias("rel_id"),
-        F.explode("members").alias("m"),
+        F.posexplode("members").alias("member_pos", "m"),
     ).filter(F.col("m.type") == "way")
     segs = members.join(
         ways_located.selectExpr("id AS mw_id", "coords"),
         members["m.ref"] == F.col("mw_id"),
         "inner",
     ).selectExpr(
-        "concat('r', rel_id) AS area_key",
-        "m.role AS role",
-        "coords",
+        "concat('r', rel_id) AS area_key", "member_pos", "m.role AS role", "coords",
     )
     schema = to_arrow_schema(StructType.fromDDL(_AREA_SCHEMA))
     rel_geoms = segs.groupBy("area_key").applyInArrow(

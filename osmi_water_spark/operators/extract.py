@@ -10,7 +10,7 @@ stage runs no Python. ``html`` is decoded as UTF-8 by ``CAST(html AS
 STRING)``; undecodable bytes become U+FFFD instead of failing the run.
 
 Round 2 ran the whole stage (JSON decode included) as per-row Python
-inside ``mapInPandas``; the interpreter was the named suspect for the
+inside a pandas map stage; the interpreter was the named suspect for the
 pipeline's N->4N scaling gap (VERDICT.md Next #5). Moving the decode to
 Catalyst removes the per-page ``json.loads`` and the Python-side row
 assembly entirely; the derived nodes/ways/relations DataFrames keep

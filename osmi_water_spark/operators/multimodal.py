@@ -1,5 +1,6 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
-columns with typed metadata, processed through ``mapInPandas``.
+columns with typed metadata, processed through ``mapInArrow`` over each
+batch's flat binary buffer.
 
 The Spark-side plumbing (schemas, batch shape, partition behavior) is
 real and tested; the actual codec work is STUBBED — image/audio libraries
@@ -14,7 +15,8 @@ import hashlib
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -50,29 +52,26 @@ def decode_stub(media: DataFrame) -> DataFrame:
     )
 
 
-def _fake_vector(payload: bytes, dim: int = 16) -> np.ndarray:
-    """Deterministic stand-in feature vector: blake2b(payload) -> floats."""
-    d = hashlib.blake2b(payload or b"", digest_size=dim * 4).digest()
-    a = np.frombuffer(d, dtype=np.uint32).astype(np.float64)
-    return (a / 2**32).astype(np.float32)
-
-
 def fake_features(media: DataFrame, dim: int = 16) -> DataFrame:
     """The feature-extraction stage with the codec swapped for a
-    deterministic fake — batch shape and schema identical to the real one."""
+    deterministic fake — batch shape and schema identical to the real one.
+    A payload's vector is its blake2b digest read as ``dim`` uint32 / 2^32
+    (a null payload hashes as empty)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": pdf["payload"].map(lambda b: len(b) if b is not None else 0),
-                    "features": pdf["payload"].map(lambda b: _fake_vector(b, dim).tolist()),
-                }
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in it:
+            payload = rb.column("payload")
+            d = b"".join(hashlib.blake2b(p or b"", digest_size=dim * 4).digest()
+                         for p in payload.to_pylist())
+            vec = (np.frombuffer(d, dtype=np.uint32) / 2**32).astype(np.float32)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("media_id"), rb.column("media_type"),
+                 pc.binary_length(payload).fill_null(0).cast(pa.int64()),
+                 pa.FixedSizeListArray.from_arrays(vec, dim).cast(pa.list_(pa.float32()))],
+                ["media_id", "media_type", "n_bytes", "features"],
             )
 
-    return media.select("media_id", "media_type", "payload").mapInPandas(
+    return media.select("media_id", "media_type", "payload").mapInArrow(
         batches, FEATURES_SCHEMA
     )
 
@@ -88,37 +87,35 @@ def byte_features(media: DataFrame) -> DataFrame:
     payload bytes: Shannon entropy, mean byte value, printable-ASCII
     fraction. This is the feature path that needs no image/audio library —
     useful as-is for corrupt-file detection, format fingerprinting, and
-    compression-ratio proxies in a training-data pipeline. Per *feature*
-    Python, per *byte* numpy (bincount/histogram), Arrow-batched."""
+    compression-ratio proxies in a training-data pipeline. A batch's byte
+    histograms are one ``bincount`` over its flat binary buffer; a null or
+    empty payload has ``n_bytes`` 0 and zero features."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, types, nb, ent, mean, prn = [], [], [], [], [], []
-            for mid, mtype, payload in zip(
-                pdf["media_id"], pdf["media_type"], pdf["payload"]
-            ):
-                b = (
-                    np.frombuffer(bytes(payload), dtype=np.uint8)
-                    if payload is not None and len(payload)
-                    else np.zeros(0, dtype=np.uint8)
-                )
-                n = int(b.size)
-                if n:
-                    h = np.bincount(b, minlength=256).astype(np.float64)
-                    p = h[h > 0] / n
-                    e = float(-(p * np.log2(p)).sum())
-                    m = float(b.mean())
-                    fp = float(((b >= 32) & (b < 127)).mean())
-                else:
-                    e = m = fp = 0.0
-                ids.append(mid); types.append(mtype); nb.append(n)
-                ent.append(e); mean.append(m); prn.append(fp)
-            yield pd.DataFrame(
-                {"media_id": ids, "media_type": types, "n_bytes": nb,
-                 "entropy": ent, "mean_byte": mean, "frac_printable": prn}
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in it:
+            payload = rb.column("payload").cast(pa.large_binary()).fill_null(b"")
+            rows = len(payload)
+            offs = np.frombuffer(payload.buffers()[1], np.int64)[payload.offset :][: rows + 1]
+            flat = np.frombuffer(payload.buffers()[2] or b"", np.uint8)[offs[0] : offs[-1]]
+            n = np.diff(offs)
+            row_of = np.repeat(np.arange(rows, dtype=np.int64), n)
+            h = np.bincount(row_of * 256 + flat, minlength=rows * 256).reshape(rows, 256)
+            nz = np.maximum(n, 1)
+            # -sum(p log2 p) over a row's nonzero bins in byte order: numpy's
+            # pairwise sum groups terms by their count, so rows sum in blocks
+            # of one nonzero-bin count to match a per-payload sum bit for bit
+            k, ent = (h > 0).sum(axis=1), np.zeros(rows)
+            for kk in np.unique(k[k > 0]):
+                hr = h[k == kk]
+                p = hr[hr > 0].reshape(-1, kk) / nz[k == kk, None]
+                ent[k == kk] = -(p * np.log2(p)).sum(axis=1)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("media_id"), rb.column("media_type"), pa.array(n), pa.array(ent),
+                 pa.array(h @ np.arange(256) / nz), pa.array(h[:, 32:127].sum(axis=1) / nz)],
+                ["media_id", "media_type", "n_bytes", "entropy", "mean_byte", "frac_printable"],
             )
 
-    return media.select("media_id", "media_type", "payload").mapInPandas(
+    return media.select("media_id", "media_type", "payload").mapInArrow(
         batches, BYTE_FEATURES_SCHEMA
     )
 

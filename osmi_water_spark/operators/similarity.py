@@ -11,20 +11,40 @@ coarse LSH cell first (probe = own cell + neighbors).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from osmi_water_spark.operators.dedup import hyperplane_bucket
 
 
-def row_cosine(a: pd.Series, b: pd.Series) -> np.ndarray:
+def vectors(col: pa.Array) -> np.ndarray:
+    """An Arrow list column of equal-length vectors (no null rows) as the
+    ``(rows, dim)`` view of its flat value buffer, in the element type."""
+    return col.flatten().to_numpy().reshape(len(col), -1)
+
+
+def row_cosine(a: pa.Array, b: pa.Array) -> np.ndarray:
     """Row-wise cosine of two equal-length vector columns, in float64: a
     threshold decision must not wobble at float32 precision, and the DuckDB
     oracles compute in DOUBLE."""
-    a = np.vstack(a.to_numpy()).astype(np.float64)
-    b = np.vstack(b.to_numpy()).astype(np.float64)
+    a, b = vectors(a).astype(np.float64), vectors(b).astype(np.float64)
     return (a * b).sum(1) / (np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1) + 1e-12)
+
+
+def pair_cosine(pairs: DataFrame, va: str, vb: str) -> DataFrame:
+    """Rows of long ids and two vector columns ``va``, ``vb`` -> the ids and
+    the vectors' ``row_cosine`` as ``cosine``, in one ``mapInArrow``."""
+    ids = [c for c in pairs.columns if c not in (va, vb)]
+
+    def batch(it):
+        for rb in it:
+            if rb.num_rows == 0:
+                continue
+            cos = row_cosine(rb.column(va), rb.column(vb))
+            yield rb.select(ids).append_column("cosine", pa.array(cos))
+
+    return pairs.mapInArrow(batch, "".join(f"{c} long, " for c in ids) + "cosine double")
 
 
 def cosine_topk_bruteforce(
@@ -41,39 +61,38 @@ def cosine_topk_bruteforce(
     q = (
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
         .limit(max_queries + 1)
-        .collect()
+        .toArrow()
     )
-    if len(q) > max_queries:
+    if q.num_rows > max_queries:
         raise ValueError(
             f"cosine_topk_bruteforce broadcasts the query side; got more than "
             f"{max_queries} query rows — swap sides or raise max_queries"
         )
-    if not q:
+    if not q.num_rows:
         return spark.createDataFrame([], "query_id long, rank int, neighbor_id long, cosine double")
-    qids = np.array([r.query_id for r in q], dtype=np.int64)
-    qm = np.vstack([np.asarray(r.qv, dtype=np.float64) for r in q])
+    qids = q.column("query_id").to_numpy()
+    qm = vectors(q.column("qv").combine_chunks()).astype(np.float64)
     qm = qm / (np.linalg.norm(qm, axis=1, keepdims=True) + 1e-12)
     bq = spark.sparkContext.broadcast((qids, qm))
 
     def batch(it):
         ids, mat = bq.value
-        for pdf in it:
-            if len(pdf) == 0:
+        for rb in it:
+            if rb.num_rows == 0:
                 continue
-            cm = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+            cm = vectors(rb.column("v")).astype(np.float64)
             cm = cm / (np.linalg.norm(cm, axis=1, keepdims=True) + 1e-12)
             sims = cm @ mat.T  # (batch, Q)
-            nid = pdf["nid"].to_numpy()
-            out = {
-                "query_id": np.repeat(ids, len(nid)),
-                "neighbor_id": np.tile(nid, len(ids)),
-                "cosine": sims.T.ravel(),
-            }
-            yield pd.DataFrame(out)
+            nid = rb.column("nid").to_numpy()
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.repeat(ids, len(nid))), pa.array(np.tile(nid, len(ids))),
+                 pa.array(sims.T.ravel())],
+                ["query_id", "neighbor_id", "cosine"],
+            )
 
     scored = corpus.select(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("v")
-    ).mapInPandas(batch, "query_id long, neighbor_id long, cosine double")
+    ).mapInArrow(batch, "query_id long, neighbor_id long, cosine double")
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
@@ -119,17 +138,8 @@ def cosine_topk_ivf(
     if exclude_self:
         cand = cand.filter(F.col("query_id") != F.col("nid"))
 
-    def score(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            yield pd.DataFrame({
-                "query_id": pdf["query_id"], "neighbor_id": pdf["nid"],
-                "cosine": row_cosine(pdf["qv"], pdf["v"]),
-            })
-
-    scored = cand.select("query_id", "qv", "nid", "v").mapInPandas(
-        score, "query_id long, neighbor_id long, cosine double"
+    scored = pair_cosine(
+        cand.select("query_id", F.col("nid").alias("neighbor_id"), "qv", "v"), "qv", "v"
     ).dropDuplicates(["query_id", "neighbor_id"])
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return (

@@ -5,7 +5,7 @@ runs on the same parquet (CORRECTNESS gate).
 Scheme: geo inputs are *derived deterministically* from the TPC-H-ish keys
 (same integer/double arithmetic on both engines — identical expression
 shape means identical IEEE results), so the Spark implementation under
-test is the engine's real operator (map-typed tags, cell joins, pandas-UDF
+test is the engine's real operator (map-typed tags, cell joins, Arrow
 refine, window top-k) while the oracle re-states the expected semantics
 independently in SQL. Boundary offsets (0.05 vs 0.025 grids) keep points
 off polygon edges and cell/tile boundaries so FP rounding can't flip a
@@ -522,10 +522,10 @@ rects AS (
 """
 
 
-def _pip_inputs(spark, sf_dir):
-    """J5 inputs: node points and one rectangle part per nation. The rect
-    WKB is a closed way's polygon (``make_linestring`` plus
-    ``wkb.ring_polygon_sql``) over its closed 5-point ring."""
+def rect_parts(rects: DataFrame) -> DataFrame:
+    """Rectangles (poly_id, x0, y0, x1, y1) -> PIP parts (area_key, part_wkb,
+    minx, miny, maxx, maxy). A rect's WKB is a closed way's polygon
+    (``make_linestring`` plus ``wkb.ring_polygon_sql``) over its 5-point ring."""
     from osmi_water_spark.functions.wkb import ring_polygon_sql
     from osmi_water_spark.operators.assemble import make_linestring
 
@@ -533,9 +533,8 @@ def _pip_inputs(spark, sf_dir):
     ring = "array(" + ", ".join(
         f"named_struct('lon', {x}, 'lat', {y})" for x, y in corners
     ) + ")"
-    parts = (
-        _rects(spark, sf_dir)
-        .withColumn("coords", F.expr(ring))
+    return (
+        rects.withColumn("coords", F.expr(ring))
         .withColumn("ls", make_linestring("coords"))
         .select(
             F.col("poly_id").cast("string").alias("area_key"),
@@ -544,10 +543,12 @@ def _pip_inputs(spark, sf_dir):
             F.col("x1").alias("maxx"), F.col("y1").alias("maxy"),
         )
     )
-    points = _nodes_geo(spark, sf_dir).select(
-        F.col("node_id").alias("point_id"), "lon", "lat"
-    )
-    return points, parts
+
+
+def _pip_inputs(spark, sf_dir):
+    """J5 inputs: node points and one rectangle part per nation."""
+    points = _nodes_geo(spark, sf_dir).select(F.col("node_id").alias("point_id"), "lon", "lat")
+    return points, rect_parts(_rects(spark, sf_dir))
 
 
 def _pip_pairs(pairs):
@@ -1017,7 +1018,7 @@ def q_multimodal_features(spark, sf_dir):
 
 
 # synth_media payloads are blake2b(str(i), 32 bytes) * (i%5+1), so the
-# plumbing output (type routing + byte accounting through mapInPandas)
+# plumbing output (type routing + byte accounting through mapInArrow)
 # is closed-form checkable without registered tables.
 SQL_MULTIMODAL = """
 SELECT i AS media_id,

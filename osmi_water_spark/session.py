@@ -2,10 +2,10 @@
 
 Defaults are sized for the sandbox (single JVM, local[N]) but every knob is
 what we would set on a 1000-executor cluster as well: AQE on (runtime
-re-planning, skew-join splitting), Arrow on (all pandas-UDF stages are
-Arrow-batched), UTC session timezone (oracle comparability), shuffle
-partitions ~ cores locally (on a cluster: 2-3x total cores, or let AQE
-coalesce from a high initial number). PySpark's DataFrame debugging
+re-planning, skew-join splitting), Arrow on (driver-side conversions are
+Arrow-batched, like every Python stage), UTC session timezone (oracle
+comparability), shuffle partitions ~ cores locally (on a cluster: 2-3x
+total cores, or let AQE coalesce from a high initial number). PySpark's DataFrame debugging
 (call-site capture on every DataFrame/Column call) is off: it made every
 expression several py4j round-trips dearer and imported IPython into the
 driver, at the price of query errors that no longer name the Python line

@@ -396,23 +396,22 @@ def pages_dataframe(spark, rows: list[dict]):
 
 def scale_pages_df(spark, n_chains: int, partitions: int | None = None):
     """Distributed page generation: chain indices -> pages rendered on the
-    executors (mapInPandas), so bench inputs scale without a driver
-    bottleneck — the same shape a real ingest of 10^12 pages would have."""
-    import pandas as pd
-
-    parts = partitions or spark.sparkContext.defaultParallelism * 2
-    rng = spark.range(0, n_chains, 1, min(parts, max(1, n_chains)))
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for c in pdf["id"]:
-                rows.extend(render_page("w18_scale", e) for e in chain_entities(int(c)))
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "warc_ts", "html", "text", "lang"],
-            )
+    executors (``mapInArrow``, one record batch of rows per input batch),
+    so bench inputs scale without a driver bottleneck — the same shape a
+    real ingest of 10^12 pages would have."""
+    import pyarrow as pa
+    from pyspark.sql.conversion import to_arrow_schema
 
     from osmi_water_spark.schemas import PAGES
 
-    return rng.mapInPandas(gen, PAGES)
+    parts = partitions or spark.sparkContext.defaultParallelism * 2
+    rng = spark.range(0, n_chains, 1, min(parts, max(1, n_chains)))
+    schema = to_arrow_schema(PAGES)
+
+    def gen(batches):
+        for rb in batches:
+            rows = [render_page("w18_scale", e)
+                    for c in rb.column("id").to_pylist() for e in chain_entities(c)]
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
+
+    return rng.mapInArrow(gen, PAGES)

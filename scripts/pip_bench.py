@@ -1,10 +1,11 @@
 """Flagship-operator scaling job: the salted cell-indexed PIP join + tile
 assignment (the BASELINE.json headline metric) over JVM-generated inputs.
 
-Inputs are generated with spark.range + column expressions (no Python in
-the data path before the join), so the measured work is the engine's
-spatial join itself: cell-cover explode, salted equi-join, Arrow ray-cast
-refine, tile assignment.
+Inputs are generated with spark.range + column expressions, and the
+rectangles become parts through the J5 query's ``rect_parts`` (one Arrow
+linestring pass), so the measured work is the engine's spatial join
+itself: cell-cover explode, salted equi-join, Arrow ray-cast refine, tile
+assignment.
 
 Usage: SPARK_GRAFT_CPUS=8 python scripts/pip_bench.py [n_points] [n_polys]
 Prints one JSON line.
@@ -19,16 +20,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import numpy as np  # noqa: E402
-import pandas as pd  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
-from pyspark.sql import types as T  # noqa: E402
-from pyspark.sql.functions import pandas_udf  # noqa: E402
 
 from osmi_water_spark import get_spark  # noqa: E402
 from osmi_water_spark.functions import cells as C  # noqa: E402
-from osmi_water_spark.functions import wkb as W  # noqa: E402
 from osmi_water_spark.operators.spatial_join import pip_join  # noqa: E402
+from osmi_water_spark.plans.testdata_queries import rect_parts  # noqa: E402
 
 
 def build_inputs(spark, n_points: int, n_polys: int):
@@ -37,16 +34,6 @@ def build_inputs(spark, n_points: int, n_polys: int):
         (((F.col("id") * 97) % 350000) / 1000.0 - 174.95).alias("lon"),
         (((F.col("id") * 211) % 160000) / 1000.0 - 79.95).alias("lat"),
     )
-
-    def _rect_wkb(x0, y0, x1, y1):
-        return pd.Series(
-            [
-                W.wkb_polygon([np.array([[a, b], [c, b], [c, d], [a, d], [a, b]])])
-                for a, b, c, d in zip(x0, y0, x1, y1)
-            ]
-        )
-
-    rect_wkb = pandas_udf(_rect_wkb, T.BinaryType())
     polys = spark.range(n_polys).select(
         F.col("id").alias("poly_id"),
         (((F.col("id") * 29) % 3000) / 10.0 - 150.0 + 0.025).alias("x0"),
@@ -55,13 +42,7 @@ def build_inputs(spark, n_points: int, n_polys: int):
         "poly_id", "x0", "y0",
         (F.col("x0") + 2.3).alias("x1"), (F.col("y0") + 1.7).alias("y1"),
     )
-    parts = polys.select(
-        F.col("poly_id").cast("string").alias("area_key"),
-        rect_wkb("x0", "y0", "x1", "y1").alias("part_wkb"),
-        F.col("x0").alias("minx"), F.col("y0").alias("miny"),
-        F.col("x1").alias("maxx"), F.col("y1").alias("maxy"),
-    )
-    return pts, parts
+    return pts, rect_parts(polys)
 
 
 def main() -> None:

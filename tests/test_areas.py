@@ -117,3 +117,37 @@ def test_build_areas_reads_relation_members(spark):
         parts = [(bytes(p.part_wkb), p.minx, p.miny, p.maxx, p.maxy) for p in row.parts]
         assert parts == [part(rl) for rl in polys], key
         assert (row.minx, row.miny, row.maxx, row.maxy) == part(polys[0])[1:], key
+
+
+@pytest.mark.parametrize("broadcast", [True, False], ids=["broadcast", "sort_merge"])
+def test_relation_rings_follow_member_order(spark, broadcast):
+    """A relation's rings chain in its member order, whatever order the
+    member join emits them in: one square whose three member ways are
+    listed 30, 10, 20 starts at way 30's first vertex under a broadcast
+    join and under a sort-merge join (which emits way-id order), as in the
+    sequential oracle."""
+    from osmi_water_spark.operators.extract import extract_entities, split_entities
+    from osmi_water_spark.operators.locate import locate_ways
+    from osmi_water_spark.plans.oracle import run_oracle
+    from osmi_water_spark.sources import pages_gen as PG
+
+    corners = {1: (0.0, 0.0), 2: (3.0, 0.0), 3: (3.0, 3.0), 4: (0.0, 3.0)}
+    ents = [PG.node(i, x, y) for i, (x, y) in corners.items()] + [
+        PG.way(30, [1, 2], {}), PG.way(10, [2, 3, 4], {}), PG.way(20, [4, 1], {}),
+        PG.relation(7, [("way", 30, "outer"), ("way", 10, "outer"), ("way", 20, "outer")],
+                    {"type": "multipolygon", "natural": "water"}),
+    ]
+    [(*_, rings)] = run_oracle(ents)["polygons"]
+    assert rings[0][0] == (0.0, 0.0)
+    pages = PG.pages_dataframe(spark, [PG.render_page("member_order", e) for e in ents])
+    nodes, ways, relations = split_entities(extract_entities(pages))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, old if broadcast else "-1")
+    try:
+        [row] = build_areas(locate_ways(ways, nodes), relations).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert [bytes(p.part_wkb) for p in row.parts] == [
+        W.wkb_polygon([np.array(r) for r in rings])
+    ]

@@ -341,20 +341,35 @@ def test_bruteforce_query_guard(spark, emb):
 
 
 def test_byte_features_known_values(spark):
-    """Codec-free multimodal features: hand-computable payloads."""
+    """Codec-free multimodal features: hand-computable payloads, then null,
+    empty, one-byte and all-printable payloads beside normal ones in one
+    Arrow batch, all against a plain-Python spec (a null or empty payload
+    has ``n_bytes`` 0 and zero features)."""
+    import hashlib
+    import math
+    from collections import Counter
+
     from osmi_water_spark.operators.multimodal import byte_features
 
-    rows = [
-        (0, "image", bytearray(b"\x00" * 64), None),
-        (1, "audio", bytearray(bytes(range(256))), None),
-        (2, "video", bytearray(b"A" * 10 + b"\x00" * 10), None),
-        (3, "image", bytearray(b""), None),
+    payloads = [
+        b"\x00" * 64, bytes(range(256)), b"A" * 10 + b"\x00" * 10, b"",
+        None, b"\x07", b"Hello, world!", bytes(range(256)) * 3,
+        hashlib.blake2b(b"x", digest_size=64).digest() * 5, None, b"\xff" * 1000, b"",
+        bytes(range(32, 127)),
     ]
+
+    def spec(p):
+        if not p:
+            return 0, 0.0, 0.0, 0.0
+        n = len(p)
+        ent = -sum((v / n) * math.log2(v / n) for v in Counter(p).values())
+        return n, ent, sum(p) / n, sum(32 <= b < 127 for b in p) / n
+
     df = spark.createDataFrame(
-        rows,
+        [(i, "image", None if p is None else bytearray(p), None) for i, p in enumerate(payloads)],
         "media_id long, media_type string, payload binary, "
         "meta struct<width:int,height:int,duration_ms:int,codec:string>",
-    )
+    ).coalesce(1)
     got = {r.media_id: r for r in byte_features(df).collect()}
     assert got[0].entropy == 0.0 and got[0].frac_printable == 0.0
     assert got[0].mean_byte == 0.0 and got[0].n_bytes == 64
@@ -363,6 +378,13 @@ def test_byte_features_known_values(spark):
     assert abs(got[2].entropy - 1.0) < 1e-12          # two equal symbols
     assert got[2].frac_printable == 0.5
     assert got[3].n_bytes == 0 and got[3].entropy == 0.0
+    assert got[12].frac_printable == 1.0 and got[5].n_bytes == 1
+    assert sorted(got) == list(range(len(payloads)))
+    for i, p in enumerate(payloads):
+        n, ent, mean, frac = spec(p)
+        r = got[i]
+        assert (r.n_bytes, r.mean_byte, r.frac_printable) == (n, mean, frac), i
+        assert abs(r.entropy - ent) < 1e-12, i
 
 
 def test_minhash_matches_plain_python_fixture(spark):

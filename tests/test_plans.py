@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -180,3 +181,24 @@ def test_near_dup_signature_udf_runs_once(spark, op, kw):
     assert df.collect()  # executes df's own plan, so explain shows the final one
     final = plan_of(df).split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
     assert final.count("ArrowEvalPython (") == 1, final
+
+
+@pytest.mark.parametrize("name", [
+    "minhash_near_dups", "minhash_near_dups_capped", "simhash_near_dups",
+    "embedding_near_dups", "embedding_near_dups_capped", "ann_cosine_topk", "ann_ivf",
+    "multimodal_features", "multimodal_byte_features", "scale_pages",
+])
+def test_operator_python_stages_are_arrow(spark, name):
+    """The operator layer has one batch contract: its Python stages are
+    Arrow UDFs (``ArrowEvalPython`` of eval type 250) and ``mapInArrow``;
+    no pandas UDF (eval type 200) and no ``mapInPandas``."""
+    from pyspark.util import PythonEvalType
+
+    from osmi_water_spark.sources import pages_gen as PG
+
+    df = PG.scale_pages_df(spark, 2) if name == "scale_pages" else Q.QUERIES[name](spark, SF)
+    p = plan_of(df)
+    assert "InPandas" not in p, p
+    evals = re.findall(r"\) ArrowEvalPython\n(?:.*\n)*?Arguments: .*, (\d+)\n", p)
+    assert set(evals) <= {str(PythonEvalType.SQL_SCALAR_ARROW_UDF)}, evals
+    assert evals or "MapInArrow" in p, p
